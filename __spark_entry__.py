@@ -1902,10 +1902,10 @@ FROM g ORDER BY doc_id
 
 
 def q_crawl_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THREE full crawl epochs in BLOOM seen-mode on generated fixtures
+    """THREE full crawl epochs in CUCKOO seen-mode on generated fixtures
     (engine smoke inside the driver harness — exercises the incremental
-    executor-side bloom state end-to-end) — returns the multi-epoch
-    ordering."""
+    executor-side cuckoo-filter state end-to-end) — returns the
+    multi-epoch ordering."""
     import os
     import tempfile
 
@@ -1919,7 +1919,7 @@ def q_crawl_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(os.path.join(d, "politeness.parquet")):
         generate(d, n_urls=500, n_seeds=12)
     cfg = CrawlConfig(epochs=3, global_k=32)
-    eng = CrawlEngine(spark, d, cfg, seen_mode="bloom")
+    eng = CrawlEngine(spark, d, cfg, seen_mode="cuckoo")
     res = eng.run(collect_ordering=True)
     # rows-only BY DESIGN (justification: the epoch loop is iterative +
     # stateful — one SQL statement can't express the engine) — but the query

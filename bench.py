@@ -34,16 +34,11 @@ BENCH_EPOCHS = int(os.environ.get("MAGA_BENCH_EPOCHS", "6"))
 BENCH_GLOBAL_K = int(os.environ.get("MAGA_BENCH_GLOBAL_K", "15000"))
 BENCH_RATE_BOOST = int(os.environ.get("MAGA_BENCH_RATE_BOOST", "8"))
 BENCH_SEEDS = int(os.environ.get("MAGA_BENCH_SEEDS", "256"))
-# seen-path A/B (tools/bench_bloom.py): "exact" | "bloom" — results bit-equal
+# seen-path A/B (tools/bench_bloom.py): "exact" | "cuckoo" — results bit-equal
 BENCH_SEEN_MODE = os.environ.get("MAGA_BENCH_SEEN_MODE", "exact")
-BENCH_BLOOM_M_BITS = int(os.environ.get("MAGA_BENCH_BLOOM_M_BITS", str(1 << 20)))
 # cuckoo mode: per-shard buckets (×4 slots). Default holds 16M keys / 32
 # shards at ~0.48 load; an undersized table raises rather than dropping keys
 BENCH_CUCKOO_NBUCKETS = int(os.environ.get("MAGA_BENCH_CUCKOO_NBUCKETS", str(1 << 18)))
-# host-broadcast A/B knob: 0 (the engine default) = no forced hint, AQE
-# decides; positive = force broadcast hints below that host count.
-# Measured a dead heat at 16M/125k hosts (BENCH.md host-join A/B).
-BENCH_HOST_BCAST_LIMIT = int(os.environ.get("MAGA_BENCH_HOST_BCAST_LIMIT", "0"))
 BENCH_IMG_SIZES = tuple(
     int(x) for x in os.environ.get("MAGA_BENCH_IMG_SIZES", "16,24,32").split(",")
 )
@@ -127,9 +122,7 @@ def main() -> None:
         epochs=BENCH_EPOCHS,
         global_k=BENCH_GLOBAL_K,
         nshards=32,
-        bloom_m_bits=BENCH_BLOOM_M_BITS,
         cuckoo_nbuckets=BENCH_CUCKOO_NBUCKETS,
-        broadcast_host_limit=BENCH_HOST_BCAST_LIMIT,
     )
     eng = CrawlEngine(spark, fixture, cfg, seen_mode=BENCH_SEEN_MODE)
     if BENCH_WARMUP_EPOCHS:

@@ -3,7 +3,7 @@
 Reimplements the semantics of the reference DHT crawler (supmind/maga,
 surveyed in SURVEY.md) as deterministic DataFrame epochs over tables of
 image+caption payloads: URL canonicalization, a hash-sharded URL-seen set
-(bloom prefilter + exact anti-join), XOR-distance priority top-K, per-host
+(cuckoo-filter prefilter + exact anti-join), XOR-distance priority top-K, per-host
 token-bucket politeness, robots gating, vectorized payload decode/validate,
 and snapshot-committed checkpoint/resume — plus the training-data operators a
 100 TB pipeline needs (dedup, similarity search, text analysis, multimodal

@@ -51,35 +51,18 @@ class CrawlConfig:
     default_rate: int = 2  # hosts missing from the politeness table
     default_burst: int = 4
     salt_buckets: int = 8  # skew salting factor for the per-host rank at scale
-    # bloom mode: fixed per-shard bitset size (bits). Fixed because the
-    # bitsets grow INCREMENTALLY across epochs (operators/seen.py
-    # update_shard_blooms) — size from the projected frontier: ~10 bits/key
-    # at the target per-shard key count. FP-rate-only knob; results are
-    # exact at any value.
-    bloom_m_bits: int = 1 << 20
-    # bloom mode: probe-stage sub-split factor (operators/seen.py
-    # anti_join_bloom probe_salt) — probe parallelism = nshards·salt
-    # (cuckoo mode reuses the same salt)
-    bloom_probe_salt: int = 4
+    # cuckoo mode: probe-stage sub-split factor (operators/seen.py
+    # salted_shard_cogroup) — probe parallelism = nshards·salt
+    probe_salt: int = 4
     # cuckoo mode: fixed per-shard bucket count (power of two; capacity =
-    # nbuckets × 4 slots). Fixed for the same reason as bloom_m_bits —
-    # bucket indices depend on the size, so incremental inserts
-    # (operators/cuckoo.py update_shard_cuckoo) need it stable. Size for
+    # nbuckets × 4 slots). Fixed because bucket indices depend on the
+    # size, so incremental inserts (operators/cuckoo.py
+    # update_shard_cuckoo) need it stable. Size for
     # ≤~0.95 load at the projected per-shard key count; the default holds
     # 2^17 keys/shard at 0.5 load. Results are exact at any (sufficient)
     # value; an overflow raises rather than dropping a key.
     cuckoo_nbuckets: int = 1 << 16
     cuckoo_fp_bits: int = 16
-    # host-keyed state joins (politeness / robots_agg / host_state): with
-    # the default 0, NO broadcast hint is ever forced — AQE picks the join
-    # strategy from actual runtime sizes (it still auto-broadcasts small
-    # host tables; at real-web ~10^8 hosts it shuffles on host, which the
-    # salted grant tolerates). A positive value forces the hint below that
-    # host count — measured a dead heat at 16M URLs / 125k hosts
-    # (BENCH.md host-join A/B), so the forced hint buys nothing even where
-    # it is safe, and only the AQE path survives the target scale
-    # (VERDICT r3 #1). Results identical either way.
-    broadcast_host_limit: int = 0
     # scheduler skew guard: fall back to the sampled range-partitioner
     # top-K for subsequent epochs when one uniform-bucket slice holds more
     # than skew_factor× the fair 1/shuffle-partitions share of candidates

@@ -1,16 +1,16 @@
-"""★ Sharded cuckoo-filter URL-seen set — the second approximate-membership
-backend BASELINE.json names ("a partitioned cuckoo/bloom URL-seen set").
+"""★ Sharded cuckoo-filter URL-seen set — the engine's one approximate-
+membership prefilter (BASELINE.json: "a partitioned cuckoo/bloom URL-seen
+set").
 
-Same state shape and same contract as the bloom path (operators/seen.py):
-one filter row per ``shard = pmod(url_hash, nshards)``, probed EXECUTOR-SIDE
-via a shard-cogroup ``applyInPandas``, false positives corrected by an exact
-residual anti-join, never false negatives — so ``anti_join_cuckoo`` returns
-exactly ``anti_join_exact``'s rows. What the cuckoo filter adds over the
-bloom (the reason the design brief names both): **deletion**. A bloom bitset
-can only grow; a cuckoo table stores per-key fingerprints that
+One filter row per ``shard = pmod(url_hash, nshards)``, probed
+EXECUTOR-SIDE via the shard-cogroup ``applyInPandas`` of
+``operators.seen.salted_shard_cogroup``, false positives corrected by an
+exact residual anti-join, never false negatives — so ``anti_join_cuckoo``
+returns exactly ``anti_join_exact``'s rows. Unlike a bloom bitset, which
+can only grow, a cuckoo table stores per-key fingerprints that
 ``delete_from_shard_cuckoo`` removes individually — the re-crawl primitive
-(expire a URL from seen so the frontier can re-enqueue it) that a pure
-bloom mode cannot express without a full rebuild.
+(expire a URL from seen so the frontier can re-enqueue it) in O(batch),
+with no rebuild from the seen table.
 
 Algorithm: partial-key cuckoo hashing per the public cuckoo-filter paper
 (Fan, Andersen, Kaminsky, Mitzenmacher, "Cuckoo Filter: Practically Better
@@ -60,8 +60,7 @@ from maga_spark.operators.seen import (
 
 CUCKOO_SCHEMA = "shard int, nbuckets long, fp_bits int, bucket_size int, table binary"
 
-# splitmix64-style avalanche constants (public domain mixers) — distinct
-# from seen.py's bloom probe constants so the two filters are independent
+# splitmix64-style avalanche constants (public domain mixers)
 _FP_MIX = np.uint64(0xBF58476D1CE4E5B9)
 _IDX_MIX = np.uint64(0x94D049BB133111EB)
 _ALT_MIX = np.uint64(0x9E3779B97F4A7C15)
@@ -219,7 +218,7 @@ def _state_arrays(fpdf: pd.DataFrame, shard: int):
     if len(fpdf) > 1:
         # one filter row per shard is the state invariant — probing or
         # updating only the first would silently drop the others' keys
-        # (false negatives), mirroring the bloom-path guard (ADVICE r3)
+        # (false negatives) (ADVICE r3)
         raise ValueError(f"{len(fpdf)} cuckoo rows for shard {shard}; expected 1")
     nb = int(fpdf["nbuckets"].iloc[0])
     fb = int(fpdf["fp_bits"].iloc[0])
@@ -254,8 +253,7 @@ def build_shard_cuckoo(
     shard — 0.84 leaves eviction headroom; the paper's (2,4) table is
     stable to ~0.95). Pass a fixed ``nbuckets`` when the result will grow
     via ``update_shard_cuckoo`` — bucket indices depend on the size, so
-    incremental inserts require it stable (same rule as the blooms'
-    ``m_bits``)."""
+    incremental inserts require it stable."""
     if not (4 <= fp_bits <= 16):
         raise ValueError("fp_bits must be in [4, 16] (uint16 slots)")
     if nbuckets and nbuckets & (nbuckets - 1):
@@ -289,7 +287,7 @@ def update_shard_cuckoo(
     of how many keys the filters already hold. ``filters`` may be empty;
     shards appearing only in ``new_hashes`` get fresh ``nbuckets``-sized
     tables, existing shards keep their stored geometry. Filter bytes never
-    visit the driver (cogroup applyInPandas, like update_shard_blooms)."""
+    visit the driver (cogroup applyInPandas)."""
     if not (4 <= fp_bits <= 16):
         raise ValueError("fp_bits must be in [4, 16] (uint16 slots)")
     if nbuckets < 1 or nbuckets & (nbuckets - 1):
@@ -318,8 +316,8 @@ def update_shard_cuckoo(
 
 
 def delete_from_shard_cuckoo(filters: DataFrame, del_hashes: DataFrame) -> DataFrame:
-    """Remove previously-inserted keys — the operation blooms cannot do and
-    the reason the design brief says "cuckoo/bloom". del_hashes(shard,
+    """Remove previously-inserted keys — the operation a bloom bitset
+    cannot do without a full rebuild. del_hashes(shard,
     url_hash) must contain only keys currently in the filter (one delete
     per prior insert); violations raise rather than corrupt. Use case:
     re-crawl scheduling — expire URLs from seen so the next absorb
@@ -351,17 +349,24 @@ def anti_join_cuckoo(
     filters: DataFrame | None = None,
     probe_salt: int = 4,
 ) -> DataFrame:
-    """candidates ∖ seen with an executor-side per-shard cuckoo prefilter —
-    drop-in for ``anti_join_bloom`` with identical semantics: rows the
-    filter rejects are definitely new; only the ``might_contain`` minority
+    """candidates ∖ seen with an executor-side per-shard cuckoo prefilter:
+    rows the filter rejects are definitely new; only the ``might_contain`` minority
     reaches the exact residual anti-join, so the result equals
     ``anti_join_exact`` for ANY filter contents with no false negatives
     (this also makes deletion safe end-to-end: a deleted key probes
     negative and re-enters as new; an fp-collision survivor just pays the
     residual join). ``nshards`` must be the seen table's shard modulus;
     ``temps`` collects the persisted probe intermediate for caller-managed
-    unpersist; ``probe_salt`` sub-splits shards exactly as in
-    ``anti_join_bloom`` (the table row is read-only in the probe)."""
+    unpersist; ``probe_salt`` sub-splits each shard's probe group
+    (``salted_shard_cogroup``; the table row is read-only in the probe, so
+    results are identical for any salt).
+
+    ``nshards`` MUST be the modulus used to shard ``seen``: a wrong modulus
+    buckets candidates against the wrong filter row. When omitted it is
+    inferred as ``max(shard) + 1`` with one driver job — an ad-hoc
+    convenience that is only right when the top shard is populated; any
+    filter row whose shard id falls outside [0, nshards) fails the probe
+    task (modulus-mismatch guard)."""
     if nshards is None:
         mx = seen.agg(F.max("shard").alias("m")).first()["m"]
         nshards = (int(mx) if mx is not None else 0) + 1
@@ -380,9 +385,8 @@ def anti_join_cuckoo(
 def _probe_cogroup(
     candidates: DataFrame, filters: DataFrame, key: str, ns: int, salt: int = 1
 ) -> DataFrame:
-    """(shard, salt)-cogroup cuckoo probe appending ``_maybe`` — same
-    partitioning scheme as seen.py's bloom probe (one candidate shuffle,
-    filter replicated per salt slice in-plan)."""
+    """(shard, salt)-cogroup cuckoo probe appending ``_maybe`` (one
+    candidate shuffle, filter replicated per salt slice in-plan)."""
     cand_cols = list(candidates.columns)
     out_schema = _out_ddl(candidates, "_maybe boolean")
 

@@ -204,7 +204,7 @@ def build_minhash_index(
     portable: bool = True,
 ) -> DataFrame:
     """Materialize the corpus's LSH band rows as a STORED near-dup index —
-    the incremental-state analog of ``update_shard_blooms`` /
+    the incremental-state analog of ``update_shard_cuckoo`` /
     ``append_to_ivf_index`` for dedup: a growing corpus dedupes each NEW
     ingest batch against this index (``query_minhash_index``) in
     O(batch-bands ⋈ index) instead of re-running the corpus×corpus

@@ -57,7 +57,7 @@ def curate_corpus(
     anti-join's probe side), and without a cache barrier the whole
     language→quality→dedup chain recomputes per branch. Pass ``temps`` to
     receive the cached frames for unpersist after the consuming action
-    (the anti_join_bloom contract); when ``None`` they stay cached until
+    (the anti_join_cuckoo contract); when ``None`` they stay cached until
     Spark evicts them — fine for one-shot queries.
 
     Measured at sf0.1 (5 000 docs, local[32]): first evaluation ~13 s,

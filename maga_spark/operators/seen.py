@@ -8,123 +8,28 @@ Representation: ``seen(shard int, url_hash long)`` with
 co-locate per shard and the final set compares bit-for-bit as per-shard
 sorted hash arrays (BASELINE.json parity).
 
-Two membership paths, one contract (both yield the exact set — the bloom
-has false positives only, corrected by the exact residual anti-join; never
-false negatives):
+Two membership paths, one contract (both yield the exact set):
 
 * ``anti_join_exact`` — plain ``left_anti`` on ``url_hash``; Spark's runtime
   bloom-filter join injection (enabled in the session factory) already
   prefilters the shuffle at scale.
-* ``anti_join_bloom`` — per-shard numpy Bloom prefilter probed EXECUTOR-SIDE
-  via a shard-cogroup ``applyInPandas``: candidates shuffle once by shard
-  and meet their shard's bloom row where it lives; only ``might_contain``
-  survivors reach the exact anti-join. Round 2 broadcast the whole bloom
-  dict through the driver — at 10 bits/key × 10^10 keys that is ~12.5 GB
-  through one JVM and onto every executor, which does not survive the
-  design's own target scale. Round 3 keeps bloom bytes executor-side and
-  makes the build INCREMENTAL (``update_shard_blooms`` ORs each epoch's new
-  hashes into the stored bitsets) so the per-epoch bloom cost is
-  O(new keys + nshards·m_bits/8), independent of the full seen size.
+* ``operators.cuckoo.anti_join_cuckoo`` — a per-shard cuckoo-filter
+  prefilter probed EXECUTOR-SIDE through ``salted_shard_cogroup`` below;
+  false positives are corrected by ``anti_join_exact`` on the
+  might-contain minority, and the filter supports per-key deletion (the
+  re-crawl primitive).
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# xxh64-style avalanche-mixed probe hashes, vectorized over uint64 numpy
-_MIX1 = np.uint64(0x9E3779B185EBCA87)
-_MIX2 = np.uint64(0xC2B2AE3D27D4EB4F)
-
-BLOOM_SCHEMA = "shard int, m_bits long, bloom binary"
-
-
-def _probe_positions(hashes: np.ndarray, n_probes: int, m_bits: int) -> np.ndarray:
-    """(n, n_probes) bit positions via double hashing h1 + i*h2 (Kirsch-
-    Mitzenmacher) — deterministic, no Python loop over rows."""
-    h = hashes.astype(np.uint64)
-    h1 = (h * _MIX1) ^ (h >> np.uint64(33))
-    h2 = ((h * _MIX2) ^ (h >> np.uint64(29))) | np.uint64(1)
-    i = np.arange(n_probes, dtype=np.uint64)[None, :]
-    return ((h1[:, None] + i * h2[:, None]) % np.uint64(m_bits)).astype(np.int64)
-
-
-def _set_bits(bitset: np.ndarray, hashes: np.ndarray, n_probes: int, m_bits: int) -> None:
-    pos = _probe_positions(hashes, n_probes, m_bits)
-    np.bitwise_or.at(bitset, pos.ravel() >> 3, np.uint8(1) << (pos.ravel() & 7).astype(np.uint8))
-
 
 def _hashes_u64(col: "pd.Series") -> np.ndarray:
     return col.to_numpy().astype(np.int64).view(np.uint64)
-
-
-def build_shard_blooms(
-    seen: DataFrame,
-    bits_per_key: int = 10,
-    n_probes: int = 7,
-    min_bits: int = 1 << 12,
-    m_bits: int | None = None,
-) -> DataFrame:
-    """seen(shard, url_hash) → (shard, m_bits, bloom binary), one row/shard.
-
-    Default sizing is adaptive (next pow2 ≥ n·bits_per_key per shard). Pass
-    a fixed ``m_bits`` when the result will later grow via
-    ``update_shard_blooms`` — incremental ORs require a stable size."""
-
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        n = len(pdf)
-        mb = m_bits or max(min_bits, 1 << math.ceil(math.log2(max(1, n * bits_per_key))))
-        bitset = np.zeros(mb // 8, dtype=np.uint8)
-        _set_bits(bitset, _hashes_u64(pdf["url_hash"]), n_probes, mb)
-        return pd.DataFrame({"shard": [shard], "m_bits": [mb], "bloom": [bitset.tobytes()]})
-
-    return seen.groupBy("shard").applyInPandas(_build, BLOOM_SCHEMA)
-
-
-def update_shard_blooms(
-    blooms: DataFrame,
-    new_hashes: DataFrame,
-    m_bits: int = 1 << 20,
-    n_probes: int = 7,
-) -> DataFrame:
-    """OR a batch of new keys into per-shard bloom bitsets — the incremental
-    build: cost O(batch + nshards·m_bits/8) per call, independent of how
-    many keys the blooms already hold (a from-scratch rebuild rescans the
-    entire seen table every epoch — O(total) and growing).
-
-    ``blooms``: (shard, m_bits, bloom) as produced here or by
-    ``build_shard_blooms``; may be empty. ``new_hashes``: (shard, url_hash).
-    Shards appearing only in ``new_hashes`` get fresh ``m_bits``-sized
-    bitsets; existing shards keep their stored size (probe positions depend
-    on it). Bloom bytes never visit the driver."""
-
-    def _upd(key: tuple, hpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        if len(bpdf) > 1:
-            # one bloom row per shard is the state invariant — silently
-            # taking iloc[0] would drop the other bitsets' keys, turning
-            # seen keys into false negatives (ADVICE r3)
-            raise ValueError(f"{len(bpdf)} bloom rows for shard {shard}; expected 1")
-        if len(bpdf):
-            mb = int(bpdf["m_bits"].iloc[0])
-            bitset = np.frombuffer(bytes(bpdf["bloom"].iloc[0]), dtype=np.uint8).copy()
-        else:
-            mb = m_bits
-            bitset = np.zeros(mb // 8, dtype=np.uint8)
-        if len(hpdf):
-            _set_bits(bitset, _hashes_u64(hpdf["url_hash"]), n_probes, mb)
-        return pd.DataFrame({"shard": [shard], "m_bits": [mb], "bloom": [bitset.tobytes()]})
-
-    return (
-        new_hashes.groupBy("shard")
-        .cogroup(blooms.groupBy("shard"))
-        .applyInPandas(_upd, BLOOM_SCHEMA)
-    )
 
 
 def anti_join_exact(candidates: DataFrame, seen: DataFrame, key: str = "url_hash") -> DataFrame:
@@ -146,14 +51,14 @@ def salted_shard_cogroup(
     probe,
     out_schema: str,
 ) -> DataFrame:
-    """Shared (shard, salt)-cogroup plan for probing per-shard read-only
-    state (bloom bitsets, cuckoo tables): shuffle candidates once on
-    ``(_shard, _psalt)``, replicate each shard's single state row per salt
-    slice in-plan, apply ``probe`` per cogroup. The salt derivation —
-    ``shiftright(key, 20)``, bits disjoint from the pmod shard bits so the
-    sub-split is uniform within a shard — lives ONLY here: both the bloom
-    and cuckoo backends route through this helper, so a future change to
-    the salt/shard scheme cannot silently diverge between them."""
+    """(shard, salt)-cogroup plan for probing per-shard read-only state
+    (the cuckoo tables): shuffle candidates once on ``(_shard, _psalt)``,
+    replicate each shard's single state row per salt slice in-plan, apply
+    ``probe`` per cogroup. The salt derivation — ``shiftright(key, 20)``,
+    bits disjoint from the pmod shard bits so the sub-split is uniform
+    within a shard — decouples probe-task count (ns·salt) and per-task
+    batch size from nshards; results are identical for any salt because
+    the probe is row-local."""
     s = max(1, int(salt))
     cand_b = candidates.withColumn(
         "_shard", F.pmod(F.col(key), F.lit(ns)).cast("int")
@@ -166,135 +71,3 @@ def salted_shard_cogroup(
         .cogroup(state_rep.groupBy("shard", "_psalt"))
         .applyInPandas(probe, out_schema)
     )
-
-
-def anti_join_bloom(
-    candidates: DataFrame,
-    seen: DataFrame,
-    key: str = "url_hash",
-    n_probes: int = 7,
-    nshards: int | None = None,
-    temps: list | None = None,
-    blooms: DataFrame | None = None,
-    probe_columns: str = "rows",
-    probe_salt: int = 4,
-) -> DataFrame:
-    """candidates ∖ seen with an executor-side per-shard Bloom prefilter.
-
-    Candidates shuffle ONCE by ``shard = pmod(key, nshards)`` and are
-    cogrouped with their shard's bloom row (``applyInPandas`` over the
-    cogroup — bloom bytes stay on executors; nothing is collected or
-    broadcast). Rows the bloom rejects are definitely new; only the
-    ``might_contain`` minority reaches the exact anti-join, so the full
-    seen table is never shuffled against the full candidate stream. Result
-    is identical to ``anti_join_exact`` (no false negatives).
-
-    ``blooms``: pre-built/incrementally-maintained bloom table (the engine
-    passes its epoch state — see CrawlEngine). When ``None``, blooms are
-    built from ``seen`` in-plan (one pass over seen; fine ad-hoc, wasteful
-    per-epoch). ``n_probes`` must match the value the blooms were built
-    with.
-
-    ``nshards`` MUST be the modulus used to shard ``seen``: a wrong modulus
-    buckets candidates against the wrong bloom and would misclassify seen
-    rows as definitely-new. When omitted it is inferred with a tiny
-    aggregate over ``seen`` (one driver job — ad-hoc convenience only), and
-    any bloom row whose shard id falls outside [0, nshards) fails the probe
-    task (modulus-mismatch guard).
-
-    ``temps``: optional list collecting the persisted probe intermediate so
-    the caller (e.g. CrawlEngine epoch cleanup) can unpersist it after the
-    consuming action. When ``None`` the intermediate stays cached until
-    Spark evicts it under memory pressure — fine for one-shot ad-hoc calls,
-    a leak if you call this in a loop (pass ``temps``).
-
-    ``probe_columns``: ``"rows"`` (default) ships full candidate rows
-    through the Arrow cogroup — simple plan, ONE candidate shuffle.
-    ``"keys"`` ships only the hash column through Arrow and restores full
-    rows with a left-semi join on the surviving keys — measured SLOWER at
-    16M/local[32] on the engine's (url, host, path, hash) rows (295 s vs
-    184 s: the extra semi-join shuffle outweighs the Arrow savings); kept
-    as a knob for workloads whose candidate rows are much wider than a
-    URL (e.g. rows carrying payload blobs), where the trade flips.
-    Identical results either way (duplicate keys all survive together,
-    matching the exact anti-join's semantics).
-
-    ``probe_salt`` sub-splits each shard's probe group: the cogroup key is
-    (shard, salt) with salt = pmod(shiftright(key, 20), probe_salt) and
-    each shard's ONE bloom row replicated per salt (an in-plan explode —
-    nshards·probe_salt·m_bits/8 bloom bytes through the shuffle, bounded
-    and executor-side). Without it, probe parallelism is capped at nshards
-    and a whole shard's candidate batch materializes as ONE pandas frame
-    per task — a memory/parallelism ceiling at the 10^10-key target scale
-    (ADVICE r3). Results identical for any value (the probe is row-local)."""
-    if nshards is None:
-        mx = seen.agg(F.max("shard").alias("m")).first()["m"]
-        nshards = (int(mx) if mx is not None else 0) + 1
-    if blooms is None:
-        blooms = build_shard_blooms(seen, n_probes=n_probes)
-    ns = int(nshards)
-
-    if probe_columns == "keys":
-        keyed = candidates.select(key)
-        marked_keys = _probe_cogroup(keyed, blooms, key, n_probes, ns, probe_salt)
-        marked_keys = marked_keys.persist()
-        if temps is not None:
-            temps.append(marked_keys)
-        survivor_keys = anti_join_exact(
-            marked_keys.filter(F.col("_maybe")).drop("_maybe"), seen, key
-        )
-        new_keys = (
-            marked_keys.filter(~F.col("_maybe")).drop("_maybe").unionByName(survivor_keys)
-        )
-        return candidates.join(new_keys, key, "left_semi")
-
-    marked = _probe_cogroup(candidates, blooms, key, n_probes, ns, probe_salt).persist()
-    if temps is not None:
-        temps.append(marked)
-    maybe = marked.filter(F.col("_maybe")).drop("_maybe")
-    definitely_new = marked.filter(~F.col("_maybe")).drop("_maybe")
-    survivors = anti_join_exact(maybe, seen, key)
-    return definitely_new.unionByName(survivors)
-
-
-def _probe_cogroup(
-    candidates: DataFrame, blooms: DataFrame, key: str, n_probes: int, ns: int, salt: int = 1
-) -> DataFrame:
-    """(Shard, salt)-cogroup bloom probe: candidates + a replica of their
-    shard's bloom row meet executor-side; appends ``_maybe``. ``salt``
-    decouples probe-task count (ns·salt) and per-task batch size from
-    nshards — the bloom is read-only here, so replicating it per salt
-    slice changes nothing but the partitioning."""
-    cand_cols = list(candidates.columns)
-    out_schema = _out_ddl(candidates, "_maybe boolean")
-
-    def _probe(key_t: tuple, cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key_t[0])
-        if shard >= ns or shard < 0:
-            raise ValueError(
-                f"seen-set bloom shard {shard} outside [0, {ns}): the seen table "
-                "was sharded with a different modulus than nshards"
-            )
-        if len(bpdf) > 1:
-            # one bloom row per (shard, salt) replica — duplicates mean the
-            # blooms table itself held >1 row per shard; probing only the
-            # first would yield false negatives (ADVICE r3)
-            raise ValueError(f"{len(bpdf)} bloom rows for shard {shard}; expected 1")
-        out = cpdf[cand_cols].copy()  # Arrow gives correct dtypes even when empty
-        if not len(cpdf):
-            out["_maybe"] = pd.Series([], dtype=bool)
-            return out
-        if not len(bpdf):
-            out["_maybe"] = False  # empty shard → definitely unseen
-            return out
-        mb = int(bpdf["m_bits"].iloc[0])
-        bitset = np.frombuffer(bytes(bpdf["bloom"].iloc[0]), dtype=np.uint8)
-        pos = _probe_positions(_hashes_u64(cpdf[key]), n_probes, mb)
-        hit = np.ones(len(cpdf), dtype=bool)
-        for j in range(n_probes):
-            p = pos[:, j]
-            hit &= (bitset[p >> 3] & (np.uint8(1) << (p & 7).astype(np.uint8))) != 0
-        out["_maybe"] = hit
-        return out
-
-    return salted_shard_cogroup(candidates, blooms, key, ns, salt, _probe, out_schema)

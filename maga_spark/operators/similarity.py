@@ -254,7 +254,7 @@ def append_to_ivf_index(
     vectors with the STORED centroids and append to the existing ``cid``
     partition directories — the index survives corpus growth without a
     retrain or a rewrite (the same incremental-state story as the seen-set
-    blooms: per-batch cost is O(batch), independent of index size).
+    cuckoo filters: per-batch cost is O(batch), independent of index size).
     Existing files are never touched (parquet append writes new files into
     the matching ``cid=`` dirs); ``ivf_topk`` serves the union immediately.
     Centroids intentionally stay FIXED — recall drifts only if the data

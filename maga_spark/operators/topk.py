@@ -173,7 +173,6 @@ def global_topk_ranked(
     k: int,
     rank_name: str = "rank",
     temps: list | None = None,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Exact global top-k WITH global rank, fully distributed — no driver
     merge, no single-partition window.
@@ -207,9 +206,6 @@ def global_topk_ranked(
     for pid in sorted(counts):
         offsets[pid] = cum
         cum += counts[pid]
-    if stats is not None:  # free byproducts of the offsets job — no extra action
-        stats["n_input"] = cum
-        stats["n_kept"] = min(cum, k)
     if not offsets:
         return s.withColumn(rank_name, F.lit(0)).filter(F.lit(False)).drop("_pid")
     off_expr = F.element_at(

@@ -10,8 +10,8 @@ into n stable buckets, the catalog records the layout, and a sort-merge
 join against it needs an Exchange (and with sorted buckets not even a
 Sort) only on the SMALL candidate side. Appends land per-bucket, so the
 incremental absorb keeps the layout without rewriting history — the same
-grow-in-place story as the incremental shard blooms (operators/seen.py),
-told at the storage layer. This is the standalone-table mirror of the
+grow-in-place story as the incremental shard cuckoo filters
+(operators/cuckoo.py), told at the storage layer. This is the standalone-table mirror of the
 reference's single in-process ``seen`` dict (maga/crawler.py:52,216-223):
 what a dict's O(1) membership gives one process, a bucket-aligned
 merge-join gives a cluster.

@@ -43,9 +43,6 @@ def local_ckpt(df: DataFrame) -> DataFrame:
     ``frontier._ckpt_rdd`` — observe the identical RDD id), whose logical
     stats are reset to the constant per-leaf default."""
     ck = df.localCheckpoint(eager=True)
-    import os
-    if os.environ.get("MAGA_CKPT_RAW") == "1":
-        return ck
     try:
         spark = df.sparkSession
         plan = ck._jdf.queryExecution().analyzed()

@@ -24,8 +24,8 @@ pipeline per epoch (reference analog in parens):
 Must match maga_spark.sim bit-for-bit (tests/test_parity.py). Scale notes:
 state is hash-sharded on url_hash; the hot-host window is salted
 (operators.topk); granted (≤ K rows) is always the broadcast side of the
-fetch joins; the seen anti-join can run behind a per-shard Bloom prefilter
-(operators.seen.anti_join_bloom) with identical results.
+fetch joins; the seen anti-join can run behind a per-shard cuckoo-filter
+prefilter (operators.cuckoo.anti_join_cuckoo) with identical results.
 """
 
 from __future__ import annotations
@@ -45,13 +45,7 @@ from maga_spark.operators.cuckoo import (
     delete_from_shard_cuckoo,
     update_shard_cuckoo,
 )
-from maga_spark.operators.seen import (
-    BLOOM_SCHEMA,
-    anti_join_bloom,
-    anti_join_exact,
-    build_shard_blooms,
-    update_shard_blooms,
-)
+from maga_spark.operators.seen import anti_join_exact
 from maga_spark.operators.observe import RobustObservation, obs_name
 from maga_spark.plans.ckpt import local_ckpt
 from maga_spark.operators.topk import (
@@ -86,15 +80,20 @@ class EngineResult:
     fetched_invalid: int = 0
 
 
+SEEN_MODES = ("exact", "cuckoo")  # identical results; cuckoo adds a prefilter
+
+
 class CrawlEngine:
     def __init__(
         self,
         spark: SparkSession,
         fixtures_dir: str,
         cfg: CrawlConfig = CrawlConfig(),
-        seen_mode: str = "exact",  # "exact" | "bloom" | "cuckoo" — identical results
+        seen_mode: str = "exact",  # one of SEEN_MODES
         snapshot_dir: str | None = None,
     ):
+        if seen_mode not in SEEN_MODES:
+            raise ValueError(f"seen_mode must be one of {SEEN_MODES}, got {seen_mode!r}")
         self.spark = spark
         self.cfg = cfg
         self.seen_mode = seen_mode
@@ -126,31 +125,21 @@ class CrawlEngine:
         # by the DISTINCT HOST count, not the URL universe — but that bound
         # is only broadcast-sized for fixture-shaped host counts. The real
         # web is ~10^8 hosts; forcing a broadcast there pushes multi-GB
-        # through the driver to every executor (VERDICT r3 #1). Default is
-        # therefore NO forced hint (broadcast_host_limit=0): AQE chooses
-        # from runtime sizes — it still auto-broadcasts small host tables,
-        # and the 16M A/B measured the forced hint a dead heat even at
-        # fixture host counts (BENCH.md). A positive limit re-enables the
-        # hint below that host count, decided ONCE at init from the
-        # politeness table (one row per known host).
-        # (the count() job only runs when a limit is configured — in the
-        # default limit=0 mode init stays free of driver-serial Spark jobs)
-        self._n_hosts = self.politeness.count() if cfg.broadcast_host_limit > 0 else 0
-        self._host_bcast = 0 < cfg.broadcast_host_limit and (
-            self._n_hosts <= cfg.broadcast_host_limit
-        )
+        # through the driver to every executor (VERDICT r3 #1). The host
+        # joins therefore carry NO broadcast hint: AQE chooses from runtime
+        # sizes — it still auto-broadcasts small host tables, and the 16M
+        # A/B measured a forced hint a dead heat even at fixture host
+        # counts (BENCH.md).
 
         empty = spark.createDataFrame
         self.frontier = empty([], "url_hash long, url_canon string, host string, path string")
         self.seen = empty([], "shard int, url_hash long")
         self.host_state = empty([], "host string, tokens int, epoch int")
-        # bloom/cuckoo modes: per-shard filter rows are ENGINE STATE, grown
-        # incrementally (update_shard_blooms / update_shard_cuckoo) and
-        # checkpointed with the other tables — never rebuilt from the full
-        # seen set, never driver-collected. The cuckoo table additionally
-        # supports key DELETION (operators/cuckoo.py) — the re-crawl
-        # primitive BASELINE.json's "cuckoo/bloom" phrasing asks for.
-        self.blooms = empty([], BLOOM_SCHEMA)
+        # cuckoo mode: per-shard filter rows are ENGINE STATE, grown
+        # incrementally (update_shard_cuckoo) and checkpointed with the
+        # other tables — never rebuilt from the full seen set, never
+        # driver-collected. The table also supports key DELETION
+        # (operators/cuckoo.py) — the re-crawl primitive of expire_urls.
         self.cuckoo = empty([], CUCKOO_SCHEMA)
         self._pending: DataFrame | None = None  # discovery batch for the next absorb
         self._epoch_temps: list[DataFrame] = []  # persisted intra-epoch temporaries
@@ -163,11 +152,6 @@ class CrawlEngine:
         # slice exceeding cfg.topk_skew_factor× the fair share — subsequent
         # epochs then use the sampled range-partitioner top-K
         self.topk_fallback_active = False
-
-    def _host_side(self, df: DataFrame) -> DataFrame:
-        """Build side of a host-keyed state join: broadcast-hinted only
-        under cfg.broadcast_host_limit hosts (see __init__)."""
-        return F.broadcast(df) if self._host_bcast else df
 
     # ---------- epoch stages ----------
 
@@ -187,40 +171,26 @@ class CrawlEngine:
             .withColumn("url_hash", F.xxhash64("url_canon"))
             .dropDuplicates(["url_hash"])
         )
-        if self.seen_mode == "bloom":
-            # explicit modulus: inferring it from max(shard) misbuckets
-            # candidates when the top shard happens to be unpopulated.
-            # self.blooms covers exactly the committed seen set (the epoch
-            # invariant below keeps them in lockstep), so no rebuild here.
-            # probe_columns="rows" ON MEASUREMENT: the keys-only probe
-            # (hash-only Arrow transfer + left-semi rejoin) benched 295 s
-            # vs rows' 184 s at 16M/local[32] — the extra candidate
-            # shuffle outweighs the Arrow savings at this row width
-            anti = lambda c, s: anti_join_bloom(  # noqa: E731
-                c,
-                s,
-                nshards=cfg.nshards,
-                temps=self._epoch_temps,
-                blooms=self.blooms,
-                probe_salt=cfg.bloom_probe_salt,
-            )
-        elif self.seen_mode == "cuckoo":
-            # same contract and probe shape as bloom mode (exact residual
-            # anti-join on the might-contain minority ⇒ identical results);
-            # the filter state additionally supports deletion for re-crawl
+        if self.seen_mode == "cuckoo":
+            # exact residual anti-join on the might-contain minority ⇒
+            # identical results to exact mode. Explicit modulus: inferring
+            # it from max(shard) misbuckets candidates when the top shard
+            # happens to be unpopulated. self.cuckoo covers exactly the
+            # committed seen set (the invariant below keeps them in
+            # lockstep), so no rebuild here.
             anti = lambda c, s: anti_join_cuckoo(  # noqa: E731
                 c,
                 s,
                 nshards=cfg.nshards,
                 temps=self._epoch_temps,
                 filters=self.cuckoo,
-                probe_salt=cfg.bloom_probe_salt,
+                probe_salt=cfg.probe_salt,
             )
         else:
             anti = anti_join_exact
         new = (
             anti(hashed, self.seen)
-            .join(self._host_side(self.robots_agg), "host", "left")
+            .join(self.robots_agg, "host", "left")
             .withColumn(
                 "blocked",
                 F.coalesce(
@@ -247,17 +217,11 @@ class CrawlEngine:
             F.pmod("url_hash", F.lit(cfg.nshards)).cast("int").alias("shard"), "url_hash"
         )
         self.seen = self.seen.unionByName(new_hashes)
-        if self.seen_mode == "bloom":
-            # INVARIANT: blooms cover exactly the same key set as seen —
-            # probed BEFORE this point against S_{e-1}, updated here with
-            # the same batch seen just absorbed (missing keys would be
+        if self.seen_mode == "cuckoo":
+            # INVARIANT: the cuckoo tables cover exactly the same key set as
+            # seen — probed BEFORE this point against S_{e-1}, updated here
+            # with the same batch seen just absorbed (missing keys would be
             # false negatives → re-enqueued seen URLs → parity break)
-            self.blooms = update_shard_blooms(
-                self.blooms, new_hashes, m_bits=cfg.bloom_m_bits
-            )
-        elif self.seen_mode == "cuckoo":
-            # same lockstep invariant as the blooms: the cuckoo tables must
-            # cover exactly the committed seen set after every absorb
             self.cuckoo = update_shard_cuckoo(
                 self.cuckoo,
                 new_hashes,
@@ -298,18 +262,10 @@ class CrawlEngine:
             self.frontier.select("url_hash", "host")
             .crossJoin(F.broadcast(epoch_df))
             .withColumn("xor_d", xor_dist(F.col("url_hash"), F.col("cur_target")))
-            .join(self._host_side(self.politeness), "host", "left")
+            .join(self.politeness, "host", "left")
             .withColumn("rate", F.coalesce("rate_per_epoch", F.lit(cfg.default_rate)))
             .withColumn("burst", F.coalesce("burst", F.lit(cfg.default_burst)))
-            # under the host limit, broadcasting host_state saves
-            # re-shuffling the full frontier-sized candidate set every epoch
-            # (measured the largest shuffle at 16M); above it the hint drops
-            # and the candidates shuffle on host (_host_side rationale)
-            .join(
-                self._host_side(self.host_state.withColumnRenamed("epoch", "st_epoch")),
-                "host",
-                "left",
-            )
+            .join(self.host_state.withColumnRenamed("epoch", "st_epoch"), "host", "left")
             .withColumn(
                 "avail",
                 F.least(
@@ -492,11 +448,6 @@ class CrawlEngine:
             f_seen = ex.submit(local_ckpt, self.seen.coalesce(n_coal))
             f_frontier = ex.submit(local_ckpt, self.frontier.coalesce(n_coal))
             f_hosts = ex.submit(local_ckpt, self.host_state.coalesce(n_coal))
-            f_blooms = (
-                ex.submit(local_ckpt, self.blooms.coalesce(n_coal))
-                if self.seen_mode == "bloom"
-                else None
-            )
             f_cuckoo = (
                 ex.submit(local_ckpt, self.cuckoo.coalesce(n_coal))
                 if self.seen_mode == "cuckoo"
@@ -505,8 +456,6 @@ class CrawlEngine:
             self.seen = f_seen.result()
             self.frontier = f_frontier.result()
             self.host_state = f_hosts.result()
-            if f_blooms is not None:
-                self.blooms = f_blooms.result()
             if f_cuckoo is not None:
                 self.cuckoo = f_cuckoo.result()
         # Deterministic unpersist of the SUPERSEDED epoch-(e-1) state
@@ -530,7 +479,6 @@ class CrawlEngine:
                     self.seen,
                     self.frontier,
                     self.host_state,
-                    self.blooms if self.seen_mode == "bloom" else None,
                     self.cuckoo if self.seen_mode == "cuckoo" else None,
                 )
                 if df is not None
@@ -579,22 +527,10 @@ class CrawlEngine:
             self._pending = self.spark.read.parquet(f"{self.fixtures_dir}/seeds.parquet").select(
                 "url"
             )
-        import os as _os
-        import time as _time
-
-        phase_times = _os.environ.get("MAGA_BENCH_PHASE_TIMES") == "1"
-
-        def _tick(label, t0):
-            if phase_times:
-                print(f"PHASE {label} {_time.perf_counter() - t0:.2f}s", flush=True)
-            return _time.perf_counter()
-
         n_epochs = cfg.epochs if epochs is None else epochs
         for e in range(self._start_epoch, self._start_epoch + n_epochs):
-            t = _time.perf_counter()
             absorb_obs = self._absorb(self._pending, e)
             granted, stats = self._schedule(e)
-            t = _tick(f"e{e}.schedule", t)
             discoveries, fetch_obs = self._fetch(granted, e)
 
             ordering_df = granted.select(
@@ -611,7 +547,6 @@ class CrawlEngine:
 
             # truncate lineage between epochs (state = pure snapshot, §7.0)
             self._commit_state(discoveries)
-            t = _tick(f"e{e}.commit", t)
 
             # FIRING INVARIANT: every Observation.get below blocks until a
             # job scans its plan, and _commit_state's wave-1 jobs are what
@@ -683,14 +618,13 @@ class CrawlEngine:
 
         ``urls``: DataFrame with either a raw ``url`` column (canonicalized
         here, same path as absorb) or a ``url_hash`` column. Keys not
-        currently in seen are ignored (idempotent). Per seen_mode:
+        currently in seen are ignored (idempotent), and so are keys still
+        queued in the frontier: forgetting one would let the next absorb
+        enqueue it a second time. Per seen_mode:
 
         * exact  — anti-join removal from seen only;
         * cuckoo — ALSO deletes the per-key fingerprints, O(batch) — the
-          capability the cuckoo backend exists for;
-        * bloom  — bitsets cannot forget: the blooms are REBUILT from the
-          surviving seen set, O(seen) — the documented cost of choosing
-          bloom over cuckoo when expiry is part of the workload.
+          capability the cuckoo backend exists for.
 
         Returns the number of keys actually expired."""
         cfg = self.cfg
@@ -710,6 +644,9 @@ class CrawlEngine:
             # only keys actually seen: keeps the cuckoo delete contract
             # (never delete a never-inserted key) and makes expiry idempotent
             .join(self.seen, ["shard", "url_hash"], "left_semi")
+            # never a queued key: the frontier row stays, so forgetting it
+            # would make the next absorb append a duplicate url_hash
+            .join(self.frontier.select("url_hash"), "url_hash", "left_anti")
             # freeze the batch: the seen removal and the filter delete must
             # observe the SAME key set even though self.seen changes below
             .localCheckpoint(True)
@@ -718,8 +655,6 @@ class CrawlEngine:
         self.seen = self.seen.join(keyed.select("url_hash"), "url_hash", "left_anti")
         if self.seen_mode == "cuckoo":
             self.cuckoo = local_ckpt(delete_from_shard_cuckoo(self.cuckoo, keyed))
-        elif self.seen_mode == "bloom":
-            self.blooms = local_ckpt(build_shard_blooms(self.seen, m_bits=cfg.bloom_m_bits))
         return n
 
     def seen_per_shard(self) -> list:

@@ -106,16 +106,11 @@ def resume(spark: SparkSession, root: str, fixtures_dir: str, cfg, seen_mode: st
     eng.seen = spark.read.parquet(os.path.join(base, "seen"))
     eng.host_state = spark.read.parquet(os.path.join(base, "host_state"))
     eng._pending = spark.read.parquet(os.path.join(base, "pending"))
-    if seen_mode == "bloom":
-        # blooms are derived state (exactly the seen key set) — rebuild
+    if seen_mode == "cuckoo":
+        # the filter is derived state (exactly the seen key set) — rebuild
         # once from the restored seen table rather than snapshotting the
-        # bitsets; subsequent epochs grow them incrementally again
-        from maga_spark.operators.seen import build_shard_blooms
-
-        eng.blooms = build_shard_blooms(eng.seen, m_bits=cfg.bloom_m_bits)
-    elif seen_mode == "cuckoo":
-        # same derived-state rule as the blooms; the stored geometry must
-        # match the config the engine will keep inserting with
+        # tables; subsequent epochs grow it incrementally again. The stored
+        # geometry must match the config the engine will keep inserting with
         from maga_spark.operators.cuckoo import build_shard_cuckoo
 
         eng.cuckoo = build_shard_cuckoo(

@@ -1,6 +1,6 @@
 """Cuckoo-filter seen set (operators/cuckoo.py): anti-join ≡ exact,
 incremental ≡ from-scratch (result-level), deletion (the re-crawl
-primitive blooms lack), and the state-invariant guards."""
+primitive), and the state-invariant guards."""
 
 from __future__ import annotations
 
@@ -46,13 +46,73 @@ def _sorted_rows(df):
 
 
 def test_anti_join_cuckoo_equals_exact(spark, keysets):
+    """Exact for ANY probe_salt (the probe is row-local; ADVICE r3) and for
+    a dense filter whose 4-bit fingerprints false-positive on about a
+    fifth of the fresh keys — the residual anti-join corrects every one."""
     seen_a, seen_b, fresh = keysets
     seen = _seen_df(spark, np.concatenate([seen_a, seen_b]))
     cands = _cand_df(spark, np.concatenate([seen_a[:300], fresh[:700]]), dup_first=True)
-    got = anti_join_cuckoo(cands, seen, nshards=NSHARDS)
-    want = anti_join_exact(cands, seen)
-    assert _sorted_rows(got) == _sorted_rows(want)
-    assert len(_sorted_rows(got)) >= 700  # the fresh keys (plus dups) all survived
+    want = _sorted_rows(anti_join_exact(cands, seen))
+    assert len(want) >= 700  # the fresh keys (plus dups) all survive
+    dense = build_shard_cuckoo(seen, fp_bits=4)
+    for salt, filters in ((1, None), (3, None), (8, None), (4, dense)):
+        got = anti_join_cuckoo(cands, seen, nshards=NSHARDS, filters=filters, probe_salt=salt)
+        assert _sorted_rows(got) == want, f"probe_salt={salt} dense={filters is not None}"
+
+
+@pytest.mark.parametrize("case", ["empty", "sparse_top_shard"])
+def test_anti_join_cuckoo_edge_seen_sets(spark, case):
+    """An empty seen set (nshards inferred) keeps every candidate. A sparse
+    one whose top shards are unpopulated (ADVICE round-1 regression) must
+    be probed with the seen table's real modulus: hashes 8, 9, 10 sit in
+    shards 0-2 of 8, and inferring max(shard)+1 = 3 would probe hash 10 in
+    shard 10 % 3 = 1, whose filter does not hold it."""
+    cand = spark.createDataFrame([(8,), (9,), (10,), (999,)], "url_hash long")
+    if case == "empty":
+        seen = spark.createDataFrame([], "shard int, url_hash long")
+        got = anti_join_cuckoo(cand, seen)
+        assert {r["url_hash"] for r in got.collect()} == {8, 9, 10, 999}
+    else:
+        seen = spark.createDataFrame([(0, 8), (1, 9), (2, 10)], "shard int, url_hash long")
+        got = anti_join_cuckoo(cand, seen, nshards=8)
+        assert {r["url_hash"] for r in got.collect()} == {999}
+
+
+def test_cuckoo_rejects_inconsistent_nshards(spark):
+    """Modulus-mismatch guard: a filter row whose shard id falls outside
+    [0, nshards) fails the probe task (executor-side — filter bytes are
+    never collected to the driver, so there is nothing to check there)."""
+    seen = spark.createDataFrame([(5, 42)], "shard int, url_hash long")
+    cand = spark.createDataFrame([(42,)], "url_hash long")
+    with pytest.raises(Exception, match="different modulus|outside"):
+        anti_join_cuckoo(cand, seen, nshards=4).collect()
+
+
+def test_cuckoo_single_probe_pass_no_driver_bytes(spark, keysets):
+    """The probe runs once — both split branches (definitely-new and the
+    might-contain residual) read the persisted cogroup output — and filter
+    bytes stay executor-side: no broadcast of the filter table."""
+    seen_a, _seen_b, fresh = keysets
+    seen = _seen_df(spark, seen_a)
+    cands = _cand_df(spark, np.concatenate([seen_a[:100], fresh[:100]]))
+    temps: list = []
+    out = anti_join_cuckoo(cands, seen, nshards=NSHARDS, temps=temps)
+    lines = out._jdf.queryExecution().executedPlan().toString().splitlines()
+    assert sum("InMemoryTableScan" in ln for ln in lines) >= 2
+    assert len(temps) == 1
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    for i, ln in enumerate(lines):  # no broadcast subtree builds the filter
+        if "BroadcastExchange" in ln:
+            sub = []
+            for nxt in lines[i + 1 :]:
+                if depth(nxt) <= depth(ln):
+                    break
+                sub.append(nxt)
+            assert not any("FlatMapGroupsInPandas" in x or "table#" in x for x in sub)
+    temps[0].unpersist()
 
 
 def test_incremental_update_equals_scratch_results(spark, keysets):
@@ -101,6 +161,9 @@ def test_delete_never_inserted_raises(spark, keysets):
 
 
 def test_duplicate_state_rows_raise(spark, keysets):
+    """A filter table carrying >1 row per shard violates the state
+    invariant; probing or updating only the first would turn seen keys into
+    false negatives — both must raise instead (ADVICE r3)."""
     seen_a, seen_b, _fresh = keysets
     f1 = build_shard_cuckoo(_seen_df(spark, seen_a), nbuckets=1 << 11)
     doubled = f1.unionByName(f1)
@@ -109,6 +172,8 @@ def test_duplicate_state_rows_raise(spark, keysets):
         anti_join_cuckoo(
             cands, _seen_df(spark, seen_a), nshards=NSHARDS, filters=doubled
         ).collect()
+    with pytest.raises(Exception, match="expected 1"):
+        update_shard_cuckoo(doubled, _seen_df(spark, seen_b[:10]), nbuckets=1 << 11).collect()
 
 
 def test_overflow_raises_not_drops(spark, keysets):
@@ -119,12 +184,13 @@ def test_overflow_raises_not_drops(spark, keysets):
         build_shard_cuckoo(_seen_df(spark, seen_a), nbuckets=8).collect()
 
 
-@pytest.mark.parametrize("mode", ["exact", "cuckoo", "bloom"])
+@pytest.mark.parametrize("mode", ["exact", "cuckoo"])
 def test_engine_expire_recrawl(spark, tmp_path, mode):
     """Re-crawl end-to-end: expire fetched URLs from seen and the next
     absorb re-enqueues and re-grants them. Exercises the deletion path the
-    cuckoo backend exists for (exact/bloom modes take their documented
-    removal/rebuild paths, same result)."""
+    cuckoo backend exists for (exact mode takes its anti-join removal
+    path, same result). A URL still queued in the frontier is not expired:
+    forgetting it would let the next absorb enqueue it a second time."""
     from maga_spark.crawlspec import CrawlConfig
     from maga_spark.plans.frontier import CrawlEngine
     from maga_spark.sources.fixtures import generate
@@ -144,22 +210,37 @@ def test_engine_expire_recrawl(spark, tmp_path, mode):
         if len(by_host) == 4:
             break
     urls = sorted(by_host.values())
-    expired = eng.expire_urls(spark.createDataFrame([(u,) for u in urls], "url string"))
-    assert expired == len(urls)
+    # a URL still waiting in the frontier (seen, never granted)
+    queued_url = eng.frontier.orderBy("url_hash").first()["url_canon"]
+    batch = urls + [queued_url]
+    expired = eng.expire_urls(spark.createDataFrame([(u,) for u in batch], "url string"))
+    assert expired == len(urls)  # the queued URL is not counted
     assert eng.seen.count() == seen_before - len(urls)
     # idempotent: expiring again is a no-op (keys no longer in seen)
-    assert eng.expire_urls(spark.createDataFrame([(u,) for u in urls], "url string")) == 0
+    assert eng.expire_urls(spark.createDataFrame([(u,) for u in batch], "url string")) == 0
 
     # feed the expired URLs back as the next discovery batch: every one
     # must re-enter the crawl — re-granted already, or re-enqueued and
     # waiting on priority/politeness like any first-time URL
-    eng._pending = spark.createDataFrame([(u,) for u in urls], "url string")
+    eng._pending = spark.createDataFrame([(u,) for u in batch], "url string")
     res2 = eng.run(epochs=1, collect_ordering=True)
     regranted = {u for (_e, _r, u) in res2.ordering}
-    queued = {r["url_canon"] for r in eng.frontier.select("url_canon").collect()}
+    frontier = eng.frontier.select("url_hash", "url_canon").collect()
+    queued = {r["url_canon"] for r in frontier}
     assert set(urls) <= regranted | queued, f"lost: {set(urls) - regranted - queued}"
     assert regranted & set(urls), "expiry re-granted nothing"
+    assert len(frontier) == len({r["url_hash"] for r in frontier}), "duplicate frontier url_hash"
     assert eng.seen.count() == seen_before  # re-absorbed into seen
+
+
+@pytest.mark.parametrize("mode", ["bloom", "Cuckoo", ""])
+def test_unknown_seen_mode_raises(spark, tmp_path, mode):
+    """Only "exact" and "cuckoo" exist; any other string (a stale "bloom"
+    caller included) must fail, not silently run another backend."""
+    from maga_spark.plans.frontier import CrawlEngine
+
+    with pytest.raises(ValueError, match="seen_mode"):
+        CrawlEngine(spark, str(tmp_path), seen_mode=mode)
 
 
 def test_update_validates_geometry(spark):
@@ -179,9 +260,9 @@ def test_update_validates_geometry(spark):
 def test_expire_reenqueue_identical_across_modes(spark, tmp_path):
     """VERDICT r4 #5: the re-crawl cycle (crawl → expire → re-discover)
     must be bit-identical across seen backends — same post-expiry
-    re-grant ordering and same final per-shard seen digests in exact,
-    bloom, and cuckoo modes, even though each takes a different removal
-    path (anti-join / rebuild / per-key delete)."""
+    re-grant ordering and same final per-shard seen digests in exact and
+    cuckoo modes, even though each takes a different removal path
+    (anti-join / per-key delete)."""
     from pyspark.sql import functions as F
 
     from maga_spark.crawlspec import CrawlConfig
@@ -193,7 +274,7 @@ def test_expire_reenqueue_identical_across_modes(spark, tmp_path):
     cfg = CrawlConfig(epochs=2, global_k=64, nshards=8)
 
     results = {}
-    for mode in ("exact", "bloom", "cuckoo"):
+    for mode in ("exact", "cuckoo"):
         eng = CrawlEngine(spark, d, cfg, seen_mode=mode)
         res1 = eng.run(collect_ordering=True)
         urls = sorted({u for (_e, _r, u) in res1.ordering})[:10]
@@ -219,5 +300,5 @@ def test_expire_reenqueue_identical_across_modes(spark, tmp_path):
         }
         results[mode] = (res1.ordering, res2.ordering, digs)
 
-    assert results["exact"] == results["bloom"] == results["cuckoo"]
+    assert results["exact"] == results["cuckoo"]
     assert len(results["exact"][1]) > 0  # the re-crawl epoch granted rows

@@ -57,7 +57,7 @@ def test_minhash_lsh_finds_near_dup(spark, docs):
 
 def test_minhash_index_incremental(spark, docs):
     """Incremental near-dup index: append == from-scratch (row-identical,
-    the bloom/IVF incremental-state contract), batch-vs-index query finds
+    the cuckoo/IVF incremental-state contract), batch-vs-index query finds
     exactly the cross pairs of the self-join, self-matches dropped."""
     from maga_spark.operators.dedup import (
         append_to_minhash_index,

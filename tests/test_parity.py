@@ -59,20 +59,11 @@ def test_metrics_match(exact_run, golden):
     assert res.metrics == golden.metrics
 
 
-def test_bloom_path_identical(spark, fixtures_dir, golden):
-    """Bloom-prefiltered seen membership must be bit-exact (no false
-    negatives ⇒ same final set and ordering — SURVEY.md §7.4)."""
-    eng, res = _run_engine(spark, fixtures_dir, seen_mode="bloom")
-    assert res.ordering == golden.ordering
-    got = {r["shard"]: list(r["hashes"]) for r in eng.seen_per_shard()}
-    assert got == golden.seen
-
-
 def test_cuckoo_path_identical(spark, fixtures_dir, golden):
-    """Cuckoo-prefiltered seen membership must be bit-exact too — the
-    second filter backend BASELINE.json names ("cuckoo/bloom URL-seen"),
-    incremental across epochs like the blooms, same exact-residual
-    contract (operators/cuckoo.py)."""
+    """Cuckoo-prefiltered seen membership must be bit-exact (no false
+    negatives ⇒ same final set and ordering — SURVEY.md §7.4): the filter
+    state grows incrementally across epochs and an exact residual
+    anti-join corrects its false positives (operators/cuckoo.py)."""
     eng, res = _run_engine(spark, fixtures_dir, seen_mode="cuckoo")
     assert res.ordering == golden.ordering
     got = {r["shard"]: list(r["hashes"]) for r in eng.seen_per_shard()}
@@ -112,35 +103,25 @@ spark.stop()
 
 
 def test_adaptive_host_joins_no_forced_broadcast(spark, fixtures_dir, golden):
-    """VERDICT r3 #1: above cfg.broadcast_host_limit the host-keyed state
-    joins (politeness / robots_agg / host_state) must carry NO broadcast
-    hint (AQE decides from runtime sizes); results stay bit-exact. Also
-    exercises the scheduler skew-guard fallback in the same run
-    (topk_skew_factor=0 forces the sampled top-K from epoch 1 on) — both
-    adaptive paths together must still reproduce the golden crawl."""
+    """VERDICT r3 #1: the host-keyed state joins (politeness / robots_agg /
+    host_state) carry NO broadcast hint — AQE decides from runtime sizes;
+    results stay bit-exact. Also exercises the scheduler skew-guard
+    fallback in the same run (topk_skew_factor=0 forces the sampled top-K
+    from epoch 1 on) — both adaptive paths together must still reproduce
+    the golden crawl."""
     import dataclasses
     import warnings as _warnings
 
-    cfg = dataclasses.replace(
-        CFG, broadcast_host_limit=0, topk_skew_factor=0.0, topk_skew_min_rows=0
-    )
+    cfg = dataclasses.replace(CFG, topk_skew_factor=0.0, topk_skew_min_rows=0)
     eng = CrawlEngine(spark, fixtures_dir, cfg)
-    assert eng._host_bcast is False
-    # mechanical hint check: the broadcast wrapper must be absent from the
-    # analyzed plan of a host-side join input
-    plan = eng._host_side(eng.politeness)._jdf.queryExecution().analyzed().toString()
+    # mechanical hint check: the absorb plan (seen anti-join + robots_agg
+    # host join) holds no deliberate broadcast, so any hint is a host hint
+    probe = CrawlEngine(spark, fixtures_dir, cfg)
+    seeds = spark.read.parquet(f"{fixtures_dir}/seeds.parquet").select("url")
+    plan = probe._absorb(seeds, 0).df._jdf.queryExecution().analyzed().toString()
+    for t in probe._epoch_temps:
+        t.unpersist()
     assert "ResolvedHint" not in plan
-    # the DEFAULT is the no-hint mode (broadcast_host_limit=0 — the 16M
-    # A/B measured the forced hint a dead heat, BENCH.md); a positive
-    # limit above the fixture host count re-enables the hint
-    default_eng = CrawlEngine(spark, fixtures_dir, CFG)
-    assert default_eng._host_bcast is False
-    hint_eng = CrawlEngine(
-        spark, fixtures_dir, dataclasses.replace(CFG, broadcast_host_limit=1_000_000)
-    )
-    assert hint_eng._host_bcast is True
-    plan_b = hint_eng._host_side(hint_eng.politeness)._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" in plan_b
 
     with _warnings.catch_warnings(record=True) as w:
         _warnings.simplefilter("always")

@@ -1,10 +1,13 @@
-"""Seen-set membership operator (SURVEY.md §7.4)."""
+"""Seen-set membership operator (SURVEY.md §7.4): the exact anti-join and
+the (shard, salt) cogroup the cuckoo prefilter probes through. The cuckoo
+backend itself is covered in tests/test_cuckoo.py."""
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 
-from maga_spark.operators.seen import anti_join_bloom, anti_join_exact, build_shard_blooms
+from maga_spark.operators.seen import anti_join_exact, salted_shard_cogroup
 
 
 def _mk(spark, n_seen=500, n_cand=300, nshards=8):
@@ -21,156 +24,44 @@ def _mk(spark, n_seen=500, n_cand=300, nshards=8):
     return seen, cand
 
 
-def test_bloom_equals_exact(spark):
-    seen, cand = _mk(spark)
-    exact = {r["url_hash"] for r in anti_join_exact(cand, seen).collect()}
-    bloom = {r["url_hash"] for r in anti_join_bloom(cand, seen).collect()}
-    assert bloom == exact
-    assert len(exact) == 150  # exactly the new half
-
-
-def test_bloom_no_false_negatives_small_filter(spark):
-    """Force a dense (high-FP) bloom — result must STILL be exact."""
-    seen, cand = _mk(spark, n_seen=2000, n_cand=1000)
-    from maga_spark.operators import seen as seen_mod
-
-    blooms = build_shard_blooms(seen, bits_per_key=2, min_bits=256).collect()
-    assert all(len(bytes(r["bloom"])) * 8 == r["m_bits"] for r in blooms)
-    exact = {r["url_hash"] for r in anti_join_exact(cand, seen).collect()}
-    bloom = {r["url_hash"] for r in seen_mod.anti_join_bloom(cand, seen).collect()}
-    assert bloom == exact
-
-
 def test_empty_seen(spark):
     seen, cand = _mk(spark, n_seen=0, n_cand=100)
-    got = anti_join_bloom(cand, seen).count()
-    assert got == cand.count()
-
-
-def test_bloom_sparse_seen_unpopulated_top_shard(spark):
-    """ADVICE round-1 regression: a seen set whose top shard ids are empty
-    must not be probed with an inferred (wrong) modulus. With nshards=8 but
-    all rows landing in shards 0-2, every seen candidate must still be
-    dropped."""
-    # shard = pmod(url_hash, 8); shards 3..7 unpopulated → the old
-    # max(shard)+1 inference would use modulus 3 and probe hash 10 in
-    # shard 10%3=1 (a bloom that doesn't hold it) → false negative.
-    rows = [(0, 8), (1, 9), (2, 10)]
-    seen = spark.createDataFrame(rows, "shard int, url_hash long")
-    cand = spark.createDataFrame([(8,), (9,), (10,), (999,)], "url_hash long")
-    out = {
-        r["url_hash"]
-        for r in anti_join_bloom(cand, seen, nshards=8).collect()
-    }
-    assert out == {999}
-
-
-def test_bloom_rejects_inconsistent_nshards(spark):
-    """Modulus-mismatch guard: a bloom shard id outside [0, nshards) fails
-    the probe task (executor-side — there is no driver-side bloom collect
-    to assert on anymore)."""
-    seen = spark.createDataFrame([(5, 42)], "shard int, url_hash long")
-    cand = spark.createDataFrame([(42,)], "url_hash long")
-    import pytest
-
-    with pytest.raises(Exception, match="different modulus|outside"):
-        anti_join_bloom(cand, seen, nshards=4).collect()
-
-
-def test_bloom_single_probe_pass_no_driver_bytes(spark):
-    """The probe must run once (split branches read the persisted cogroup
-    output) and the plan must keep bloom bytes executor-side: the cogroup
-    probe appears below the cache, never a driver-side broadcast of bloom
-    binaries."""
+    assert anti_join_exact(cand, seen).count() == cand.count()
     seen, cand = _mk(spark)
-    out = anti_join_bloom(cand, seen, nshards=8)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # both split branches must read the cached relation, not re-run the probe
-    assert plan.count("FlatMapCoGroupsInPandas") == 0 or plan.count("InMemoryTableScan") >= 2
-
-
-def test_bloom_incremental_update_equals_rebuild(spark):
-    """Growing blooms epoch-by-epoch (update_shard_blooms) must classify
-    candidates identically to a from-scratch build over the union — and the
-    anti-join result stays exactly equal to the exact path either way."""
-    from maga_spark.operators.seen import update_shard_blooms
-
-    nshards, m_bits = 8, 1 << 14
-    def hashed(lo, hi):
-        return (
-            spark.range(lo, hi)
-            .select(F.xxhash64("id").alias("url_hash"))
-            .withColumn("shard", F.pmod("url_hash", F.lit(nshards)).cast("int"))
-            .select("shard", "url_hash")
-        )
-
-    batch1, batch2 = hashed(0, 400), hashed(400, 700)
-    empty = spark.createDataFrame([], "shard int, m_bits long, bloom binary")
-    incr = update_shard_blooms(
-        update_shard_blooms(empty, batch1, m_bits=m_bits), batch2, m_bits=m_bits
-    )
-    full = build_shard_blooms(batch1.unionByName(batch2), m_bits=m_bits)
-    a = {r["shard"]: bytes(r["bloom"]) for r in incr.collect()}
-    b = {r["shard"]: bytes(r["bloom"]) for r in full.collect()}
-    assert a == b  # bit-identical bitsets: OR of batches == build of union
-
-    seen = batch1.unionByName(batch2)
-    cand = spark.range(500, 900).select(F.xxhash64("id").alias("url_hash"))
-    exact = {r["url_hash"] for r in anti_join_exact(cand, seen).collect()}
-    via_incr = {
-        r["url_hash"]
-        for r in anti_join_bloom(cand, seen, nshards=nshards, blooms=incr).collect()
-    }
-    assert via_incr == exact
-
-
-def test_bloom_engine_mode_multi_epoch(spark, tmp_path):
-    """CrawlEngine seen_mode='bloom' over several epochs: identical
-    ordering + seen set to exact mode, with the incremental bloom state."""
-    from maga_spark.crawlspec import CrawlConfig
-    from maga_spark.plans.frontier import CrawlEngine
-    from maga_spark.sources.fixtures import generate
-
-    d = str(tmp_path / "fix")
-    generate(d, n_urls=400, n_seeds=10)
-    cfg = CrawlConfig(epochs=3, global_k=24)
-    exact = CrawlEngine(spark, d, cfg, seen_mode="exact").run(collect_ordering=True)
-    eng = CrawlEngine(spark, d, cfg, seen_mode="bloom")
-    bloom = eng.run(collect_ordering=True)
-    assert bloom.ordering == exact.ordering
-    assert bloom.seen_count == exact.seen_count
-    # bloom state holds every populated shard with the configured size
-    rows = eng.blooms.collect()
-    assert rows and all(r["m_bits"] == cfg.bloom_m_bits for r in rows)
+    assert anti_join_exact(cand, seen).count() == 150  # exactly the new half
 
 
 def test_probe_salt_identity_and_parallelism(spark):
-    """probe_salt sub-splits the probe cogroup (shard, salt) so task count
-    and per-task batch size decouple from nshards (ADVICE r3) — results
-    must be identical for ANY salt (the probe is row-local)."""
-    seen, cand = _mk(spark)
-    exact = {r["url_hash"] for r in anti_join_exact(cand, seen).collect()}
+    """salted_shard_cogroup sub-splits each shard's probe group by salt so
+    task count and per-task batch size decouple from nshards (ADVICE r3):
+    for ANY salt every candidate reaches exactly one group, that group is
+    its own pmod shard, and the shard's single state row meets it there."""
+    nshards = 8
+    _seen, cand = _mk(spark)
+    state = spark.createDataFrame([(s, s * 10) for s in range(nshards)], "shard int, tag long")
+
+    def probe(key, cpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
+        out = cpdf[["url_hash"]].copy()
+        out["grp_shard"] = int(key[0])
+        out["grp_salt"] = int(key[1])
+        out["tag"] = int(spdf["tag"].iloc[0]) if len(spdf) == 1 else -1
+        return out
+
+    want = sorted(r["url_hash"] for r in cand.collect())
     for salt in (1, 3, 8):
-        got = {
-            r["url_hash"]
-            for r in anti_join_bloom(cand, seen, nshards=8, probe_salt=salt).collect()
-        }
-        assert got == exact, f"probe_salt={salt} diverged"
-
-
-def test_duplicate_bloom_rows_raise(spark):
-    """A blooms table carrying >1 row per shard violates the state
-    invariant; silently probing only the first would turn seen keys into
-    false negatives — must raise instead (ADVICE r3)."""
-    import pytest as _pytest
-
-    from maga_spark.operators.seen import update_shard_blooms
-
-    seen, cand = _mk(spark)
-    blooms = build_shard_blooms(seen, m_bits=1 << 14)
-    doubled = blooms.unionByName(blooms)
-    with _pytest.raises(Exception, match="expected 1"):
-        anti_join_bloom(cand, seen, nshards=8, blooms=doubled, probe_salt=1).collect()
-    new = seen.limit(10)
-    with _pytest.raises(Exception, match="expected 1"):
-        update_shard_blooms(doubled, new).collect()
+        rows = salted_shard_cogroup(
+            cand,
+            state,
+            "url_hash",
+            nshards,
+            salt,
+            probe,
+            "url_hash long, grp_shard int, grp_salt int, tag long",
+        ).collect()
+        assert sorted(r["url_hash"] for r in rows) == want, f"salt={salt} lost rows"
+        for r in rows:
+            assert r["grp_shard"] == r["url_hash"] % nshards
+            assert r["tag"] == r["grp_shard"] * 10  # met its shard's one state row
+            assert 0 <= r["grp_salt"] < salt
+        if salt > 1:
+            assert len({r["grp_salt"] for r in rows}) > 1, "salt did not split"

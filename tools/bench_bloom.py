@@ -1,12 +1,12 @@
-"""Seen-path backend throughput A/B at 16M: exact vs bloom (VERDICT r3
-item 2) and, since round 4, the cuckoo filter.
+"""Seen-path backend throughput A/B at 16M: exact vs the cuckoo-filter
+prefilter (VERDICT r3 item 2).
 
 Same fixture/protocol as tools/bench_scaling.py but at local[32], one
 warm-up epoch untimed, 3 measured epochs, the seen modes interleaved
 REPEATS times; best run per mode scored. Appends a JSON line per run to
 stdout and a summary table to BENCH.md (## seen-path section).
 
-Usage: python tools/bench_bloom.py [--quick] [--modes exact,bloom,cuckoo]
+Usage: python tools/bench_bloom.py [--quick] [--modes exact,cuckoo]
 """
 
 from __future__ import annotations
@@ -56,15 +56,13 @@ def main() -> None:
         env_extra.update(
             {"MAGA_BENCH_URLS": "150000", "MAGA_BENCH_GLOBAL_K": "40000", "MAGA_BENCH_SEEDS": "30000"}
         )
-    # ~10 bits/key at the final per-shard count (16M URLs / 32 shards)
-    env_extra["MAGA_BENCH_BLOOM_M_BITS"] = str(1 << 23)
     # cuckoo: 2^18 buckets × 4 slots ≈ 0.48 load at 500k keys/shard
     env_extra["MAGA_BENCH_CUCKOO_NBUCKETS"] = str(1 << 18)
-    modes = ["exact", "bloom"]
+    modes = ["exact", "cuckoo"]
     if "--modes" in sys.argv:
         i = sys.argv.index("--modes")
         if i + 1 >= len(sys.argv):
-            raise SystemExit("usage: bench_bloom.py [--quick] [--modes exact,bloom,cuckoo]")
+            raise SystemExit("usage: bench_bloom.py [--quick] [--modes exact,cuckoo]")
         modes = sys.argv[i + 1].split(",")
     zpath = make_pyfiles_zip()
     env = dict(os.environ)
@@ -104,10 +102,9 @@ def main() -> None:
 ## Seen-path backends ({env_extra['MAGA_BENCH_URLS']} URLs, local[{CPUS}], best of {REPEATS} interleaved)
 
 Same job, same input, `seen_mode` the only difference (results bit-equal —
-tests/test_seen.py, tests/test_cuckoo.py, tests/test_parity.py). Bloom =
-executor-side shard-cogroup probe + incremental bitsets
-(m_bits={env_extra['MAGA_BENCH_BLOOM_M_BITS']}/shard); cuckoo = fingerprint
-tables (nbuckets={env_extra['MAGA_BENCH_CUCKOO_NBUCKETS']}×4 slots/shard), deletion-capable.
+tests/test_cuckoo.py, tests/test_parity.py). Cuckoo = executor-side
+shard-cogroup probe over incremental fingerprint tables
+(nbuckets={env_extra['MAGA_BENCH_CUCKOO_NBUCKETS']}×4 slots/shard), deletion-capable.
 
 | run | URLs scheduled+fetched | wall (s) | throughput (urls/s) |
 | --- | --- | --- | --- |

@@ -1,18 +1,19 @@
-"""expire_urls cost at bench scale: cuckoo O(batch) vs bloom O(seen)
-(VERDICT r4 #5 — turn the docstring claim into a cited number).
+"""expire_urls cost at bench scale: cuckoo vs exact (VERDICT r4 #5 — turn
+the docstring claim into a cited number).
 
 ``CrawlEngine.expire_urls`` removes keys from the seen set so a future
-absorb re-enqueues them (the re-crawl primitive). Per backend:
+absorb re-enqueues them (the re-crawl primitive). Per seen_mode:
 
-* cuckoo — per-key fingerprint DELETION: cost ~ O(batch + table bytes),
-  independent of how many keys the filter holds;
-* bloom  — bitsets cannot forget, so the filters are REBUILT from the
-  surviving seen set: cost ~ O(seen).
+* exact  — anti-join removal from the seen table only;
+* cuckoo — the same removal plus per-key fingerprint DELETION: the extra
+  cost is ~ O(batch + table bytes), independent of how many keys the
+  filter holds.
 
 This tool injects synthetic seen state of growing size (1M / 4M / 16M
 keys) into engines of both modes and times ``expire_urls`` on the SAME
-10k-key batch, showing where (and how fast) the bloom rebuild diverges.
-Prints one JSON line; ``--bench-md`` appends the table to BENCH.md.
+10k-key batch, so the cuckoo-over-exact ratio is the price of keeping the
+prefilter in step with seen. Prints one JSON line; ``--bench-md`` appends
+the table to BENCH.md.
 """
 
 from __future__ import annotations
@@ -28,7 +29,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from maga_spark.crawlspec import CrawlConfig  # noqa: E402
 from maga_spark.operators.cuckoo import build_shard_cuckoo  # noqa: E402
-from maga_spark.operators.seen import build_shard_blooms  # noqa: E402
 from maga_spark.plans.frontier import CrawlEngine  # noqa: E402
 from maga_spark.session import get_spark  # noqa: E402
 from maga_spark.sources.fixtures import generate  # noqa: E402
@@ -53,30 +53,20 @@ def synth_seen(spark, n: int):
 
 def time_expire(spark, fixture: str, mode: str, seen, batch) -> float:
     # size the per-shard state for the largest run: 16M/32 shards = 500k
-    # keys/shard → cuckoo 2^18 buckets × 4 slots at ~0.5 load; bloom bits
-    # scaled to ~13 bits/key (same FP regime as the engine default)
-    cfg = CrawlConfig(
-        nshards=NSHARDS, cuckoo_nbuckets=1 << 18, bloom_m_bits=1 << 23
-    )
+    # keys/shard → cuckoo 2^18 buckets × 4 slots at ~0.5 load
+    cfg = CrawlConfig(nshards=NSHARDS, cuckoo_nbuckets=1 << 18)
     eng = CrawlEngine(spark, fixture, cfg, seen_mode=mode)
     eng.seen = seen
     if mode == "cuckoo":
         eng.cuckoo = build_shard_cuckoo(
             seen, nbuckets=cfg.cuckoo_nbuckets, fp_bits=cfg.cuckoo_fp_bits
         ).localCheckpoint(True)
-    elif mode == "bloom":
-        eng.blooms = build_shard_blooms(seen, m_bits=cfg.bloom_m_bits).localCheckpoint(
-            True
-        )
     t0 = time.perf_counter()
     n = eng.expire_urls(batch)
-    # expire_urls leaves the new filter state lazy in bloom mode
-    # (build_shard_blooms over the surviving seen) — materialize it so the
-    # timing covers the full rebuild the next epoch would otherwise pay
+    # expire_urls leaves the new seen table lazy — materialize it (and the
+    # cuckoo state) so the timing covers what the next epoch would pay
     if mode == "cuckoo":
         eng.cuckoo.count()
-    elif mode == "bloom":
-        eng.blooms.count()
     eng.seen.count()
     wall = time.perf_counter() - t0
     assert n == BATCH, f"expired {n} != {BATCH}"
@@ -102,9 +92,9 @@ def main() -> None:
         seen = synth_seen(spark, n)
         batch = seen.limit(BATCH).select("url_hash").localCheckpoint(True)
         r = {"seen_keys": n}
-        for mode in ("cuckoo", "bloom"):
+        for mode in ("exact", "cuckoo"):
             r[mode + "_sec"] = round(time_expire(spark, fixture, mode, seen, batch), 2)
-        r["bloom_over_cuckoo"] = round(r["bloom_sec"] / r["cuckoo_sec"], 2)
+        r["cuckoo_over_exact"] = round(r["cuckoo_sec"] / r["exact_sec"], 2)
         rows.append(r)
         print(json.dumps(r), flush=True)
     print(json.dumps({"batch": BATCH, "nshards": NSHARDS, "rows": rows}))
@@ -112,34 +102,27 @@ def main() -> None:
     if "--bench-md" in sys.argv:
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         table = "\n".join(
-            f"| {r['seen_keys']:,} | {r['cuckoo_sec']} | {r['bloom_sec']} | {r['bloom_over_cuckoo']}x |"
+            f"| {r['seen_keys']:,} | {r['exact_sec']} | {r['cuckoo_sec']} | {r['cuckoo_over_exact']}x |"
             for r in rows
         )
         with open(os.path.join(repo, "BENCH.md"), "a") as f:
             f.write(
                 f"""
-## expire_urls: cuckoo O(batch) vs bloom O(seen), measured (round 5)
+## expire_urls: cuckoo vs exact
 
 Same {BATCH:,}-key expiry batch against synthetic seen state of growing
-size ({NSHARDS} shards, per-shard cuckoo 2^18x4 slots / bloom 2^23 bits;
-timing includes materializing the post-expiry filter state):
+size ({NSHARDS} shards, per-shard cuckoo 2^18x4 slots; timing includes
+materializing the post-expiry seen and filter state):
 
-| seen keys | cuckoo (s) | bloom (s) | bloom/cuckoo |
+| seen keys | exact (s) | cuckoo (s) | cuckoo/exact |
 | --- | --- | --- | --- |
 {table}
 
-Reading it honestly: BOTH columns contain the shared O(seen) seen-table
-anti-join (the row removal itself scans the seen state in every mode);
-the filter-maintenance DELTA is what separates the backends — cuckoo's
-per-key deletion is size-independent (its growth above is the shared
-anti-join plus fixed table bytes), while the bloom rebuild re-scans every
-surviving key and keeps growing. The crossover sits between 1M and 4M
-keys: below it the bloom rebuild is actually CHEAPER than carrying
-cuckoo's larger fixed tables; above it bloom diverges linearly in |seen|
-(1.28x at 16M and widening ~O(seen)). Guidance: cuckoo whenever re-crawl
-expiry is routine at >= multi-million-key scale; bloom when expiry is
-rare or state is small. Both modes re-enqueue expired URLs identically
-(test_engine_expire_recrawl, exact/bloom/cuckoo).
+Both columns contain the shared O(seen) seen-table anti-join (the row
+removal itself scans the seen state in every mode); the difference is the
+cuckoo per-key deletion, whose cost depends on the batch and the fixed
+table bytes, not on |seen|. Both modes re-enqueue expired URLs identically
+(test_engine_expire_recrawl).
 """
             )
     spark.stop()

@@ -237,7 +237,7 @@ Same 16M-URL input, 3 epochs, global_k=2M, no warm-up exclusion
 
 Whole-job efficiency = 0.699 — effectively identical to steady-state:
 the startup transient is not the gap. Where the remaining gap comes from
-(all measured on this VM, MAGA_BENCH_PHASE_TIMES=1 + taskset controls):
+(all measured on this VM, per-phase wall timers + taskset controls):
 (a) the "1-executor" local[1] JVM still uses all 32 machine cores for
 GC/JIT/shuffle-netty helper threads, subsidizing the baseline — pinning
 BOTH sides with taskset to exactly N cores (no helpers for anyone) gives

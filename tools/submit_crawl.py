@@ -42,7 +42,7 @@ def main() -> None:
     ap.add_argument("--epochs", type=int, default=6)
     ap.add_argument("--global-k", type=int, default=64)
     ap.add_argument("--nshards", type=int, default=8)
-    ap.add_argument("--seen-mode", default="exact", choices=["exact", "bloom", "cuckoo"])
+    ap.add_argument("--seen-mode", default="exact", choices=["exact", "cuckoo"])
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--snapshot-dir", default=None)
     args = ap.parse_args()
