@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from maga_spark.functions.scalar import url_canonicalize, xor_dist
 from maga_spark.operators.dedup import portable_hash64
 from maga_spark.operators.topk import global_topk, per_group_topk
+from maga_spark.session import spread_partitions
 
 TARGET = 4242424242424242  # fixed XOR target for the oracle-checked queries
 
@@ -37,26 +38,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _spread(df: DataFrame, barrier_col: str | None = None) -> DataFrame:
-    """Round-robin repartition to the session's default parallelism when
-    the input plans FEWER partitions (optimization guide §2.5 "input
-    skew": the sf tables are single-file parquet with ONE row group, so a
-    scan is effectively single-threaded however large
-    ``files.minPartitionNum`` is — a row group is the atomic split unit).
-    Queries that feed an expensive per-row expression tree (n-gram
-    explode, winnow, shingle hashing) off such a scan otherwise run the
-    whole tree on 1-2 cores with the other 30 idle (measured: the
-    repeated_ngrams gram-explode stage was 2 tasks / 31.7 s at sf1.0).
-
-    Scale-adaptive by construction: the target comes from
-    ``sparkContext.defaultParallelism`` (cluster = executors × cores) and
-    the repartition is SKIPPED when the scan already plans at least that
-    many splits — on a real multi-file corpus this is a no-op, so it can
-    never coalesce a properly parallel input. Values are unaffected:
-    every consumer aggregates, joins, or re-sorts downstream."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
+    """``spread_partitions`` (maga_spark.session) for the sf tables, which
+    are single-file parquet with ONE row group. Queries that feed an
+    expensive per-row expression tree (n-gram explode, winnow, shingle
+    hashing) off such a scan otherwise run the whole tree on 1-2 cores
+    with the other 30 idle (measured: the repeated_ngrams gram-explode
+    stage was 2 tasks / 31.7 s at sf1.0). Values are unaffected: every
+    consumer aggregates, joins, or re-sorts downstream."""
+    spread = spread_partitions(df)
+    if spread is not df:
+        df = spread
         if barrier_col is not None:
             # Tautological NONDETERMINISTIC guard on the expensive column:
             # monotonically_increasing_id() >= 0 is always true, so values

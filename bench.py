@@ -126,9 +126,9 @@ def main() -> None:
     )
     eng = CrawlEngine(spark, fixture, cfg, seen_mode=BENCH_SEEN_MODE)
     if BENCH_WARMUP_EPOCHS:
-        eng.run(epochs=BENCH_WARMUP_EPOCHS, collect_ordering=False, collect_metrics=False)
+        eng.run(epochs=BENCH_WARMUP_EPOCHS, collect_ordering=False)
     t0 = time.perf_counter()
-    res = eng.run(epochs=BENCH_EPOCHS, collect_ordering=False, collect_metrics=False)
+    res = eng.run(epochs=BENCH_EPOCHS, collect_ordering=False)
     crawl_sec = time.perf_counter() - t0
     scheduled = sum(m["scheduled"] for m in res.metrics)
     fetched = res.fetched_valid

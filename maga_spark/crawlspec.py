@@ -63,18 +63,6 @@ class CrawlConfig:
     # value; an overflow raises rather than dropping a key.
     cuckoo_nbuckets: int = 1 << 16
     cuckoo_fp_bits: int = 16
-    # scheduler skew guard: fall back to the sampled range-partitioner
-    # top-K for subsequent epochs when one uniform-bucket slice holds more
-    # than skew_factor× the fair 1/shuffle-partitions share of candidates
-    # (a straggler guard — ranks are exact either way; VERDICT r3 #4)
-    topk_skew_factor: float = 4.0
-    # volume floor for the skew guard: epochs smaller than this can't
-    # produce a straggler worth avoiding, but trivially "skew" (1 candidate
-    # = 100% in one bucket) — without the floor, a near-drained frontier
-    # flips the engine onto the sampled two-driver-job top-K path FOREVER,
-    # exactly the overhead the uniform path exists to avoid (found by the
-    # drained-frontier metrics test, round 5)
-    topk_skew_min_rows: int = 1024
 
 
 def epoch_target(epoch: int) -> int:

@@ -4,20 +4,14 @@ The reference splits a ``nodes`` blob into 26-byte records — 20 B node id +
 4 B IPv4 + 2 B big-endian port — and silently rejects blobs whose length is
 not a multiple of 26 (maga/utils.py:20-21).
 
-Two implementations behind one contract:
-
-* ``split_nodes_sql`` — pure built-in expressions (``transform(sequence(...))``
-  over binary ``substring``), fully codegen'd; the default.
-* ``split_nodes_arrow`` — vectorized Arrow/pandas UDF (numpy ``frombuffer``
-  reshape); kept as the pattern for codecs Spark expressions can't reach.
-
-Both return one column ``nodes_arr: array<struct<nid:binary, ip:string,
+``split_nodes_sql`` does it in pure built-in expressions
+(``transform(sequence(...))`` over binary ``substring``), fully codegen'd. It
+returns one column ``nodes_arr: array<struct<nid:binary, ip:string,
 port:int>>`` — callers ``F.explode`` it (generator → explode, SURVEY.md O-57).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,30 +48,3 @@ def split_nodes_sql(blob: Column) -> Column:
         .alias("nodes_arr")
     )
 
-
-@F.pandas_udf(T.ArrayType(NODE_STRUCT))
-def split_nodes_arrow(blobs: pd.Series) -> pd.Series:
-    """Arrow-vectorized variant: numpy view per batch, no per-row Python
-    interpretation beyond the record loop inside each blob."""
-    import numpy as np
-
-    out = []
-    for blob in blobs:
-        if blob is None or len(blob) == 0 or len(blob) % 26 != 0:
-            out.append([])
-            continue
-        a = np.frombuffer(blob, dtype=np.uint8).reshape(-1, 26)
-        ips = a[:, 20:24]
-        ports = a[:, 24:26].astype(np.uint16)
-        port_vals = (ports[:, 0].astype(int) << 8) | ports[:, 1].astype(int)
-        out.append(
-            [
-                {
-                    "nid": a[j, :20].tobytes(),
-                    "ip": ".".join(str(int(x)) for x in ips[j]),
-                    "port": int(port_vals[j]),
-                }
-                for j in range(a.shape[0])
-            ]
-        )
-    return pd.Series(out)

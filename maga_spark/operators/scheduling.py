@@ -119,9 +119,10 @@ def fair_share(
 
     Scale shape: one 1-row total aggregate broadcast back, one global
     rank over the ≤|hosts| remainder rows (2-int rows; at real-web host
-    counts swap this window for the sampled range-partitioned ranking in
-    operators/topk.global_topk_ranked — only the top-``leftover`` slice
-    of remainders matters). All BIGINT (remainders compared as
+    counts this single-partition window is the step that stops scaling —
+    only the top-``leftover`` (< |hosts|) slice of remainders matters, so
+    operators/topk.global_topk can replace it while ``leftover`` is small).
+    All BIGINT (remainders compared as
     ``budget·pending mod total`` — no floats anywhere)."""
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")

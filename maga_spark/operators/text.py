@@ -1,18 +1,16 @@
 """Text-analysis operators for training-data curation over ``documents``.
 
-All hot-path logic is built-in expressions (codegen'd); only the winnowing
-fingerprint needs an Arrow UDF. Each operator has a DuckDB-expressible
-twin registered in __spark_entry__ where SQL can express it.
+All logic is built-in expressions (codegen'd). Each operator has a
+DuckDB-expressible twin registered in __spark_entry__ where SQL can express
+it.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # tiny deterministic stopword profiles for the n-gram/stopword language ID
 LANG_PROFILES: dict[str, list[str]] = {
@@ -91,11 +89,10 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 def winnow_fingerprint_portable(text_col: Column, k: int = 5, w: int = 4) -> Column:
     """Winnowing fingerprint as 100% built-in expressions with the portable
     md5-60-bit k-gram hash — value-for-value reproducible in DuckDB
-    (list_transform/generate_series twin in __spark_entry__), unlike the
-    Arrow-UDF variant below whose poly-257 rolling hash SQL can't express.
+    (list_transform/generate_series twin in __spark_entry__).
 
-    Same construction: char k-grams → hash → min per length-w window →
-    distinct set. Guards: <k chars → empty; ≤w grams → single global min.
+    Char k-grams → hash → min per length-w window → distinct set.
+    Guards: <k chars → empty; ≤w grams → single global min.
     (Spark's ``sequence(1, 0)`` DESCENDS — both sequences are when-guarded.)
 
     The lowered text and the gram-hash array are ``let_``-bound: HOF
@@ -287,33 +284,6 @@ def tfidf_top_terms(
             ),
         )
     )
-
-
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def winnow_fingerprint(texts: pd.Series) -> pd.Series:
-    """Winnowing document fingerprint (Schleimer et al., SIGMOD'03): char
-    5-gram rolling hashes, window-4 minima, deduplicated — a compact
-    sketch for plagiarism/near-dup detection. Arrow-batched numpy."""
-    import numpy as np
-
-    K, W = 5, 4
-    out = []
-    for t in texts:
-        s = (t or "").lower().encode("utf-8")
-        if len(s) < K:
-            out.append([])
-            continue
-        a = np.frombuffer(s, dtype=np.uint8).astype(np.uint64)
-        h = np.zeros(len(a) - K + 1, dtype=np.uint64)
-        for i in range(K):  # K=5 constant — vectorized over the doc
-            h = h * np.uint64(257) + a[i : len(a) - K + 1 + i]
-        if len(h) <= W:
-            mins = {int(h.min())}
-        else:
-            win = np.lib.stride_tricks.sliding_window_view(h, W)
-            mins = set(win.min(axis=1).astype(np.int64).tolist())
-        out.append(sorted(int(m) - (1 << 64) if m >= (1 << 63) else int(m) for m in mins))
-    return pd.Series(out)
 
 
 def html_to_text(html_col: Column) -> Column:

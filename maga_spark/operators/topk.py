@@ -79,7 +79,8 @@ def global_topk(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
     sort shuffle. Deterministic iff ``order_cols`` is a total order.
 
     Right for SMALL k only: the driver merges up to partitions×k rows. For
-    budget-scale k (10^5+) use ``global_topk_ranked``."""
+    budget-scale k (10^5+) over a hash-uniform leading key use
+    ``global_topk_uniform_ranked``."""
     return df.orderBy(*order_cols).limit(k)
 
 
@@ -90,18 +91,17 @@ def global_topk_uniform_ranked(
     uniform_key: str,
     rank_name: str = "rank",
     bucket_bits: int = 12,
-    skew_stats: dict | None = None,
 ) -> DataFrame:
     """Exact global top-k WITH global rank and ZERO driver round-trips —
     for order keys whose FIRST column is a hash-derived signed int64
     (``order_cols[0]`` must be ``uniform_key`` ascending).
 
-    ``global_topk_ranked`` pays two driver-serial jobs per call (the range
-    partitioner's sampling pass + the per-partition offsets collect) — the
-    dominant slice of the crawl engine's per-epoch serial floor (BENCH.md
-    round 2: D≈122 s). When the leading key is uniform by construction
-    (here: ``xor_d = xxhash64(url) ^ target`` — XOR of a uniform hash is
-    uniform for any target), sampled boundaries are unnecessary:
+    A sampled range partitioner would pay two driver-serial jobs per call
+    (the sampling pass + the per-partition offsets collect) — the dominant
+    slice of the crawl engine's per-epoch serial floor (BENCH.md round 2:
+    D≈122 s). When the leading key is uniform by construction (here:
+    ``xor_d = xxhash64(url) ^ target`` — XOR of a uniform hash is uniform
+    for any target), sampled boundaries are unnecessary:
 
     1. bucket = top ``bucket_bits`` bits of the signed key, shifted to
        [0, 2^bits) — monotonic in the signed order, so every tie-broken
@@ -111,21 +111,11 @@ def global_topk_uniform_ranked(
        ONE query — no collect);
     3. rank = bucket-local row_number + bucket offset; keep rank <= k.
 
-    Identical results to ``global_topk_ranked`` (both are the exact total
-    order). Skew note: 2^12 fine buckets hash onto the shuffle partitions,
-    so even when upstream filters concentrate the key distribution (e.g.
-    per-host top-k keeps each host's SMALLEST distances), reducers stay
-    balanced unless a single 1/4096 key-range slice holds ≫ 1/partitions
-    of all rows — pathological inputs should fall back to the sampled
-    ``global_topk_ranked``.
-
-    ``skew_stats``: optional dict receiving an Observation handle under
-    ``"_skew_obs"`` that carries ``max_bucket_n`` / ``total_n`` once ANY
-    job materializes this plan (zero extra actions — the per-bucket counts
-    are already computed in-plan). Callers read it after their action and
-    decide whether the NEXT call should use the sampled fallback: skew only
-    costs straggler time, never correctness (ranks are exact regardless),
-    so detect-this-epoch/fall-back-next-epoch is sound (VERDICT r3 #4)."""
+    Ranks are the exact total order for ANY key distribution. Skew only
+    costs time: 2^12 fine buckets hash onto the shuffle partitions, so a
+    reducer straggles only when one 1/4096 key-range slice holds ≫
+    1/partitions of all rows (measured on 150k rows all in one bucket, 4
+    cores: 1.2 s vs 1.1 s for a sampled range partitioner)."""
     if not order_cols or not _is_asc_on(order_cols[0], uniform_key):
         # bucket-by-top-bits is consistent ONLY with uniform_key ascending
         # as the leading sort key — any other leading order silently yields
@@ -138,22 +128,6 @@ def global_topk_uniform_ranked(
     pid = F.shiftright(F.col(uniform_key), 64 - bits) + F.lit(1 << (bits - 1))
     b = df.withColumn("_bkt", pid.cast("int"))
     counts = b.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_n"))
-    if skew_stats is not None:
-        # RobustObservation: unique name per CALL (stale same-named
-        # listeners would be fulfilled by the wrong query's metrics), and
-        # the bucket counts survive AQE empty-relation pruning — when the
-        # input is empty the fallback re-agg returns the same zeros the
-        # caller's total_n > 0 guard already expects (observe.py).
-        from maga_spark.operators.observe import RobustObservation, obs_name
-
-        obs = RobustObservation(
-            obs_name("topk_skew", id(df)),
-            counts,
-            F.coalesce(F.max("_n"), F.lit(0)).alias("max_bucket_n"),
-            F.coalesce(F.sum("_n"), F.lit(0)).alias("total_n"),
-        )
-        counts = obs.df
-        skew_stats["_skew_obs"] = obs
     w_off = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.withColumn(
         "_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0))
@@ -166,56 +140,3 @@ def global_topk_uniform_ranked(
         .drop("_bkt", "_off")
     )
 
-
-def global_topk_ranked(
-    df: DataFrame,
-    order_cols: list[Column],
-    k: int,
-    rank_name: str = "rank",
-    temps: list | None = None,
-) -> DataFrame:
-    """Exact global top-k WITH global rank, fully distributed — no driver
-    merge, no single-partition window.
-
-    1. range-repartition + sort-within-partitions on the total order
-       (a parallel sort; partition boundaries don't affect the result),
-    2. per-partition row counts → cumulative offsets (tiny driver collect,
-       one row per partition),
-    3. rank = partition-local row_number + offset; keep rank <= k.
-
-    Deterministic because ``order_cols`` is a total order: each row's global
-    rank is independent of where the sampled range boundaries fall.
-
-    The sorted intermediate MUST be persisted (range boundaries are sampled
-    per execution — the offsets job and the rank job have to see the same
-    partitioning); pass ``temps`` to receive it for later unpersist."""
-    spark = df.sparkSession
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    s = (
-        df.repartitionByRange(npart, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    if temps is not None:
-        temps.append(s)
-    counts = {
-        r["_pid"]: r["n"] for r in s.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    }
-    offsets, cum = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = cum
-        cum += counts[pid]
-    if not offsets:
-        return s.withColumn(rank_name, F.lit(0)).filter(F.lit(False)).drop("_pid")
-    off_expr = F.element_at(
-        F.create_map(*[F.lit(x) for pid, off in offsets.items() for x in (pid, off)]),
-        F.col("_pid"),
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    out = (
-        s.withColumn(rank_name, (F.row_number().over(w) + off_expr).cast("int"))
-        .filter(F.col(rank_name) <= k)
-        .drop("_pid")
-    )
-    return out

@@ -15,7 +15,7 @@ pipeline per epoch (reference analog in parens):
     schedule  — XOR-distance priority vs hash-derived epoch target
                 (find_node target, maga/crawler.py:203-205), salted per-host
                 token-bucket grant (global 1 s sweep generalized per-host),
-                global top-K (TakeOrderedAndProject)
+                global top-K over uniform hash-range buckets (operators.topk)
     fetch     — granted ⋈ links ⋈ images (the MockDownloader pattern,
                 mock_downloader.py:31-44), Arrow-UDF payload validation
                 (SHA-1 check analog, maga/downloader.py:91-103)
@@ -48,11 +48,8 @@ from maga_spark.operators.cuckoo import (
 from maga_spark.operators.seen import anti_join_exact
 from maga_spark.operators.observe import RobustObservation, obs_name
 from maga_spark.plans.ckpt import local_ckpt
-from maga_spark.operators.topk import (
-    global_topk_ranked,
-    global_topk_uniform_ranked,
-    per_group_topk,
-)
+from maga_spark.session import spread_partitions
+from maga_spark.operators.topk import global_topk_uniform_ranked, per_group_topk
 
 
 def _ckpt_rdd(df: DataFrame):
@@ -105,17 +102,10 @@ class CrawlEngine:
         # group fixture file caches as ONE partition otherwise, so every
         # epoch's fetch join + out_links explode would run on a single task
         # with the other cores idle. One shuffle at init, paid once.
-        _par = spark.sparkContext.defaultParallelism
-
-        def _side(name: str) -> DataFrame:
-            df = spark.read.parquet(f"{fixtures_dir}/{name}.parquet")
-            if df.rdd.getNumPartitions() < _par:
-                df = df.repartition(_par)
-            return df.persist()
-
-        self.links = _side("links")
-        self.images = _side("images")
-        self.truth = _side("images_truth")
+        self.links, self.images, self.truth = (
+            spread_partitions(spark.read.parquet(f"{fixtures_dir}/{name}.parquet")).persist()
+            for name in ("links", "images", "images_truth")
+        )
         self.politeness = spark.read.parquet(f"{fixtures_dir}/politeness.parquet")
         robots = spark.read.parquet(f"{fixtures_dir}/robots.parquet")
         self.robots_agg = robots.groupBy("host").agg(
@@ -147,11 +137,6 @@ class CrawlEngine:
         # unpersisted when the next _commit_state supersedes them (see there)
         self._state_ckpt_rdds: list = []
         self._start_epoch = 0
-        # scheduler skew guard state: flips to True when an epoch's uniform
-        # top-K bucket counts (observed in-plan, zero extra actions) show a
-        # slice exceeding cfg.topk_skew_factor× the fair share — subsequent
-        # epochs then use the sampled range-partitioner top-K
-        self.topk_fallback_active = False
 
     # ---------- epoch stages ----------
 
@@ -159,8 +144,8 @@ class CrawlEngine:
         """Canonicalize → dedup → anti-join seen → robots gate → append.
 
         Returns a RobustObservation carrying the enqueued/blocked counts — the
-        counts ride the first job that materializes ``new`` (the schedule
-        sampling pass or a state checkpoint) instead of costing a dedicated
+        counts ride the first job that materializes ``new`` (a state
+        checkpoint) instead of costing a dedicated
         driver-serial ``groupBy().collect()`` per epoch (the round-1 serial
         floor, BENCH.md)."""
         cfg = self.cfg
@@ -255,7 +240,8 @@ class CrawlEngine:
             [(epoch, epoch_target(epoch))], "cur_epoch int, cur_target long"
         )
         # SLIM ranking rows: url_canon/path never enter the scheduling
-        # shuffles (2 windows + range partition over frontier-sized rows);
+        # shuffles (2 windows + the top-K bucket window over frontier-sized
+        # rows);
         # they are joined back onto the ≤global_k granted keys afterwards.
         # ~2.5× shuffle-byte reduction per epoch at 16M.
         cands = (
@@ -308,32 +294,13 @@ class CrawlEngine:
         self._epoch_temps.append(eligible)
 
         # distributed global top-K + rank: xor_d is uniform (xxhash64 ^
-        # target), so fixed hash-range buckets replace the sampled range
+        # target), so fixed hash-range buckets replace a sampled range
         # partitioner — no sampling job, no offsets collect (topk.py).
-        # Skew guard (VERDICT r3 #4): per-bucket counts ride an Observation;
-        # run() reads it post-commit and flips topk_fallback_active when one
-        # bucket slice exceeds the fair-share factor — the next epoch then
-        # pays the sampled partitioner's two driver jobs instead of a
-        # straggler. Both paths produce the exact same rows and ranks.
-        skew_stats: dict = {}
-        if self.topk_fallback_active:
-            granted = global_topk_ranked(
-                eligible,
-                order,
-                cfg.global_k,
-                rank_name="epoch_rank",
-                temps=self._epoch_temps,
-            )
-        else:
-            granted = global_topk_uniform_ranked(
-                eligible,
-                order,
-                cfg.global_k,
-                uniform_key="xor_d",
-                rank_name="epoch_rank",
-                skew_stats=skew_stats,
-            )
-        granted = granted.persist()
+        # Ranks are exact for any key distribution; a concentrated xor_d
+        # would only cost straggler time.
+        granted = global_topk_uniform_ranked(
+            eligible, order, cfg.global_k, uniform_key="xor_d", rank_name="epoch_rank"
+        ).persist()
         self._epoch_temps.append(granted)
 
         # rejoin the canonical URL for fetch/ordering: granted is ≤ global_k
@@ -368,10 +335,7 @@ class CrawlEngine:
         # on the wave-1 commit (pending checkpoint materializes the granted
         # chain; seen checkpoint materializes `new`). run() resolves this
         # AFTER _commit_state; resolving earlier would block forever.
-        stats = {"_cands_obs": cands_obs, "_elig_obs": elig_obs}
-        if "_skew_obs" in skew_stats:
-            stats["_skew_obs"] = skew_stats["_skew_obs"]
-        return granted_full, stats
+        return granted_full, {"_cands_obs": cands_obs, "_elig_obs": elig_obs}
 
     def _fetch(self, granted: DataFrame, epoch: int) -> tuple[DataFrame, RobustObservation]:
         """granted ⋈ links ⋈ images ⋈ truth → validate → discoveries.
@@ -500,7 +464,6 @@ class CrawlEngine:
         self,
         epochs: int | None = None,
         collect_ordering: bool = False,
-        collect_metrics: bool = True,
     ) -> EngineResult:
         """``collect_ordering`` defaults to False (VERDICT r4 #3): it pulls
         every granted row of every epoch to the driver — fine for parity
@@ -556,27 +519,6 @@ class CrawlEngine:
             # materializing action would hang here, not error (ADVICE r2).
             n_cands = int(stats.pop("_cands_obs").get["n"])
             n_eligible = int(stats.pop("_elig_obs").get["n"])
-            skew_obs = stats.pop("_skew_obs", None)
-            if skew_obs is not None:
-                sk = skew_obs.get
-                total_n = int(sk["total_n"])
-                # volume floor: tiny epochs "skew" trivially (one candidate
-                # is 100% of one bucket) but cost nothing — don't let a
-                # near-drained epoch park the engine on the sampled path
-                if total_n > 0 and total_n >= cfg.topk_skew_min_rows:
-                    npart = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-                    share = int(sk["max_bucket_n"]) / total_n
-                    if share > cfg.topk_skew_factor / npart:
-                        import warnings
-
-                        warnings.warn(
-                            f"uniform top-K bucket skew at epoch {e}: max bucket "
-                            f"holds {share:.1%} of {total_n} candidates (fair "
-                            f"share {1 / npart:.1%}); falling back to the sampled "
-                            "range-partitioner top-K for subsequent epochs",
-                            stacklevel=2,
-                        )
-                        self.topk_fallback_active = True
             n_granted = min(n_eligible, cfg.global_k)
             stats = {
                 "candidates": n_cands,
@@ -653,8 +595,13 @@ class CrawlEngine:
         )
         n = keyed.count()
         self.seen = self.seen.join(keyed.select("url_hash"), "url_hash", "left_anti")
+        ckpts = [keyed]
         if self.seen_mode == "cuckoo":
             self.cuckoo = local_ckpt(delete_from_shard_cuckoo(self.cuckoo, keyed))
+            ckpts.append(self.cuckoo)
+        # both checkpoints feed only the seen/cuckoo lineage, so the next
+        # _commit_state (which re-checkpoints those tables) releases them
+        self._state_ckpt_rdds += [r for r in map(_ckpt_rdd, ckpts) if r is not None]
         return n
 
     def seen_per_shard(self) -> list:

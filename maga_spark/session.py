@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -81,3 +81,22 @@ def get_submit_spark(app_name: str = "maga_spark", shuffle_partitions: int | Non
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def spread_partitions(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to the session's default parallelism when
+    the input plans FEWER partitions (optimization guide §2.5 "input
+    skew": a single-file parquet with ONE row group scans as one split
+    however large ``files.minPartitionNum`` is — a row group is the atomic
+    split unit), so an expensive per-row stage off such a scan would run
+    on 1-2 cores with the rest idle.
+
+    Scale-adaptive by construction: the target comes from
+    ``sparkContext.defaultParallelism`` (cluster = executors × cores) and
+    ``df`` itself is returned unchanged when it already plans at least
+    that many splits — on a real multi-file input this is a no-op, so it
+    can never coalesce a properly parallel input. Values are unaffected."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df

@@ -190,7 +190,9 @@ def test_engine_expire_recrawl(spark, tmp_path, mode):
     absorb re-enqueues and re-grants them. Exercises the deletion path the
     cuckoo backend exists for (exact mode takes its anti-join removal
     path, same result). A URL still queued in the frontier is not expired:
-    forgetting it would let the next absorb enqueue it a second time."""
+    forgetting it would let the next absorb enqueue it a second time.
+    The checkpoints expiry creates are released by the next epoch's
+    commit, like every other superseded state checkpoint."""
     from maga_spark.crawlspec import CrawlConfig
     from maga_spark.plans.frontier import CrawlEngine
     from maga_spark.sources.fixtures import generate
@@ -213,11 +215,18 @@ def test_engine_expire_recrawl(spark, tmp_path, mode):
     # a URL still waiting in the frontier (seen, never granted)
     queued_url = eng.frontier.orderBy("url_hash").first()["url_canon"]
     batch = urls + [queued_url]
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
     expired = eng.expire_urls(spark.createDataFrame([(u,) for u in batch], "url string"))
     assert expired == len(urls)  # the queued URL is not counted
     assert eng.seen.count() == seen_before - len(urls)
     # idempotent: expiring again is a no-op (keys no longer in seen)
     assert eng.expire_urls(spark.createDataFrame([(u,) for u in batch], "url string")) == 0
+    created = persisted() - before
+    assert created, "expiry checkpointed nothing"
 
     # feed the expired URLs back as the next discovery batch: every one
     # must re-enter the crawl — re-granted already, or re-enqueued and
@@ -231,6 +240,7 @@ def test_engine_expire_recrawl(spark, tmp_path, mode):
     assert regranted & set(urls), "expiry re-granted nothing"
     assert len(frontier) == len({r["url_hash"] for r in frontier}), "duplicate frontier url_hash"
     assert eng.seen.count() == seen_before  # re-absorbed into seen
+    assert not created & persisted(), f"expiry checkpoints leaked: {created & persisted()}"
 
 
 @pytest.mark.parametrize("mode", ["bloom", "Cuckoo", ""])

@@ -21,7 +21,7 @@ from maga_spark.functions import (
     url_path,
     xor_dist,
 )
-from maga_spark.functions.nodes import split_nodes_arrow, split_nodes_sql
+from maga_spark.functions.nodes import split_nodes_sql
 from maga_spark.xxh64 import xxh64, xxh64_long, xxh64_str
 
 URLS = [
@@ -148,15 +148,14 @@ def test_split_nodes_both_impls(spark):
     df = spark.createDataFrame(
         [(blob,), (bad,), (b"",)], T.StructType([T.StructField("blob", T.BinaryType())])
     )
-    for impl in (split_nodes_sql(F.col("blob")), split_nodes_arrow(F.col("blob"))):
-        rows = df.select(F.col("blob"), impl.alias("arr")).collect()
-        by_len = {len(bytes(r["blob"])): r["arr"] for r in rows}
-        good = by_len[len(blob)]
-        assert len(good) == 3
-        for got, (nid, ip, port) in zip(good, recs):
-            assert bytes(got["nid"]) == nid and got["ip"] == ip and got["port"] == port
-        assert by_len[len(bad)] == []
-        assert by_len[0] == []
+    rows = df.select(F.col("blob"), split_nodes_sql(F.col("blob")).alias("arr")).collect()
+    by_len = {len(bytes(r["blob"])): r["arr"] for r in rows}
+    good = by_len[len(blob)]
+    assert len(good) == 3
+    for got, (nid, ip, port) in zip(good, recs):
+        assert bytes(got["nid"]) == nid and got["ip"] == ip and got["port"] == port
+    assert by_len[len(bad)] == []
+    assert by_len[0] == []
 
 
 def test_inet_ntoa_be_u16(spark):

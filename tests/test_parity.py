@@ -105,29 +105,18 @@ spark.stop()
 def test_adaptive_host_joins_no_forced_broadcast(spark, fixtures_dir, golden):
     """VERDICT r3 #1: the host-keyed state joins (politeness / robots_agg /
     host_state) carry NO broadcast hint — AQE decides from runtime sizes;
-    results stay bit-exact. Also exercises the scheduler skew-guard
-    fallback in the same run (topk_skew_factor=0 forces the sampled top-K
-    from epoch 1 on) — both adaptive paths together must still reproduce
-    the golden crawl."""
-    import dataclasses
-    import warnings as _warnings
-
-    cfg = dataclasses.replace(CFG, topk_skew_factor=0.0, topk_skew_min_rows=0)
-    eng = CrawlEngine(spark, fixtures_dir, cfg)
+    results stay bit-exact."""
+    eng = CrawlEngine(spark, fixtures_dir, CFG)
     # mechanical hint check: the absorb plan (seen anti-join + robots_agg
     # host join) holds no deliberate broadcast, so any hint is a host hint
-    probe = CrawlEngine(spark, fixtures_dir, cfg)
+    probe = CrawlEngine(spark, fixtures_dir, CFG)
     seeds = spark.read.parquet(f"{fixtures_dir}/seeds.parquet").select("url")
     plan = probe._absorb(seeds, 0).df._jdf.queryExecution().analyzed().toString()
     for t in probe._epoch_temps:
         t.unpersist()
     assert "ResolvedHint" not in plan
 
-    with _warnings.catch_warnings(record=True) as w:
-        _warnings.simplefilter("always")
-        res = eng.run(collect_ordering=True)
-    assert eng.topk_fallback_active is True
-    assert any("bucket skew" in str(x.message) for x in w)
+    res = eng.run(collect_ordering=True)
     assert res.ordering == golden.ordering
     assert res.metrics == golden.metrics
     got = {r["shard"]: list(r["hashes"]) for r in eng.seen_per_shard()}

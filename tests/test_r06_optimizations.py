@@ -115,7 +115,7 @@ def test_engine_state_partitions_stay_bounded(spark, tmp_path):
     eng = CrawlEngine(spark, fx, cfg, seen_mode="exact")
     cap = spark.sparkContext.defaultParallelism
     for _ in range(4):
-        eng.run(epochs=1, collect_ordering=False, collect_metrics=False)
+        eng.run(epochs=1, collect_ordering=False)
         for name in ("seen", "frontier", "host_state"):
             n = getattr(eng, name).rdd.getNumPartitions()
             assert n <= cap, (name, n, cap)
