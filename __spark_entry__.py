@@ -4,9 +4,13 @@
 priority + per-host token grant + global top-K) expressed over the driver's
 TPC-H-ish tables (orders = URLs, customers = hosts).
 
-``queries()`` / ``oracle_sql()`` — one entry per implemented operator from
-SURVEY.md §2 (plus the training-data operators), each checked against DuckDB
-at sf0.01. Column names and value types are aligned on both sides.
+``REGISTRY`` (end of module) — the one table that names a query: one
+``Query(build, oracle, pushdown)`` row per implemented operator from
+SURVEY.md §2 (plus the training-data operators). ``build`` is the Spark
+builder, ``oracle`` its DuckDB SQL (checked at sf0.01; None only for the
+self-verifying ``crawl_epoch``), ``pushdown`` the column whose filter must
+reach the parquet scan. ``queries()`` / ``oracle_sql()`` are one-line views
+of it. Column names and value types are aligned on both sides.
 
 Value-type portability contract (round-2, replaces the round-1 DECIMAL
 strategy that hash-diverged on 11 queries): every output column is BIGINT,
@@ -21,6 +25,7 @@ division of identical integers is correctly rounded on both. DuckDB integer
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -64,7 +69,7 @@ def _spread(df: DataFrame, barrier_col: str | None = None) -> DataFrame:
                 barrier_col,
                 F.when(
                     F.monotonically_increasing_id() >= 0, F.col(barrier_col)
-                ),
+                ).otherwise(F.col(barrier_col)),
             )
     return df
 
@@ -1746,7 +1751,7 @@ FROM customer ORDER BY c_custkey
 """
 
 
-# ---- non-SQL-expressible (rows-only check): custom/stateful/approx ops ----
+# ---- near-dup fingerprints (oracle-checked) + the crawl-engine smoke (rows-only) ----
 
 def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simhash near-dup pairs — round-2: portable md5-60-bit token hashes so
@@ -1787,14 +1792,13 @@ ORDER BY a_id, b_id
 
 
 def q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH ANN top-10 — round-3: fully oracle-checked. Round 2 was
-    rows-only because float hyperplane projections are summation-order-
-    sensitive near 0; the quantized variant (similarity.py
-    lsh_bucket_topk_quantized) derives buckets from EXACT integer dot
-    products (integer-valued doubles < 2^53), so DuckDB rebuilds identical
-    buckets and the full result hash-matches. The ``in_exact_topk``
-    self-check column (membership in the brute-force top-20) is kept and
-    now also oracle-verified."""
+    """Sign-LSH ANN top-10, fully oracle-checked. Float hyperplane
+    projections are summation-order-sensitive near 0, so the quantized
+    variant (similarity.py lsh_bucket_topk_quantized) derives buckets from
+    EXACT integer dot products (integer-valued doubles < 2^53): DuckDB
+    rebuilds identical buckets and the full result hash-matches, including
+    the ``in_exact_topk`` self-check column (membership in the brute-force
+    top-20)."""
     from maga_spark.operators.similarity import brute_force_topk, lsh_bucket_topk_quantized
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -3213,9 +3217,7 @@ def q_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     group_quantiles — the corpus-profile report that steers gate
     thresholds): p50/p90/p99 of n_chars as the ceil(q·n/100)-th order
     statistic, pure integers, deterministic under ties because equal
-    values are interchangeable. One window + one combinable groupBy; the
-    approx_percentile twin (same schema, sketch semantics) is the
-    billion-row-group path and is exercised by pytest, not hashed."""
+    values are interchangeable. One window + one combinable groupBy."""
     from maga_spark.operators.stats import group_quantiles
 
     docs = _t(spark, sf_dir, "documents")
@@ -4910,207 +4912,126 @@ FROM assigned ORDER BY doc_id
 SQL_ASPECT_BUCKETS = _sql_aspect_buckets()
 
 
+class Query(NamedTuple):
+    """One registered query. ``build(spark, sf_dir)`` returns the Spark
+    result; ``oracle`` is its DuckDB twin over the same sf tables, or None
+    for a rows-only query; ``pushdown`` names the column whose filter must
+    reach the parquet scan (tests/test_plan_hygiene.py), or None."""
+
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None
+    pushdown: str | None = None
+
+
+# The one place a query is named: queries(), oracle_sql() and the plan
+# hygiene gates all derive from this table.
+REGISTRY: dict[str, Query] = {
+    "canonicalize": Query(q_canonicalize, SQL_CANONICALIZE),
+    "xor_topk": Query(q_xor_topk, SQL_XOR_TOPK),
+    "politeness_grant": Query(q_politeness_grant, SQL_POLITENESS_GRANT),
+    "anti_join_seen": Query(q_anti_join_seen, SQL_ANTI_JOIN_SEEN),
+    "anti_join_cuckoo": Query(q_anti_join_cuckoo, SQL_ANTI_JOIN_CUCKOO),
+    "frontier_union": Query(q_frontier_union, SQL_FRONTIER_UNION),
+    "robots_gate": Query(q_robots_gate, SQL_ROBOTS_GATE),
+    "robots_rfc": Query(q_robots_rfc, SQL_ROBOTS_RFC),
+    "token_of": Query(q_token_of, SQL_TOKEN_OF),
+    "implied_port": Query(q_implied_port, SQL_IMPLIED_PORT),
+    "frame_sampling": Query(q_frame_sampling, SQL_FRAME_SAMPLING, "o_orderkey"),
+    "argmin_frame": Query(q_argmin_frame, SQL_ARGMIN_FRAME),
+    "ordered_reassembly": Query(q_ordered_reassembly, SQL_ORDERED_REASSEMBLY, "l_orderkey"),
+    "integrity_filter": Query(q_integrity_filter, SQL_INTEGRITY_FILTER),
+    "sequence_check": Query(q_sequence_check, SQL_SEQUENCE_CHECK),
+    "tpch_q1": Query(q_tpch_q1, SQL_TPCH_Q1),
+    "broadcast_join_agg": Query(q_broadcast_join_agg, SQL_BROADCAST_JOIN_AGG),
+    "window_running": Query(q_window_running, SQL_WINDOW_RUNNING),
+    "asof_join": Query(q_asof_join, SQL_ASOF_JOIN),
+    "sessionize": Query(q_sessionize, SQL_SESSIONIZE),
+    "tumbling_agg": Query(q_tumbling_agg, SQL_TUMBLING_AGG),
+    "exact_dedup": Query(q_exact_dedup, SQL_EXACT_DEDUP),
+    "jaccard_chargram": Query(q_jaccard_chargram, SQL_JACCARD_CHARGRAM, "doc_id"),
+    "minhash_banding": Query(q_minhash_banding, SQL_MINHASH_BANDING),
+    "minhash_index_query": Query(q_minhash_index_query, SQL_MINHASH_INDEX_QUERY),
+    "phash_hamming": Query(q_phash_hamming, SQL_PHASH_HAMMING, "doc_id"),
+    "embedding_topk": Query(q_embedding_topk, SQL_EMBEDDING_TOPK, "vec_id"),
+    "embedding_near_dups": Query(q_embedding_near_dups, SQL_EMBEDDING_NEAR_DUPS, "vec_id"),
+    "semantic_dedup": Query(q_semantic_dedup, SQL_SEMANTIC_DEDUP, "vec_id"),
+    "embedding_near_dups_exact": Query(q_embedding_near_dups_exact, SQL_EMBEDDING_NEAR_DUPS_EXACT),
+    "language_id": Query(q_language_id, SQL_LANGUAGE_ID),
+    "text_quality": Query(q_text_quality, SQL_TEXT_QUALITY),
+    "token_budget": Query(q_token_budget, SQL_TOKEN_BUDGET),
+    "doc_repetition": Query(q_doc_repetition, SQL_DOC_REPETITION),
+    "line_dedup": Query(q_line_dedup, SQL_LINE_DEDUP),
+    "tfidf_terms": Query(q_tfidf_terms, SQL_TFIDF_TERMS),
+    "corpus_curate": Query(q_corpus_curate, SQL_CORPUS_CURATE),
+    "image_curate": Query(q_image_curate, SQL_IMAGE_CURATE),
+    "krpc_roundtrip": Query(q_krpc_roundtrip, SQL_KRPC_ROUNDTRIP),
+    "frame_codec": Query(q_frame_codec, SQL_FRAME_CODEC),
+    "handshake_gate": Query(q_handshake_gate, SQL_HANDSHAKE_GATE),
+    "embedded_int": Query(q_embedded_int, SQL_EMBEDDED_INT),
+    "piece_range": Query(q_piece_range, SQL_PIECE_RANGE),
+    "dns_resolve": Query(q_dns_resolve, SQL_DNS_RESOLVE),
+    "ivf_assign": Query(q_ivf_assign, SQL_IVF_ASSIGN),
+    "ivf_topk_pruned": Query(q_ivf_topk_pruned, SQL_IVF_TOPK_PRUNED),
+    "pq_codes": Query(q_pq_codes, SQL_PQ_CODES),
+    "pq_adc": Query(q_pq_adc, SQL_PQ_ADC),
+    "image_stats": Query(q_image_stats, SQL_IMAGE_STATS),
+    "dup_clusters": Query(q_dup_clusters, SQL_DUP_CLUSTERS),
+    "link_extract": Query(q_link_extract, SQL_LINK_EXTRACT),
+    "crawl_delay": Query(q_crawl_delay, SQL_CRAWL_DELAY),
+    # pagerank/redirect_resolve synthesize their edges in memory (ExistingRDD):
+    # no parquet scan to push a filter into
+    "pagerank": Query(q_pagerank, _sql_pagerank()),
+    "redirect_resolve": Query(q_redirect_resolve, SQL_REDIRECT_RESOLVE),
+    "containment_pairs": Query(q_containment_pairs, SQL_CONTAINMENT_PAIRS, "doc_id"),
+    "containment_from_index": Query(q_containment_from_index, SQL_CONTAINMENT_PAIRS),
+    "warc_parse": Query(q_warc_parse, SQL_WARC_PARSE, "doc_id"),
+    "cdx_index": Query(q_cdx_index, SQL_CDX_INDEX, "doc_id"),
+    "cdx_revisit": Query(q_cdx_revisit, SQL_CDX_REVISIT, "doc_id"),
+    "sequence_pack": Query(q_sequence_pack, SQL_SEQUENCE_PACK),
+    "packing_stats": Query(q_packing_stats, SQL_PACKING_STATS),
+    "decontaminate": Query(q_decontaminate, SQL_DECONTAMINATE),
+    "pii_redact": Query(q_pii_redact, SQL_PII_REDACT, "doc_id"),
+    "repeated_ngrams": Query(q_repeated_ngrams, SQL_REPEATED_NGRAMS),
+    "dedup_cut": Query(q_dedup_cut, SQL_DEDUP_CUT, "doc_id"),
+    "aspect_buckets": Query(q_aspect_buckets, SQL_ASPECT_BUCKETS),
+    "mime_sniff": Query(q_mime_sniff, SQL_MIME_SNIFF, "doc_id"),
+    "stratified_sample": Query(q_stratified_sample, SQL_STRATIFIED_SAMPLE, "doc_id"),
+    "weighted_sample": Query(q_weighted_sample, SQL_WEIGHTED_SAMPLE),
+    "classifier_score": Query(q_classifier_score, SQL_CLASSIFIER_SCORE),
+    "epoch_shuffle": Query(q_epoch_shuffle, SQL_EPOCH_SHUFFLE),
+    "shard_manifest": Query(q_shard_manifest, SQL_SHARD_MANIFEST),
+    "lm_score": Query(q_lm_score, SQL_LM_SCORE),
+    "reg_domain": Query(q_reg_domain, SQL_REG_DOMAIN),
+    "domain_cap": Query(q_domain_cap, SQL_DOMAIN_CAP),
+    "corpus_export": Query(q_corpus_export, SQL_CORPUS_EXPORT),
+    "length_quantiles": Query(q_length_quantiles, SQL_LENGTH_QUANTILES),
+    "length_histogram": Query(q_length_histogram, SQL_LENGTH_HISTOGRAM),
+    "snapshot_diff": Query(q_snapshot_diff, SQL_SNAPSHOT_DIFF),
+    "mixture_rates": Query(q_mixture_rates, SQL_MIXTURE_RATES),
+    "image_keep_best": Query(q_image_keep_best, SQL_IMAGE_KEEP_BEST),
+    "sitemap_parse": Query(q_sitemap_parse, SQL_SITEMAP_PARSE, "doc_id"),
+    "html_text": Query(q_html_text, SQL_HTML_TEXT, "doc_id"),
+    "rank_blend": Query(q_rank_blend, _sql_rank_blend()),
+    "geometry_check": Query(q_geometry_check, SQL_GEOMETRY_CHECK, "doc_id"),
+    "revisit_schedule": Query(q_revisit_schedule, SQL_REVISIT_SCHEDULE, "doc_id"),
+    "budget_share": Query(q_budget_share, SQL_BUDGET_SHARE),
+    "caption_align": Query(q_caption_align, SQL_CAPTION_ALIGN, "vec_id"),
+    "robots_sitemaps": Query(q_robots_sitemaps, SQL_ROBOTS_SITEMAPS),
+    "anchor_profile": Query(q_anchor_profile, SQL_ANCHOR_PROFILE, "doc_id"),
+    "mixture_report": Query(q_mixture_report, SQL_MIXTURE_REPORT, "doc_id"),
+    "bm25_search": Query(q_bm25_search, SQL_BM25_SEARCH, "doc_id"),
+    "trap_detect": Query(q_trap_detect, SQL_TRAP_DETECT, "doc_id"),
+    "kmv_distinct": Query(q_kmv_distinct, SQL_KMV_DISTINCT, "doc_id"),
+    "simhash_near_dups": Query(q_simhash_near_dups, SQL_SIMHASH_NEAR_DUPS, "doc_id"),
+    "lsh_ann": Query(q_lsh_ann, _sql_lsh_ann(), "vec_id"),
+    "winnow_fingerprint": Query(q_winnow_fingerprint, SQL_WINNOW_FINGERPRINT, "doc_id"),
+    "crawl_epoch": Query(q_crawl_epoch, None),
+}
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "canonicalize": q_canonicalize,
-        "xor_topk": q_xor_topk,
-        "politeness_grant": q_politeness_grant,
-        "anti_join_seen": q_anti_join_seen,
-        "anti_join_cuckoo": q_anti_join_cuckoo,
-        "frontier_union": q_frontier_union,
-        "robots_gate": q_robots_gate,
-        "robots_rfc": q_robots_rfc,
-        "token_of": q_token_of,
-        "implied_port": q_implied_port,
-        "frame_sampling": q_frame_sampling,
-        "argmin_frame": q_argmin_frame,
-        "ordered_reassembly": q_ordered_reassembly,
-        "integrity_filter": q_integrity_filter,
-        "sequence_check": q_sequence_check,
-        "tpch_q1": q_tpch_q1,
-        "broadcast_join_agg": q_broadcast_join_agg,
-        "window_running": q_window_running,
-        "asof_join": q_asof_join,
-        "sessionize": q_sessionize,
-        "tumbling_agg": q_tumbling_agg,
-        "exact_dedup": q_exact_dedup,
-        "jaccard_chargram": q_jaccard_chargram,
-        "minhash_banding": q_minhash_banding,
-        "minhash_index_query": q_minhash_index_query,
-        "phash_hamming": q_phash_hamming,
-        "embedding_topk": q_embedding_topk,
-        "embedding_near_dups": q_embedding_near_dups,
-        "semantic_dedup": q_semantic_dedup,
-        "embedding_near_dups_exact": q_embedding_near_dups_exact,
-        "language_id": q_language_id,
-        "text_quality": q_text_quality,
-        "token_budget": q_token_budget,
-        "doc_repetition": q_doc_repetition,
-        "line_dedup": q_line_dedup,
-        "tfidf_terms": q_tfidf_terms,
-        "corpus_curate": q_corpus_curate,
-        "image_curate": q_image_curate,
-        "krpc_roundtrip": q_krpc_roundtrip,
-        "frame_codec": q_frame_codec,
-        "handshake_gate": q_handshake_gate,
-        "embedded_int": q_embedded_int,
-        "piece_range": q_piece_range,
-        "dns_resolve": q_dns_resolve,
-        "ivf_assign": q_ivf_assign,
-        "ivf_topk_pruned": q_ivf_topk_pruned,
-        "pq_codes": q_pq_codes,
-        "pq_adc": q_pq_adc,
-        "image_stats": q_image_stats,
-        "dup_clusters": q_dup_clusters,
-        "link_extract": q_link_extract,
-        "crawl_delay": q_crawl_delay,
-        "pagerank": q_pagerank,
-        "redirect_resolve": q_redirect_resolve,
-        "containment_pairs": q_containment_pairs,
-        "containment_from_index": q_containment_from_index,
-        "warc_parse": q_warc_parse,
-        "cdx_index": q_cdx_index,
-        "cdx_revisit": q_cdx_revisit,
-        "sequence_pack": q_sequence_pack,
-        "packing_stats": q_packing_stats,
-        "decontaminate": q_decontaminate,
-        "pii_redact": q_pii_redact,
-        "repeated_ngrams": q_repeated_ngrams,
-        "dedup_cut": q_dedup_cut,
-        "aspect_buckets": q_aspect_buckets,
-        "mime_sniff": q_mime_sniff,
-        "stratified_sample": q_stratified_sample,
-        "weighted_sample": q_weighted_sample,
-        "classifier_score": q_classifier_score,
-        "epoch_shuffle": q_epoch_shuffle,
-        "shard_manifest": q_shard_manifest,
-        "lm_score": q_lm_score,
-        "reg_domain": q_reg_domain,
-        "domain_cap": q_domain_cap,
-        "corpus_export": q_corpus_export,
-        "length_quantiles": q_length_quantiles,
-        "length_histogram": q_length_histogram,
-        "snapshot_diff": q_snapshot_diff,
-        "mixture_rates": q_mixture_rates,
-        "image_keep_best": q_image_keep_best,
-        "sitemap_parse": q_sitemap_parse,
-        "html_text": q_html_text,
-        "rank_blend": q_rank_blend,
-        "geometry_check": q_geometry_check,
-        "revisit_schedule": q_revisit_schedule,
-        "budget_share": q_budget_share,
-        "caption_align": q_caption_align,
-        "robots_sitemaps": q_robots_sitemaps,
-        "anchor_profile": q_anchor_profile,
-        "mixture_report": q_mixture_report,
-        "bm25_search": q_bm25_search,
-        "trap_detect": q_trap_detect,
-        "kmv_distinct": q_kmv_distinct,
-        # rows-only (approx / stateful / engine-level)
-        "simhash_near_dups": q_simhash_near_dups,
-        "lsh_ann": q_lsh_ann,
-        "winnow_fingerprint": q_winnow_fingerprint,
-        "crawl_epoch": q_crawl_epoch,
-    }
+    return {name: q.build for name, q in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "canonicalize": SQL_CANONICALIZE,
-        "xor_topk": SQL_XOR_TOPK,
-        "politeness_grant": SQL_POLITENESS_GRANT,
-        "anti_join_seen": SQL_ANTI_JOIN_SEEN,
-        "anti_join_cuckoo": SQL_ANTI_JOIN_CUCKOO,
-        "frontier_union": SQL_FRONTIER_UNION,
-        "robots_gate": SQL_ROBOTS_GATE,
-        "robots_rfc": SQL_ROBOTS_RFC,
-        "token_of": SQL_TOKEN_OF,
-        "implied_port": SQL_IMPLIED_PORT,
-        "frame_sampling": SQL_FRAME_SAMPLING,
-        "argmin_frame": SQL_ARGMIN_FRAME,
-        "ordered_reassembly": SQL_ORDERED_REASSEMBLY,
-        "integrity_filter": SQL_INTEGRITY_FILTER,
-        "sequence_check": SQL_SEQUENCE_CHECK,
-        "tpch_q1": SQL_TPCH_Q1,
-        "broadcast_join_agg": SQL_BROADCAST_JOIN_AGG,
-        "window_running": SQL_WINDOW_RUNNING,
-        "asof_join": SQL_ASOF_JOIN,
-        "sessionize": SQL_SESSIONIZE,
-        "tumbling_agg": SQL_TUMBLING_AGG,
-        "exact_dedup": SQL_EXACT_DEDUP,
-        "jaccard_chargram": SQL_JACCARD_CHARGRAM,
-        "minhash_banding": SQL_MINHASH_BANDING,
-        "minhash_index_query": SQL_MINHASH_INDEX_QUERY,
-        "phash_hamming": SQL_PHASH_HAMMING,
-        "embedding_topk": SQL_EMBEDDING_TOPK,
-        "embedding_near_dups": SQL_EMBEDDING_NEAR_DUPS,
-        "semantic_dedup": SQL_SEMANTIC_DEDUP,
-        "embedding_near_dups_exact": SQL_EMBEDDING_NEAR_DUPS_EXACT,
-        "language_id": SQL_LANGUAGE_ID,
-        "text_quality": SQL_TEXT_QUALITY,
-        "token_budget": SQL_TOKEN_BUDGET,
-        "doc_repetition": SQL_DOC_REPETITION,
-        "line_dedup": SQL_LINE_DEDUP,
-        "tfidf_terms": SQL_TFIDF_TERMS,
-        "corpus_curate": SQL_CORPUS_CURATE,
-        "image_curate": SQL_IMAGE_CURATE,
-        "simhash_near_dups": SQL_SIMHASH_NEAR_DUPS,
-        "lsh_ann": _sql_lsh_ann(),
-        "winnow_fingerprint": SQL_WINNOW_FINGERPRINT,
-        "krpc_roundtrip": SQL_KRPC_ROUNDTRIP,
-        "frame_codec": SQL_FRAME_CODEC,
-        "handshake_gate": SQL_HANDSHAKE_GATE,
-        "embedded_int": SQL_EMBEDDED_INT,
-        "piece_range": SQL_PIECE_RANGE,
-        "dns_resolve": SQL_DNS_RESOLVE,
-        "ivf_assign": SQL_IVF_ASSIGN,
-        "ivf_topk_pruned": SQL_IVF_TOPK_PRUNED,
-        "pq_codes": SQL_PQ_CODES,
-        "pq_adc": SQL_PQ_ADC,
-        "image_stats": SQL_IMAGE_STATS,
-        "dup_clusters": SQL_DUP_CLUSTERS,
-        "link_extract": SQL_LINK_EXTRACT,
-        "crawl_delay": SQL_CRAWL_DELAY,
-        "pagerank": _sql_pagerank(),
-        "redirect_resolve": SQL_REDIRECT_RESOLVE,
-        "containment_pairs": SQL_CONTAINMENT_PAIRS,
-        "containment_from_index": SQL_CONTAINMENT_PAIRS,
-        "warc_parse": SQL_WARC_PARSE,
-        "cdx_index": SQL_CDX_INDEX,
-        "cdx_revisit": SQL_CDX_REVISIT,
-        "sequence_pack": SQL_SEQUENCE_PACK,
-        "packing_stats": SQL_PACKING_STATS,
-        "decontaminate": SQL_DECONTAMINATE,
-        "pii_redact": SQL_PII_REDACT,
-        "repeated_ngrams": SQL_REPEATED_NGRAMS,
-        "dedup_cut": SQL_DEDUP_CUT,
-        "aspect_buckets": SQL_ASPECT_BUCKETS,
-        "mime_sniff": SQL_MIME_SNIFF,
-        "stratified_sample": SQL_STRATIFIED_SAMPLE,
-        "weighted_sample": SQL_WEIGHTED_SAMPLE,
-        "classifier_score": SQL_CLASSIFIER_SCORE,
-        "epoch_shuffle": SQL_EPOCH_SHUFFLE,
-        "shard_manifest": SQL_SHARD_MANIFEST,
-        "lm_score": SQL_LM_SCORE,
-        "reg_domain": SQL_REG_DOMAIN,
-        "domain_cap": SQL_DOMAIN_CAP,
-        "corpus_export": SQL_CORPUS_EXPORT,
-        "length_quantiles": SQL_LENGTH_QUANTILES,
-        "length_histogram": SQL_LENGTH_HISTOGRAM,
-        "snapshot_diff": SQL_SNAPSHOT_DIFF,
-        "mixture_rates": SQL_MIXTURE_RATES,
-        "image_keep_best": SQL_IMAGE_KEEP_BEST,
-        "sitemap_parse": SQL_SITEMAP_PARSE,
-        "html_text": SQL_HTML_TEXT,
-        "rank_blend": _sql_rank_blend(),
-        "geometry_check": SQL_GEOMETRY_CHECK,
-        "revisit_schedule": SQL_REVISIT_SCHEDULE,
-        "budget_share": SQL_BUDGET_SHARE,
-        "caption_align": SQL_CAPTION_ALIGN,
-        "robots_sitemaps": SQL_ROBOTS_SITEMAPS,
-        "anchor_profile": SQL_ANCHOR_PROFILE,
-        "mixture_report": SQL_MIXTURE_REPORT,
-        "bm25_search": SQL_BM25_SEARCH,
-        "trap_detect": SQL_TRAP_DETECT,
-        "kmv_distinct": SQL_KMV_DISTINCT,
-    }
+    return {name: q.oracle for name, q in REGISTRY.items() if q.oracle is not None}

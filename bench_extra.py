@@ -20,6 +20,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import sys
@@ -56,12 +57,9 @@ def main() -> None:
             continue
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
-            df = qs[name](spark, SF_DIR)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            with open(os.path.join(args.explain_dir, f"{name}_{args.tag}.txt"), "w") as f:
-                f.write(plan)
+            path = os.path.join(args.explain_dir, f"{name}_{args.tag}.txt")
+            with open(path, "w") as f, contextlib.redirect_stdout(f):
+                qs[name](spark, SF_DIR).explain(mode="formatted")
         samples = []
         for _ in range(args.repeat):
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")

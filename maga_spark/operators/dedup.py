@@ -8,8 +8,9 @@ the scale/precision trade:
                      pairs → exact Jaccard verify. Near-dup at 10^9 docs:
                      only same-bucket pairs are compared (the classic
                      Broder/LSH construction), all as built-in expressions.
-* simhash          — 64-bit charikar fingerprint via one Arrow UDF; hamming
-                     ≤ r pairs via band-exact-match pre-join (pigeonhole).
+* simhash          — 64-bit charikar fingerprint as built-in expressions
+                     (token explode + per-bit vote groupBy); hamming ≤ r
+                     pairs via band-exact-match pre-join (pigeonhole).
 * n-gram Jaccard   — exact pairwise similarity via shingle explode +
                      equi-join (for candidate sets small enough to verify).
 * embedding cosine — near-dup by cosine ≥ τ over an embedding column.
@@ -379,41 +380,6 @@ def hamming_band_pairs(
     )
 
 
-import pandas as _pd
-from pyspark.sql import types as _T
-
-
-@F.pandas_udf(_T.LongType())
-def simhash64_arrow(texts: "_pd.Series") -> "_pd.Series":
-    """Charikar simhash via an Arrow-batched numpy bit-vote — the FAST path.
-
-    Measured (local[32], best-of-2 after warm-up): 50k docs × 40 tokens —
-    0.93s vs 1.95s for the exploded-token JVM aggregation below; 5k docs ×
-    1000 tokens — 1.79s vs 2.17s. The numpy batch beats the explode +
-    64-sum-agg shuffle in both regimes, so this stays the default despite
-    the per-token Python ``xxh64`` call. Produces identical fingerprints to
-    ``simhash_signatures(portable=False)`` (same hash: the repo's xxh64
-    uses Spark's seed)."""
-    import numpy as np
-
-    from maga_spark.xxh64 import xxh64
-
-    out = []
-    for t in texts:
-        toks = (t or "").lower().split()
-        if not toks:
-            out.append(0)
-            continue
-        hs = np.array([xxh64(w.encode("utf-8")) for w in toks], dtype=np.uint64)
-        bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)).astype(
-            np.int64
-        )
-        v = (2 * bits - 1).sum(axis=0)
-        sig = int(((v > 0).astype(np.uint64) << np.arange(64, dtype=np.uint64)).sum())
-        out.append(sig - (1 << 64) if sig >= (1 << 63) else sig)
-    return _pd.Series(out, dtype="int64")
-
-
 def simhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -424,13 +390,9 @@ def simhash_signatures(
     explode word tokens, hash each on the JVM, bit-vote with one groupBy
     carrying per-bit sum columns, then repack the sign bits.
 
-    Use this when (a) the DuckDB-reproducible fingerprint is needed
-    (portable=True → md5-60-bit token hashes the oracle recomputes
-    value-for-value) or (b) Python workers must stay out of the plan
-    (executor python-memory pressure at high parallelism). For raw
-    throughput ``simhash64_arrow`` measured faster in both short- and
-    long-document regimes (numbers on its docstring) — identical
-    fingerprints in non-portable mode.
+    portable=True swaps xxhash64 for md5-60-bit token hashes, which the
+    DuckDB oracle recomputes value-for-value. No Python worker joins the
+    plan in either mode.
 
     Token weights follow term frequency (duplicates kept, as in the
     reference Charikar construction); docs with no tokens get sim = 0."""
@@ -469,21 +431,13 @@ def simhash_near_dups(
     max_hamming: int = 3,
     n_bands: int = 4,
     portable: bool = False,
-    impl: str = "arrow",
     cache_signatures: bool = False,
 ) -> DataFrame:
     """Pairs with simhash hamming distance ≤ max_hamming; exact pair
-    generation via the pigeonhole band join (``hamming_band_pairs``).
-
-    impl='arrow' (default, measured faster — see simhash64_arrow) or
-    'sql' (zero-Python plan). portable=True forces 'sql' (md5 hashes,
-    DuckDB-reproducible). Fingerprints are identical across impls in
-    non-portable mode."""
+    generation via the pigeonhole band join (``hamming_band_pairs``) over
+    ``simhash_signatures`` (portable=True: md5 hashes, DuckDB-reproducible)."""
     bits = 60 if portable else SIMHASH_BITS
-    if portable or impl == "sql":
-        sh = simhash_signatures(df, id_col, text_col, portable=portable)
-    else:
-        sh = df.select(F.col(id_col).alias("id"), simhash64_arrow(F.col(text_col)).alias("sim"))
+    sh = simhash_signatures(df, id_col, text_col, portable=portable)
     if cache_signatures:
         # the band self-join consumes sh on BOTH sides; without a cache each
         # side re-runs the full per-bit vote aggregation over the corpus

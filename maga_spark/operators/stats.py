@@ -11,11 +11,7 @@ maga/crawler.py. SURVEY.md §2.10 X-59.)
 Scale shapes (100 TB):
   * ``group_quantiles`` — ONE window per group (rank + count ride the same
     shuffle) and a map-side-combinable final groupBy. Exact nearest-rank
-    needs the per-group sort; that is the price of exactness — for
-    billion-row groups use the ``approx=True`` twin, which swaps the
-    window for Spark's ``approx_percentile`` sketch aggregate (one
-    combinable groupBy, no sort, rank error ≤ accuracy) — same output
-    schema, sketch semantics, NOT oracle-hashable.
+    needs the per-group sort; that is the price of exactness.
   * ``log2_histogram`` — pure in-row bucket expression + one combinable
     groupBy. Bucket = floor(log2(x)) via the binary-string length (both
     engines print base-2 the same way), -1 for x <= 0; buckets are
@@ -33,36 +29,21 @@ def group_quantiles(
     group_cols: list[str],
     value_col: str,
     qs: tuple[int, ...] = (50, 90, 99),
-    approx: bool = False,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Per-group quantiles of an integer column → one row per group:
     ``group_cols + n_rows + p<q> ...``.
 
-    Exact mode uses the NEAREST-RANK definition (the classic
-    ceil(q/100 · n)-th order statistic, ties broken by value order only —
-    duplicates are fine because equal values are interchangeable): rank
-    every row inside its group, then keep the values at the target ranks
-    with conditional aggregation. Deterministic and engine-portable —
-    unlike interpolating definitions, which differ between engines and
-    produce floats.
-
-    ``approx=True`` replaces the window with ``approx_percentile`` for
-    billion-row groups (same schema; sketch error up to 1/accuracy in
-    rank space; not for oracle hashing)."""
+    Uses the NEAREST-RANK definition (the classic ceil(q/100 · n)-th order
+    statistic, ties broken by value order only — duplicates are fine
+    because equal values are interchangeable): rank every row inside its
+    group, then keep the values at the target ranks with conditional
+    aggregation. Deterministic and engine-portable — unlike interpolating
+    definitions, which differ between engines and produce floats."""
     if not qs:
         raise ValueError("qs must be non-empty")
     if any(q <= 0 or q > 100 for q in qs):
         raise ValueError(f"quantiles must be in (0, 100], got {qs!r}")
     v = F.col(value_col).cast("long")
-    if approx:
-        agg = [F.count("*").cast("long").alias("n_rows")] + [
-            F.expr(
-                f"approx_percentile({value_col}, {q / 100.0}, {accuracy})"
-            ).cast("long").alias(f"p{q}")
-            for q in qs
-        ]
-        return df.groupBy(*group_cols).agg(*agg)
     w = Window.partitionBy(*group_cols).orderBy(v.asc())
     ranked = df.select(
         *group_cols,

@@ -160,13 +160,15 @@ def test_simhash_matches_python_reference(spark):
 
 
 def test_simhash_no_python_in_plan(spark):
-    """The signature computation must be whole-stage-codegen'd — no Arrow
-    or row-Python evaluation nodes anywhere in the plan."""
+    """The signatures and the default near-dup pairs must be
+    whole-stage-codegen'd — no Arrow or row-Python evaluation nodes
+    anywhere in either plan."""
     from maga_spark.operators.dedup import simhash_signatures
 
     df = spark.createDataFrame(list(DOCS), "doc_id long, text string")
-    plan = simhash_signatures(df)._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan  # covers BatchEvalPython + ArrowEvalPython
+    for out in (simhash_signatures(df), simhash_near_dups(df)):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in plan  # covers BatchEvalPython + ArrowEvalPython
 
 
 def test_simhash_portable_empty_doc(spark):

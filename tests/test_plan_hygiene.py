@@ -4,7 +4,8 @@ cartesian product (the banded near-dup rewrites exist precisely to kill
 those).
 
 Round-5 shape (VERDICT r4 #1): the Python-free and no-cartesian gates
-parameterize over the ENTIRE queries() registry — a newly registered query
+parameterize over the ENTIRE queries() registry, and the pushdown gate over
+every registry row that names a ``pushdown`` column — a newly registered query
 is gated automatically, with exemptions listed explicitly and justified
 inline. An allowlist that must be extended by hand rotted twice (r3, r4);
 an exemption list cannot rot silently because test_exemptions_are_live
@@ -13,6 +14,7 @@ fails when an entry stops being needed.
 
 from __future__ import annotations
 
+import re
 import sys
 
 import pytest
@@ -38,42 +40,6 @@ PLAN_EXEMPT = {"crawl_epoch"}
 # every query must be free of cartesian products
 NO_CARTESIAN_EXEMPT = {"robots_gate"}  # 1-row broadcast crossJoin by design
 
-# queries with a doc_id/vec_id/orderkey cap that must be PUSHED to the scan
-PUSHDOWN = {
-    "jaccard_chargram": "doc_id",
-    "simhash_near_dups": "doc_id",
-    "phash_hamming": "doc_id",
-    "winnow_fingerprint": "doc_id",
-    "embedding_near_dups": "vec_id",
-    "embedding_topk": "vec_id",
-    "frame_sampling": "o_orderkey",
-    "ordered_reassembly": "l_orderkey",
-    "containment_pairs": "doc_id",
-    "sitemap_parse": "doc_id",
-    "html_text": "doc_id",
-    "revisit_schedule": "doc_id",
-    "anchor_profile": "doc_id",
-    # round-4 additions (VERDICT r4 #1: the new queries join the gate).
-    # pagerank/redirect_resolve are absent: their edges are synthesized
-    # in-memory (ExistingRDD — no parquet scan to push into).
-    "trap_detect": "doc_id",
-    "bm25_search": "doc_id",
-    "mixture_report": "doc_id",
-    "kmv_distinct": "doc_id",
-    "mime_sniff": "doc_id",
-    "geometry_check": "doc_id",
-    "stratified_sample": "doc_id",
-    "caption_align": "vec_id",
-    "lsh_ann": "vec_id",
-    # round-5 additions
-    "warc_parse": "doc_id",
-    "cdx_index": "doc_id",
-    "cdx_revisit": "doc_id",
-    "pii_redact": "doc_id",
-    "semantic_dedup": "vec_id",
-    "dedup_cut": "doc_id",
-}
-
 ALL_QUERIES = sorted(set(entrymod.queries()) - PLAN_EXEMPT)
 
 _plan_cache: dict[str, str] = {}
@@ -93,10 +59,14 @@ def test_no_python_in_plan(spark, name):
     assert "EvalPython" not in _plan(spark, name), name
 
 
-@pytest.mark.parametrize("name", sorted(PUSHDOWN))
+@pytest.mark.parametrize(
+    "name", sorted(n for n, q in entrymod.REGISTRY.items() if q.pushdown)
+)
 def test_filter_pushed_to_scan(spark, name):
+    """Queries with a doc_id/vec_id/orderkey cap must push it to the scan;
+    the column is the registry row's ``pushdown`` field."""
     plan = _plan(spark, name)
-    key = PUSHDOWN[name]
+    key = entrymod.REGISTRY[name].pushdown
     assert "PushedFilters: [" in plan, name
     pushed = plan.split("PushedFilters: [", 1)[1][:200]
     assert key in pushed, (name, pushed)
@@ -121,3 +91,32 @@ def test_exemptions_are_live(spark):
         )
     for name in NO_CARTESIAN_EXEMPT:
         assert name in qs, f"exempt query {name} no longer registered"
+
+
+def test_registry_contract():
+    """A dropped or misspelt oracle must fail here rather than turn into a
+    silent rows-only pass in tools/check_oracles.py; and, like the other
+    exemption sets, every PLAN_EXEMPT entry must still be registered."""
+    qs = entrymod.queries()
+    assert set(qs) - set(entrymod.oracle_sql()) == {"crawl_epoch"}
+    for name in PLAN_EXEMPT:
+        assert name in qs, f"exempt query {name} no longer registered"
+
+
+def test_spread_barrier_keeps_filters_above_spread(spark):
+    """``_spread``'s nondeterministic CASE barrier keeps corpus_curate's
+    language/quality Filter above the round-robin spread of the one-split
+    documents scan: Filter, barrier Project, Exchange RoundRobin, then a
+    scan with no data filters. This rests on Catalyst not folding a
+    nondeterministic CASE (undocumented), so the order is pinned here."""
+    lines = [ln.lstrip(" :+-") for ln in _plan(spark, "corpus_curate").splitlines()]
+    barriers = [i for i, ln in enumerate(lines) if "monotonically_increasing_id()" in ln]
+    assert barriers
+    for i in barriers:
+        assert lines[i - 1].startswith("Filter ") and "array_intersect" in lines[i - 1]
+        assert lines[i].startswith("Project "), lines[i]
+        assert re.search(r"THEN text#\d+ ELSE text#\d+ END AS text#", lines[i]), lines[i]
+        assert lines[i + 1].startswith("Exchange RoundRobinPartitioning"), lines[i + 1]
+        scan = lines[i + 2]
+        assert scan.startswith("FileScan parquet") and "documents.parquet" in scan, scan
+        assert "DataFilters: []" in scan, scan
