@@ -30,7 +30,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from maga_spark.functions.scalar import url_canonicalize, xor_dist
+from maga_spark.functions.scalar import token_of, url_canonicalize, xor_dist
 from maga_spark.operators.dedup import portable_hash64
 from maga_spark.operators.topk import global_topk, per_group_topk
 from maga_spark.session import spread_partitions
@@ -281,7 +281,7 @@ def q_token_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
-        F.substring(F.upper(F.md5(F.col("p_name"))), 1, 2).alias("token"),
+        token_of(F.upper(F.md5(F.col("p_name")))).alias("token"),
     ).orderBy("p_partkey")
 
 
@@ -677,10 +677,10 @@ def q_jaccard_chargram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
-    # document-frequency cap (operators/dedup.py jaccard_pairs rationale):
-    # a stop-shingle in n docs yields n²/2 join rows — drop shingles with
-    # df > 1000 from the intersection join (no-op at this corpus size;
-    # the oracle applies the identical cap)
+    # document-frequency cap: a stop-shingle in n docs yields n²/2 join
+    # rows, so shingles with df > 1000 are dropped from the intersection
+    # join only (they carry ~no Jaccard signal; set sizes keep them). A
+    # no-op at this corpus size; the oracle applies the identical cap
     hot = sh.groupBy("s").agg(F.count("*").alias("df")).filter(F.col("df") > 1000).select("s")
     joinable = sh.join(F.broadcast(hot), "s", "left_anti")
     a, b = joinable.alias("a"), joinable.alias("b")
@@ -2253,8 +2253,8 @@ def q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/payload.byte_stats): mean byte value (brightness for the
     ``raw`` codec, where bytes ARE pixels) and population variance
     (contrast), computed by hex-chunk parsing inside whole-stage codegen —
-    the zero-Python twin of the Arrow ``extract_features`` stage, for
-    quality gates that must run inside the 10^10-row scan. Payloads are
+    zero Python, for quality gates that must run inside the 10^10-row
+    scan. Payloads are
     synthesized deterministically (64 bytes of chained md5) so DuckDB
     rebuilds identical blobs; every sum is integer-exact and the divisions
     are by the power-of-two byte count, so round(·,6) is engine-stable."""

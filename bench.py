@@ -34,7 +34,7 @@ BENCH_EPOCHS = int(os.environ.get("MAGA_BENCH_EPOCHS", "6"))
 BENCH_GLOBAL_K = int(os.environ.get("MAGA_BENCH_GLOBAL_K", "15000"))
 BENCH_RATE_BOOST = int(os.environ.get("MAGA_BENCH_RATE_BOOST", "8"))
 BENCH_SEEDS = int(os.environ.get("MAGA_BENCH_SEEDS", "256"))
-# seen-path A/B (tools/bench_bloom.py): "exact" | "cuckoo" — results bit-equal
+# seen-path A/B (tools/bench_seen.py): "exact" | "cuckoo" — results bit-equal
 BENCH_SEEN_MODE = os.environ.get("MAGA_BENCH_SEEN_MODE", "exact")
 # cuckoo mode: per-shard buckets (×4 slots). Default holds 16M keys / 32
 # shards at ~0.48 load; an undersized table raises rather than dropping keys

@@ -6,12 +6,8 @@ from maga_spark.functions.scalar import (  # noqa: F401
     canonical_hex,
     coalesce_implied_port,
     inet_ntoa,
-    splice_last_byte,
     token_of,
-    unhex_upper,
     url_canonicalize,
-    url_host,
     url_parts,
-    url_path,
     xor_dist,
 )

@@ -205,28 +205,6 @@ def _bstr(col: Column) -> Column:
     return F.concat(_blen(col), col)
 
 
-def encode_ping_response(t: Column, node_id: Column) -> Column:
-    """{'t': t, 'y': 'r', 'r': {'id': id}} (maga/crawler.py:126-131 /
-    announce reply :146-148) — keys sorted r<t<y by BEP-3."""
-    return F.concat(
-        F.lit(b"d1:rd2:id20:"), node_id, F.lit(b"e1:t"), _bstr(t), F.lit(b"1:y1:re")
-    )
-
-
-def encode_get_peers_response(t: Column, node_id: Column, token: Column) -> Column:
-    """{'t': t, 'y': 'r', 'r': {'id': id, 'nodes': '', 'token': token}}
-    (maga/crawler.py:133-141) — r-subdict keys sorted id<nodes<token."""
-    return F.concat(
-        F.lit(b"d1:rd2:id20:"),
-        node_id,
-        F.lit(b"5:nodes0:5:token"),
-        _bstr(token),
-        F.lit(b"e1:t"),
-        _bstr(t),
-        F.lit(b"1:y1:re"),
-    )
-
-
 def encode_find_node_query(t: Column, node_id: Column, target: Column) -> Column:
     """{'t': t, 'y': 'q', 'q': 'find_node', 'a': {'id': id, 'target': tgt}}
     (maga/crawler.py:203-210) — top keys sorted a<q<t<y."""
@@ -239,13 +217,3 @@ def encode_find_node_query(t: Column, node_id: Column, target: Column) -> Column
         _bstr(t),
         F.lit(b"1:y1:qe"),
     )
-
-
-def encode_error_response(t: Column, code: int = 202, msg: str = "Server Error") -> Column:
-    """{'t': t, 'y': 'e', 'e': [202, 'Server Error']} — the dead-letter
-    reply (maga/crawler.py:39-45, constants.py:41)."""
-    # length prefix counts BYTES, not Python chars — encode once and
-    # measure the encoded form so non-ASCII messages frame correctly
-    mb = msg.encode("utf-8")
-    e_lit = f"d1:eli{code}e{len(mb)}:".encode() + mb + b"e1:t"
-    return F.concat(F.lit(e_lit), _bstr(t), F.lit(b"1:y1:ee"))

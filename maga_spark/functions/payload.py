@@ -97,10 +97,10 @@ def validate_payloads(
 def byte_stats(
     bytes_col: Column, brightness_col: str = "brightness", contrast_col: str = "contrast"
 ) -> dict[str, Column]:
-    """Byte-level payload statistics as PURE expressions — the zero-Python
-    twin of ``multimodal.extract_features`` for pipelines that only need
-    scan-time quality gates (mean byte value ~ brightness, population
-    variance ~ contrast for the ``raw`` codec, where bytes ARE pixels).
+    """Byte-level payload statistics as PURE expressions — scan-time
+    quality gates with zero Python (mean byte value ~ brightness,
+    population variance ~ contrast for the ``raw`` codec, where bytes ARE
+    pixels).
 
     The blob is hex-encoded and parsed two chars at a time with
     ``transform`` + ``conv`` — whole-stage-codegen'd, no Arrow transfer,

@@ -41,23 +41,11 @@ def canonical_hex(col: Column | str) -> Column:
     return F.upper(F.hex(c))
 
 
-def unhex_upper(col: Column | str) -> Column:
-    """O-42: hex string → bytes (maga/downloader.py:44-46)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unhex(F.upper(c))
-
-
 def token_of(url_canon: Column | str) -> Column:
     """O-15: opaque 2-char token = prefix of the canonical key
     (maga/crawler.py:135)."""
     c = F.col(url_canon) if isinstance(url_canon, str) else url_canon
     return F.substring(c, 1, 2)
-
-
-def splice_last_byte(nid: Column, self_id: Column) -> Column:
-    """O-16: proximity spoof — replace the last byte of a 20-byte id with our
-    own last byte (maga/crawler.py:198-201). Works on BinaryType."""
-    return F.concat(F.substring(nid, 1, 19), F.substring(self_id, 20, 1))
 
 
 def coalesce_implied_port(implied_port: Column, src_port: Column, port: Column) -> Column:
@@ -153,16 +141,3 @@ def url_canonicalize(url: Column | str) -> Column:
     ``proper_infohash`` (maga/utils.py:7-11): idempotent, total (malformed →
     NULL). See url_parts for the rules and the single-pass design."""
     return url_parts(url)["url_canon"]
-
-
-def url_host(url_canon: Column | str) -> Column:
-    """Politeness key: host (with non-default port) of a canonical URL."""
-    u = F.col(url_canon) if isinstance(url_canon, str) else url_canon
-    return F.regexp_extract(u, r"^[a-z0-9+.\-]+://([^/?#]+)", 1)
-
-
-def url_path(url_canon: Column | str) -> Column:
-    """Path component of a canonical URL ('' when absent) — robots gate key
-    (prefix match, analog of the handshake gate maga/downloader.py:71-81)."""
-    u = F.col(url_canon) if isinstance(url_canon, str) else url_canon
-    return F.regexp_extract(u, r"^[a-z0-9+.\-]+://[^/?#]+([^?#]*)", 1)

@@ -93,44 +93,6 @@ def embedded_int_after(data: Column, key: str) -> Column:
     return F.when(idx > 0, val)
 
 
-def parse_piece_message(data: Column) -> Column:
-    """The reference's wire read loop for ONE framed extension message as a
-    single struct expression (maga/downloader.py:117-146):
-
-      !IB frame → payload = ext_id byte + bencoded envelope + raw piece
-      bytes; the envelope ends at the first ``b"ee"`` (`split_index =
-      extend_payload.index(b"ee") + 2`), then ``msg_type``/``piece`` are
-      embedded ints and everything after the envelope is the piece data.
-
-    Byte-exact aligned search without Python: the payload's hex form is
-    scanned with a lazy pair-aligned regex for ``6565`` (two 0x65 bytes) —
-    any two consecutive 0x65 BYTES are pair-aligned in hex, so this is
-    exactly ``bytes.index(b"ee")``. The envelope is ASCII by construction,
-    so its bencoded ints parse via ``embedded_int_after`` after a
-    hex-roundtrip to string; the raw piece bytes are never cast to string
-    (arbitrary binary stays binary).
-
-    Returns struct<msg_id, ext_id, msg_type, piece, piece_data>; fields are
-    NULL on truncated/envelope-less frames (totality)."""
-    f = frame_decode(data)
-    payload = f["payload"]
-    hexp = F.hex(payload)
-    env_hex = F.regexp_extract(hexp, "^((?:..)*?6565)", 1)  # through first aligned "ee"
-    has_env = F.length(env_hex) >= 4
-    env_len = (F.length(env_hex) / 2).cast("int")  # bytes, incl the "ee"
-    # envelope minus the leading ext_id byte, as ASCII string
-    env_str = F.unhex(env_hex.substr(F.lit(3), F.length(env_hex) - 2)).cast("string")
-    ext_id = _byte_at(payload, 1)
-    piece_data = payload.substr(env_len + 1, (f["length"] - 1 - env_len).cast("int"))
-    return F.struct(
-        f["msg_id"].alias("msg_id"),
-        F.when(f["msg_id"].isNotNull(), ext_id).alias("ext_id"),
-        F.when(has_env, embedded_int_after(env_str, "msg_type")).alias("msg_type"),
-        F.when(has_env, embedded_int_after(env_str, "piece")).alias("piece"),
-        F.when(has_env, piece_data).alias("piece_data"),
-    )
-
-
 def piece_count(metadata_size: Column, block: int = BLOCK) -> Column:
     """O-30: ``math.ceil(metadata_size / BLOCK)``
     (maga/downloader.py:133-134). NULL-propagating. Ceil-div in LONG

@@ -1,2 +1,2 @@
 """Custom operators: seen-set membership, skew-safe top-K, dedup families,
-similarity search, text analysis, as-of join, multimodal plumbing."""
+similarity search, text analysis, as-of join, image curation."""

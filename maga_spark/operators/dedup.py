@@ -1,6 +1,6 @@
 """Deduplication family for web-scale training-data pipelines.
 
-Five strategies over a ``documents(doc_id, text, ...)`` table, each chosen by
+Four strategies over a ``documents(doc_id, text, ...)`` table, each chosen by
 the scale/precision trade:
 
 * exact            — hash groupBy; bit-exact duplicates only.
@@ -11,8 +11,6 @@ the scale/precision trade:
 * simhash          — 64-bit charikar fingerprint as built-in expressions
                      (token explode + per-bit vote groupBy); hamming ≤ r
                      pairs via band-exact-match pre-join (pigeonhole).
-* n-gram Jaccard   — exact pairwise similarity via shingle explode +
-                     equi-join (for candidate sets small enough to verify).
 * embedding cosine — near-dup by cosine ≥ τ over an embedding column.
 
 Everything is deterministic; the portable hash (md5-prefix → int64) is used
@@ -256,65 +254,6 @@ def query_minhash_index(
         .filter(F.col("q.id") != F.col("x.id"))
         .select(F.col("q.id").alias("batch_id"), F.col("x.id").alias("index_id"))
         .distinct()
-    )
-
-
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    threshold: float = 0.5,
-    max_doc_freq: int | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle
-    (a_id < b_id, jaccard >= threshold). Shuffle key = shingle — pairs that
-    share nothing are never materialized.
-
-    ``max_doc_freq`` caps the self-join blowup: a shingle appearing in n
-    docs contributes n²/2 join rows, so one stop-shingle ("of the and")
-    present in 10⁶ docs would materialize ~10¹² pairs in a single group.
-    Shingles with document frequency > ``max_doc_freq`` are dropped from
-    the INTERSECTION join only (standard MinHash/SimHash-era practice:
-    such shingles carry ~no Jaccard signal). Set sizes keep every shingle,
-    so scores shift only for pairs whose sole shared shingles were hot —
-    pairs that were far below any useful threshold anyway.
-
-    The default is ``None`` — exact all-shingle semantics (the contract a
-    caller of "exact Jaccard" expects; ADVICE r3). OPT IN to the cap at
-    scale: any corpus large enough to contain a genuinely hot shingle must
-    pass e.g. ``max_doc_freq=1000`` (the engine/bench call sites do)."""
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), shingle_k)).alias("shingle"),
-    ).distinct()
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
-    joinable = sh
-    if max_doc_freq is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_doc_freq)
-            .select("shingle")
-        )
-        # hot set is tiny by construction (few shingles exceed the cap) —
-        # broadcast anti-join, no extra shuffle of the shingle stream
-        joinable = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    a, b = joinable.alias("a"), joinable.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-        .agg(F.count("*").alias("inter"))
-    )
-    na = sizes.select(F.col("id").alias("a_id"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("id").alias("b_id"), F.col("n").alias("nb"))
-    return (
-        inter.join(na, "a_id")
-        .join(nb, "b_id")
-        .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
     )
 
 
@@ -573,20 +512,6 @@ def embedding_near_dups_banded(
     )
 
 
-def phash_near_dups(images: DataFrame, max_hamming: int = 6, n_bands: int | None = None) -> DataFrame:
-    """Image near-dup by perceptual-hash hamming distance (input_hint phash
-    column): exact ``bit_count(a ^ b) <= r`` pairs via the pigeonhole band
-    equi-join (round-2 rewrite of the round-1 all-pairs crossJoin — the
-    banding is EXACT, not approximate: r < n_bands guarantees every
-    qualifying pair shares a block)."""
-    if n_bands is None:
-        n_bands = max_hamming + 1
-    keyed = images.select(F.col("image_id").alias("id"), F.col("phash").alias("k"))
-    return hamming_band_pairs(
-        keyed, max_hamming=max_hamming, n_bands=n_bands, total_bits=64, id_col="id", key_col="k"
-    )
-
-
 def containment_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -613,10 +538,9 @@ def containment_pairs(
     value → groupBy(u, v) count — the same never-all-pairs banding shape
     as minhash_lsh_candidates. ``max_doc_freq`` drops corpus-hot
     fingerprints (stop-boilerplate) from the self-join before it can
-    build n²/2 hot groups, like jaccard_pairs' cap; the cap is a
-    broadcast anti-join on the small hot-fingerprint list. Both
-    directions of every qualifying pair are emitted (containment is
-    directional). Pure expressions end-to-end."""
+    build n²/2 hot groups; the cap is a broadcast anti-join on the small
+    hot-fingerprint list. Both directions of every qualifying pair are
+    emitted (containment is directional). Pure expressions end-to-end."""
     from maga_spark.operators.text import winnow_fingerprint_portable
 
     fps = docs.select(
@@ -688,9 +612,9 @@ def build_fingerprint_index(
     and makes every later sharing join bucket-aligned: the self-join in
     ``containment_pairs_from_index`` runs with ZERO Exchange — both sides
     are the same catalog table, already co-partitioned and sorted on the
-    join key (plan-pinned in test_bucketstore). Same storage idiom as the
-    bucketed seen set (plans/bucketstore.py) and the minhash band index
-    (build_minhash_index): state tables carry their partitioning on disk.
+    join key (plan-pinned in test_operators). Same storage idiom as the
+    minhash band index (build_minhash_index): state tables carry their
+    partitioning on disk.
     ``mode='append'`` absorbs new documents per-bucket without rewriting
     history."""
     from maga_spark.operators.text import winnow_fingerprint_portable

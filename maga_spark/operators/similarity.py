@@ -3,12 +3,11 @@
 * ``brute_force_topk`` — exact cosine top-k: JVM-side ``zip_with`` +
   ``aggregate`` dot product, TakeOrderedAndProject for the limit. The
   correctness baseline at any scale that can afford a full scan.
-* ``lsh_bucket_topk`` — random-hyperplane (sign) LSH: deterministic
-  hyperplanes (PCG64 seeded), bucket = packed sign bits; candidates = rows
-  whose bucket hamming-matches the query bucket within ``probe_radius``
-  (multi-probe), exact cosine re-rank on the survivors. The 10^10-row path:
-  a scan becomes a bucket-pruned partition read when the table is written
-  partitioned/bucketed by ``bucket``.
+* ``lsh_bucket_topk_quantized`` — random-hyperplane (sign) LSH:
+  deterministic integer-valued hyperplanes (PCG64 seeded), bucket = packed
+  sign bits of exact integer dot products; candidates = rows whose bucket
+  hamming-matches the query bucket within ``probe_radius`` (multi-probe),
+  exact cosine re-rank on the survivors.
 """
 
 from __future__ import annotations
@@ -53,53 +52,6 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-def with_lsh_bucket(
-    emb: DataFrame, planes: np.ndarray, vec_col: str = "embedding", out_col: str = "bucket"
-) -> DataFrame:
-    """Append the packed sign-bit bucket id (int64, n_planes ≤ 63 bits) as a
-    pure column expression: bit i = (v · p_i) > 0."""
-    bits = [
-        F.when(_dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in p])) > 0, F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        for p in planes
-    ]
-    packed = bits[0]
-    for i, b in enumerate(bits[1:], start=1):
-        packed = packed.bitwiseOR(F.shiftleft(b, i))
-    return emb.withColumn(out_col, packed)
-
-
-def lsh_bucket_topk(
-    emb: DataFrame,
-    query: list[float],
-    k: int = 10,
-    n_planes: int = 12,
-    probe_radius: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate cosine top-k: prune to buckets within ``probe_radius``
-    sign-bit flips of the query's bucket, then exact re-rank. Recall is
-    tested (tests/test_operators.py) rather than assumed.
-
-    This form recomputes buckets per query over a full scan — fine for
-    one-off queries; for a served index use ``build_lsh_index`` +
-    ``lsh_index_topk`` (bucket-partitioned storage, partition-pruned
-    reads)."""
-    dim = len(query)
-    planes = hyperplanes(dim, n_planes, seed)
-    q = np.asarray(query, dtype=np.float64)
-    qbucket = int(sum(1 << i for i, p in enumerate(planes) if float(p @ q) > 0))
-
-    bucketed = with_lsh_bucket(emb, planes, vec_col)
-    pruned = bucketed.filter(
-        F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qbucket))) <= probe_radius
-    )
-    return brute_force_topk(pruned, query, k, id_col, vec_col)
-
-
 def quantized_planes(dim: int, n_planes: int, seed: int = 42, scale: int = 1000) -> np.ndarray:
     """Hyperplanes with INTEGER-VALUED coefficients (round(p·scale)) — the
     cross-engine-exact variant: a dot product of integer-valued doubles
@@ -128,11 +80,12 @@ def lsh_bucket_topk_quantized(
     vec_col: str = "embedding",
     quant: float = 1e6,
 ) -> DataFrame:
-    """``lsh_bucket_topk`` with integer-quantized projections: buckets come
-    from signs of EXACT integer dot products (see ``quantized_planes``), so
-    an independent engine (the DuckDB oracle) rebuilds identical buckets —
-    this is the oracle-checkable ANN path. Same plan shape as the float
-    variant: bucket prune (no shuffle), exact cosine re-rank on survivors.
+    """Approximate cosine top-k with integer-quantized projections: buckets
+    come from signs of EXACT integer dot products (see ``quantized_planes``),
+    so an independent engine (the DuckDB oracle) rebuilds identical buckets —
+    this is the oracle-checkable ANN path. Plan shape: bucket prune (no
+    shuffle), exact cosine re-rank on survivors. Recall is tested
+    (tests/test_operators.py) rather than assumed.
 
     Magnitude guard: |floor(x·1e6)| ≤ ~1e7 for unit-scale embeddings,
     |plane coef| ≤ ~4·10^3, dim ≤ ~10^3 → |dot| ≤ 4·10^13 < 2^53."""
@@ -236,7 +189,7 @@ def build_ivf_index(
     vec_col: str = "embedding",
 ) -> np.ndarray:
     """Write the embedding table PARTITIONED BY its inverted list — the
-    IVF serving path (twin of ``build_lsh_index``): a top-k query reads
+    IVF serving path: a top-k query reads
     only the ``nprobe`` probed list directories. Returns the centroids
     (persist them beside the index in production)."""
     cents = ivf_train(emb, n_lists, iters, seed, id_col, vec_col)
@@ -465,66 +418,6 @@ def pq_adc_topk(
         .orderBy(F.col("adc_score").desc(), F.col(id_col))
         .limit(k)
     )
-
-
-def probe_buckets(qbucket: int, n_planes: int, probe_radius: int) -> list[int]:
-    """All bucket ids within ``probe_radius`` bit flips of the query bucket
-    (multi-probe set): C(n,0)+C(n,1)+...+C(n,r) ids — e.g. 79 for n=12,
-    r=2. Enumerated on the driver so the read becomes an IN-list the source
-    can partition-prune on."""
-    from itertools import combinations
-
-    out = []
-    for r in range(probe_radius + 1):
-        for flips in combinations(range(n_planes), r):
-            b = qbucket
-            for f in flips:
-                b ^= 1 << f
-            out.append(b)
-    return sorted(set(out))
-
-
-def build_lsh_index(
-    emb: DataFrame,
-    path: str,
-    n_planes: int = 12,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> None:
-    """Write the embedding table PARTITIONED BY its LSH bucket — the
-    10^10-row serving path: a top-k query then reads only the ~C(n,≤r)
-    probed bucket directories instead of scanning the table
-    (``lsh_index_topk`` below; the plan's PartitionFilters prove it).
-    One-time build cost: a single shuffle-free pass + partitioned write."""
-    dim = int(emb.select(F.size(vec_col)).first()[0])
-    planes = hyperplanes(dim, n_planes, seed)
-    with_lsh_bucket(emb, planes, vec_col).write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(path)
-
-
-def lsh_index_topk(
-    spark,
-    path: str,
-    query: list[float],
-    k: int = 10,
-    n_planes: int = 12,
-    probe_radius: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate cosine top-k against a ``build_lsh_index`` table: the
-    probed buckets become a partition-pruning IN filter, so the scan touches
-    only those directories (same candidate set as ``lsh_bucket_topk`` with
-    identical planes/seed — identical results, fraction of the I/O)."""
-    dim = len(query)
-    planes = hyperplanes(dim, n_planes, seed)
-    q = np.asarray(query, dtype=np.float64)
-    qbucket = int(sum(1 << i for i, p in enumerate(planes) if float(p @ q) > 0))
-    probes = probe_buckets(qbucket, n_planes, probe_radius)
-    pruned = spark.read.parquet(path).filter(F.col("bucket").isin(probes))
-    return brute_force_topk(pruned, query, k, id_col, vec_col)
 
 
 def alignment_gate(

@@ -57,35 +57,6 @@ def bpe_ish_piece_count(text_col: Column) -> Column:
     return F.regexp_count(text_col, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / punctuation / stopword-ratio / mean-word-length features +
-    a composite [0,1] quality score (heuristics in the C4/Gopher-rule
-    family, expressed as pure column arithmetic)."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    n_tokens = token_count(t)
-    n_punct = F.regexp_count(t, F.lit(r"[^\w\s]"))
-    n_stop = F.size(
-        F.array_intersect(tokens_of(t), F.array(*[F.lit(w) for w in LANG_PROFILES["en"]]))
-    )
-    mean_wl = F.when(n_tokens > 0, (n_chars - (n_tokens - 1)) / n_tokens).otherwise(F.lit(0.0))
-    punct_ratio = F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(1.0))
-    stop_ratio = F.when(n_tokens > 0, n_stop / n_tokens).otherwise(F.lit(0.0))
-    score = (
-        F.least(n_tokens / F.lit(100.0), F.lit(1.0)) * 0.4
-        + (F.lit(1.0) - F.least(punct_ratio * 5, F.lit(1.0))) * 0.3
-        + F.least(stop_ratio * 5, F.lit(1.0)) * 0.2
-        + F.when((mean_wl >= 3) & (mean_wl <= 10), F.lit(1.0)).otherwise(F.lit(0.0)) * 0.1
-    )
-    return (
-        df.withColumn("n_tokens", n_tokens)
-        .withColumn("punct_ratio", punct_ratio)
-        .withColumn("stopword_ratio", stop_ratio)
-        .withColumn("mean_word_len", mean_wl)
-        .withColumn("quality", score)
-    )
-
-
 def winnow_fingerprint_portable(text_col: Column, k: int = 5, w: int = 4) -> Column:
     """Winnowing fingerprint as 100% built-in expressions with the portable
     md5-60-bit k-gram hash — value-for-value reproducible in DuckDB

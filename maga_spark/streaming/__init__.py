@@ -1,2 +1,3 @@
-"""Structured Streaming layer: the reference's stateful wire-session
-semantics (SURVEY.md §2.8) as streaming operators."""
+"""Structured Streaming layer: live datagram ingestion (``ingest``) and the
+sustained crawl loop that turns each micro-batch into one crawl epoch
+(``crawl_loop``)."""

@@ -162,83 +162,3 @@ def urls_from_announces(discoveries: DataFrame) -> DataFrame:
             F.col("infohash_hex"),
         ).alias("url")
     )
-
-
-def ingest_query(
-    spark: SparkSession,
-    landing_dir: str,
-    checkpoint_dir: str,
-    sink_format: str = "memory",
-    query_name: str = "krpc_ingest",
-    **sink_options,
-):
-    """End-to-end live loop: landing zone → decode → dispatch → sink.
-    Returns the started StreamingQuery; the caller owns its lifecycle
-    (``processAllAvailable``/``stop`` in tests, ``awaitTermination`` in a
-    service)."""
-    out = dispatch(decode_datagrams(datagram_stream(spark, landing_dir)))
-    writer = (
-        out.writeStream.outputMode("append")
-        .format(sink_format)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-    )
-    for k, v in sink_options.items():
-        writer = writer.option(k, v)
-    return writer.start()
-
-
-def dedup_urls_within_watermark(
-    urls: DataFrame, ts_col: str = "ts", delay: str = "10 seconds"
-) -> DataFrame:
-    """In-flight URL dedup for the live discovery stream, with BOUNDED
-    state: ``dropDuplicatesWithinWatermark`` keeps each URL key only until
-    the event-time watermark passes its timestamp + ``delay``, then evicts
-    it. The durable cross-epoch dedup is the sharded seen anti-join
-    (operators/seen.py) — an unbounded streaming dedup state would just be
-    a second, worse seen-set that grows forever on a 10^10-URL frontier.
-    This stage exists to collapse the REDUNDANT-burst case (the same URL
-    announced by many peers within seconds, maga/crawler.py:216-223's
-    repeated announce_peer storm) before those rows ever hit the absorb's
-    shuffle; a URL re-discovered after the horizon intentionally passes
-    again and is dropped by the exact seen anti-join instead."""
-    return urls.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(["url"])
-
-
-def urls_from_pages(
-    pages: DataFrame, url_col: str = "url", body_col: str = "body"
-) -> DataFrame:
-    """Fetched-page discovery for the STREAMING twin: hrefs resolved
-    against the page URL (operators/links.extract_links' expression core)
-    ∪ sitemap <loc> entries when the body IS a sitemap — one ``url``
-    column, the same absorb contract as ``discovery_urls``. All pure
-    expressions (regexp_extract_all + explode + RFC 3986 fold), so the
-    projection is legal on an unbounded stream — no distinct, no join, no
-    window; in-flight burst dedup is ``dedup_urls_within_watermark``'s job
-    and durable dedup is the seen anti-join, exactly as for the datagram
-    channels. Completes the streaming discovery fan-in: datagrams
-    (announce ∪ response-nodes) ∪ fetched pages (hrefs ∪ sitemaps)."""
-    from maga_spark.functions.scalar import url_canonicalize
-    from maga_spark.operators.links import HREF_RX, SITEMAP_LOC_RX, resolve_href, xml_unescape
-
-    base = url_canonicalize(F.col(url_col))
-    hrefs = (
-        pages.select(
-            base.alias("_base"),
-            F.explode(
-                F.regexp_extract_all(F.col(body_col), F.lit(HREF_RX), 1)
-            ).alias("_href"),
-        )
-        .select(resolve_href(F.col("_base"), F.col("_href")).alias("url"))
-        .filter(F.col("url").isNotNull())
-    )
-    locs = (
-        pages.select(
-            F.explode(
-                F.regexp_extract_all(F.col(body_col), F.lit(SITEMAP_LOC_RX), 1)
-            ).alias("_raw")
-        )
-        .filter(F.length("_raw") > 0)
-        .select(xml_unescape(F.col("_raw")).alias("url"))
-    )
-    return hrefs.unionByName(locs)

@@ -13,12 +13,8 @@ from maga_spark.functions import (
     canonical_hex,
     coalesce_implied_port,
     inet_ntoa,
-    splice_last_byte,
     token_of,
-    unhex_upper,
     url_canonicalize,
-    url_host,
-    url_path,
     xor_dist,
 )
 from maga_spark.functions.nodes import split_nodes_sql
@@ -84,36 +80,17 @@ def test_url_canonicalize_semantics(spark):
         assert again[u] == u
 
 
-def test_host_and_path(spark):
-    df = spark.createDataFrame(
-        [("http://h3.test:81/p/7?q=2",), ("http://h1.test",)], "url string"
-    )
-    got = df.select(url_host("url").alias("h"), url_path("url").alias("p")).collect()
-    assert (got[0]["h"], got[0]["p"]) == ("h3.test:81", "/p/7")
-    assert (got[1]["h"], got[1]["p"]) == ("h1.test", "")
-
-
 def test_hex_roundtrip(spark):
     ih = bytes(range(20))
     df = spark.createDataFrame([(ih,)], T.StructType([T.StructField("b", T.BinaryType())]))
     r = df.select(
-        canonical_hex("b").alias("hex"), unhex_upper(canonical_hex("b")).alias("back")
+        canonical_hex("b").alias("hex"), F.unhex(canonical_hex("b")).alias("back")
     ).collect()[0]
     assert r["hex"] == ih.hex().upper()
     assert bytes(r["back"]) == ih
     # token = first 2 chars of canonical key (maga/crawler.py:135)
     t = df.select(token_of(canonical_hex("b")).alias("t")).collect()[0]["t"]
     assert t == "00"
-
-
-def test_splice_last_byte(spark):
-    a, me = bytes(range(20)), bytes(range(100, 120))
-    df = spark.createDataFrame(
-        [(a, me)],
-        T.StructType([T.StructField("nid", T.BinaryType()), T.StructField("me", T.BinaryType())]),
-    )
-    out = bytes(df.select(splice_last_byte(F.col("nid"), F.col("me")).alias("x")).collect()[0]["x"])
-    assert out == a[:19] + me[19:20]
 
 
 def test_implied_port(spark):

@@ -1,5 +1,4 @@
-"""Training-data operators: dedup families, similarity, text, as-of,
-multimodal plumbing."""
+"""Training-data operators: dedup families, similarity, text, as-of."""
 
 from __future__ import annotations
 
@@ -7,24 +6,15 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from maga_spark import codec
 from maga_spark.operators.asof import asof_join
 from maga_spark.operators.dedup import (
     embedding_near_dups,
     exact_dedup,
-    jaccard_pairs,
     minhash_lsh_candidates,
-    phash_near_dups,
     simhash_near_dups,
 )
-from maga_spark.operators.multimodal import (
-    decode_images,
-    extract_features,
-    resize_images,
-    sample_frames,
-)
-from maga_spark.operators.similarity import brute_force_topk, lsh_bucket_topk
-from maga_spark.operators.text import language_id, quality_features, winnow_fingerprint_portable
+from maga_spark.operators.similarity import brute_force_topk, lsh_bucket_topk_quantized
+from maga_spark.operators.text import language_id, winnow_fingerprint_portable
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog and runs away fast"),
@@ -90,37 +80,6 @@ def test_minhash_index_incremental(spark, docs):
     cross_self = {(a, b) for (a, b) in self_pairs if (a <= 4) != (b <= 4)}
     via_index = {(r["batch_id"], r["index_id"]) for r in query_minhash_index(idx, batch).collect()}
     assert {(min(a, b), max(a, b)) for (a, b) in via_index} == cross_self
-
-
-def test_jaccard_pairs(spark, docs):
-    got = {(r["a_id"], r["b_id"]): r["jaccard"] for r in jaccard_pairs(docs, threshold=0.3).collect()}
-    assert got[(1, 2)] == 1.0
-    assert 0.3 <= got[(1, 3)] < 1.0
-    assert (1, 5) not in got
-
-
-def test_jaccard_hot_shingle_cap(spark):
-    """A stop-shingle shared by every doc must not enter the self-join
-    (n²/2 blowup at corpus scale). With the cap, the hot shingle is dropped
-    from the intersection but kept in set sizes; genuinely-similar pairs
-    still surface, hot-shingle-only pairs don't."""
-    common = "of the and"  # one 3-gram shared by all docs
-    rows = [(i, f"{common} unique{i} tail{i} word{i}") for i in range(1, 41)]
-    rows.append((41, rows[0][1]))  # exact dup of doc 1
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r["a_id"], r["b_id"]): r["jaccard"]
-        for r in jaccard_pairs(df, threshold=0.3, max_doc_freq=10).collect()
-    }
-    # survives via its unique shingles; score = 3 shared non-hot / 5 union
-    # (hot shingle stays in the denominators — documented cap semantics)
-    assert (1, 41) in got and abs(got[(1, 41)] - 0.6) < 1e-9
-    assert all(p == (1, 41) for p in got)  # hot-shingle-only pairs never materialize
-    # the uncapped run DOES materialize the 40*41/2 hot pairs (below threshold,
-    # but the intersection group existed) — the cap is what prevents the blowup
-    uncapped = jaccard_pairs(df, threshold=0.0, max_doc_freq=None).count()
-    capped = jaccard_pairs(df, threshold=0.0, max_doc_freq=10).count()
-    assert uncapped > capped == 1
 
 
 def test_simhash_near_dups(spark, docs):
@@ -247,7 +206,9 @@ def test_lsh_ann_recall(spark):
 
     q = [float(x) for x in (center + rng.standard_normal(16) * 0.05)]
     exact = [r["id"] for r in brute_force_topk(emb, q, k=10).collect()]
-    approx = [r["id"] for r in lsh_bucket_topk(emb, q, k=10, n_planes=10, probe_radius=3).collect()]
+    approx = [
+        r["id"] for r in lsh_bucket_topk_quantized(emb, q, k=10, n_planes=10, probe_radius=3).collect()
+    ]
     recall = len(set(exact) & set(approx)) / 10
     assert 42 in exact and all(i >= 200 or i == 42 for i in exact)  # cluster wins
     assert 42 in approx
@@ -259,15 +220,6 @@ def test_language_id(spark, docs):
     assert got[1] == "en" and got[4] == "de" and got[6] == "fr"
     empty = language_id(spark.createDataFrame([("xyzzy plugh",)], "text string")).collect()
     assert empty[0]["lang_pred"] == "und"
-
-
-def test_quality_features(spark, docs):
-    out = {r["doc_id"]: r for r in quality_features(docs).collect()}
-    assert out[1]["n_tokens"] == 13
-    assert 0.0 <= out[1]["quality"] <= 1.0
-    assert out[1]["stopword_ratio"] > out[5]["stopword_ratio"]
-    blank = quality_features(spark.createDataFrame([("",)], "text string")).collect()[0]
-    assert blank["n_tokens"] == 0 and blank["quality"] <= 0.5
 
 
 def test_winnow_fingerprint(spark, docs):
@@ -297,32 +249,6 @@ def test_asof_join(spark):
         for r in asof_join(left, right, "k", "ts", "rts", tolerance=3.0).collect()
     }
     assert tol["a"] == 100 and tol["b"] is None  # 20-15=5 > 3
-
-
-def test_multimodal_pipeline(spark):
-    rows = []
-    for i, fmt in enumerate(codec.FORMATS):
-        iid = f"mm{i}"
-        px = codec.gen_pixels(iid, 16, 16)
-        rows.append((iid, codec.encode(px, fmt), 16, 16, fmt))
-    rows.append(("mmx", b"\x01\x02", 16, 16, "jpeg"))  # external codec → stub
-    df = spark.createDataFrame(rows, "image_id string, bytes binary, w int, h int, fmt string")
-    dec = decode_images(df)
-    got = {r["image_id"]: r for r in dec.collect()}
-    for i in range(3):
-        assert got[f"mm{i}"]["decode_ok"]
-    assert not got["mmx"]["decode_ok"] and "not available" in got["mmx"]["decode_err"]
-
-    feats = {r["image_id"]: r for r in extract_features(dec).collect()}
-    assert len(feats) == 3 and all(0 <= f["brightness"] <= 255 for f in feats.values())
-
-    rz = {r["image_id"]: r for r in resize_images(dec, 8, 8).collect()}
-    assert len(bytes(rz["mm0"]["px"])) == 8 * 8 * 3
-
-    vids = spark.createDataFrame([("v1", 21.0)], "video_id string, duration_sec double")
-    fs = sample_frames(vids, n=20).collect()
-    assert len(fs) == 20
-    assert fs[0]["ts_sec"] == 1.0 and fs[-1]["ts_sec"] == 20.0
 
 
 def test_embedding_banded_recall_vs_bruteforce(spark):
@@ -356,112 +282,6 @@ def test_embedding_banded_recall_vs_bruteforce(spark):
     assert len(exact) > 0
     recall = len(got & exact) / len(exact)
     assert recall >= 0.95, f"recall {recall:.3f} over {len(exact)} true pairs"
-
-
-def test_image_near_dups_end_to_end(spark):
-    """decode → phash → banded hamming pairs finds a perturbed copy and not
-    unrelated images; no CartesianProduct in the plan; also runs pure-JVM
-    when the input already carries phash (the input_hint shape)."""
-    from maga_spark.operators.multimodal import image_near_dups
-
-    rows = []
-    for i in range(6):
-        iid = f"img{i}"
-        px = codec.gen_pixels(iid, 16, 16)
-        rows.append((iid, codec.encode(px, "raw"), 16, 16, "raw"))
-    # near-dup of img0: flip a couple of pixels slightly
-    px0 = codec.gen_pixels("img0", 16, 16).copy()
-    px0[0, 0, 0] ^= 1
-    rows.append(("img0b", codec.encode(px0, "raw"), 16, 16, "raw"))
-    df = spark.createDataFrame(rows, "image_id string, bytes binary, w int, h int, fmt string")
-    out = image_near_dups(df, max_hamming=6)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    pairs = {(r["a_id"], r["b_id"]): r["hamming"] for r in out.collect()}
-    assert ("img0", "img0b") in pairs and pairs[("img0", "img0b")] <= 2
-
-    # input_hint shape: phash column present → no Python in the plan
-    withhash = spark.createDataFrame(
-        [("a", 0b1010101), ("b", 0b1010100), ("c", -4242424242424242)],
-        "image_id string, phash long",
-    )
-    out2 = image_near_dups(withhash, max_hamming=3)
-    plan2 = out2._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan2
-    assert {(r["a_id"], r["b_id"]) for r in out2.collect()} == {("a", "b")}
-
-
-def test_external_codec_guard(spark):
-    """EXTERNAL_FORMATS route through PIL when importable, else the
-    documented sandbox stub — behavior keyed on HAS_PIL, checked both ways
-    so the test is meaningful in either environment."""
-    from maga_spark.operators import multimodal as mm
-
-    df = spark.createDataFrame(
-        [("i1", b"\xff\xd8not-a-real-jpeg", 4, 4, "jpeg")],
-        "image_id string, bytes binary, w int, h int, fmt string",
-    )
-    out = mm.decode_images(df).collect()[0]
-    assert not out["decode_ok"]
-    if mm.HAS_PIL:
-        assert "sandbox" not in out["decode_err"]  # real decode error, not the stub
-    else:
-        assert "not available in sandbox" in out["decode_err"]
-
-
-def test_external_codec_real_decode_with_pil(spark):
-    """Auto-skips without PIL (this sandbox); in a real deployment it
-    proves a genuine PNG round-trips through the guarded decode path."""
-    import pytest
-
-    pytest.importorskip("PIL")
-    import io
-
-    import numpy as np
-    from PIL import Image
-
-    from maga_spark.operators import multimodal as mm
-
-    px = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-    buf = io.BytesIO()
-    Image.fromarray(px).save(buf, format="PNG")
-    df = spark.createDataFrame(
-        [("p1", buf.getvalue(), 4, 4, "png")],
-        "image_id string, bytes binary, w int, h int, fmt string",
-    )
-    out = mm.decode_images(df).collect()[0]
-    assert out["decode_ok"], out["decode_err"]
-    got = np.frombuffer(out["px"], dtype=np.uint8).reshape(4, 4, 3)
-    assert (got == px).all()  # PNG is lossless — bit-exact pixels
-
-
-def test_lsh_index_partition_pruned(spark, tmp_path):
-    """build_lsh_index + lsh_index_topk: identical results to the full-scan
-    LSH path, and the read plan carries a bucket partition filter."""
-    from maga_spark.operators.similarity import (
-        build_lsh_index,
-        lsh_bucket_topk,
-        lsh_index_topk,
-        probe_buckets,
-    )
-
-    rng = np.random.Generator(np.random.PCG64(3))
-    base = rng.standard_normal((400, 16))
-    rows = [(i, [float(x) for x in base[i]]) for i in range(400)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    path = str(tmp_path / "lsh_idx")
-    build_lsh_index(emb, path, n_planes=10)
-
-    q = [float(x) for x in base[7]]
-    scan = [(r["id"], round(r["cosine"], 9)) for r in lsh_bucket_topk(emb, q, k=5, n_planes=10, probe_radius=2).collect()]
-    idx_df = lsh_index_topk(spark, path, q, k=5, n_planes=10, probe_radius=2)
-    idx = [(r["id"], round(r["cosine"], 9)) for r in idx_df.collect()]
-    assert idx == scan and idx[0][0] == 7
-
-    plan = idx_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "bucket" in plan
-    # the probe set is a strict subset of all 2^10 buckets
-    assert len(probe_buckets(0, 10, 2)) == 1 + 10 + 45
 
 
 def test_global_topk_uniform_exact_ranks(spark):
@@ -1086,3 +906,68 @@ def test_bigram_lm_score_hand_computed(spark):
     probe = spark.createDataFrame([(9, "q r")], "doc_id long, text string")
     pr = bigram_lm_score(probe, uni, bi, vocab).collect()[0]
     assert pr.logprob_micro == round(math.log(1 / 3) * 1e6)
+
+
+def test_fingerprint_index_matches_adhoc_and_is_exchange_free(spark, tmp_path):
+    """build_fingerprint_index + containment_pairs_from_index: identical
+    results to the ad-hoc containment_pairs, with the sharing self-join
+    consuming BOTH sides from the bucketed catalog table — zero Exchange
+    under the join (winnow hashes computed once at ingest, never again)."""
+    from maga_spark.operators.dedup import (
+        build_fingerprint_index,
+        containment_pairs,
+        containment_pairs_from_index,
+    )
+
+    small = "the quick brown fox jumps over the lazy dog near the river bank today"
+    docs = [(1, small), (2, "padding before. " + small + " padding after with more words"),
+            (3, "entirely different content with no shared phrasing at all here")]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    try:
+        build_fingerprint_index(df, "fp_idx_test", str(tmp_path / "fp_idx"), n_buckets=4)
+        out = containment_pairs_from_index(spark, "fp_idx_test", min_containment=0.3)
+        want = containment_pairs(df, min_containment=0.3)
+        got_rows = sorted(((r.u, r.v, r.shared, r.fp_u, round(r.containment, 9)) for r in out.collect()))
+        want_rows = sorted(((r.u, r.v, r.shared, r.fp_u, round(r.containment, 9)) for r in want.collect()))
+        assert got_rows == want_rows and got_rows  # same pairs, non-empty
+
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan
+        # the h-keyed self-join takes both sides straight from buckets: the
+        # only hash Exchanges left belong to the (u,v) and size aggregates
+        join_part = plan.split("SortMergeJoin")[-1]
+        assert "Exchange hashpartitioning(h" not in join_part
+        assert "Bucketed: true" in plan
+    finally:
+        spark.sql("DROP TABLE IF EXISTS fp_idx_test")
+
+
+
+def test_fingerprint_index_append_and_doc_freq_cap(spark, tmp_path):
+    from maga_spark.operators.dedup import (
+        build_fingerprint_index,
+        containment_pairs_from_index,
+    )
+
+    boiler = "standard legal boilerplate notice applies to this document entirely"
+    batch1 = spark.createDataFrame(
+        [(i, f"unique content number {i} about topic {i * 7} " * 3 + boiler) for i in range(10)],
+        "doc_id long, text string",
+    )
+    batch2 = spark.createDataFrame(
+        [(i, f"unique content number {i} about topic {i * 7} " * 3 + boiler) for i in range(10, 20)],
+        "doc_id long, text string",
+    )
+    try:
+        build_fingerprint_index(batch1, "fp_idx_app", str(tmp_path / "fp_app"), n_buckets=4)
+        base = containment_pairs_from_index(spark, "fp_idx_app", min_containment=0.2).count()
+        build_fingerprint_index(batch2, "fp_idx_app", str(tmp_path / "fp_app"), mode="append", n_buckets=4)
+        grown = containment_pairs_from_index(spark, "fp_idx_app", min_containment=0.2).count()
+        assert grown > base  # new docs share the boilerplate with everyone
+        capped = containment_pairs_from_index(
+            spark, "fp_idx_app", min_containment=0.2, max_doc_freq=10
+        ).count()
+        assert capped == 0  # nothing but the boilerplate is shared
+    finally:
+        spark.sql("DROP TABLE IF EXISTS fp_idx_app")
+

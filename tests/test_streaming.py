@@ -1,92 +1,14 @@
-"""Streaming session state machine (SURVEY.md §2.8) — strict-order kill,
-sha1-verified reassembly, session windows."""
+"""Streaming layer: session windows, live datagram ingestion, discovery →
+frontier absorb, and the sustained crawl loop."""
 
 from __future__ import annotations
 
-import hashlib
-
-import pyarrow as pa
-import pyarrow.parquet as pq
-import pytest
 from pyspark.sql import functions as F
-
-from maga_spark.streaming.sessions import (
-    piece_assembler,
-    read_piece_stream,
-    session_window_stats,
-)
-
-
-def _write_chunk(path: str, rows: list[tuple]):
-    tbl = pa.table(
-        {
-            "session_id": pa.array([r[0] for r in rows], pa.string()),
-            "piece": pa.array([r[1] for r in rows], pa.int32()),
-            "total": pa.array([r[2] for r in rows], pa.int32()),
-            "data": pa.array([r[3] for r in rows], pa.binary()),
-            "expected_sha1": pa.array([r[4] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(tbl, path)
-
-
-def test_piece_assembler_stream(spark, tmp_path):
-    indir = tmp_path / "pieces"
-    indir.mkdir()
-    # session A: 3 pieces, in order, valid sha1 → complete
-    a = [b"aaa-", b"bbb-", b"ccc"]
-    a_sha = hashlib.sha1(b"".join(a)).hexdigest()
-    # session B: out-of-order second piece → killed (maga/downloader.py:142-143)
-    b_sha = hashlib.sha1(b"xy").hexdigest()
-    # session C: complete but payload corrupted → sha1_mismatch
-    c = [b"111", b"222"]
-    c_sha = hashlib.sha1(b"111333").hexdigest()  # truth differs
-
-    _write_chunk(
-        str(indir / "chunk0.parquet"),
-        [
-            ("A", 0, 3, a[0], a_sha),
-            ("A", 1, 3, a[1], a_sha),
-            ("B", 0, 2, b"x", b_sha),
-            ("B", 1, 2, b"y", b_sha),  # will complete fine? no: see chunk1 for C
-            ("C", 0, 2, c[0], c_sha),
-        ],
-    )
-
-    stream = read_piece_stream(spark, str(indir))
-    out = piece_assembler(stream)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sessions_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # second chunk: A completes; C finishes corrupt; D arrives out of order
-        _write_chunk(
-            str(indir / "chunk1.parquet"),
-            [
-                ("A", 2, 3, a[2], a_sha),
-                ("C", 1, 2, c[1], c_sha),
-                ("D", 1, 3, b"zz", "00"),  # first piece must be 0 → killed
-            ],
-        )
-        q.processAllAvailable()
-        rows = {r["session_id"]: r for r in spark.sql("SELECT * FROM sessions_out").collect()}
-    finally:
-        q.stop()
-
-    assert rows["A"]["status"] == "complete" and rows["A"]["n_pieces"] == 3
-    assert rows["A"]["payload_len"] == len(b"".join(a))
-    assert rows["B"]["status"] == "complete"  # B was actually in order
-    assert rows["C"]["status"] == "sha1_mismatch"
-    assert rows["D"]["status"] == "killed" and rows["D"]["n_pieces"] == 0
 
 
 def test_session_window_stats_batch_equiv(spark):
     """Session windows over the driver events table (batch mode — the same
-    expression works under readStream; see test above for streaming state)."""
+    expression works under readStream)."""
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     out = (
         ev.groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
@@ -96,87 +18,6 @@ def test_session_window_stats_batch_equiv(spark):
     rows = out.collect()
     assert len(rows) > 0
     assert sum(r["n_events"] for r in rows) == ev.count()
-
-
-def test_session_window_streaming(spark, tmp_path):
-    src = str(tmp_path / "ev")
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet").coalesce(1).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    agg = session_window_stats(stream)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sw_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        n = spark.sql("SELECT sum(n_events) AS s FROM sw_out").collect()[0]["s"]
-    finally:
-        q.stop()
-    assert n == 1000
-
-
-def test_framed_wire_stream_end_to_end(spark, tmp_path):
-    """O-4/O-45 closed loop: raw !IB-framed wire bytes --(pure-expression
-    parse)--> assembler input --(applyInPandasWithState)--> session status.
-    Non-extension frames and REJECT messages are dropped like the
-    reference's read loop."""
-    import struct as pystruct
-
-    from maga_spark.functions.bencode import bencode
-    from maga_spark.streaming.sessions import pieces_from_frames
-
-    def frame(ext_id, msg_type, piece, data, msg_id=20):
-        env = bencode({b"msg_type": msg_type, b"piece": piece})
-        msg = bytes([msg_id, ext_id]) + env + data
-        return pystruct.pack(">I", len(msg)) + msg
-
-    pieces = [b"the-first-piece|", b"second#\x00\xff|", b"done"]
-    sha = hashlib.sha1(b"".join(pieces)).hexdigest()
-    rows = [
-        ("S", frame(3, 1, 0, pieces[0]), 3, sha),
-        ("S", frame(3, 7, 9, b"keepalive", msg_id=8), 3, sha),  # non-ext: dropped
-        ("S", frame(3, 2, 1, b"rejected"), 3, sha),  # REJECT msg_type: dropped
-        ("S", frame(3, 1, 1, pieces[1]), 3, sha),
-        ("S", frame(3, 1, 2, pieces[2]), 3, sha),
-    ]
-    indir = tmp_path / "frames"
-    indir.mkdir()
-    tbl = pa.table(
-        {
-            "session_id": pa.array([r[0] for r in rows], pa.string()),
-            "frame": pa.array([r[1] for r in rows], pa.binary()),
-            "total": pa.array([r[2] for r in rows], pa.int32()),
-            "expected_sha1": pa.array([r[3] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(tbl, str(indir / "chunk0.parquet"))
-
-    stream = (
-        spark.readStream.schema(
-            "session_id string, frame binary, total int, expected_sha1 string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(indir))
-    )
-    out = piece_assembler(pieces_from_frames(stream))
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("wire_sessions_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            r["session_id"]: (r["status"], r["n_pieces"], r["payload_len"])
-            for r in spark.sql("SELECT * FROM wire_sessions_out").collect()
-        }
-    finally:
-        q.stop()
-    assert got == {"S": ("complete", 3, len(b"".join(pieces)))}
 
 
 def test_live_datagram_ingest(spark, tmp_path):
@@ -195,7 +36,6 @@ def test_live_datagram_ingest(spark, tmp_path):
         datagram_stream,
         decode_datagrams,
         dispatch,
-        ingest_query,
     )
 
     land, ck = str(tmp_path / "land"), str(tmp_path / "ck")
@@ -221,7 +61,14 @@ def test_live_datagram_ingest(spark, tmp_path):
         "append"
     ).parquet(land)
 
-    q = ingest_query(spark, land, ck, query_name="ingest_live_t")
+    q = (
+        dispatch(decode_datagrams(datagram_stream(spark, land)))
+        .writeStream.outputMode("append")
+        .format("memory")
+        .option("checkpointLocation", ck)
+        .queryName("ingest_live_t")
+        .start()
+    )
     try:
         q.processAllAvailable()
         chans = [r["channel"] for r in spark.sql("SELECT channel FROM ingest_live_t").collect()]
@@ -389,163 +236,6 @@ def test_nodes_from_responses_to_frontier(spark, tmp_path):
     res = eng.run(epochs=1, collect_ordering=True)
     scheduled = {u for (_e, _r, u) in res.ordering}
     assert any("/node/" in u for u in scheduled) and any("/ih/" in u for u in scheduled)
-
-
-def test_session_ttl_eviction(spark, tmp_path):
-    """VERDICT r3 #8: kill-on-TTL — a stalled session must be evicted by the
-    ProcessingTimeTimeout bound (the reference's 5 s session cap,
-    maga/downloader.py:161) and emit a ``timeout`` row; a LATE piece
-    arriving after eviction finds no state and dies the strict-order death
-    (piece 1 against a fresh session expecting 0)."""
-    import time
-
-    indir = tmp_path / "ttl_pieces"
-    indir.mkdir()
-    # stalled session S: first of 2 pieces, then silence
-    _write_chunk(str(indir / "c0.parquet"), [("S", 0, 2, b"half", "00")])
-
-    stream = read_piece_stream(spark, str(indir))
-    out = piece_assembler(stream, session_ttl_ms=800)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ttl_out")
-        .trigger(processingTime="300 milliseconds")
-        .start()
-    )
-
-    def wait_rows(pred, deadline_s=60):
-        t0 = time.time()
-        while time.time() - t0 < deadline_s:
-            rows = spark.sql("SELECT * FROM ttl_out").collect()
-            if pred(rows):
-                return rows
-            time.sleep(0.3)
-        raise AssertionError(
-            f"condition not met in {deadline_s}s; rows={spark.sql('SELECT * FROM ttl_out').collect()}"
-        )
-
-    try:
-        wait_rows(lambda rs: True, 30)  # first batch absorbed
-        time.sleep(1.5)  # let the 800 ms TTL lapse with the session stalled
-        # unrelated data keeps batches flowing; the stalled session times out
-        _write_chunk(str(indir / "c1.parquet"), [("U", 0, 1, b"u", hashlib.sha1(b"u").hexdigest())])
-        rows = wait_rows(lambda rs: any(r["session_id"] == "S" for r in rs))
-        s = [r for r in rows if r["session_id"] == "S"]
-        assert s[0]["status"] == "timeout" and s[0]["n_pieces"] == 0
-        # the late piece: state is gone, so piece 1 meets a fresh session
-        _write_chunk(str(indir / "c2.parquet"), [("S", 1, 2, b"late", "00")])
-        rows = wait_rows(
-            lambda rs: any(r["session_id"] == "S" and r["status"] != "timeout" for r in rs)
-        )
-        late = [r for r in rows if r["session_id"] == "S" and r["status"] != "timeout"]
-        assert late[0]["status"] == "killed" and late[0]["n_pieces"] == 0
-    finally:
-        q.stop()
-
-
-def test_watermark_bounded_stream_dedup(spark, tmp_path):
-    """Burst dedup with BOUNDED state (streaming/ingest.
-    dedup_urls_within_watermark): duplicates inside the watermark horizon
-    collapse to one row; once the watermark passes a key's timestamp +
-    delay its state is EVICTED, so a later re-discovery re-emits — proving
-    state is bounded by the horizon, not by total URLs seen (the durable
-    dedup stays the seen anti-join)."""
-    import time
-
-    import pyarrow as _pa
-    import pyarrow.parquet as _pq
-
-    from maga_spark.streaming.ingest import dedup_urls_within_watermark
-
-    indir = tmp_path / "url_stream"
-    indir.mkdir()
-
-    def write(path, rows):
-        _pq.write_table(
-            _pa.table(
-                {
-                    "url": _pa.array([r[0] for r in rows], _pa.string()),
-                    "ts": _pa.array([r[1] for r in rows], _pa.timestamp("us")),
-                }
-            ),
-            str(path),
-        )
-
-    def t(sec):
-        return sec * 1_000_000  # epoch-us
-
-    write(indir / "b0.parquet", [("http://a/", t(100)), ("http://a/", t(101)), ("http://b/", t(100))])
-    stream = spark.readStream.schema("url string, ts timestamp").parquet(str(indir))
-    q = (
-        dedup_urls_within_watermark(stream, delay="10 seconds")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("wm_dedup")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = lambda: sorted(r["url"] for r in spark.sql("SELECT url FROM wm_dedup").collect())  # noqa: E731
-        assert got() == ["http://a/", "http://b/"]  # in-batch burst collapsed
-        # within horizon (wm = 101-10 = 91; a@105 expires only at wm>111): dup
-        write(indir / "b1.parquet", [("http://a/", t(105)), ("http://c/", t(200))])
-        q.processAllAvailable()
-        assert got() == ["http://a/", "http://b/", "http://c/"]
-        # c@200 pushed wm to 190 > 111 → a's state evicted → re-discovery re-emits
-        write(indir / "b2.parquet", [("http://a/", t(210))])
-        q.processAllAvailable()
-        time.sleep(0.1)
-        assert got() == ["http://a/", "http://a/", "http://b/", "http://c/"]
-    finally:
-        q.stop()
-
-
-def test_urls_from_pages_streaming(spark, tmp_path):
-    """Fetched-page discovery under a RUNNING StreamingQuery
-    (streaming/ingest.urls_from_pages): an HTML body's hrefs resolve
-    against the page URL and a sitemap body's <loc>s unescape — both
-    landing in the one-url-column absorb contract. Pure expressions only,
-    so the same projection is legal on the unbounded stream."""
-    import pyarrow as _pa
-    import pyarrow.parquet as _pq
-
-    from maga_spark.streaming.ingest import urls_from_pages
-
-    indir = tmp_path / "pages"
-    indir.mkdir()
-    html = (
-        '<a href="/b">b</a> <a href="https://other.example/x">x</a>'
-        ' <a href="mailto:no@example.com">skip</a>'
-    )
-    sm = "<urlset><url><loc>https://c.example/p?a=1&amp;b=2</loc></url></urlset>"
-    _pq.write_table(
-        _pa.table(
-            {
-                "url": _pa.array(["https://a.example/dir/page", "https://a.example/sitemap.xml"]),
-                "body": _pa.array([html, sm]),
-            }
-        ),
-        str(indir / "b0.parquet"),
-    )
-    stream = spark.readStream.schema("url string, body string").parquet(str(indir))
-    q = (
-        urls_from_pages(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("page_urls")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = sorted(r.url for r in spark.sql("SELECT url FROM page_urls").collect())
-        assert got == [
-            "https://a.example/b",            # root-relative resolved vs base
-            "https://c.example/p?a=1&b=2",    # sitemap loc, entity-decoded
-            "https://other.example/x",        # absolute href passes through
-        ]
-    finally:
-        q.stop()
 
 
 def test_sustained_streaming_crawl_loop(spark, tmp_path):

@@ -4,9 +4,9 @@ prefilter (VERDICT r3 item 2).
 Same fixture/protocol as tools/bench_scaling.py but at local[32], one
 warm-up epoch untimed, 3 measured epochs, the seen modes interleaved
 REPEATS times; best run per mode scored. Appends a JSON line per run to
-stdout and a summary table to BENCH.md (## seen-path section).
+stdout and a summary table to BENCH.md (a "## Seen-path backends" section).
 
-Usage: python tools/bench_bloom.py [--quick] [--modes exact,cuckoo]
+Usage: python tools/bench_seen.py [--quick] [--modes exact,cuckoo]
 """
 
 from __future__ import annotations
@@ -62,7 +62,7 @@ def main() -> None:
     if "--modes" in sys.argv:
         i = sys.argv.index("--modes")
         if i + 1 >= len(sys.argv):
-            raise SystemExit("usage: bench_bloom.py [--quick] [--modes exact,cuckoo]")
+            raise SystemExit("usage: bench_seen.py [--quick] [--modes exact,cuckoo]")
         modes = sys.argv[i + 1].split(",")
     zpath = make_pyfiles_zip()
     env = dict(os.environ)
