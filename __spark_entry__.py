@@ -735,19 +735,10 @@ def q_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (portable md5 hash) — first 4 minhash values per
     doc, reproducible in SQL: per seed, min over word-3-gram shingles."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") <= 100)
-    from maga_spark.operators.dedup import minhash_signature, word_shingles
+    from maga_spark.operators.dedup import minhash_signatures
 
-    sig = docs.select(
-        "doc_id", word_shingles(F.col("text"), 3).alias("sh")
-    ).filter(F.size("sh") > 0).select(
-        "doc_id", minhash_signature(F.col("sh"), 4, portable=True).alias("sig")
-    )
-    return sig.select(
-        "doc_id",
-        F.col("sig")[0].alias("mh0"),
-        F.col("sig")[1].alias("mh1"),
-        F.col("sig")[2].alias("mh2"),
-        F.col("sig")[3].alias("mh3"),
+    return minhash_signatures(docs, num_hashes=4).select(
+        F.col("id").alias("doc_id"), "mh0", "mh1", "mh2", "mh3"
     ).orderBy("doc_id")
 
 
@@ -1761,7 +1752,7 @@ def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") <= 300)
     return simhash_near_dups(
-        docs, max_hamming=7, n_bands=8, portable=True, cache_signatures=True
+        docs, max_hamming=7, n_bands=8, cache_signatures=True
     ).orderBy("a_id", "b_id")
 
 

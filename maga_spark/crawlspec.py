@@ -50,10 +50,6 @@ class CrawlConfig:
     nshards: int = 8  # seen-set shards: shard = pmod(url_hash, nshards)
     default_rate: int = 2  # hosts missing from the politeness table
     default_burst: int = 4
-    salt_buckets: int = 8  # skew salting factor for the per-host rank at scale
-    # cuckoo mode: probe-stage sub-split factor (operators/seen.py
-    # salted_shard_cogroup) — probe parallelism = nshards·salt
-    probe_salt: int = 4
     # cuckoo mode: fixed per-shard bucket count (power of two; capacity =
     # nbuckets × 4 slots). Fixed because bucket indices depend on the
     # size, so incremental inserts (operators/cuckoo.py
@@ -62,7 +58,6 @@ class CrawlConfig:
     # 2^17 keys/shard at 0.5 load. Results are exact at any (sufficient)
     # value; an overflow raises rather than dropping a key.
     cuckoo_nbuckets: int = 1 << 16
-    cuckoo_fp_bits: int = 16
 
 
 def epoch_target(epoch: int) -> int:

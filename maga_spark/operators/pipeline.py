@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from maga_spark.operators.dedup import hamming_band_pairs, word_shingles
+from maga_spark.operators.dedup import hamming_band_pairs, minhash_lsh_candidates
 from maga_spark.operators.text import language_id, token_count
 
 
@@ -37,7 +37,6 @@ def curate_corpus(
     num_hashes: int = 8,
     n_bands: int = 4,
     shingle_k: int = 3,
-    portable: bool = True,
     temps: list | None = None,
 ) -> DataFrame:
     """Curated subset of ``docs``: language-filtered, quality-gated,
@@ -47,18 +46,15 @@ def curate_corpus(
 
     Returns the surviving rows with all original columns plus
     ``lang_pred``. Docs with no shingles (fewer than ``shingle_k`` words)
-    skip the near-dup stage — they cannot collide.
+    skip the near-dup stage — they cannot collide. The minhash values are
+    the md5-prefix ones a SQL oracle reproduces bit-for-bit.
 
-    ``portable=True`` uses the md5-prefix hash so a SQL oracle reproduces
-    the minhash values bit-for-bit; ``False`` uses xxhash64 (faster, JVM).
-
-    The deduped intermediate and the band table are PERSISTED: both feed
-    multiple plan branches (the band self-join's two sides plus the final
-    anti-join's probe side), and without a cache barrier the whole
-    language→quality→dedup chain recomputes per branch. Pass ``temps`` to
-    receive the cached frames for unpersist after the consuming action
-    (the anti_join_cuckoo contract); when ``None`` they stay cached until
-    Spark evicts them — fine for one-shot queries.
+    The deduped intermediate is PERSISTED: it feeds the band self-join's
+    two sides plus the final anti-join's probe side, and without a cache
+    barrier the whole language→quality→dedup chain recomputes per branch.
+    Pass ``temps`` to receive the cached frame for unpersist after the
+    consuming action (the anti_join_cuckoo contract); when ``None`` it
+    stays cached until Spark evicts it — fine for one-shot queries.
 
     Measured at sf0.1 (5 000 docs, local[32]): first evaluation ~13 s,
     subsequent ~1.9 s — the cold delta is janino/JIT compilation of the
@@ -66,9 +62,6 @@ def curate_corpus(
     per-session cost that is data-size-independent and disappears at any
     real corpus scale.
     """
-    if num_hashes % n_bands:
-        raise ValueError(f"num_hashes={num_hashes} not divisible by n_bands={n_bands}")
-    rows_per_band = num_hashes // n_bands
     t = F.col(text_col)
 
     # stage 1+2: language + quality — fused by Catalyst into one projection
@@ -90,61 +83,17 @@ def curate_corpus(
     if temps is not None:
         temps.append(d)
 
-    # stage 4: minhash banding over the survivors — band-bucket equi-join
-    # on (band, h1..hr), never an all-pairs product. The signature is the
-    # EXPLODE → groupBy-min form, not the array-transform form
-    # (dedup.minhash_signature): referencing an array-minhash column from a
-    # later projection lets CollapseProject inline the whole
-    # shingle+md5 tree once per hash — 8× the generated code, seconds of
-    # janino compile and no runtime CSE (measured 16.6 s vs 2 s at sf0.1).
-    # Row-wise min aggregation keeps every expression tree tiny, does
-    # map-side partial mins, and shuffles only (cid, 8 longs) — the shape
-    # that also holds at 10^9 docs. Values are IDENTICAL (same per-shingle
-    # hash, same min).
-    if portable:
-        from maga_spark.operators.dedup import portable_hash64
-
-        h = lambda i: portable_hash64(F.col("_s"), salt=f"mh{i}:")  # noqa: E731
-    else:
-        h = lambda i: F.xxhash64(F.lit(f"mh{i}:"), F.col("_s"))  # noqa: E731
-    shrows = d.select(
-        F.col(id_col).alias("_cid"), F.explode(word_shingles(t, shingle_k)).alias("_s")
-    )
-    sig = shrows.groupBy("_cid").agg(
-        *[F.min(h(i)).alias(f"_mh{i}") for i in range(num_hashes)]
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                *[
-                    F.col(f"_mh{b * rows_per_band + r}").alias(f"h{r}")
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(n_bands)
-        ]
-    )
-    bands = sig.select("_cid", F.explode(band_structs).alias("b")).select(
-        "_cid", "b.*"
-    )
-    # the self-join reads bands TWICE; cached it is a few ints per doc
-    bands = bands.persist()
-    if temps is not None:
-        temps.append(bands)
-    hcols = ["band"] + [f"h{r}" for r in range(rows_per_band)]
-    a, b = bands.alias("a"), bands.alias("b")
-    dropped = (
-        a.join(b, on=hcols)
-        .filter(F.col("a._cid") < F.col("b._cid"))
-        .select(F.col("b._cid").alias(id_col))
-        .distinct()
-    )
-    # dropped ids number ≤ the near-dup count — usually tiny next to the
+    # stage 4: minhash-LSH over the survivors — the banded equi-join of
+    # dedup.minhash_lsh_candidates, never an all-pairs product; the larger
+    # id of every colliding pair is dropped.
+    # The drop set is ≤ the near-dup count — usually tiny next to the
     # corpus, but UNBOUNDED on duplication-heavy crawls (30-50% near-dup is
     # normal for web text), so no forced broadcast hint: AQE auto-broadcasts
     # small drop sets from runtime sizes and shuffles when they aren't
     # (the same adaptive rule as the engine's host-keyed joins)
+    dropped = minhash_lsh_candidates(
+        d, id_col, text_col, num_hashes, n_bands, shingle_k
+    ).select(F.col("b_id").alias(id_col))
     return d.join(dropped, id_col, "left_anti")
 
 

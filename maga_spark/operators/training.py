@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from maga_spark.functions.scalar import let_
 from maga_spark.operators.dedup import portable_hash64
 
 
@@ -103,17 +104,22 @@ def sequence_pack(
 def word_ngrams(text_col: Column, n: int) -> Column:
     """All word ``n``-grams of a text as an array of space-joined strings
     (empty array when the text has fewer than ``n`` tokens). Pure
-    expressions; the token split is the same ``\\s+`` split the token
-    budget and line operators use."""
-    toks = F.split(F.trim(text_col), r"\s+")
-    k = F.size(toks)
-    return F.when(
-        (F.length(F.trim(text_col)) > 0) & (k >= n),
-        F.transform(
-            F.sequence(F.lit(1), k - n + 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    expressions; the token split is the same case-preserving ``\\s+``
+    split the token budget and line operators use, ``let_``-bound so the
+    per-gram slice doesn't re-split the whole text (the ``text`` twin's
+    rule)."""
+
+    def build(toks: Column) -> Column:
+        k = F.size(toks)
+        return F.when(
+            (F.length(F.trim(text_col)) > 0) & (k >= n),
+            F.transform(
+                F.sequence(F.lit(1), k - n + 1),
+                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    return let_(F.split(F.trim(text_col), r"\s+"), build)
 
 
 def decontaminate(

@@ -169,7 +169,6 @@ class CrawlEngine:
                 nshards=cfg.nshards,
                 temps=self._epoch_temps,
                 filters=self.cuckoo,
-                probe_salt=cfg.probe_salt,
             )
         else:
             anti = anti_join_exact
@@ -211,7 +210,6 @@ class CrawlEngine:
                 self.cuckoo,
                 new_hashes,
                 nbuckets=cfg.cuckoo_nbuckets,
-                fp_bits=cfg.cuckoo_fp_bits,
             )
         self.frontier = self.frontier.unionByName(
             enq.select("url_hash", "url_canon", "host", "path")
@@ -280,7 +278,6 @@ class CrawlEngine:
             k=F.col("avail"),
             salt_key="url_hash",
             rank_name="host_rank",
-            salt_buckets=cfg.salt_buckets,
         )
         # eligible count rides the same wave (n_granted = min(n_eligible, K)
         # analytically — the rank filter is exact)

@@ -113,9 +113,7 @@ def resume(spark: SparkSession, root: str, fixtures_dir: str, cfg, seen_mode: st
         # geometry must match the config the engine will keep inserting with
         from maga_spark.operators.cuckoo import build_shard_cuckoo
 
-        eng.cuckoo = build_shard_cuckoo(
-            eng.seen, nbuckets=cfg.cuckoo_nbuckets, fp_bits=cfg.cuckoo_fp_bits
-        )
+        eng.cuckoo = build_shard_cuckoo(eng.seen, nbuckets=cfg.cuckoo_nbuckets)
     eng._start_epoch = epoch + 1
     return eng
 

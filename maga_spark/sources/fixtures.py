@@ -64,23 +64,9 @@ def raw_variant(i: int, k: int, nh: int) -> str:
     return f"http://h{j}.test:80/p/{i}"
 
 
-def generate(
-    out_dir: str,
-    n_urls: int = 1000,
-    n_seeds: int = 16,
-    n_images: int | None = None,
-    rate_boost: int = 1,
-    sizes: tuple[int, int, int] = (16, 24, 32),
-) -> dict:
-    """Generate all fixture tables into ``out_dir``; returns summary dict.
-
-    ``rate_boost`` scales every politeness budget — bench fixtures use >1 so
-    epochs carry enough grants to amortize the per-epoch round-trip."""
-    os.makedirs(out_dir, exist_ok=True)
-    nh = n_hosts(n_urls)
-    n_images = n_images or min(n_urls, 512)
-
-    # --- images + truth (payload layer per input_hint) ---
+def _write_images(out_dir: str, n_images: int, sizes: tuple[int, int, int]) -> None:
+    """images + images_truth (the payload layer per input_hint); both
+    generators write these same bytes."""
     img_rows = {k: [] for k in ("image_id", "bytes", "w", "h", "fmt", "caption", "phash")}
     truth_rows = {"image_id": [], "px_npy": []}
     for m in range(n_images):
@@ -121,6 +107,25 @@ def generate(
         ),
         f"{out_dir}/images_truth.parquet",
     )
+
+
+def generate(
+    out_dir: str,
+    n_urls: int = 1000,
+    n_seeds: int = 16,
+    n_images: int | None = None,
+    rate_boost: int = 1,
+    sizes: tuple[int, int, int] = (16, 24, 32),
+) -> dict:
+    """Generate all fixture tables into ``out_dir``; returns summary dict.
+
+    ``rate_boost`` scales every politeness budget — bench fixtures use >1 so
+    epochs carry enough grants to amortize the per-epoch round-trip."""
+    os.makedirs(out_dir, exist_ok=True)
+    nh = n_hosts(n_urls)
+    n_images = n_images or min(n_urls, 512)
+
+    _write_images(out_dir, n_images, sizes)
 
     # --- links: the closed web graph (fan-out 0..8, hash-derived) ---
     url_canon, out_links, image_ids = [], [], []
@@ -217,51 +222,7 @@ def generate_spark(
     nh = n_hosts(n_urls)
 
     # images + truth reuse the (small) python path — payload count is fixed
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from maga_spark import codec
-
-    img_rows = {k: [] for k in ("image_id", "bytes", "w", "h", "fmt", "caption", "phash")}
-    truth_rows = {"image_id": [], "px_npy": []}
-    for m in range(n_images):
-        iid = f"im{m:06d}"
-        w = sizes[_h(f"w:{iid}") % 3]
-        h = sizes[_h(f"h:{iid}") % 3]
-        fmt = codec.FORMATS[_h(f"fmt:{iid}") % 3]
-        px = codec.gen_pixels(iid, w, h)
-        img_rows["image_id"].append(iid)
-        img_rows["bytes"].append(codec.encode(px, fmt))
-        img_rows["w"].append(w)
-        img_rows["h"].append(h)
-        img_rows["fmt"].append(fmt)
-        img_rows["caption"].append(f"img {iid} {w}x{h} {fmt}")
-        img_rows["phash"].append(codec.phash64(px))
-        truth_rows["image_id"].append(iid)
-        truth_rows["px_npy"].append(px.tobytes())
-    pq.write_table(
-        pa.table(
-            {
-                "image_id": pa.array(img_rows["image_id"], pa.string()),
-                "bytes": pa.array(img_rows["bytes"], pa.binary()),
-                "w": pa.array(img_rows["w"], pa.int32()),
-                "h": pa.array(img_rows["h"], pa.int32()),
-                "fmt": pa.array(img_rows["fmt"], pa.string()),
-                "caption": pa.array(img_rows["caption"], pa.string()),
-                "phash": pa.array(img_rows["phash"], pa.int64()),
-            }
-        ),
-        f"{out_dir}/images.parquet",
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "image_id": pa.array(truth_rows["image_id"], pa.string()),
-                "px_npy": pa.array(truth_rows["px_npy"], pa.binary()),
-            }
-        ),
-        f"{out_dir}/images_truth.parquet",
-    )
+    _write_images(out_dir, n_images, sizes)
 
     def hx(*cols):
         return F.xxhash64(F.concat(*cols))

@@ -45,6 +45,29 @@ def test_minhash_lsh_finds_near_dup(spark, docs):
     assert (1, 5) not in pairs and (4, 5) not in pairs  # unrelated don't
 
 
+def test_minhash_signatures_match_python_reference(spark, docs):
+    """The one MinHash signature == a plain-python recomputation: per seed
+    i, the min over the doc's distinct lower-case word 3-gram shingles of
+    the 60-bit md5 prefix of "mh{i}:" + shingle."""
+    import hashlib
+
+    from maga_spark.operators.dedup import minhash_signatures
+
+    def py_sig(t, n=16, k=3):
+        w = t.lower().split()
+        sh = {" ".join(w[j : j + k]) for j in range(len(w) - k + 1)}
+        return tuple(
+            min(int(hashlib.md5(f"mh{i}:{s}".encode()).hexdigest()[:15], 16) for s in sh)
+            for i in range(n)
+        )
+
+    got = {
+        r["id"]: tuple(r[f"mh{i}"] for i in range(16))
+        for r in minhash_signatures(docs, num_hashes=16).collect()
+    }
+    assert got == {i: py_sig(t) for i, t in DOCS}
+
+
 def test_minhash_index_incremental(spark, docs):
     """Incremental near-dup index: append == from-scratch (row-identical,
     the cuckoo/IVF incremental-state contract), batch-vs-index query finds
@@ -84,8 +107,8 @@ def test_minhash_index_incremental(spark, docs):
 
 def test_simhash_near_dups(spark, docs):
     """Short docs need a wider radius: one word swapped in 13 tokens flips
-    ~7 of 64 bits (measured); unrelated docs sit at ~30. radius 7 < 8 bands
-    satisfies the pigeonhole precondition."""
+    3 of 60 bits here (plain-Python md5); unrelated docs sit at ~25.
+    radius 7 < 8 bands satisfies the pigeonhole precondition."""
     got = {
         (r["a_id"], r["b_id"]): r["hamming"]
         for r in simhash_near_dups(docs, max_hamming=7, n_bands=8).collect()
@@ -96,19 +119,19 @@ def test_simhash_near_dups(spark, docs):
 
 
 def test_simhash_matches_python_reference(spark):
-    """JVM bit-vote simhash == independent plain-python recomputation
-    (same fingerprints the retired round-1 Arrow UDF produced)."""
+    """JVM bit-vote simhash == independent plain-python recomputation over
+    60-bit md5-prefix token hashes."""
+    import hashlib
+
     from maga_spark.operators.dedup import simhash_signatures
-    from maga_spark.xxh64 import xxh64
 
     def py_simhash(t):
-        v = [0] * 64
+        v = [0] * 60
         for w in t.lower().split():
-            h = xxh64(w.encode())
-            for b in range(64):
+            h = int(hashlib.md5(w.encode()).hexdigest()[:15], 16)
+            for b in range(60):
                 v[b] += 1 if (h >> b) & 1 else -1
-        s = sum(1 << b for b in range(64) if v[b] > 0)
-        return s - (1 << 64) if s >= (1 << 63) else s
+        return sum(1 << b for b in range(60) if v[b] > 0)
 
     df = spark.createDataFrame(list(DOCS), "doc_id long, text string")
     got = {
@@ -136,7 +159,7 @@ def test_simhash_portable_empty_doc(spark):
     df = spark.createDataFrame(
         [(1, "hello hello world"), (2, ""), (3, "   ")], "doc_id long, text string"
     )
-    got = {r["id"]: r["sim"] for r in simhash_signatures(df, portable=True).collect()}
+    got = {r["id"]: r["sim"] for r in simhash_signatures(df).collect()}
     assert got[2] == 0 and got[3] == 0
     assert 0 < got[1] < (1 << 60)
 

@@ -78,10 +78,12 @@ def test_parallelism_independence(fixtures_dir, golden, tmp_path):
     import json
     import subprocess
     import sys
+    from pathlib import Path
 
+    repo = str(Path(__file__).resolve().parent.parent)
     script = f"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {repo!r})
 from maga_spark.session import get_spark
 from maga_spark.crawlspec import CrawlConfig
 from maga_spark.plans.frontier import CrawlEngine

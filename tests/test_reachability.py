@@ -37,10 +37,6 @@ EXEMPT = {
         "the pure-Python reference test_xxh64_matches_spark checks Spark's "
         "xxhash64 over longs against"
     ),
-    ("maga_spark/operators/dedup.py", "minhash_lsh_candidates"): (
-        "the self-join test_minhash_index_incremental checks the incremental "
-        "band index against"
-    ),
     ("maga_spark/operators/resolver.py", "socket_resolve"): (
         "the only real resolver resolve_hosts can be given; the default "
         "fake_resolve keeps queries and tests offline"

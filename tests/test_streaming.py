@@ -7,17 +7,24 @@ from pyspark.sql import functions as F
 
 
 def test_session_window_stats_batch_equiv(spark):
-    """Session windows over the driver events table (batch mode — the same
-    expression works under readStream)."""
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    out = (
-        ev.groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
-        .agg(F.count("*").alias("n_events"))
-        .select("user_id", "n_events")
+    """The registered ``sessionize`` builder (lag + gap > 30 min running sum
+    per user) cuts the same sessions as Spark's ``session_window`` over the
+    driver events table: the same multiset of (user_id, n_events). The
+    table has no gap of exactly 1800 s, where the two rules would differ."""
+    from collections import Counter
+
+    from __spark_entry__ import queries
+
+    sf = "/root/testdata/sf0.001"
+    ev = spark.read.parquet(f"{sf}/events.parquet")
+    ref = ev.groupBy(F.session_window("ts", "30 minutes"), F.col("user_id")).agg(
+        F.count("*").alias("n_events")
     )
-    rows = out.collect()
-    assert len(rows) > 0
-    assert sum(r["n_events"] for r in rows) == ev.count()
+    want = Counter((r["user_id"], r["n_events"]) for r in ref.collect())
+    sess = queries()["sessionize"](spark, sf)
+    got = Counter((r["user_id"], r["n_events"]) for r in sess.collect())
+    assert got == want
+    assert sum(want.values()) == 946
 
 
 def test_live_datagram_ingest(spark, tmp_path):

@@ -58,9 +58,7 @@ def time_expire(spark, fixture: str, mode: str, seen, batch) -> float:
     eng = CrawlEngine(spark, fixture, cfg, seen_mode=mode)
     eng.seen = seen
     if mode == "cuckoo":
-        eng.cuckoo = build_shard_cuckoo(
-            seen, nbuckets=cfg.cuckoo_nbuckets, fp_bits=cfg.cuckoo_fp_bits
-        ).localCheckpoint(True)
+        eng.cuckoo = build_shard_cuckoo(seen, nbuckets=cfg.cuckoo_nbuckets).localCheckpoint(True)
     t0 = time.perf_counter()
     n = eng.expire_urls(batch)
     # expire_urls leaves the new seen table lazy — materialize it (and the

@@ -25,8 +25,9 @@ from __future__ import annotations
 import math
 import sys
 from decimal import Decimal
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb  # noqa: E402
 
