@@ -343,8 +343,8 @@ def delete_from_shard_cuckoo(filters: DataFrame, del_hashes: DataFrame) -> DataF
 def anti_join_cuckoo(
     candidates: DataFrame,
     seen: DataFrame,
+    nshards: int,
     key: str = "url_hash",
-    nshards: int | None = None,
     temps: list | None = None,
     filters: DataFrame | None = None,
     probe_salt: int = 4,
@@ -362,14 +362,9 @@ def anti_join_cuckoo(
     results are identical for any salt).
 
     ``nshards`` MUST be the modulus used to shard ``seen``: a wrong modulus
-    buckets candidates against the wrong filter row. When omitted it is
-    inferred as ``max(shard) + 1`` with one driver job — an ad-hoc
-    convenience that is only right when the top shard is populated; any
-    filter row whose shard id falls outside [0, nshards) fails the probe
-    task (modulus-mismatch guard)."""
-    if nshards is None:
-        mx = seen.agg(F.max("shard").alias("m")).first()["m"]
-        nshards = (int(mx) if mx is not None else 0) + 1
+    buckets candidates against the wrong filter row. Any filter row whose
+    shard id falls outside [0, nshards) fails the probe task
+    (modulus-mismatch guard)."""
     if filters is None:
         filters = build_shard_cuckoo(seen)
     ns = int(nshards)

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from maga_spark.plans.ckpt import local_ckpt
+from maga_spark.plans.ckpt import local_ckpt, release
 
 
 def _sym(e: DataFrame) -> DataFrame:
@@ -95,7 +95,9 @@ def connected_components(
         # super-linear (use reliable checkpointing on a real cluster).
         # local_ckpt, not raw localCheckpoint: the raw form carries origin
         # size stats that compound across rounds (plans/ckpt.py)
-        e = local_ckpt(small)
+        nxt = local_ckpt(small)
+        release(e)
+        e = nxt
         # order-independent digest; bit_xor never overflows under ANSI
         # (the edge set is distinct, so xor cancellation can't collide)
         chk = e.agg(
@@ -163,6 +165,7 @@ def pagerank(
         return verts.withColumn("rank_scaled", F.lit(0).cast("long"))
     outdeg = e.groupBy(F.col("u").alias("vertex")).agg(F.count("*").alias("deg"))
     vd = local_ckpt(verts.join(outdeg, "vertex", "left"))
+    release(verts)
     ranks = vd.withColumn("r", F.lit(scale // n).cast("long"))
     base = ((damping_den - damping_num) * (scale // n)) // damping_den
     for _ in range(iters):
@@ -176,7 +179,7 @@ def pagerank(
         dang = ranks.filter(F.col("deg").isNull()).agg(
             F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("_dang")
         )
-        ranks = local_ckpt(
+        nxt = local_ckpt(
             vd.join(contribs, "vertex", "left")
             .join(F.broadcast(dang))
             .select(
@@ -191,6 +194,9 @@ def pagerank(
                 ).cast("long").alias("r"),
             )
         )
+        release(ranks)
+        ranks = nxt
+    release(vd)
     return ranks.select("vertex", F.col("r").alias("rank_scaled"))
 
 

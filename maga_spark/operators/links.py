@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from maga_spark.plans.ckpt import local_ckpt
+from maga_spark.plans.ckpt import local_ckpt, release
 
 from maga_spark.functions.scalar import url_canonicalize
 
@@ -161,14 +161,18 @@ def resolve_redirects(
         g = f.select(
             F.col("s").alias("_s2"), F.col("t").alias("_t2"), F.col("hops").alias("_h2")
         )
-        f = local_ckpt(
+        nxt = local_ckpt(
             f.join(g, f["t"] == g["_s2"], "left").select(
                 "s",
                 F.coalesce(F.col("_t2"), F.col("t")).alias("t"),
                 (F.col("hops") + F.coalesce(F.col("_h2"), F.lit(0))).alias("hops"),
             )
         )
-    dom = hop1.select(F.col("s").alias("t")).withColumn("_redirects", F.lit(True))
+        release(f)
+        f = nxt
+    release(hop1)
+    # f keeps hop1's rows (left join): its src column IS the redirecting set
+    dom = f.select(F.col("s").alias("t")).withColumn("_redirects", F.lit(True))
     unresolved = F.coalesce(F.col("_redirects"), F.lit(False)) | (
         F.col("hops") > max_hops
     )

@@ -28,6 +28,11 @@ hence reachable through py4j) over the checkpoint's own ``LogicalRDD.rdd``;
 if any of that internal surface moves in a future Spark, the helper falls
 back to the plain checkpoint — correctness never depends on the rewrap,
 only long-loop planning cost does (tests/test_ckpt.py pins the behavior).
+
+``release`` frees a superseded generation: a checkpoint's blocks are an RDD
+persisted behind its ``LogicalRDD``, which ``DataFrame.unpersist()`` (a cache
+manager call) skips, so every loop that supersedes one (the crawl engine, the
+iterative graph and redirect operators) frees it through this module.
 """
 
 from __future__ import annotations
@@ -35,22 +40,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def _ckpt_rdd(df: DataFrame):
+    """The persisted RDD behind a local checkpoint (its analyzed plan is a
+    ``LogicalRDD`` whose payload IS the checkpoint), or None for any other
+    frame."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            return plan.rdd()
+    except Exception:
+        pass
+    return None
+
+
 def local_ckpt(df: DataFrame) -> DataFrame:
     """Eager ``localCheckpoint`` WITHOUT origin-stats carry-over.
 
     Returns a DataFrame over the same persisted checkpoint blocks (so
-    callers tracking the internal RDD for deterministic unpersist — see
-    ``frontier._ckpt_rdd`` — observe the identical RDD id), whose logical
+    ``release`` frees them through the identical RDD), whose logical
     stats are reset to the constant per-leaf default."""
     ck = df.localCheckpoint(eager=True)
+    rdd = _ckpt_rdd(ck)
+    if rdd is None:
+        return ck
     try:
         spark = df.sparkSession
-        plan = ck._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return ck
-        fresh = spark._jsparkSession.internalCreateDataFrame(
-            plan.rdd(), plan.schema(), False
-        )
+        fresh = spark._jsparkSession.internalCreateDataFrame(rdd, ck._jdf.schema(), False)
         return DataFrame(fresh, spark)
     except Exception:
         return ck
+
+
+def release(*dfs: DataFrame | None) -> None:
+    """Free each frame's blocks once nothing reads it again (a checkpoint
+    cannot recompute): a local checkpoint's RDD directly, any other frame
+    through ``unpersist()``; ``None`` is skipped. A checkpoint is NOT also
+    ``unpersist()``ed: with ``cascade=false``, ``CacheManager.uncacheQuery``
+    re-plans every cached frame whose plan contains it (an epoch's temps)."""
+    for df in dfs:
+        if df is None:
+            continue
+        rdd = _ckpt_rdd(df)
+        if rdd is not None:
+            rdd.unpersist(False)
+        else:
+            df.unpersist()

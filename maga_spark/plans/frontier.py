@@ -47,25 +47,9 @@ from maga_spark.operators.cuckoo import (
 )
 from maga_spark.operators.seen import anti_join_exact
 from maga_spark.operators.observe import RobustObservation, obs_name
-from maga_spark.plans.ckpt import local_ckpt
+from maga_spark.plans.ckpt import local_ckpt, release
 from maga_spark.session import spread_partitions
 from maga_spark.operators.topk import global_topk_uniform_ranked, per_group_topk
-
-
-def _ckpt_rdd(df: DataFrame):
-    """The persisted internal RDD behind a localCheckpointed DataFrame
-    (its analyzed plan is a LogicalRDD whose payload IS the checkpoint),
-    or None for anything else. Needed because ``DataFrame.unpersist()``
-    only talks to the cache manager and silently skips checkpoint RDDs —
-    the engine must release superseded generations itself (see
-    ``_commit_state``)."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            return plan.rdd()
-    except Exception:
-        pass
-    return None
 
 
 @dataclass
@@ -133,9 +117,9 @@ class CrawlEngine:
         self.cuckoo = empty([], CUCKOO_SCHEMA)
         self._pending: DataFrame | None = None  # discovery batch for the next absorb
         self._epoch_temps: list[DataFrame] = []  # persisted intra-epoch temporaries
-        # internal RDDs behind the CURRENT generation of state checkpoints —
-        # unpersisted when the next _commit_state supersedes them (see there)
-        self._state_ckpt_rdds: list = []
+        # the CURRENT generation of state checkpoints, released when the
+        # next _commit_state supersedes them (see there)
+        self._state_ckpts: list[DataFrame] = []
         self._start_epoch = 0
 
     # ---------- epoch stages ----------
@@ -392,7 +376,6 @@ class CrawlEngine:
         # last epoch's state back in (frontier enters twice), the carried
         # BigInt compounds geometrically across epochs — a long loop OOMs
         # the driver just COMPUTING stats (plans/ckpt.py has the numbers)
-        old_rdds = self._state_ckpt_rdds
         # Bound every state table's partition count at the checkpoint
         # boundary (guide §2.2: fewer, larger partitions). Without this the
         # per-epoch `ckpt(state) union delta` accretes +delta partitions
@@ -419,41 +402,14 @@ class CrawlEngine:
             self.host_state = f_hosts.result()
             if f_cuckoo is not None:
                 self.cuckoo = f_cuckoo.result()
-        # Deterministic unpersist of the SUPERSEDED epoch-(e-1) state
-        # checkpoints: without this a long-running loop (streaming_crawl's
-        # foreachBatch epochs) leaks one persisted RDD per state table per
-        # epoch until the JVM ContextCleaner happens to GC the reference —
-        # unbounded block-manager growth on exactly the deployment that
-        # never restarts. DataFrame.unpersist() is a NO-OP for
-        # localCheckpoints (the RDD is persisted directly, not through the
-        # cache manager), so the engine tracks each checkpoint's internal
-        # RDD (the LogicalRDD payload) and drops the previous generation
-        # here. Safe because the NEW checkpoints above are eager (every
-        # localCheckpoint(True) materialized before .result() returned), so
-        # nothing can need the old blocks again.
-        self._state_ckpt_rdds = [
-            r
-            for r in (
-                _ckpt_rdd(df)
-                for df in (
-                    self._pending,
-                    self.seen,
-                    self.frontier,
-                    self.host_state,
-                    self.cuckoo if self.seen_mode == "cuckoo" else None,
-                )
-                if df is not None
-            )
-            if r is not None
-        ]
-        # never release an RDD that is STILL a live checkpoint: a state
-        # table that skipped re-checkpointing this epoch appears in both
-        # generations, and unpersisting it would tear blocks out from under
-        # a lineage-truncated frame (localCheckpoints cannot recompute)
-        live = {r.id() for r in self._state_ckpt_rdds}
-        for rdd in old_rdds:
-            if rdd.id() not in live:
-                rdd.unpersist(False)
+        # Release the SUPERSEDED epoch-(e-1) state checkpoints, or a long
+        # loop (streaming_crawl's epochs) holds one persisted RDD per state
+        # table per epoch until the ContextCleaner happens to GC it. Safe:
+        # the new checkpoints above are eager, and every recorded table was
+        # re-checkpointed (exact mode's cuckoo is an RDD-less empty relation).
+        release(*self._state_ckpts)
+        cuckoo = self.cuckoo if self.seen_mode == "cuckoo" else None
+        self._state_ckpts = [self._pending, self.seen, self.frontier, self.host_state, cuckoo]
 
     # ---------- the loop ----------
 
@@ -541,8 +497,7 @@ class CrawlEngine:
                 from maga_spark.plans.snapstore import commit_epoch
 
                 commit_epoch(self, e, metrics=epoch_metrics, ordering=ordering_df)
-            for t in self._epoch_temps:  # state is checkpointed; temps can go
-                t.unpersist()
+            release(*self._epoch_temps)  # state is checkpointed; temps can go
             self._epoch_temps.clear()
         res.seen_count = self.seen.count()
         self._start_epoch += n_epochs
@@ -592,13 +547,13 @@ class CrawlEngine:
         )
         n = keyed.count()
         self.seen = self.seen.join(keyed.select("url_hash"), "url_hash", "left_anti")
-        ckpts = [keyed]
+        # both checkpoints join the current state generation: they feed only
+        # the seen/cuckoo lineage, so the next _commit_state (which
+        # re-checkpoints those tables) releases them with it
+        self._state_ckpts.append(keyed)
         if self.seen_mode == "cuckoo":
             self.cuckoo = local_ckpt(delete_from_shard_cuckoo(self.cuckoo, keyed))
-            ckpts.append(self.cuckoo)
-        # both checkpoints feed only the seen/cuckoo lineage, so the next
-        # _commit_state (which re-checkpoints those tables) releases them
-        self._state_ckpt_rdds += [r for r in map(_ckpt_rdd, ckpts) if r is not None]
+            self._state_ckpts.append(self.cuckoo)
         return n
 
     def seen_per_shard(self) -> list:

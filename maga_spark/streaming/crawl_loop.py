@@ -22,7 +22,7 @@ checkpointed tables + optional snapstore snapshots for resume).
 Scale shape: the landing zone is the only unbounded input; micro-batch
 size is bounded by ``maxFilesPerTrigger`` (backpressure), engine state is
 localCheckpoint-truncated per epoch, and superseded checkpoints are
-unpersisted deterministically (frontier._commit_state) — block-manager
+released deterministically (frontier._commit_state) — block-manager
 footprint is O(state size), flat in the number of epochs. Verified by
 test_streaming's 10-micro-batch loop: persistent-RDD count stays flat
 and the final seen digests equal the batch engine's on the same

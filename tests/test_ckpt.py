@@ -13,8 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from maga_spark.plans.ckpt import local_ckpt
-from maga_spark.plans.frontier import _ckpt_rdd
+from maga_spark.plans.ckpt import _ckpt_rdd, local_ckpt, release
 
 
 def _size_digits(df) -> int:
@@ -66,3 +65,21 @@ def test_local_ckpt_empty_frame(spark):
     ck = local_ckpt(df)
     assert ck.count() == 0
     assert ck.schema == df.schema
+
+
+def test_release_frees_checkpoints_and_caches(spark):
+    """A checkpoint's RDD leaves the persistent set (``unpersist()`` alone
+    would not free it), a counted persist loses its cache entry, and a
+    plain frame or None is a no-op."""
+    jsc = spark.sparkContext._jsc
+    ck = local_ckpt(spark.range(20).withColumn("k", F.col("id") % 3))
+    rdd_id = _ckpt_rdd(ck).id()
+    assert jsc.getPersistentRDDs().containsKey(rdd_id)
+
+    cached = spark.range(30).withColumn("k", F.col("id") * 7).persist()
+    cached.count()
+    assert cached.storageLevel.useMemory
+
+    release(ck, cached, spark.range(5), None)
+    assert not jsc.getPersistentRDDs().containsKey(rdd_id)
+    assert not cached.storageLevel.useMemory  # the cache manager entry is gone

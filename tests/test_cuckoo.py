@@ -62,7 +62,7 @@ def test_anti_join_cuckoo_equals_exact(spark, keysets):
 
 @pytest.mark.parametrize("case", ["empty", "sparse_top_shard"])
 def test_anti_join_cuckoo_edge_seen_sets(spark, case):
-    """An empty seen set (nshards inferred) keeps every candidate. A sparse
+    """An empty seen set keeps every candidate. A sparse
     one whose top shards are unpopulated (ADVICE round-1 regression) must
     be probed with the seen table's real modulus: hashes 8, 9, 10 sit in
     shards 0-2 of 8, and inferring max(shard)+1 = 3 would probe hash 10 in
@@ -70,7 +70,7 @@ def test_anti_join_cuckoo_edge_seen_sets(spark, case):
     cand = spark.createDataFrame([(8,), (9,), (10,), (999,)], "url_hash long")
     if case == "empty":
         seen = spark.createDataFrame([], "shard int, url_hash long")
-        got = anti_join_cuckoo(cand, seen)
+        got = anti_join_cuckoo(cand, seen, nshards=8)
         assert {r["url_hash"] for r in got.collect()} == {8, 9, 10, 999}
     else:
         seen = spark.createDataFrame([(0, 8), (1, 9), (2, 10)], "shard int, url_hash long")

@@ -121,3 +121,20 @@ def test_spread_barrier_keeps_filters_above_spread(spark):
         scan = lines[i + 2]
         assert scan.startswith("FileScan parquet") and "documents.parquet" in scan, scan
         assert "DataFilters: []" in scan, scan
+
+
+@pytest.mark.parametrize(
+    "name", ["dup_clusters", "image_keep_best", "pagerank", "rank_blend", "redirect_resolve"]
+)
+def test_iterative_builders_release_superseded_generations(spark, name):
+    """The iterative builders checkpoint once per round; each superseded
+    generation must be released inside the loop (plans/ckpt.release), so
+    build plus ``.count()`` leaves at most the one block the returned plan
+    reads. New ids are counted, not the registry's size: the ContextCleaner
+    may free older blocks mid-run."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    df = entrymod.queries()[name](spark, SF)
+    df.count()
+    new = set(jsc.getPersistentRDDs().keySet()) - before
+    assert len(new) <= 1, (name, sorted(new))

@@ -23,11 +23,15 @@ Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 from decimal import Decimal
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
+# the UDF queries' Python workers inherit PYTHONPATH, not the driver's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
 
 import duckdb  # noqa: E402
 
@@ -90,7 +94,7 @@ def check_duck_types(name, rel):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(app_name="oracle_check", master="local[8]", shuffle_partitions=16)
+    spark = get_spark(app_name="oracle_check", shuffle_partitions=16)  # local[$SPARK_GRAFT_CPUS]
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
