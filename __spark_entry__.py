@@ -205,11 +205,15 @@ ORDER BY c_custkey
 def q_anti_join_cuckoo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O-23 ★ cuckoo backend (operators/cuckoo.py — BASELINE.json's
     "cuckoo/bloom URL-seen"): customers with no URGENT order, routed
-    through the REAL executor-side cuckoo prefilter (build → shard-cogroup
-    probe → exact residual anti-join). The operator's contract is equality
-    with the plain anti-join for any filter contents — exactly what the
-    DuckDB NOT EXISTS oracle checks."""
-    from maga_spark.operators.cuckoo import anti_join_cuckoo
+    through the REAL executor-side cuckoo prefilter (build with
+    ``update_shard_cuckoo(None, …)`` → shard-cogroup probe → exact residual
+    anti-join). The operator's contract is equality with the plain
+    anti-join for any filter contents that hold the seen keys — exactly
+    what the DuckDB NOT EXISTS oracle checks. ``nbuckets=1 << 13``: a 64 KB
+    table per shard (the probe replicates it per salt slice; the default
+    is 512 KB) with 32k slots, against 1651 keys in sf0.1's largest shard
+    and about ten times that at sf1.0."""
+    from maga_spark.operators.cuckoo import anti_join_cuckoo, update_shard_cuckoo
 
     customer = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
@@ -221,7 +225,7 @@ def q_anti_join_cuckoo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cands = customer.select(F.col("c_custkey").alias("url_hash"), "c_name")
     return (
-        anti_join_cuckoo(cands, seen, nshards=8)
+        anti_join_cuckoo(cands, seen, update_shard_cuckoo(None, seen, nbuckets=1 << 13), 8)
         .select(F.col("url_hash").alias("c_custkey"), "c_name")
         .orderBy("c_custkey")
     )
@@ -762,15 +766,15 @@ ORDER BY doc_id
 
 
 def q_minhash_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental near-dup index (operators/dedup.py
-    build/append/query_minhash_index): corpus = doc_id % 3 != 0 indexed
+    """Incremental near-dup index (operators/dedup.py minhash_band_rows,
+    append/query_minhash_index): corpus = doc_id % 3 != 0 indexed
     once, then the remaining docs arrive as a NEW ingest batch and are
     deduped AGAINST THE INDEX — O(batch ⋈ index) per batch, never a
     corpus×corpus re-join. Appending half the corpus incrementally first
     proves append == from-scratch inside the checked plan."""
     from maga_spark.operators.dedup import (
         append_to_minhash_index,
-        build_minhash_index,
+        minhash_band_rows,
         query_minhash_index,
     )
 
@@ -779,7 +783,7 @@ def q_minhash_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_b = docs.filter((F.col("doc_id") % 3 == 2))
     batch = docs.filter(F.col("doc_id") % 3 == 0)
     idx = append_to_minhash_index(
-        build_minhash_index(corpus_a, num_hashes=8, bands=4),
+        minhash_band_rows(corpus_a, num_hashes=8, bands=4),
         corpus_b,
         num_hashes=8,
         bands=4,
@@ -1751,9 +1755,7 @@ def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from maga_spark.operators.dedup import simhash_near_dups
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") <= 300)
-    return simhash_near_dups(
-        docs, max_hamming=7, n_bands=8, cache_signatures=True
-    ).orderBy("a_id", "b_id")
+    return simhash_near_dups(docs, max_hamming=7, n_bands=8).orderBy("a_id", "b_id")
 
 
 SQL_SIMHASH_NEAR_DUPS = """

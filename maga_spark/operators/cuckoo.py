@@ -2,7 +2,9 @@
 membership prefilter (BASELINE.json: "a partitioned cuckoo/bloom URL-seen
 set").
 
-One filter row per ``shard = pmod(url_hash, nshards)``, probed
+One filter row ``(shard, table)`` per ``shard = pmod(url_hash, nshards)``,
+built and grown by ``update_shard_cuckoo`` (``filters=None`` builds from
+scratch), shrunk by ``delete_from_shard_cuckoo`` and probed
 EXECUTOR-SIDE via the shard-cogroup ``applyInPandas`` of
 ``operators.seen.salted_shard_cogroup``, false positives corrected by an
 exact residual anti-join, never false negatives — so ``anti_join_cuckoo``
@@ -14,10 +16,13 @@ with no rebuild from the seen table.
 
 Algorithm: partial-key cuckoo hashing per the public cuckoo-filter paper
 (Fan, Andersen, Kaminsky, Mitzenmacher, "Cuckoo Filter: Practically Better
-Than Bloom", CoNEXT 2014) — ``fp_bits``-bit fingerprints in ``bucket_size``
-slots per bucket, candidate buckets ``i1 = H(key)`` and
-``i2 = i1 XOR G(fp)`` (an involution, so a stored fingerprint's alternate
-bucket is computable without the key), evictions bounded by ``max_kicks``.
+Than Bloom", CoNEXT 2014) with one fixed geometry: ``FP_BITS = 16``-bit
+fingerprints in ``BUCKET_SIZE = 4`` slots per bucket (the paper's (2,4)
+table, stable to ~0.95 load) and a power-of-two bucket count the row does
+not store (it is the table's byte length over 8). Candidate buckets are
+``i1 = H(key)`` and ``i2 = i1 XOR G(fp)`` (an involution, so a stored
+fingerprint's alternate bucket is computable without the key), evictions
+bounded by ``max_kicks``.
 All hot paths are vectorized numpy over the Arrow batch: insertion places
 whole contention-resolved rounds at once (per-item Python only on the rare
 eviction tail), probe and delete are pure array ops — no per-row Python in
@@ -29,7 +34,7 @@ Invariants the code maintains and relies on:
   ``occupancy + within-batch rank`` without scanning for holes;
 * inserts RAISE on overflow instead of dropping a key (a dropped key is a
   false negative — it would break the engine's bit-for-bit seen parity);
-  size ``nbuckets`` with headroom (build default targets 0.84 load);
+  size ``nbuckets`` so the table stays below ~0.95 load;
 * deletes RAISE when no matching fingerprint exists in either candidate
   bucket: deleting a never-inserted key is the one operation the paper
   forbids (it could strip another key's fingerprint). Same-fp keys sharing
@@ -44,8 +49,6 @@ there; this module is what that mutability costs at 10^10 keys.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -58,7 +61,12 @@ from maga_spark.operators.seen import (
     salted_shard_cogroup,
 )
 
-CUCKOO_SCHEMA = "shard int, nbuckets long, fp_bits int, bucket_size int, table binary"
+CUCKOO_SCHEMA = "shard int, table binary"
+FP_BITS = 16  # uint16 slots
+BUCKET_SIZE = 4
+# probe-group sub-split per shard (salted_shard_cogroup); the table row is
+# read-only in the probe, so results are identical for any salt
+PROBE_SALT = 4
 
 # splitmix64-style avalanche constants (public domain mixers)
 _FP_MIX = np.uint64(0xBF58476D1CE4E5B9)
@@ -66,12 +74,12 @@ _IDX_MIX = np.uint64(0x94D049BB133111EB)
 _ALT_MIX = np.uint64(0x9E3779B97F4A7C15)
 
 
-def _fps(h: np.ndarray, fp_bits: int) -> np.ndarray:
+def _fps(h: np.ndarray) -> np.ndarray:
     """uint64 hashes → uint16 fingerprints; 0 is the empty-slot sentinel so
-    a zero fingerprint is remapped to 1 (a 2^-fp_bits bias, irrelevant)."""
+    a zero fingerprint is remapped to 1 (a 2^-FP_BITS bias, irrelevant)."""
     x = h * _FP_MIX
     x = x ^ (x >> np.uint64(33))
-    fp = (x & np.uint64((1 << fp_bits) - 1)).astype(np.uint16)
+    fp = (x & np.uint64((1 << FP_BITS) - 1)).astype(np.uint16)
     return np.where(fp == 0, np.uint16(1), fp)
 
 
@@ -89,8 +97,8 @@ def _alt(idx: np.ndarray, fp: np.ndarray, nbuckets: int) -> np.ndarray:
     return (idx.view(np.uint64) ^ (x & np.uint64(nbuckets - 1))).view(np.int64)
 
 
-def _key_buckets(h: np.ndarray, nbuckets: int, fp_bits: int):
-    fp = _fps(h, fp_bits)
+def _key_buckets(h: np.ndarray, nbuckets: int):
+    fp = _fps(h)
     b1 = _i1(h, nbuckets)
     return fp, b1, _alt(b1, fp, nbuckets)
 
@@ -143,24 +151,24 @@ def _kick_insert(table: np.ndarray, fp: int, b1: int, b2: int, max_kicks: int) -
     )
 
 
-def _insert_hashes(table: np.ndarray, h: np.ndarray, fp_bits: int, max_kicks: int = 500) -> None:
+def _insert_hashes(table: np.ndarray, h: np.ndarray, max_kicks: int = 500) -> None:
     """Insert a batch of uint64 hashes. Callers sort the batch first so the
     table layout is a pure function of the key SET (Arrow row order is not
     deterministic across shuffles)."""
     nbuckets, _ = table.shape
-    fp, b1, b2 = _key_buckets(h, nbuckets, fp_bits)
+    fp, b1, b2 = _key_buckets(h, nbuckets)
     placed = _place_round(table, fp, b1)
     rem = np.flatnonzero(~placed)
     if len(rem):
         placed2 = _place_round(table, fp[rem], b2[rem])
         rem = rem[~placed2]
-    for j in rem:  # eviction tail — empty at build-default load
+    for j in rem:  # eviction tail — empty at moderate load
         _kick_insert(table, int(fp[j]), int(b1[j]), int(b2[j]), max_kicks)
 
 
-def _contains(table: np.ndarray, h: np.ndarray, fp_bits: int) -> np.ndarray:
+def _contains(table: np.ndarray, h: np.ndarray) -> np.ndarray:
     nbuckets, _ = table.shape
-    fp, b1, b2 = _key_buckets(h, nbuckets, fp_bits)
+    fp, b1, b2 = _key_buckets(h, nbuckets)
     w = fp[:, None]
     return (table[b1] == w).any(axis=1) | (table[b2] == w).any(axis=1)
 
@@ -196,9 +204,9 @@ def _compact(table: np.ndarray, buckets: np.ndarray) -> None:
     table[ub] = np.take_along_axis(rows, order, axis=1)
 
 
-def _delete_hashes(table: np.ndarray, h: np.ndarray, fp_bits: int) -> None:
+def _delete_hashes(table: np.ndarray, h: np.ndarray) -> None:
     nbuckets, _ = table.shape
-    fp, b1, b2 = _key_buckets(h, nbuckets, fp_bits)
+    fp, b1, b2 = _key_buckets(h, nbuckets)
     cleared = _clear_pass(table, fp, b1)
     rem = np.flatnonzero(~cleared)
     if len(rem):
@@ -214,105 +222,63 @@ def _delete_hashes(table: np.ndarray, h: np.ndarray, fp_bits: int) -> None:
     _compact(table, np.concatenate([b1, b2]))
 
 
-def _state_arrays(fpdf: pd.DataFrame, shard: int):
+def _state_table(fpdf: pd.DataFrame, shard: int) -> np.ndarray:
     if len(fpdf) > 1:
         # one filter row per shard is the state invariant — probing or
         # updating only the first would silently drop the others' keys
         # (false negatives) (ADVICE r3)
         raise ValueError(f"{len(fpdf)} cuckoo rows for shard {shard}; expected 1")
-    nb = int(fpdf["nbuckets"].iloc[0])
-    fb = int(fpdf["fp_bits"].iloc[0])
-    bs = int(fpdf["bucket_size"].iloc[0])
-    table = np.frombuffer(bytes(fpdf["table"].iloc[0]), dtype=np.uint16).reshape(nb, bs)
-    return table, nb, fb, bs
+    return np.frombuffer(bytes(fpdf["table"].iloc[0]), dtype=np.uint16).reshape(-1, BUCKET_SIZE)
 
 
-def _row(shard: int, nb: int, fb: int, bs: int, table: np.ndarray) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "shard": [shard],
-            "nbuckets": [nb],
-            "fp_bits": [fb],
-            "bucket_size": [bs],
-            "table": [table.tobytes()],
-        }
+def _mutate(filters: DataFrame | None, hashes: DataFrame, fn, nbuckets: int | None) -> DataFrame:
+    """Apply ``fn(table, sorted_hashes)`` per shard — the one body of insert
+    and delete. A shard with hashes but no filter row gets a fresh
+    ``nbuckets``-sized table, or raises when ``nbuckets`` is None (delete);
+    ``filters=None`` means no filter rows at all (a from-scratch build).
+    Filter bytes never visit the driver."""
+
+    def _apply(key: tuple, hpdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
+        shard = int(key[0])
+        if len(fpdf):
+            table = _state_table(fpdf, shard).copy()
+        elif nbuckets is None:
+            raise ValueError(f"cuckoo delete: no filter state for shard {shard}")
+        else:
+            table = np.zeros((nbuckets, BUCKET_SIZE), dtype=np.uint16)
+        if len(hpdf):
+            # sorted: the table layout is a pure function of the key set
+            fn(table, np.sort(_hashes_u64(hpdf["url_hash"])))
+        return pd.DataFrame({"shard": [shard], "table": [table.tobytes()]})
+
+    if filters is None:  # one group per shard, no filter side to shuffle
+        no_rows = pd.DataFrame({"table": []})
+        return hashes.groupBy("shard").applyInPandas(
+            lambda hpdf: _apply((hpdf["shard"].iloc[0],), hpdf, no_rows), CUCKOO_SCHEMA
+        )
+    return (
+        hashes.groupBy("shard").cogroup(filters.groupBy("shard")).applyInPandas(
+            _apply, CUCKOO_SCHEMA
+        )
     )
 
 
-def build_shard_cuckoo(
-    seen: DataFrame,
-    fp_bits: int = 16,
-    bucket_size: int = 4,
-    load_target: float = 0.84,
-    min_buckets: int = 1 << 8,
-    nbuckets: int | None = None,
+def update_shard_cuckoo(
+    filters: DataFrame | None, new_hashes: DataFrame, nbuckets: int = 1 << 16
 ) -> DataFrame:
-    """seen(shard, url_hash) → one cuckoo-filter row per shard.
-
-    Default sizing is adaptive (next pow2 with slots ≥ n/load_target per
-    shard — 0.84 leaves eviction headroom; the paper's (2,4) table is
-    stable to ~0.95). Pass a fixed ``nbuckets`` when the result will grow
-    via ``update_shard_cuckoo`` — bucket indices depend on the size, so
-    incremental inserts require it stable."""
-    if not (4 <= fp_bits <= 16):
-        raise ValueError("fp_bits must be in [4, 16] (uint16 slots)")
-    if nbuckets and nbuckets & (nbuckets - 1):
+    """Insert a batch of new keys (``shard, url_hash``) into per-shard cuckoo
+    tables — O(batch + nshards·table bytes) per call, independent of how
+    many keys the filters already hold. ``filters=None`` builds from
+    scratch; shards appearing only in ``new_hashes`` get fresh
+    ``nbuckets``-sized tables, existing shards keep their size (bucket
+    indices depend on it). Capacity is ``nbuckets × BUCKET_SIZE`` keys per
+    shard; an overflow raises rather than dropping a key."""
+    if nbuckets < 1 or nbuckets & (nbuckets - 1):
         # _i1/_alt index with & (nbuckets-1): a non-pow2 size would silently
         # address only 2^popcount(mask) buckets and blow the eviction chain
         # far below the configured capacity
         raise ValueError(f"nbuckets must be a power of two (got {nbuckets})")
-
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        nb = nbuckets or max(
-            min_buckets,
-            1 << math.ceil(math.log2(max(1, math.ceil(len(pdf) / (bucket_size * load_target))))),
-        )
-        table = np.zeros((nb, bucket_size), dtype=np.uint16)
-        _insert_hashes(table, np.sort(_hashes_u64(pdf["url_hash"])), fp_bits)
-        return _row(shard, nb, fp_bits, bucket_size, table)
-
-    return seen.groupBy("shard").applyInPandas(_build, CUCKOO_SCHEMA)
-
-
-def update_shard_cuckoo(
-    filters: DataFrame,
-    new_hashes: DataFrame,
-    nbuckets: int = 1 << 16,
-    fp_bits: int = 16,
-    bucket_size: int = 4,
-) -> DataFrame:
-    """Insert a batch of new keys into per-shard cuckoo tables — the
-    incremental build: O(batch + nshards·table bytes) per call, independent
-    of how many keys the filters already hold. ``filters`` may be empty;
-    shards appearing only in ``new_hashes`` get fresh ``nbuckets``-sized
-    tables, existing shards keep their stored geometry. Filter bytes never
-    visit the driver (cogroup applyInPandas)."""
-    if not (4 <= fp_bits <= 16):
-        raise ValueError("fp_bits must be in [4, 16] (uint16 slots)")
-    if nbuckets < 1 or nbuckets & (nbuckets - 1):
-        # same pow2 contract as build_shard_cuckoo: fresh shards created
-        # here index with & (nbuckets-1), so a non-pow2 size would silently
-        # address only 2^popcount(mask) buckets
-        raise ValueError(f"nbuckets must be a power of two (got {nbuckets})")
-
-    def _upd(key: tuple, hpdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        if len(fpdf):
-            table, nb, fb, bs = _state_arrays(fpdf, shard)
-            table = table.copy()
-        else:
-            nb, fb, bs = nbuckets, fp_bits, bucket_size
-            table = np.zeros((nb, bs), dtype=np.uint16)
-        if len(hpdf):
-            _insert_hashes(table, np.sort(_hashes_u64(hpdf["url_hash"])), fb)
-        return _row(shard, nb, fb, bs, table)
-
-    return (
-        new_hashes.groupBy("shard").cogroup(filters.groupBy("shard")).applyInPandas(
-            _upd, CUCKOO_SCHEMA
-        )
-    )
+    return _mutate(filters, new_hashes, _insert_hashes, nbuckets)
 
 
 def delete_from_shard_cuckoo(filters: DataFrame, del_hashes: DataFrame) -> DataFrame:
@@ -322,64 +288,38 @@ def delete_from_shard_cuckoo(filters: DataFrame, del_hashes: DataFrame) -> DataF
     per prior insert); violations raise rather than corrupt. Use case:
     re-crawl scheduling — expire URLs from seen so the next absorb
     re-enqueues them, without rebuilding the filter from the seen table."""
-
-    def _del(key: tuple, hpdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        if not len(fpdf):
-            raise ValueError(f"cuckoo delete: no filter state for shard {shard}")
-        table, nb, fb, bs = _state_arrays(fpdf, shard)
-        table = table.copy()
-        if len(hpdf):
-            _delete_hashes(table, np.sort(_hashes_u64(hpdf["url_hash"])), fb)
-        return _row(shard, nb, fb, bs, table)
-
-    return (
-        del_hashes.groupBy("shard").cogroup(filters.groupBy("shard")).applyInPandas(
-            _del, CUCKOO_SCHEMA
-        )
-    )
+    return _mutate(filters, del_hashes, _delete_hashes, None)
 
 
 def anti_join_cuckoo(
     candidates: DataFrame,
     seen: DataFrame,
+    filters: DataFrame,
     nshards: int,
-    key: str = "url_hash",
     temps: list | None = None,
-    filters: DataFrame | None = None,
-    probe_salt: int = 4,
 ) -> DataFrame:
-    """candidates ∖ seen with an executor-side per-shard cuckoo prefilter:
-    rows the filter rejects are definitely new; only the ``might_contain`` minority
-    reaches the exact residual anti-join, so the result equals
-    ``anti_join_exact`` for ANY filter contents with no false negatives
-    (this also makes deletion safe end-to-end: a deleted key probes
-    negative and re-enters as new; an fp-collision survivor just pays the
-    residual join). ``nshards`` must be the seen table's shard modulus;
-    ``temps`` collects the persisted probe intermediate for caller-managed
-    unpersist; ``probe_salt`` sub-splits each shard's probe group
-    (``salted_shard_cogroup``; the table row is read-only in the probe, so
-    results are identical for any salt).
+    """candidates ∖ seen on ``url_hash`` with an executor-side per-shard
+    cuckoo prefilter: rows the filter rejects are definitely new; only the
+    ``might_contain`` minority reaches the exact residual anti-join, so the
+    result equals ``anti_join_exact`` whenever ``filters`` holds every key
+    of ``seen``, whatever else it holds (this also makes deletion safe
+    end-to-end: a deleted key probes negative and re-enters as new; an
+    fp-collision survivor just pays the residual join). ``temps`` collects the persisted probe intermediate for
+    caller-managed unpersist.
 
     ``nshards`` MUST be the modulus used to shard ``seen``: a wrong modulus
     buckets candidates against the wrong filter row. Any filter row whose
     shard id falls outside [0, nshards) fails the probe task
     (modulus-mismatch guard)."""
-    if filters is None:
-        filters = build_shard_cuckoo(seen)
-    ns = int(nshards)
-
-    marked = _probe_cogroup(candidates, filters, key, ns, probe_salt).persist()
+    marked = _probe_cogroup(candidates, filters, int(nshards)).persist()
     if temps is not None:
         temps.append(marked)
     maybe = marked.filter(F.col("_maybe")).drop("_maybe")
     definitely_new = marked.filter(~F.col("_maybe")).drop("_maybe")
-    return definitely_new.unionByName(anti_join_exact(maybe, seen, key))
+    return definitely_new.unionByName(anti_join_exact(maybe, seen))
 
 
-def _probe_cogroup(
-    candidates: DataFrame, filters: DataFrame, key: str, ns: int, salt: int = 1
-) -> DataFrame:
+def _probe_cogroup(candidates: DataFrame, filters: DataFrame, ns: int) -> DataFrame:
     """(shard, salt)-cogroup cuckoo probe appending ``_maybe`` (one
     candidate shuffle, filter replicated per salt slice in-plan)."""
     cand_cols = list(candidates.columns)
@@ -399,8 +339,9 @@ def _probe_cogroup(
         if not len(fpdf):
             out["_maybe"] = False  # empty shard → definitely unseen
             return out
-        table, _nb, fb, _bs = _state_arrays(fpdf, shard)
-        out["_maybe"] = _contains(table, _hashes_u64(cpdf[key]), fb)
+        out["_maybe"] = _contains(_state_table(fpdf, shard), _hashes_u64(cpdf["url_hash"]))
         return out
 
-    return salted_shard_cogroup(candidates, filters, key, ns, salt, _probe, out_schema)
+    return salted_shard_cogroup(
+        candidates, filters, "url_hash", ns, PROBE_SALT, _probe, out_schema
+    )

@@ -144,7 +144,15 @@ def minhash_band_rows(
     shared banding unit of the self-join candidate generator AND the
     incremental near-dup index (one definition, so stored indexes can never
     diverge from the ad-hoc path). ``bh`` is the band's comma-joined
-    signature values: exact band equality, bit-reproducible in DuckDB."""
+    signature values: exact band equality, bit-reproducible in DuckDB.
+
+    As a STORED near-dup index (the incremental-state analog of
+    ``update_shard_cuckoo`` / ``append_to_ivf_index`` for dedup) a growing
+    corpus dedupes each NEW ingest batch against these rows
+    (``query_minhash_index``) in O(batch-bands ⋈ index) instead of
+    re-running the corpus×corpus self-join every batch. Persist with
+    ``.write.partitionBy("band")`` so serving prunes to the probed bands;
+    at cluster scale, bucket on ``bh`` for a shuffle-free probe join."""
     if num_hashes % bands:
         raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
     r = num_hashes // bands
@@ -180,25 +188,6 @@ def minhash_lsh_candidates(
     )
 
 
-def build_minhash_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Materialize the corpus's LSH band rows as a STORED near-dup index —
-    the incremental-state analog of ``update_shard_cuckoo`` /
-    ``append_to_ivf_index`` for dedup: a growing corpus dedupes each NEW
-    ingest batch against this index (``query_minhash_index``) in
-    O(batch-bands ⋈ index) instead of re-running the corpus×corpus
-    self-join every batch. Persist with ``.write.partitionBy("band")`` so
-    serving prunes to the probed bands; at cluster scale, bucket on
-    ``bh`` for a shuffle-free probe join."""
-    return minhash_band_rows(df, id_col, text_col, num_hashes, bands, shingle_k)
-
-
 def append_to_minhash_index(
     index: DataFrame,
     new_docs: DataFrame,
@@ -210,7 +199,7 @@ def append_to_minhash_index(
 ) -> DataFrame:
     """Index ∪ the new batch's band rows — cost O(batch), no touch of the
     existing rows (append-only partitions on disk). The result is
-    row-identical to ``build_minhash_index`` over the full corpus: banding
+    row-identical to ``minhash_band_rows`` over the full corpus: banding
     is per-document, so incremental == from-scratch (tested)."""
     rows = minhash_band_rows(new_docs, id_col, text_col, num_hashes, bands, shingle_k)
     return index.unionByName(rows)
@@ -344,17 +333,14 @@ def simhash_near_dups(
     text_col: str = "text",
     max_hamming: int = 3,
     n_bands: int = 4,
-    cache_signatures: bool = False,
 ) -> DataFrame:
     """Pairs with simhash hamming distance ≤ max_hamming; exact pair
     generation via the pigeonhole band join (``hamming_band_pairs``) over
     the 60-bit ``simhash_signatures``."""
-    sh = simhash_signatures(df, id_col, text_col)
-    if cache_signatures:
-        # the band self-join consumes sh on BOTH sides; without a cache each
-        # side re-runs the full per-bit vote aggregation over the corpus
-        # (opt-in: one (id, sim) row per doc is tiny next to recomputing)
-        sh = sh.persist()
+    # the band self-join consumes sh on BOTH sides; without a cache each
+    # side re-runs the full per-bit vote aggregation over the corpus (one
+    # (id, sim) row per doc is tiny next to recomputing)
+    sh = simhash_signatures(df, id_col, text_col).persist()
     return hamming_band_pairs(
         sh, max_hamming=max_hamming, n_bands=n_bands, total_bits=60, id_col="id", key_col="sim"
     )
@@ -586,7 +572,7 @@ def build_fingerprint_index(
     ``containment_pairs_from_index`` runs with ZERO Exchange — both sides
     are the same catalog table, already co-partitioned and sorted on the
     join key (plan-pinned in test_operators). Same storage idiom as the
-    minhash band index (build_minhash_index): state tables carry their
+    minhash band index (minhash_band_rows): state tables carry their
     partitioning on disk.
     ``mode='append'`` absorbs new documents per-bucket without rewriting
     history."""

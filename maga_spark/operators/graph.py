@@ -14,8 +14,9 @@ Beyond" (SOCC'14): both operations are a groupBy-min plus an equi-join
 (map-side combinable, no collect_set neighborhood materialization — a
 10^9-degree hub node reduces to one min), and the edge set provably
 contracts toward per-component stars rooted at the minimum vertex id.
-The driver loop runs one tiny checksum action per round for convergence
-detection, mirroring the train-time-only actions of ivf_train.
+The driver loop detects convergence from a per-round edge checksum that
+rides the round's checkpoint job (an observation), so a round is one
+action.
 
 The reference has no graph ops (its only identity notion is the canonical
 infohash key, maga/utils.py:7-11); this generalizes the same "canonical
@@ -27,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from maga_spark.operators.observe import RobustObservation, obs_name
 from maga_spark.plans.ckpt import local_ckpt, release
 
 
@@ -90,19 +92,26 @@ def connected_components(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
+        # order-independent digest; bit_xor never overflows under ANSI
+        # (the edge set is distinct, so xor cancellation can't collide).
+        # It rides the checkpoint job below instead of a separate action.
+        obs = RobustObservation(
+            obs_name("cc_round", id(edges)),
+            small,
+            F.count("*").alias("n"),
+            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
+        )
         # truncate lineage every round: without this the logical plan grows
         # a join+agg layer per iteration and Catalyst re-analysis goes
         # super-linear (use reliable checkpointing on a real cluster).
         # local_ckpt, not raw localCheckpoint: the raw form carries origin
         # size stats that compound across rounds (plans/ckpt.py)
-        nxt = local_ckpt(small)
+        nxt = local_ckpt(obs.df)
+        # read before release: a pruned observation re-aggregates obs.df,
+        # whose lineage still reads e
+        chk = obs.get
         release(e)
         e = nxt
-        # order-independent digest; bit_xor never overflows under ANSI
-        # (the edge set is distinct, so xor cancellation can't collide)
-        chk = e.agg(
-            F.count("*").alias("n"), F.bit_xor(F.xxhash64("u", "v")).alias("h")
-        ).collect()[0]
         cur = (chk["n"], chk["h"])
         if cur == prev:
             break

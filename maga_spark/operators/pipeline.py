@@ -37,7 +37,6 @@ def curate_corpus(
     num_hashes: int = 8,
     n_bands: int = 4,
     shingle_k: int = 3,
-    temps: list | None = None,
 ) -> DataFrame:
     """Curated subset of ``docs``: language-filtered, quality-gated,
     exact-deduped (min-id representative per content hash), then minhash-
@@ -52,9 +51,7 @@ def curate_corpus(
     The deduped intermediate is PERSISTED: it feeds the band self-join's
     two sides plus the final anti-join's probe side, and without a cache
     barrier the whole language→quality→dedup chain recomputes per branch.
-    Pass ``temps`` to receive the cached frame for unpersist after the
-    consuming action (the anti_join_cuckoo contract); when ``None`` it
-    stays cached until Spark evicts it — fine for one-shot queries.
+    It stays cached until Spark evicts it — fine for one-shot queries.
 
     Measured at sf0.1 (5 000 docs, local[32]): first evaluation ~13 s,
     subsequent ~1.9 s — the cold delta is janino/JIT compilation of the
@@ -80,8 +77,6 @@ def curate_corpus(
     w = Window.partitionBy(F.md5(t)).orderBy(F.col(id_col).asc())
     d = d.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
     d = d.persist()
-    if temps is not None:
-        temps.append(d)
 
     # stage 4: minhash-LSH over the survivors — the banded equi-join of
     # dedup.minhash_lsh_candidates, never an all-pairs product; the larger
@@ -111,7 +106,6 @@ def curate_images(
     max_hamming: int = 6,
     n_bands: int = 7,
     phash_bits: int = 64,
-    temps: list | None = None,
 ) -> DataFrame:
     """The image-payload twin of :func:`curate_corpus`, composed over
     BASELINE's ``input_hint`` table shape ``(image_id, bytes, w, h, fmt,
@@ -128,8 +122,8 @@ def curate_images(
     move); the exact dedup is one shuffle on ``md5(caption)``; the phash
     stage is the EXACT pigeonhole band equi-join
     (:func:`~maga_spark.operators.dedup.hamming_band_pairs` — never
-    all-pairs), and the drop set rejoins broadcast-sized. Same
-    persist/``temps`` contract as :func:`curate_corpus`.
+    all-pairs), and the drop set rejoins broadcast-sized. The deduped
+    intermediate is persisted, as in :func:`curate_corpus`.
 
     Reference anchor: the crawl loop validates each fetched payload before
     committing it (maga semantics via payload.validate_payloads — PSNR +
@@ -157,8 +151,6 @@ def curate_images(
     w = Window.partitionBy(F.md5(F.col(caption_col))).orderBy(F.col(id_col).asc())
     keep = keep.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
     keep = keep.persist()
-    if temps is not None:
-        temps.append(keep)
 
     # stage 4: perceptual near-dup removal — exact pigeonhole banding on the
     # phash (slim (id, phash) rows only), keep-smallest-id rule

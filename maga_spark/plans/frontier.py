@@ -148,11 +148,7 @@ class CrawlEngine:
             # committed seen set (the invariant below keeps them in
             # lockstep), so no rebuild here.
             anti = lambda c, s: anti_join_cuckoo(  # noqa: E731
-                c,
-                s,
-                nshards=cfg.nshards,
-                temps=self._epoch_temps,
-                filters=self.cuckoo,
+                c, s, self.cuckoo, cfg.nshards, temps=self._epoch_temps
             )
         else:
             anti = anti_join_exact

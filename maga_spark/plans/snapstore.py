@@ -109,11 +109,11 @@ def resume(spark: SparkSession, root: str, fixtures_dir: str, cfg, seen_mode: st
     if seen_mode == "cuckoo":
         # the filter is derived state (exactly the seen key set) — rebuild
         # once from the restored seen table rather than snapshotting the
-        # tables; subsequent epochs grow it incrementally again. The stored
-        # geometry must match the config the engine will keep inserting with
-        from maga_spark.operators.cuckoo import build_shard_cuckoo
+        # tables; subsequent epochs grow it incrementally again. The table
+        # size must match the config the engine will keep inserting with
+        from maga_spark.operators.cuckoo import update_shard_cuckoo
 
-        eng.cuckoo = build_shard_cuckoo(eng.seen, nbuckets=cfg.cuckoo_nbuckets)
+        eng.cuckoo = update_shard_cuckoo(None, eng.seen, nbuckets=cfg.cuckoo_nbuckets)
     eng._start_epoch = epoch + 1
     return eng
 

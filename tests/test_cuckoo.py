@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from maga_spark.operators.cuckoo import (
     anti_join_cuckoo,
-    build_shard_cuckoo,
     delete_from_shard_cuckoo,
     update_shard_cuckoo,
 )
@@ -46,18 +45,21 @@ def _sorted_rows(df):
 
 
 def test_anti_join_cuckoo_equals_exact(spark, keysets):
-    """Exact for ANY probe_salt (the probe is row-local; ADVICE r3) and for
-    a dense filter whose 4-bit fingerprints false-positive on about a
-    fifth of the fresh keys — the residual anti-join corrects every one."""
+    """Exact for a filter over the seen keys and for a dense one that also
+    holds every fresh candidate, so every fresh key probes might-contain —
+    the residual anti-join corrects every one."""
     seen_a, seen_b, fresh = keysets
     seen = _seen_df(spark, np.concatenate([seen_a, seen_b]))
     cands = _cand_df(spark, np.concatenate([seen_a[:300], fresh[:700]]), dup_first=True)
     want = _sorted_rows(anti_join_exact(cands, seen))
     assert len(want) >= 700  # the fresh keys (plus dups) all survive
-    dense = build_shard_cuckoo(seen, fp_bits=4)
-    for salt, filters in ((1, None), (3, None), (8, None), (4, dense)):
-        got = anti_join_cuckoo(cands, seen, nshards=NSHARDS, filters=filters, probe_salt=salt)
-        assert _sorted_rows(got) == want, f"probe_salt={salt} dense={filters is not None}"
+    exact = update_shard_cuckoo(None, seen, nbuckets=1 << 11)
+    dense = update_shard_cuckoo(
+        None, _seen_df(spark, np.concatenate([seen_a, seen_b, fresh[:700]])), nbuckets=1 << 11
+    )
+    for filters in (exact, dense):
+        got = anti_join_cuckoo(cands, seen, filters, NSHARDS)
+        assert _sorted_rows(got) == want, f"dense={filters is dense}"
 
 
 @pytest.mark.parametrize("case", ["empty", "sparse_top_shard"])
@@ -70,11 +72,11 @@ def test_anti_join_cuckoo_edge_seen_sets(spark, case):
     cand = spark.createDataFrame([(8,), (9,), (10,), (999,)], "url_hash long")
     if case == "empty":
         seen = spark.createDataFrame([], "shard int, url_hash long")
-        got = anti_join_cuckoo(cand, seen, nshards=8)
+        got = anti_join_cuckoo(cand, seen, update_shard_cuckoo(None, seen, nbuckets=1 << 8), 8)
         assert {r["url_hash"] for r in got.collect()} == {8, 9, 10, 999}
     else:
         seen = spark.createDataFrame([(0, 8), (1, 9), (2, 10)], "shard int, url_hash long")
-        got = anti_join_cuckoo(cand, seen, nshards=8)
+        got = anti_join_cuckoo(cand, seen, update_shard_cuckoo(None, seen, nbuckets=1 << 8), 8)
         assert {r["url_hash"] for r in got.collect()} == {999}
 
 
@@ -85,7 +87,7 @@ def test_cuckoo_rejects_inconsistent_nshards(spark):
     seen = spark.createDataFrame([(5, 42)], "shard int, url_hash long")
     cand = spark.createDataFrame([(42,)], "url_hash long")
     with pytest.raises(Exception, match="different modulus|outside"):
-        anti_join_cuckoo(cand, seen, nshards=4).collect()
+        anti_join_cuckoo(cand, seen, update_shard_cuckoo(None, seen, nbuckets=1 << 8), 4).collect()
 
 
 def test_cuckoo_single_probe_pass_no_driver_bytes(spark, keysets):
@@ -96,7 +98,8 @@ def test_cuckoo_single_probe_pass_no_driver_bytes(spark, keysets):
     seen = _seen_df(spark, seen_a)
     cands = _cand_df(spark, np.concatenate([seen_a[:100], fresh[:100]]))
     temps: list = []
-    out = anti_join_cuckoo(cands, seen, nshards=NSHARDS, temps=temps)
+    filters = update_shard_cuckoo(None, seen, nbuckets=1 << 11)
+    out = anti_join_cuckoo(cands, seen, filters, NSHARDS, temps=temps)
     lines = out._jdf.queryExecution().executedPlan().toString().splitlines()
     assert sum("InMemoryTableScan" in ln for ln in lines) >= 2
     assert len(temps) == 1
@@ -121,16 +124,16 @@ def test_incremental_update_equals_scratch_results(spark, keysets):
     seen_a, seen_b, fresh = keysets
     df_a = _seen_df(spark, seen_a)
     df_ab = _seen_df(spark, np.concatenate([seen_a, seen_b]))
-    scratch = build_shard_cuckoo(df_ab, nbuckets=1 << 11)
+    scratch = update_shard_cuckoo(None, df_ab, nbuckets=1 << 11)
     incr = update_shard_cuckoo(
-        build_shard_cuckoo(df_a, nbuckets=1 << 11),
+        update_shard_cuckoo(None, df_a, nbuckets=1 << 11),
         _seen_df(spark, seen_b),
         nbuckets=1 << 11,
     )
     cands = _cand_df(spark, np.concatenate([seen_b[:200], fresh[:500]]))
     want = _sorted_rows(anti_join_exact(cands, df_ab))
     for filters in (scratch, incr):
-        got = anti_join_cuckoo(cands, df_ab, nshards=NSHARDS, filters=filters)
+        got = anti_join_cuckoo(cands, df_ab, filters, NSHARDS)
         assert _sorted_rows(got) == want
 
 
@@ -141,10 +144,10 @@ def test_delete_enables_recrawl(spark, keysets):
     seen_a, seen_b, fresh = keysets
     df_ab = _seen_df(spark, np.concatenate([seen_a, seen_b]))
     df_a = _seen_df(spark, seen_a)
-    filters = build_shard_cuckoo(df_ab, nbuckets=1 << 11)
+    filters = update_shard_cuckoo(None, df_ab, nbuckets=1 << 11)
     after_del = delete_from_shard_cuckoo(filters, _seen_df(spark, seen_b))
     cands = _cand_df(spark, np.concatenate([seen_a[:200], seen_b[:400], fresh[:200]]))
-    got = anti_join_cuckoo(cands, df_a, nshards=NSHARDS, filters=after_del)
+    got = anti_join_cuckoo(cands, df_a, after_del, NSHARDS)
     want = anti_join_exact(cands, df_a)
     assert _sorted_rows(got) == _sorted_rows(want)
     # and the deleted keys really are in the result (re-crawlable)
@@ -154,7 +157,7 @@ def test_delete_enables_recrawl(spark, keysets):
 
 def test_delete_never_inserted_raises(spark, keysets):
     seen_a, _seen_b, fresh = keysets
-    filters = build_shard_cuckoo(_seen_df(spark, seen_a), nbuckets=1 << 11)
+    filters = update_shard_cuckoo(None, _seen_df(spark, seen_a), nbuckets=1 << 11)
     bad = delete_from_shard_cuckoo(filters, _seen_df(spark, fresh[:50]))
     with pytest.raises(Exception, match="never-inserted"):
         bad.collect()
@@ -165,13 +168,11 @@ def test_duplicate_state_rows_raise(spark, keysets):
     invariant; probing or updating only the first would turn seen keys into
     false negatives — both must raise instead (ADVICE r3)."""
     seen_a, seen_b, _fresh = keysets
-    f1 = build_shard_cuckoo(_seen_df(spark, seen_a), nbuckets=1 << 11)
+    f1 = update_shard_cuckoo(None, _seen_df(spark, seen_a), nbuckets=1 << 11)
     doubled = f1.unionByName(f1)
     cands = _cand_df(spark, seen_b[:100])
     with pytest.raises(Exception, match="expected 1"):
-        anti_join_cuckoo(
-            cands, _seen_df(spark, seen_a), nshards=NSHARDS, filters=doubled
-        ).collect()
+        anti_join_cuckoo(cands, _seen_df(spark, seen_a), doubled, NSHARDS).collect()
     with pytest.raises(Exception, match="expected 1"):
         update_shard_cuckoo(doubled, _seen_df(spark, seen_b[:10]), nbuckets=1 << 11).collect()
 
@@ -181,7 +182,7 @@ def test_overflow_raises_not_drops(spark, keysets):
     a false negative — a seen URL re-enqueued, a parity break."""
     seen_a, _b, _f = keysets
     with pytest.raises(Exception, match="over capacity"):
-        build_shard_cuckoo(_seen_df(spark, seen_a), nbuckets=8).collect()
+        update_shard_cuckoo(None, _seen_df(spark, seen_a), nbuckets=8).collect()
 
 
 @pytest.mark.parametrize("mode", ["exact", "cuckoo"])
@@ -254,17 +255,10 @@ def test_unknown_seen_mode_raises(spark, tmp_path, mode):
 
 
 def test_update_validates_geometry(spark):
-    """ADVICE r4: update_shard_cuckoo applies the same pow2/fp_bits checks
-    as build_shard_cuckoo — fresh shards index with & (nbuckets-1), so a
-    non-pow2 size would silently address a fraction of the table."""
-    import pytest as _pytest
-
-    from maga_spark.operators.cuckoo import update_shard_cuckoo
-
-    with _pytest.raises(ValueError, match="power of two"):
+    """ADVICE r4: fresh shards index with & (nbuckets-1), so a non-pow2
+    size would silently address a fraction of the table."""
+    with pytest.raises(ValueError, match="power of two"):
         update_shard_cuckoo(None, None, nbuckets=1000)
-    with _pytest.raises(ValueError, match="fp_bits"):
-        update_shard_cuckoo(None, None, fp_bits=3)
 
 
 def test_expire_reenqueue_identical_across_modes(spark, tmp_path):

@@ -74,7 +74,7 @@ def test_minhash_index_incremental(spark, docs):
     exactly the cross pairs of the self-join, self-matches dropped."""
     from maga_spark.operators.dedup import (
         append_to_minhash_index,
-        build_minhash_index,
+        minhash_band_rows,
         query_minhash_index,
     )
 
@@ -82,13 +82,13 @@ def test_minhash_index_incremental(spark, docs):
     batch = docs.filter(F.col("doc_id") > 4)
 
     # incremental == from-scratch, bit-identical band rows
-    full = {tuple(r) for r in build_minhash_index(docs).collect()}
-    inc = {tuple(r) for r in append_to_minhash_index(build_minhash_index(corpus), batch).collect()}
+    full = {tuple(r) for r in minhash_band_rows(docs).collect()}
+    inc = {tuple(r) for r in append_to_minhash_index(minhash_band_rows(corpus), batch).collect()}
     assert inc == full and len(full) > 0
 
     # querying a batch containing a near-dup of an indexed doc finds it;
     # novel docs match nothing; self-pairs never appear
-    idx = build_minhash_index(corpus)
+    idx = minhash_band_rows(corpus)
     probe = spark.createDataFrame(
         [(7, DOCS[0][1]), (8, "novel text about nothing seen before in any indexed document body")],
         "doc_id long, text string",

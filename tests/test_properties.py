@@ -127,16 +127,16 @@ def test_cuckoo_no_false_negatives_under_insert_delete(ops):
             if len(live) + len(batch) > 1600:  # stay under ~0.8 load
                 batch = batch[: max(0, 1600 - len(live))]
             if len(batch):
-                _insert_hashes(table, batch, 16)
+                _insert_hashes(table, batch)
                 live.update(int(k) for k in batch)
         else:
             batch = np.array(sorted(int(k) for k in ks if int(k) in live), dtype=np.uint64)
             if len(batch):
-                _delete_hashes(table, batch, 16)
+                _delete_hashes(table, batch)
                 live.difference_update(int(k) for k in batch)
         # the invariant the engine depends on: every live key probes True
         if live:
             lv = np.array(sorted(live), dtype=np.uint64)
-            assert _contains(table, lv, 16).all(), "false negative!"
+            assert _contains(table, lv).all(), "false negative!"
         # slot accounting never drifts (inserts raise rather than drop)
         assert int((table != 0).sum()) == len(live)

@@ -25,12 +25,15 @@ def fixtures_dir(tmp_path_factory):
     return d
 
 
-def test_resume_equals_uninterrupted(spark, fixtures_dir, tmp_path):
+@pytest.mark.parametrize("seen_mode", ["exact", "cuckoo"])
+def test_resume_equals_uninterrupted(spark, fixtures_dir, tmp_path, seen_mode):
+    """Cuckoo mode also covers resume's filter rebuild from the restored
+    seen table."""
     golden = sim_run(fixtures_dir, CFG)
     snap = str(tmp_path / "snaps")
 
     # run only 3 of 6 epochs, committing snapshots
-    eng_a = CrawlEngine(spark, fixtures_dir, CFG, snapshot_dir=snap)
+    eng_a = CrawlEngine(spark, fixtures_dir, CFG, seen_mode=seen_mode, snapshot_dir=snap)
     res_a = eng_a.run(epochs=3, collect_ordering=True)
     assert snapstore.list_epochs(snap) == [0, 1, 2]
 
@@ -39,7 +42,7 @@ def test_resume_equals_uninterrupted(spark, fixtures_dir, tmp_path):
     assert snapstore.list_epochs(snap) == [0, 1, 2]
 
     # resume in a *new* engine and finish the remaining 3 epochs
-    eng_b = snapstore.resume(spark, snap, fixtures_dir, CFG)
+    eng_b = snapstore.resume(spark, snap, fixtures_dir, CFG, seen_mode=seen_mode)
     res_b = eng_b.run(epochs=3, collect_ordering=True)
 
     full_ordering = res_a.ordering + res_b.ordering

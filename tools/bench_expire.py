@@ -28,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from maga_spark.crawlspec import CrawlConfig  # noqa: E402
-from maga_spark.operators.cuckoo import build_shard_cuckoo  # noqa: E402
+from maga_spark.operators.cuckoo import update_shard_cuckoo  # noqa: E402
 from maga_spark.plans.frontier import CrawlEngine  # noqa: E402
 from maga_spark.session import get_spark  # noqa: E402
 from maga_spark.sources.fixtures import generate  # noqa: E402
@@ -58,7 +58,7 @@ def time_expire(spark, fixture: str, mode: str, seen, batch) -> float:
     eng = CrawlEngine(spark, fixture, cfg, seen_mode=mode)
     eng.seen = seen
     if mode == "cuckoo":
-        eng.cuckoo = build_shard_cuckoo(seen, nbuckets=cfg.cuckoo_nbuckets).localCheckpoint(True)
+        eng.cuckoo = update_shard_cuckoo(None, seen, nbuckets=cfg.cuckoo_nbuckets).localCheckpoint(True)
     t0 = time.perf_counter()
     n = eng.expire_urls(batch)
     # expire_urls leaves the new seen table lazy — materialize it (and the
