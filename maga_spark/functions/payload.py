@@ -59,27 +59,20 @@ def _validate_batch(
     return pd.DataFrame({"ok": oks, "psnr_db": psnrs, "err": errs})
 
 
-def validate_payloads(
-    df: DataFrame,
-    data: str = "bytes",
-    w: str = "w",
-    h: str = "h",
-    fmt: str = "fmt",
-    truth_px: str = "px_npy",
-    caption: str = "caption",
-    caption_expected: Column | None = None,
-) -> DataFrame:
-    """Append ``valid: boolean, psnr_db: double, invalid_reason: string``.
+def validate_payloads(df: DataFrame, caption_expected: Column | None = None) -> DataFrame:
+    """Append ``valid: boolean, psnr_db: double, invalid_reason: string`` to
+    a fetched-payload table (``bytes``, ``w``, ``h``, ``fmt``, ``px_npy``,
+    ``caption``).
 
     Pixel check via the Arrow UDF; caption byte-equality as a codegen'd
     expression (the cheap predicate stays JVM-side — early-abort ordering,
     SURVEY.md §4.1)."""
-    v = _validate_batch(F.col(data), F.col(w), F.col(h), F.col(fmt), F.col(truth_px))
+    v = _validate_batch(F.col("bytes"), F.col("w"), F.col("h"), F.col("fmt"), F.col("px_npy"))
     out = df.withColumn("_v", v)
     cap_ok = (
         F.lit(True)
         if caption_expected is None
-        else (F.col(caption) == caption_expected)
+        else (F.col("caption") == caption_expected)
     )
     return (
         out.withColumn("valid", F.col("_v.ok") & cap_ok)
@@ -94,9 +87,7 @@ def validate_payloads(
     )
 
 
-def byte_stats(
-    bytes_col: Column, brightness_col: str = "brightness", contrast_col: str = "contrast"
-) -> dict[str, Column]:
+def byte_stats(bytes_col: Column) -> dict[str, Column]:
     """Byte-level payload statistics as PURE expressions — scan-time
     quality gates with zero Python (mean byte value ~ brightness,
     population variance ~ contrast for the ``raw`` codec, where bytes ARE
@@ -119,7 +110,7 @@ def byte_stats(
     s2 = F.aggregate(px, F.lit(0).cast("long"), lambda acc, v: acc + v * v)
     mean = F.when(n > 0, s / n)
     var = F.when(n > 0, s2 / n - (s / n) * (s / n))
-    return {brightness_col: mean, contrast_col: var}
+    return {"brightness": mean, "contrast": var}
 
 
 def sniff_format(bytes_col: Column) -> Column:
@@ -224,24 +215,18 @@ def header_dims(bytes_col: Column) -> dict[str, Column]:
     return {"hdr_fmt": fmt, "hdr_w": w, "hdr_h": h}
 
 
-def geometry_check(
-    images: DataFrame,
-    bytes_col: str = "bytes",
-    w_col: str = "w",
-    h_col: str = "h",
-    fmt_col: str = "fmt",
-) -> DataFrame:
+def geometry_check(images: DataFrame) -> DataFrame:
     """Declared-vs-header geometry gate over the input_hint table shape:
     appends ``hdr_fmt``/``hdr_w``/``hdr_h`` and a ``geometry_ok`` verdict —
     true iff the container header exists and agrees with the declared
     (fmt, w, h); NULL (unknown/unparseable header, e.g. JPEG) when there
     is nothing to check, false on any disagreement. Pure expressions;
     composes with scan pushdown ahead of the decode stage."""
-    d = header_dims(F.col(bytes_col))
+    d = header_dims(F.col("bytes"))
     agree = (
-        (d["hdr_fmt"] == F.col(fmt_col))
-        & (d["hdr_w"] == F.col(w_col).cast("long"))
-        & (d["hdr_h"] == F.col(h_col).cast("long"))
+        (d["hdr_fmt"] == F.col("fmt"))
+        & (d["hdr_w"] == F.col("w").cast("long"))
+        & (d["hdr_h"] == F.col("h").cast("long"))
     )
     return (
         images.withColumn("hdr_fmt", d["hdr_fmt"])

@@ -93,13 +93,13 @@ def embedded_int_after(data: Column, key: str) -> Column:
     return F.when(idx > 0, val)
 
 
-def piece_count(metadata_size: Column, block: int = BLOCK) -> Column:
+def piece_count(metadata_size: Column) -> Column:
     """O-30: ``math.ceil(metadata_size / BLOCK)``
     (maga/downloader.py:133-134). NULL-propagating. Ceil-div in LONG
-    arithmetic (``(m + block - 1) div block``): ``ceil(m / block)`` is IEEE
+    arithmetic (``(m + BLOCK - 1) div BLOCK``): ``ceil(m / BLOCK)`` is IEEE
     double division, which can diverge from integer divmod above 2^53."""
     return F.call_function(
-        "div", metadata_size + F.lit(block - 1), F.lit(block)
+        "div", metadata_size + F.lit(BLOCK - 1), F.lit(BLOCK)
     ).cast("long")
 
 

@@ -22,7 +22,7 @@ table, stable to ~0.95 load) and a power-of-two bucket count the row does
 not store (it is the table's byte length over 8). Candidate buckets are
 ``i1 = H(key)`` and ``i2 = i1 XOR G(fp)`` (an involution, so a stored
 fingerprint's alternate bucket is computable without the key), evictions
-bounded by ``max_kicks``.
+bounded at 500 kicks.
 All hot paths are vectorized numpy over the Arrow batch: insertion places
 whole contention-resolved rounds at once (per-item Python only on the rare
 eviction tail), probe and delete are pure array ops — no per-row Python in
@@ -123,7 +123,7 @@ def _place_round(table: np.ndarray, fps: np.ndarray, buckets: np.ndarray) -> np.
     return placed
 
 
-def _kick_insert(table: np.ndarray, fp: int, b1: int, b2: int, max_kicks: int) -> None:
+def _kick_insert(table: np.ndarray, fp: int, b1: int, b2: int) -> None:
     """Per-item eviction chain for the rare both-buckets-full case.
     Deterministic victim choice (fingerprint- and round-derived — no RNG,
     SURVEY.md §7.6 determinism rule). Raises instead of dropping the key."""
@@ -134,7 +134,7 @@ def _kick_insert(table: np.ndarray, fp: int, b1: int, b2: int, max_kicks: int) -
             table[b, free[0]] = fp
             return
     cur_fp, cur_b = np.uint16(fp), b1
-    for k in range(max_kicks):
+    for k in range(500):
         slot = (int(cur_fp) * 40503 + k) % bucket_size
         victim = table[cur_b, slot]
         table[cur_b, slot] = cur_fp
@@ -145,13 +145,13 @@ def _kick_insert(table: np.ndarray, fp: int, b1: int, b2: int, max_kicks: int) -
             table[cur_b, free[0]] = cur_fp
             return
     raise ValueError(
-        f"cuckoo filter over capacity: eviction chain exceeded {max_kicks} kicks "
+        f"cuckoo filter over capacity: eviction chain exceeded 500 kicks "
         f"at {int((table != 0).sum())}/{table.size} slots — size nbuckets for "
         "<=~0.95 load (a dropped key would be a false negative)"
     )
 
 
-def _insert_hashes(table: np.ndarray, h: np.ndarray, max_kicks: int = 500) -> None:
+def _insert_hashes(table: np.ndarray, h: np.ndarray) -> None:
     """Insert a batch of uint64 hashes. Callers sort the batch first so the
     table layout is a pure function of the key SET (Arrow row order is not
     deterministic across shuffles)."""
@@ -163,7 +163,7 @@ def _insert_hashes(table: np.ndarray, h: np.ndarray, max_kicks: int = 500) -> No
         placed2 = _place_round(table, fp[rem], b2[rem])
         rem = rem[~placed2]
     for j in rem:  # eviction tail — empty at moderate load
-        _kick_insert(table, int(fp[j]), int(b1[j]), int(b2[j]), max_kicks)
+        _kick_insert(table, int(fp[j]), int(b1[j]), int(b2[j]))
 
 
 def _contains(table: np.ndarray, h: np.ndarray) -> np.ndarray:
@@ -304,15 +304,20 @@ def anti_join_cuckoo(
     result equals ``anti_join_exact`` whenever ``filters`` holds every key
     of ``seen``, whatever else it holds (this also makes deletion safe
     end-to-end: a deleted key probes negative and re-enters as new; an
-    fp-collision survivor just pays the residual join). ``temps`` collects the persisted probe intermediate for
-    caller-managed unpersist.
+    fp-collision survivor just pays the residual join).
+
+    The probe output feeds both branches of the result. With ``temps``
+    given it is persisted once and appended there, and the caller
+    unpersists it; without ``temps`` nothing is cached, so no block
+    outlives the returned plan.
 
     ``nshards`` MUST be the modulus used to shard ``seen``: a wrong modulus
     buckets candidates against the wrong filter row. Any filter row whose
     shard id falls outside [0, nshards) fails the probe task
     (modulus-mismatch guard)."""
-    marked = _probe_cogroup(candidates, filters, int(nshards)).persist()
+    marked = _probe_cogroup(candidates, filters, int(nshards))
     if temps is not None:
+        marked = marked.persist()
         temps.append(marked)
     maybe = marked.filter(F.col("_maybe")).drop("_maybe")
     definitely_new = marked.filter(~F.col("_maybe")).drop("_maybe")

@@ -23,12 +23,10 @@ operators generalize it to content identity.
 
 from __future__ import annotations
 
-import re as _re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from maga_spark.operators.text import word_ngrams
+from maga_spark.operators.text import LINE_SPLIT, word_ngrams
 
 
 def portable_hash64(col: Column, salt: str = "") -> Column:
@@ -38,20 +36,15 @@ def portable_hash64(col: Column, salt: str = "") -> Column:
     return F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("long")
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep the min-id representative of each exact-content group."""
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("dup_count"))
+        df.groupBy(F.md5(F.col("text")).alias("content_hash"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("dup_count"))
     )
 
 
-def dedup_lines(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    delim: str = "\n",
-) -> DataFrame:
+def dedup_lines(docs: DataFrame) -> DataFrame:
     """Corpus-global line-level exact dedup (the C4/RefinedWeb rule): every
     line keeps only its FIRST occurrence across the whole corpus, ordered
     by (doc id, position); later occurrences — including repeats inside
@@ -67,8 +60,8 @@ def dedup_lines(
     drop report).
     """
     lines = docs.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.split(F.col(text_col), _re.escape(delim))).alias("_pos", "line"),
+        F.col("doc_id").alias("_id"),
+        F.posexplode(F.split(F.col("text"), LINE_SPLIT)).alias("_pos", "line"),
     )
     keepers = lines.groupBy("line").agg(
         F.min(F.struct(F.col("_id"), F.col("_pos"))).alias("k")
@@ -81,18 +74,18 @@ def dedup_lines(
         )
         .select(
             "_id",
-            F.concat_ws(delim, F.transform("arr", lambda s: s["line"])).alias("text_dedup"),
+            F.concat_ws("\n", F.transform("arr", lambda s: s["line"])).alias("text_dedup"),
             F.size("arr").alias("n_kept"),
         )
     )
     n_total = docs.select(
-        F.col(id_col).alias("_id"),
-        F.size(F.split(F.col(text_col), _re.escape(delim))).alias("n_lines"),
+        F.col("doc_id").alias("_id"),
+        F.size(F.split(F.col("text"), LINE_SPLIT)).alias("n_lines"),
     )
     return (
         n_total.join(rebuilt, "_id", "left")
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             F.coalesce("text_dedup", F.lit("")).alias("text_dedup"),
             F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
             "n_lines",
@@ -100,16 +93,10 @@ def dedup_lines(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    shingle_k: int = 3,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, num_hashes: int = 16) -> DataFrame:
     """``(id, mh0..mh{num_hashes-1})`` MinHash signatures: per seed i, the
     min over the doc's shingles (its distinct lower-cased word
-    ``shingle_k``-grams, ``text.word_ngrams``) of
+    3-grams, ``text.word_ngrams``) of
     ``portable_hash64(shingle, "mh{i}:")`` (DuckDB-reproducible). Docs with
     no shingles get no row.
 
@@ -121,8 +108,8 @@ def minhash_signatures(
     expression tree tiny, combines map-side and shuffles only (id, N
     longs)."""
     sh = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(word_ngrams(F.col(text_col), shingle_k))).alias("_s"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.array_distinct(word_ngrams(F.col("text"), 3))).alias("_s"),
     )
     return sh.groupBy("id").agg(
         *[
@@ -132,14 +119,7 @@ def minhash_signatures(
     )
 
 
-def minhash_band_rows(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-) -> DataFrame:
+def minhash_band_rows(df: DataFrame, num_hashes: int = 16, bands: int = 4) -> DataFrame:
     """``(id, band, bh)`` LSH band rows over ``minhash_signatures`` — the
     shared banding unit of the self-join candidate generator AND the
     incremental near-dup index (one definition, so stored indexes can never
@@ -156,7 +136,7 @@ def minhash_band_rows(
     if num_hashes % bands:
         raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
     r = num_hashes // bands
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
+    sig = minhash_signatures(df, num_hashes)
 
     def bh(b: int) -> Column:
         return F.concat_ws(",", *[F.col(f"mh{b * r + j}").cast("string") for j in range(r)])
@@ -165,19 +145,12 @@ def minhash_band_rows(
     return sig.select("id", F.explode(rows).alias("bb")).select("id", "bb.band", "bb.bh")
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-) -> DataFrame:
+def minhash_lsh_candidates(df: DataFrame, num_hashes: int = 16, bands: int = 4) -> DataFrame:
     """Candidate near-dup pairs (a_id < b_id) that collide in ≥1 LSH band.
 
     Scale shape: explode to (band, band_hash) — one shuffle groups collisions;
     no all-pairs comparison ever happens."""
-    banded = minhash_band_rows(df, id_col, text_col, num_hashes, bands, shingle_k)
+    banded = minhash_band_rows(df, num_hashes, bands)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -191,28 +164,22 @@ def minhash_lsh_candidates(
 def append_to_minhash_index(
     index: DataFrame,
     new_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 16,
     bands: int = 4,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """Index ∪ the new batch's band rows — cost O(batch), no touch of the
     existing rows (append-only partitions on disk). The result is
     row-identical to ``minhash_band_rows`` over the full corpus: banding
     is per-document, so incremental == from-scratch (tested)."""
-    rows = minhash_band_rows(new_docs, id_col, text_col, num_hashes, bands, shingle_k)
+    rows = minhash_band_rows(new_docs, num_hashes, bands)
     return index.unionByName(rows)
 
 
 def query_minhash_index(
     index: DataFrame,
     batch: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 16,
     bands: int = 4,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """Near-dup candidate pairs between a NEW ingest batch and the indexed
     corpus: ``(batch_id, index_id)`` distinct, self-matches dropped. The
@@ -220,7 +187,7 @@ def query_minhash_index(
     collide within the same scheme). One equi-join on ``(band, bh)`` —
     the batch side shuffles O(batch); never all-pairs, never a corpus
     rescan."""
-    qb = minhash_band_rows(batch, id_col, text_col, num_hashes, bands, shingle_k)
+    qb = minhash_band_rows(batch, num_hashes, bands)
     return (
         qb.alias("q")
         .join(index.alias("x"), ["band", "bh"])
@@ -289,11 +256,7 @@ def hamming_band_pairs(
     )
 
 
-def simhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def simhash_signatures(df: DataFrame) -> DataFrame:
     """Charikar simhash per doc as (id, sim) — 100% built-in expressions:
     explode word tokens, hash each with the 60-bit ``portable_hash64``
     (the DuckDB oracle recomputes it value-for-value), bit-vote with one
@@ -301,8 +264,8 @@ def simhash_signatures(
 
     Token weights follow term frequency (duplicates kept, as in the
     reference Charikar construction); docs with no tokens get sim = 0."""
-    tok = F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok")
-    toks = df.select(F.col(id_col).alias("id"), tok).filter(F.col("tok") != "")
+    tok = F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok")
+    toks = df.select(F.col("doc_id").alias("id"), tok).filter(F.col("tok") != "")
     hashed = toks.select("id", portable_hash64(F.col("tok")).alias("hv"))
     votes = hashed.groupBy("id").agg(
         *[
@@ -321,37 +284,31 @@ def simhash_signatures(
     signed = votes.select("id", sig.alias("sim"))
     # empty/whitespace-only docs vote on nothing → sim = 0 (UDF-era contract)
     return (
-        df.select(F.col(id_col).alias("id"))
+        df.select(F.col("doc_id").alias("id"))
         .join(signed, "id", "left")
         .select("id", F.coalesce("sim", F.lit(0).cast("long")).alias("sim"))
     )
 
 
-def simhash_near_dups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    n_bands: int = 4,
-) -> DataFrame:
+def simhash_near_dups(df: DataFrame, max_hamming: int = 3, n_bands: int = 4) -> DataFrame:
     """Pairs with simhash hamming distance ≤ max_hamming; exact pair
     generation via the pigeonhole band join (``hamming_band_pairs``) over
     the 60-bit ``simhash_signatures``."""
     # the band self-join consumes sh on BOTH sides; without a cache each
     # side re-runs the full per-bit vote aggregation over the corpus (one
     # (id, sim) row per doc is tiny next to recomputing)
-    sh = simhash_signatures(df, id_col, text_col).persist()
+    sh = simhash_signatures(df).persist()
     return hamming_band_pairs(
         sh, max_hamming=max_hamming, n_bands=n_bands, total_bits=60, id_col="id", key_col="sim"
     )
 
 
-def _cos_prep(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _cos_prep(emb: DataFrame) -> DataFrame:
     return emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
         F.sqrt(
-            F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x)
+            F.aggregate("embedding", F.lit(0.0), lambda acc, x: acc + x.cast("double") * x)
         ).alias("norm"),
     )
 
@@ -365,18 +322,13 @@ def _pair_cosine() -> Column:
     return dot / (F.col("a.norm") * F.col("b.norm"))
 
 
-def embedding_near_dups(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
+def embedding_near_dups(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Pairs (a_id < b_id) with cosine ≥ threshold — brute force O(n²).
 
     TEST-ORACLE BASELINE ONLY: the production path at scale is
     ``embedding_near_dups_banded`` (sign-LSH candidate generation, no
     crossJoin); this exact form exists to measure its recall."""
-    n = _cos_prep(emb, id_col, vec_col)
+    n = _cos_prep(emb)
     a, b = n.alias("a"), n.alias("b")
     return (
         a.crossJoin(b)
@@ -426,8 +378,6 @@ def sign_bands(
 
 def embedding_near_dups_banded(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     n_bands: int = 8,
     band_width: int = 8,
@@ -441,7 +391,7 @@ def embedding_near_dups_banded(
     brute-force baseline in tests/test_operators.py at 10^4 vectors). With
     planes=None the candidate generation itself is deterministic float-sign
     reads, reproducible in the DuckDB oracle."""
-    prep = _cos_prep(emb, id_col, vec_col)
+    prep = _cos_prep(emb)
     bands = sign_bands(F.col("v"), n_bands, band_width, planes)
     banded = prep.select(
         "id",
@@ -473,10 +423,6 @@ def embedding_near_dups_banded(
 
 def containment_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    w: int = 4,
     min_shared: int = 2,
     min_containment: float = 0.5,
     max_doc_freq: int | None = None,
@@ -490,7 +436,7 @@ def containment_pairs(
     doc wholly embedded in a long one has tiny Jaccard but containment
     ≈ 1) — for training-data curation that case is exactly the boilerplate
     /ToS/license-block class worth stripping. Winnowing guarantees any
-    shared run of ≥ w+k-1 chars leaves at least one common fingerprint,
+    shared run of ≥ ``text.WINNOW_W + text.WINNOW_K - 1`` chars leaves at least one common fingerprint,
     so containment over fingerprint sets tracks containment over text.
 
     Scale shape: explode fingerprints → equi-join on the fingerprint
@@ -503,7 +449,7 @@ def containment_pairs(
     from maga_spark.operators.text import winnow_fingerprint_portable
 
     fps = docs.select(
-        F.col(id_col), winnow_fingerprint_portable(F.col(text_col), k, w).alias("fp")
+        F.col("doc_id"), winnow_fingerprint_portable(F.col("text")).alias("fp")
     )
     # explode_outer + h-not-null instead of plain explode — value-identical
     # (fp never holds NULL elements: every element is conv(md5(non-null
@@ -515,14 +461,14 @@ def containment_pairs(
     # "duplicated UDF evaluation" in expression form; measured 119 s →
     # 1.4 s on the driver bench fixture at sf1.0, where only 202 of 50k
     # scanned rows survive the pushed id filter).
-    ex = fps.select(F.col(id_col), F.explode_outer("fp").alias("h")).filter(
+    ex = fps.select(F.col("doc_id"), F.explode_outer("fp").alias("h")).filter(
         F.col("h").isNotNull()
     )
     # |fp(u)| from the exploded rows (fp is already distinct), BEFORE the
     # doc-freq cap — one fewer evaluation of the winnow expression than
     # size(fp) on a separate branch; empty-fp docs drop out of `ex` but
     # can never reach `shared` anyway
-    sizes = ex.groupBy(id_col).agg(F.count("*").alias("fp_n"))
+    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("fp_n"))
     if max_doc_freq is not None:
         hot = (
             ex.groupBy("h")
@@ -531,8 +477,8 @@ def containment_pairs(
             .select("h")
         )
         ex = ex.join(F.broadcast(hot), "h", "left_anti")
-    a = ex.select(F.col(id_col).alias("u"), "h")
-    b = ex.select(F.col(id_col).alias("v"), "h")
+    a = ex.select(F.col("doc_id").alias("u"), "h")
+    b = ex.select(F.col("doc_id").alias("v"), "h")
     shared = (
         a.join(b, "h")
         .filter(F.col("u") != F.col("v"))
@@ -541,7 +487,7 @@ def containment_pairs(
         .filter(F.col("shared") >= min_shared)
     )
     return (
-        shared.join(sizes.select(F.col(id_col).alias("u"), "fp_n"), "u")
+        shared.join(sizes.select(F.col("doc_id").alias("u"), "fp_n"), "u")
         .withColumn("containment", F.col("shared") / F.col("fp_n"))
         .filter(F.col("containment") >= min_containment)
         .select("u", "v", "shared", F.col("fp_n").alias("fp_u"), "containment")
@@ -552,10 +498,6 @@ def build_fingerprint_index(
     docs: DataFrame,
     table: str,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    w: int = 4,
     n_buckets: int = 16,
     mode: str = "overwrite",
 ) -> None:
@@ -579,8 +521,8 @@ def build_fingerprint_index(
     from maga_spark.operators.text import winnow_fingerprint_portable
 
     ex = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(winnow_fingerprint_portable(F.col(text_col), k, w)).alias("h"),
+        F.col("doc_id"),
+        F.explode(winnow_fingerprint_portable(F.col("text"))).alias("h"),
     )
     (
         ex.write.mode(mode)
@@ -637,8 +579,6 @@ def containment_pairs_from_index(
 def semantic_dedup(
     emb: DataFrame,
     qcents,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     tau_num: int = 4,
     tau_den: int = 5,
     quant: int = 1000,
@@ -677,7 +617,7 @@ def semantic_dedup(
     qcents = list(qcents)
     if not qcents:
         raise ValueError("semantic_dedup needs at least one centroid")
-    qe = quantize_vec_col(F.col(vec_col), float(quant))
+    qe = quantize_vec_col(F.col("embedding"), float(quant))
     scores = F.array(
         *[
             2.0 * _dot(qe, F.array(*[F.lit(float(x)) for x in c]))
@@ -687,7 +627,7 @@ def semantic_dedup(
     )
     cid = (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
     assigned = emb.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), cid.alias("cid")
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v"), cid.alias("cid")
     )
     a = assigned.select("cid", F.col("id").alias("keep_id"), F.col("v").alias("_va"))
     b = assigned.select("cid", F.col("id").alias("drop_id"), F.col("v").alias("_vb"))

@@ -31,6 +31,11 @@ from pyspark.sql import functions as F
 from maga_spark.operators.observe import RobustObservation, obs_name
 from maga_spark.plans.ckpt import local_ckpt, release
 
+# pagerank's integer arithmetic: ranks sum to about RANK_SCALE, and the
+# damping factor is the rational DAMPING_NUM / DAMPING_DEN
+RANK_SCALE = 10**12
+DAMPING_NUM, DAMPING_DEN = 85, 100
+
 
 def _sym(e: DataFrame) -> DataFrame:
     """Both orientations of an edge set, self-loops dropped, deduped."""
@@ -51,12 +56,7 @@ def _min_star(e: DataFrame) -> DataFrame:
     return e.groupBy("u").agg(F.least(F.first("u"), F.min("v")).alias("m"))
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int = 25,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(src, dst) pairs → (vertex, component) labels, component = minimum
     vertex id of the connected component. Isolated vertices don't appear
     in ``edges`` and thus not in the result (label them ``vertex`` by a
@@ -65,10 +65,10 @@ def connected_components(
     Each round: large-star hangs every neighbor v > u onto min(Γ⁺(u)),
     small-star re-hangs the v ≤ u side; the edge set monotonically
     contracts to stars. Convergence = the (sorted) edge checksum repeats;
-    asserts if ``max_iters`` rounds don't converge (log₂-ish expected)."""
-    e = _sym(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
+    asserts if 25 rounds don't converge (log₂-ish expected)."""
+    e = _sym(edges.select(F.col("src").alias("u"), F.col("dst").alias("v")))
     prev = None
-    for _ in range(max_iters):
+    for _ in range(25):
         # large-star: for v in Γ(u), v > u: (v, min(Γ⁺(u)))
         sym = _sym(e)
         large = (
@@ -117,7 +117,7 @@ def connected_components(
             break
         prev = cur
     else:
-        raise AssertionError(f"connected_components: no convergence in {max_iters} rounds")
+        raise AssertionError(f"connected_components: no convergence in 25 rounds")
     # converged edge set is a per-component star rooted at the minimum id;
     # _sym puts every vertex (roots included) on the u side, so one
     # closed-neighborhood min labels everyone — roots label themselves.
@@ -126,19 +126,12 @@ def connected_components(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 5,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    scale: int = 10**12,
-) -> DataFrame:
-    """Host-graph PageRank → (vertex, rank_scaled) with INTEGER-EXACT
-    arithmetic: ranks are ``scale``-scaled BIGINTs, per-edge contributions
+def pagerank(edges: DataFrame, iters: int = 5) -> DataFrame:
+    """Host-graph PageRank over ``(src, dst)`` edges → (vertex, rank_scaled)
+    with INTEGER-EXACT
+    arithmetic: ranks are ``RANK_SCALE``-scaled BIGINTs, per-edge contributions
     use integer division, and the damping factor is the rational
-    ``damping_num/damping_den`` — so every engine that runs the same
+    ``DAMPING_NUM/DAMPING_DEN`` — so every engine that runs the same
     recurrence produces bit-identical ranks regardless of addition order
     (float PageRank sums are order-dependent and can never hash-match
     across engines; the truncation this trades away is < outdeg ulps per
@@ -160,10 +153,10 @@ def pagerank(
     is the one-time vertex count.
 
     Semantics: uniform init 1/N; dangling vertices (no out-edges)
-    redistribute their mass uniformly; sum of ranks ≈ scale (minus
+    redistribute their mass uniformly; sum of ranks ≈ RANK_SCALE (minus
     integer-truncation dust). ``edges`` are deduped; self-loops count.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
+    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).distinct()
     verts = local_ckpt(
         e.select(F.col("u").alias("vertex"))
         .union(e.select(F.col("v").alias("vertex")))
@@ -175,8 +168,8 @@ def pagerank(
     outdeg = e.groupBy(F.col("u").alias("vertex")).agg(F.count("*").alias("deg"))
     vd = local_ckpt(verts.join(outdeg, "vertex", "left"))
     release(verts)
-    ranks = vd.withColumn("r", F.lit(scale // n).cast("long"))
-    base = ((damping_den - damping_num) * (scale // n)) // damping_den
+    ranks = vd.withColumn("r", F.lit(RANK_SCALE // n).cast("long"))
+    base = ((DAMPING_DEN - DAMPING_NUM) * (RANK_SCALE // n)) // DAMPING_DEN
     for _ in range(iters):
         contribs = (
             ranks.filter(F.col("deg").isNotNull())
@@ -197,8 +190,8 @@ def pagerank(
                 (
                     F.lit(base)
                     + F.expr(
-                        f"({damping_num} * (coalesce(csum, 0L)"
-                        f" + _dang div {n})) div {damping_den}"
+                        f"({DAMPING_NUM} * (coalesce(csum, 0L)"
+                        f" + _dang div {n})) div {DAMPING_DEN}"
                     )
                 ).cast("long").alias("r"),
             )
@@ -209,15 +202,7 @@ def pagerank(
     return ranks.select("vertex", F.col("r").alias("rank_scaled"))
 
 
-def authority_blend(
-    frontier: DataFrame,
-    ranks: DataFrame,
-    host_col: str = "host",
-    key_col: str = "priority_key",
-    n_per_host: int = 2,
-    n_tiers: int = 8,
-    scale: int = 10**12,
-) -> DataFrame:
+def authority_blend(frontier: DataFrame, ranks: DataFrame, n_per_host: int = 2) -> DataFrame:
     """Blend link-graph authority (``pagerank`` output) into frontier
     ordering — (host, auth_tier, key, host_rank) for each host's top
     ``n_per_host`` candidates.
@@ -226,8 +211,8 @@ def authority_blend(
     (maga/crawler.py:121-126); a 10^10-URL frontier must RANK, and pure
     XOR ordering (operators/topk.py) treats all hosts alike — this
     operator is the second signal: hosts with more link-graph mass get
-    scheduled first. Authority is coarsened to ``n_tiers`` integer tiers
-    (``rank_scaled div (scale/n_tiers)``): tiers keep the blend a pure
+    scheduled first. Authority is coarsened to 8 integer tiers
+    (``rank_scaled div (RANK_SCALE/8)``): tiers keep the blend a pure
     BIGINT sort key (no float weights ⇒ bit-reproducible, oracle-able),
     and coarse-first ordering is what authority is FOR — separating
     hubs from the long tail, not micro-ordering within it. Within a
@@ -246,19 +231,19 @@ def authority_blend(
     # integer div (not `/` + cast): float division then truncation could
     # disagree with the oracle's `//` on tier-boundary values
     tier = F.coalesce(
-        F.expr(f"rank_scaled div {scale // n_tiers}"), F.lit(0)
+        F.expr(f"rank_scaled div {RANK_SCALE // 8}"), F.lit(0)
     ).cast("long")
-    w = Window.partitionBy(host_col).orderBy(F.col(key_col).asc())
+    w = Window.partitionBy("host").orderBy(F.col("priority_key").asc())
     return (
         frontier.join(
-            ranks.select(F.col("vertex").alias(host_col), "rank_scaled"),
-            host_col,
+            ranks.select(F.col("vertex").alias("host"), "rank_scaled"),
+            "host",
             "left",
         )
         .select(
-            F.col(host_col),
+            F.col("host"),
             tier.alias("auth_tier"),
-            F.col(key_col),
+            F.col("priority_key"),
             F.row_number().over(w).cast("long").alias("host_rank"),
         )
         .filter(F.col("host_rank") <= n_per_host)

@@ -93,41 +93,31 @@ def resolve_href(base_canon: Column, href: Column) -> Column:
     return url_canonicalize(resolved)
 
 
-def extract_links(
-    pages: DataFrame,
-    html_col: str = "html",
-    base_col: str = "url_canon",
-    out_col: str = "link",
-) -> DataFrame:
+def extract_links(pages: DataFrame) -> DataFrame:
     """(page, html) → one row per distinct resolved link: regexp scan →
     explode → resolve → canonicalize → drop nulls. The explode is the only
     row-multiplying step and feeds straight into the frontier absorb's
     dedup/anti-join, mirroring the compact-node explode O-13."""
-    hrefs = F.regexp_extract_all(F.col(html_col), F.lit(HREF_RX), 1)
+    hrefs = F.regexp_extract_all(F.col("html"), F.lit(HREF_RX), 1)
     return (
-        pages.select(F.col(base_col), F.explode(hrefs).alias("_href"))
-        .withColumn(out_col, resolve_href(F.col(base_col), F.col("_href")))
-        .filter(F.col(out_col).isNotNull())
-        .select(base_col, out_col)
+        pages.select(F.col("url_canon"), F.explode(hrefs).alias("_href"))
+        .withColumn("link", resolve_href(F.col("url_canon"), F.col("_href")))
+        .filter(F.col("link").isNotNull())
+        .select("url_canon", "link")
         .distinct()
     )
 
 
-def urls_from_links(links: DataFrame, out_col: str = "url") -> DataFrame:
+def urls_from_links(links: DataFrame) -> DataFrame:
     """Bridge extracted links into the crawl engine's absorb input (one
     ``url`` column — the same contract as streaming.ingest's
     urls_from_announces / urls_from_nodes): fetched pages' hrefs become
     frontier candidates and flow through canonicalize → seen anti-join →
     robots → politeness like every other discovery channel (O-39)."""
-    return links.select(F.col("link").alias(out_col))
+    return links.select(F.col("link").alias("url"))
 
 
-def resolve_redirects(
-    redirects: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_hops: int = 32,
-) -> DataFrame:
+def resolve_redirects(redirects: DataFrame, max_hops: int = 32) -> DataFrame:
     """Follow HTTP-redirect chains to their terminal URL in O(log L)
     shuffles — (src, dst) one-hop map → (src, final_url, hops, is_cycle).
 
@@ -154,7 +144,7 @@ def resolve_redirects(
     import math
 
     hop1 = local_ckpt(
-        redirects.groupBy(F.col(src).alias("s")).agg(F.min(F.col(dst)).alias("t"))
+        redirects.groupBy(F.col("src").alias("s")).agg(F.min(F.col("dst")).alias("t"))
     )
     f = hop1.withColumn("hops", F.lit(1).cast("long"))
     for _ in range(max(1, math.ceil(math.log2(max(2, max_hops))))):
@@ -201,12 +191,7 @@ def xml_unescape(col: Column) -> Column:
     return F.replace(c, F.lit("&amp;"), F.lit("&"))
 
 
-def parse_sitemap(
-    pages: DataFrame,
-    url_col: str = "url",
-    body_col: str = "body",
-    out_col: str = "loc",
-) -> DataFrame:
+def parse_sitemap(pages: DataFrame) -> DataFrame:
     """Sitemap XML → (sitemap_url, loc, is_index) rows, pure expressions.
 
     Sitemaps are the crawl frontier's SECOND discovery channel next to
@@ -225,18 +210,18 @@ def parse_sitemap(
     the extracted locs move). Entity-unescape happens AFTER extraction,
     on the short loc strings. Output locs feed urls_from_links → the
     absorb like every discovery channel (O-39)."""
-    locs = F.regexp_extract_all(F.col(body_col), F.lit(SITEMAP_LOC_RX), 1)
-    is_index = F.col(body_col).rlike(r"(?is)<\s*sitemapindex[\s>]")
+    locs = F.regexp_extract_all(F.col("body"), F.lit(SITEMAP_LOC_RX), 1)
+    is_index = F.col("body").rlike(r"(?is)<\s*sitemapindex[\s>]")
     return (
         pages.select(
-            F.col(url_col).alias("sitemap_url"),
+            F.col("url").alias("sitemap_url"),
             is_index.alias("is_index"),
             F.explode(locs).alias("_raw"),
         )
         .filter(F.length("_raw") > 0)
         .select(
             "sitemap_url",
-            xml_unescape(F.col("_raw")).alias(out_col),
+            xml_unescape(F.col("_raw")).alias("loc"),
             "is_index",
         )
     )
@@ -247,11 +232,7 @@ def parse_sitemap(
 ANCHOR_RX = r"""(?is)<a\b[^>]*\bhref\s*=\s*["'][^"']*["'][^>]*>.*?</a\s*>"""
 
 
-def extract_anchors(
-    pages: DataFrame,
-    html_col: str = "html",
-    base_col: str = "url_canon",
-) -> DataFrame:
+def extract_anchors(pages: DataFrame) -> DataFrame:
     """(page, html) → (page, link, anchor_text) — link extraction WITH the
     anchor's visible text, the classic web-scale relevance signal (anchor
     text describes the TARGET page; aggregated per target it is a labeled
@@ -265,7 +246,7 @@ def extract_anchors(
     markup (``<b>…``) is stripped with the same tag regex as
     ``text.html_to_text`` and whitespace-collapsed. Pure expressions
     end-to-end; empty anchor texts (image links) survive as ''."""
-    anchors = F.regexp_extract_all(F.col(html_col), F.lit(ANCHOR_RX), 0)
+    anchors = F.regexp_extract_all(F.col("html"), F.lit(ANCHOR_RX), 0)
     el = F.col("_el")
     href = F.regexp_extract(el, r"""(?is)\bhref\s*=\s*["']([^"']*)["']""", 1)
     inner = F.regexp_extract(el, r"(?is)>(.*)</a\s*>$", 1)
@@ -273,24 +254,19 @@ def extract_anchors(
         F.regexp_replace(F.regexp_replace(inner, r"(?s)<[^>]*>", " "), r"\s+", " ")
     )
     return (
-        pages.select(F.col(base_col), F.explode(anchors).alias("_el"))
+        pages.select(F.col("url_canon"), F.explode(anchors).alias("_el"))
         .select(
-            F.col(base_col),
-            resolve_href(F.col(base_col), href).alias("link"),
+            F.col("url_canon"),
+            resolve_href(F.col("url_canon"), href).alias("link"),
             text.alias("anchor_text"),
         )
         .filter(F.col("link").isNotNull())
     )
 
 
-def anchor_text_profile(
-    anchors: DataFrame,
-    link_col: str = "link",
-    text_col: str = "anchor_text",
-    top_k: int = 3,
-) -> DataFrame:
+def anchor_text_profile(anchors: DataFrame) -> DataFrame:
     """Aggregate anchor texts per TARGET url → (link, n_refs, top_terms):
-    inbound-reference count and the ``top_k`` most frequent lower-cased
+    inbound-reference count and the 3 most frequent lower-cased
     anchor terms (count DESC, term ASC — a pure-integer order, no float
     tie-break). Two map-side-combinable aggregations + one small window
     over per-(link, term) rows already reduced to ≤ vocab cardinality —
@@ -300,19 +276,19 @@ def anchor_text_profile(
     from pyspark.sql import Window
 
     terms = anchors.select(
-        F.col(link_col).alias("link"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),
+        "link",
+        F.explode(F.split(F.lower(F.trim(F.col("anchor_text"))), r"\s+")).alias("term"),
     ).filter(F.col("term") != "")
     counts = terms.groupBy("link", "term").agg(F.count("*").alias("tf"))
     w = Window.partitionBy("link").orderBy(F.col("tf").desc(), F.col("term").asc())
     tops = (
         counts.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= top_k)
+        .filter(F.col("_rk") <= 3)
         .groupBy("link")
         .agg(F.array_sort(F.collect_list(F.struct("_rk", "term"))).alias("_tt"))
         .select("link", F.transform("_tt", lambda s: s["term"]).alias("top_terms"))
     )
-    refs = anchors.groupBy(F.col(link_col).alias("link")).agg(
+    refs = anchors.groupBy("link").agg(
         F.count("*").cast("long").alias("n_refs")
     )
     return refs.join(tops, "link", "left").select(
@@ -336,13 +312,7 @@ def url_template(url_col: Column) -> Column:
     return t
 
 
-def detect_traps(
-    fetches: DataFrame,
-    url_col: str = "url",
-    content_col: str = "content_hash",
-    min_urls: int = 20,
-    max_content_ratio: int = 4,
-) -> DataFrame:
+def detect_traps(fetches: DataFrame, min_urls: int = 20, max_content_ratio: int = 4) -> DataFrame:
     """Crawler-trap detection per URL template →
     ``(template, n_urls, n_content, is_trap)``.
 
@@ -362,9 +332,9 @@ def detect_traps(
     counts are exact distincts WITHIN the already-grouped family (the
     family is the shuffle key — no global distinct)."""
     t = fetches.select(
-        url_template(F.col(url_col)).alias("template"),
-        F.col(url_col).alias("_u"),
-        F.col(content_col).alias("_c"),
+        url_template(F.col("url")).alias("template"),
+        F.col("url").alias("_u"),
+        F.col("content_hash").alias("_c"),
     )
     return (
         t.groupBy("template")
@@ -443,11 +413,7 @@ def registrable_domain(
     return reg
 
 
-def domains_of(
-    df: DataFrame,
-    host_col: str = "host",
-    out_col: str = "reg_domain",
-    suffixes: tuple[str, ...] = DEFAULT_PUBLIC_SUFFIXES,
-) -> DataFrame:
-    """Column-level ``registrable_domain`` as a DataFrame stage."""
-    return df.withColumn(out_col, registrable_domain(F.col(host_col), suffixes))
+def domains_of(df: DataFrame) -> DataFrame:
+    """Column-level ``registrable_domain`` of ``host`` as a DataFrame stage
+    (appends ``reg_domain``)."""
+    return df.withColumn("reg_domain", registrable_domain(F.col("host")))

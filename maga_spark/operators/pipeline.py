@@ -29,14 +29,11 @@ from maga_spark.operators.text import language_id, token_count
 
 def curate_corpus(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     lang: str | None = "en",
     min_tokens: int = 5,
     max_punct_ratio: float = 0.2,
     num_hashes: int = 8,
     n_bands: int = 4,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """Curated subset of ``docs``: language-filtered, quality-gated,
     exact-deduped (min-id representative per content hash), then minhash-
@@ -44,7 +41,7 @@ def curate_corpus(
     with a smaller-id doc — the deterministic keep-smallest rule).
 
     Returns the surviving rows with all original columns plus
-    ``lang_pred``. Docs with no shingles (fewer than ``shingle_k`` words)
+    ``lang_pred``. Docs with no shingles (fewer than 3 words)
     skip the near-dup stage — they cannot collide. The minhash values are
     the md5-prefix ones a SQL oracle reproduces bit-for-bit.
 
@@ -59,11 +56,11 @@ def curate_corpus(
     per-session cost that is data-size-independent and disappears at any
     real corpus scale.
     """
-    t = F.col(text_col)
+    t = F.col("text")
 
     # stage 1+2: language + quality — fused by Catalyst into one projection
     # over the scan; nothing materializes between them
-    d = language_id(docs, text_col)
+    d = language_id(docs)
     if lang is not None:
         d = d.filter(F.col("lang_pred") == lang)
     n_punct = F.regexp_count(t, F.lit(r"[^a-zA-Z0-9\s]"))
@@ -74,7 +71,7 @@ def curate_corpus(
 
     # stage 3: exact dedup — one shuffle on the content hash; row_number
     # (not groupBy+rejoin) keeps every original column in the same pass
-    w = Window.partitionBy(F.md5(t)).orderBy(F.col(id_col).asc())
+    w = Window.partitionBy(F.md5(t)).orderBy(F.col("doc_id").asc())
     d = d.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
     d = d.persist()
 
@@ -86,18 +83,13 @@ def curate_corpus(
     # normal for web text), so no forced broadcast hint: AQE auto-broadcasts
     # small drop sets from runtime sizes and shuffles when they aren't
     # (the same adaptive rule as the engine's host-keyed joins)
-    dropped = minhash_lsh_candidates(
-        d, id_col, text_col, num_hashes, n_bands, shingle_k
-    ).select(F.col("b_id").alias(id_col))
-    return d.join(dropped, id_col, "left_anti")
+    dropped = minhash_lsh_candidates(d, num_hashes, n_bands).select(F.col("b_id").alias("doc_id"))
+    return d.join(dropped, "doc_id", "left_anti")
 
 
 def curate_images(
     images: DataFrame,
     *,
-    id_col: str = "image_id",
-    caption_col: str = "caption",
-    phash_col: str = "phash",
     allowed_fmts: tuple[str, ...] = ("raw", "rlez", "q8"),
     min_side: int = 8,
     max_aspect: float = 4.0,
@@ -141,24 +133,24 @@ def curate_images(
         & (side_max.cast("double") <= F.lit(float(max_aspect)) * side_min.cast("double"))
     )
     # stage 2: caption gate — fused by Catalyst into the same projection
-    keep = language_id(keep, caption_col)
+    keep = language_id(keep, "caption")
     if lang is not None:
         keep = keep.filter(F.col("lang_pred") == lang)
-    keep = keep.filter(token_count(F.col(caption_col)) >= min_caption_tokens)
+    keep = keep.filter(token_count(F.col("caption")) >= min_caption_tokens)
 
     # stage 3: caption exact-dedup — one shuffle on the caption hash,
     # row_number keeps every original column in the same pass
-    w = Window.partitionBy(F.md5(F.col(caption_col))).orderBy(F.col(id_col).asc())
+    w = Window.partitionBy(F.md5(F.col("caption"))).orderBy(F.col("image_id").asc())
     keep = keep.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
     keep = keep.persist()
 
     # stage 4: perceptual near-dup removal — exact pigeonhole banding on the
     # phash (slim (id, phash) rows only), keep-smallest-id rule
-    keyed = keep.select(F.col(id_col).alias("id"), F.col(phash_col).alias("k"))
+    keyed = keep.select(F.col("image_id").alias("id"), F.col("phash").alias("k"))
     pairs = hamming_band_pairs(
         keyed, max_hamming=max_hamming, n_bands=n_bands, total_bits=phash_bits
     )
     # same adaptive-join rule as curate_corpus: the drop set is unbounded
     # on duplication-heavy corpora, so AQE picks broadcast vs shuffle
-    dropped = pairs.select(F.col("b_id").alias(id_col)).distinct()
-    return keep.join(dropped, id_col, "left_anti")
+    dropped = pairs.select(F.col("b_id").alias("image_id")).distinct()
+    return keep.join(dropped, "image_id", "left_anti")

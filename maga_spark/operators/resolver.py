@@ -56,29 +56,24 @@ def fake_resolve(host: str) -> str | None:
     return f"10.{d[0]}.{d[1]}.{d[2]}"
 
 
-def resolve_hosts(
-    df: DataFrame,
-    host_col: str = "host",
-    out_col: str = "ip",
-    resolver: Callable[[str], str | None] | None = None,
-) -> DataFrame:
-    """Append ``out_col`` resolved from ``host_col``; NULL when resolution
+def resolve_hosts(df: DataFrame, resolver: Callable[[str], str | None] | None = None) -> DataFrame:
+    """Append ``ip`` resolved from ``host``; NULL when resolution
     fails. Resolution cost is O(distinct hosts), not O(rows)."""
     fn = resolver or fake_resolve
-    distinct = df.select(host_col).distinct()
+    distinct = df.select("host").distinct()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cache: dict[str, str | None] = {}
         for pdf in batches:
             ips = []
-            for h in pdf[host_col]:
+            for h in pdf["host"]:
                 if h not in cache:
                     try:
                         cache[h] = fn(h)
                     except Exception:
                         cache[h] = None  # gaierror-style silent skip
                 ips.append(cache[h])
-            yield pd.DataFrame({host_col: pdf[host_col], out_col: ips})
+            yield pd.DataFrame({"host": pdf["host"], "ip": ips})
 
-    resolved = distinct.mapInPandas(gen, f"{host_col} string, {out_col} string")
-    return df.join(F.broadcast(resolved), host_col, "left")
+    resolved = distinct.mapInPandas(gen, "host string, ip string")
+    return df.join(F.broadcast(resolved), "host", "left")

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 RULES_SCHEMA = "host string, pattern string, rx string, spec int, allow boolean"
+# the user-agent token this crawler matches robots.txt groups by
+AGENT = "magaspark"
 
 # regex metacharacters to neutralize in robots patterns (everything except
 # the two robots-special chars * and $, handled structurally below)
@@ -140,20 +142,15 @@ def parse_robots_delay(text: str, agent: str) -> float | None:
     return min(delays) if delays else None
 
 
-def parse_crawl_delays(
-    df: DataFrame,
-    host_col: str = "host",
-    text_col: str = "robots_txt",
-    agent: str = "magaspark",
-) -> DataFrame:
+def parse_crawl_delays(df: DataFrame) -> DataFrame:
     """(host, robots_txt) → (host, crawl_delay double) for hosts that set
-    one — host-cardinality input, Arrow-batched like ``parse_robots``."""
+    one for ``AGENT`` — host-cardinality input, Arrow-batched like ``parse_robots``."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             hosts, delays = [], []
-            for host, text in zip(pdf[host_col], pdf[text_col]):
-                d = parse_robots_delay(text or "", agent)
+            for host, text in zip(pdf["host"], pdf["robots_txt"]):
+                d = parse_robots_delay(text or "", AGENT)
                 if d is not None:
                     hosts.append(host)
                     delays.append(d)
@@ -162,40 +159,30 @@ def parse_crawl_delays(
     return df.mapInPandas(fn, "host string, crawl_delay double")
 
 
-def rates_from_delays(
-    politeness: DataFrame,
-    delays: DataFrame,
-    rate_col: str = "rate",
-    min_rate: float = 1e-3,
-) -> DataFrame:
+def rates_from_delays(politeness: DataFrame, delays: DataFrame) -> DataFrame:
     """Fold robots ``Crawl-delay`` into the engine's per-host politeness
     table: a host's token-refill rate becomes min(configured rate,
     1/delay) — the crawl never exceeds what the host asked for, and hosts
     without a delay keep their configured rate. Left join on ``host``
     (AQE side choice, same adaptive-host rule as the engine: never force a
-    broadcast of unbounded host-cardinality state); ``min_rate`` floors
-    pathological delays so a 10^6-second delay can't divide to denormals.
+    broadcast of unbounded host-cardinality state); a 1e-3/s rate floor
+    stops pathological delays so a 10^6-second delay can't divide to denormals.
     """
     d = delays.select("host", F.col("crawl_delay").alias("_cd"))
     return (
         politeness.join(d, "host", "left")
         .withColumn(
-            rate_col,
+            "rate",
             F.when(
                 F.col("_cd").isNotNull() & (F.col("_cd") > 0),
-                F.least(F.col(rate_col), F.greatest(F.lit(1.0) / F.col("_cd"), F.lit(min_rate))),
-            ).otherwise(F.col(rate_col)),
+                F.least(F.col("rate"), F.greatest(F.lit(1.0) / F.col("_cd"), F.lit(1e-3))),
+            ).otherwise(F.col("rate")),
         )
         .drop("_cd")
     )
 
 
-def parse_robots(
-    df: DataFrame,
-    host_col: str = "host",
-    text_col: str = "robots_txt",
-    agent: str = "magaspark",
-) -> DataFrame:
+def parse_robots(df: DataFrame, agent: str = AGENT) -> DataFrame:
     """(host, robots_txt) → RULES_SCHEMA rows, Arrow-batched. Input
     cardinality is hosts (one robots.txt each), so this never touches the
     per-URL hot path; NULL/empty text yields no rules (allow-all)."""
@@ -203,7 +190,7 @@ def parse_robots(
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in ("host", "pattern", "rx", "spec", "allow")}
-            for host, text in zip(pdf[host_col], pdf[text_col]):
+            for host, text in zip(pdf["host"], pdf["robots_txt"]):
                 if not text:
                     continue
                 for p, rx, spec, allow in parse_robots_text(text, agent):
@@ -217,35 +204,28 @@ def parse_robots(
     return df.mapInPandas(fn, RULES_SCHEMA)
 
 
-def robots_gate(
-    urls: DataFrame,
-    rules: DataFrame,
-    host_col: str = "host",
-    path_col: str = "path",
-    out_col: str = "allowed",
-) -> DataFrame:
+def robots_gate(urls: DataFrame, rules: DataFrame) -> DataFrame:
     """Per-URL RFC 9309 verdict as a pure-expression plan (the 10^10-row
-    hot path). ``rules`` is RULES_SCHEMA (or any frame with host/rx/spec/
+    hot path): appends ``allowed`` to ``urls`` (``host``, ``path``).
+    ``rules`` is RULES_SCHEMA (or any frame with host/rx/spec/
     allow). Longest-match wins; ``allow`` wins specificity ties (struct
     max over (spec, allow)); no matching rule or unlisted host → allowed.
     """
     per_host = rules.groupBy(F.col("host").alias("_rhost")).agg(
         F.collect_list(F.struct("spec", "allow", "rx")).alias("_rules")
     )
-    joined = urls.join(per_host, urls[host_col] == per_host["_rhost"], "left")
+    joined = urls.join(per_host, urls["host"] == per_host["_rhost"], "left")
     matched = F.filter(
-        "_rules", lambda r: F.regexp_like(F.col(path_col), r["rx"])
+        "_rules", lambda r: F.regexp_like(F.col("path"), r["rx"])
     )
     winner = F.array_max(matched)
     verdict = F.when(
         F.col("_rules").isNull() | (F.size(matched) == 0), F.lit(True)
     ).otherwise(winner["allow"])
-    return joined.withColumn(out_col, verdict).drop("_rhost", "_rules")
+    return joined.withColumn("allowed", verdict).drop("_rhost", "_rules")
 
 
-def sitemaps_from_robots(
-    robots: DataFrame, host_col: str = "host", text_col: str = "robots_txt"
-) -> DataFrame:
+def sitemaps_from_robots(robots: DataFrame) -> DataFrame:
     """RFC 9309 §2.3 ``Sitemap:`` lines → (host, sitemap_url) rows, pure
     expressions — the third discovery channel's SEED list: robots.txt is
     already fetched once per host for the gate, and its Sitemap records
@@ -257,8 +237,8 @@ def sitemaps_from_robots(
     whole-stage codegen (``regexp_extract_all`` + explode; the regex is
     backreference-free for the DuckDB oracle's RE2)."""
     urls = F.regexp_extract_all(
-        F.col(text_col), F.lit(r"(?im)^[ \t]*sitemap[ \t]*:[ \t]*(\S+)"), 1
+        F.col("robots_txt"), F.lit(r"(?im)^[ \t]*sitemap[ \t]*:[ \t]*(\S+)"), 1
     )
     return robots.select(
-        F.col(host_col), F.explode(urls).alias("sitemap_url")
+        F.col("host"), F.explode(urls).alias("sitemap_url")
     ).filter(F.length("sitemap_url") > 0)

@@ -62,8 +62,6 @@ def weighted_sample(
     df: DataFrame,
     weight_num: Column,
     weight_den: int,
-    id_col: str = "doc_id",
-    salt: str = "wsmp:",
     out_col: str | None = None,
 ) -> DataFrame:
     """Per-row-probability Bernoulli draw: keep a row with probability
@@ -74,7 +72,7 @@ def weighted_sample(
     per-stratum quota: each document's own score sets its own odds, yet
     the draw stays deterministic (hash-keyed, no RNG) and engine-portable.
 
-    Acceptance rule: ``hash(salt||id) < (2^60 // den) · w`` — the
+    Acceptance rule: ``hash("wsmp:"||doc_id) < (2^60 // den) · w`` — the
     division happens on the CONSTANT first, so the comparison is exact
     int64 algebra with no overflow ((2^60//den)·w ≤ 2^60 for w ≤ den);
     the quantization moves each row's acceptance probability by less than
@@ -82,7 +80,7 @@ def weighted_sample(
     identically in every engine, which is what the oracle hashes.
 
     Subset-monotone in the weight: raising a row's w can only ADD it to
-    the sample (same salt) — a recalibrated quality model that only
+    the sample — a recalibrated quality model that only
     raises scores never un-picks processed rows. Scale shape: pure
     per-row filter, zero shuffle, composes with scan pushdown.
 
@@ -94,7 +92,7 @@ def weighted_sample(
     # clamp to [0, den]: an out-of-range score must mean "never"/"always",
     # not an int64 overflow in unit·w (unit ≈ 2^60/den, so w ≫ den would)
     w_eff = F.least(F.greatest(weight_num.cast("long"), F.lit(0)), F.lit(weight_den))
-    verdict = sample_key(F.col(id_col), salt) < F.lit(unit) * w_eff
+    verdict = sample_key(F.col("doc_id"), "wsmp:") < F.lit(unit) * w_eff
     if out_col is not None:
         return df.withColumn(out_col, verdict)
     return df.filter(verdict)
@@ -105,8 +103,6 @@ def sample_per_stratum(
     n_per: int,
     stratum_col: str = "source",
     id_col: str = "doc_id",
-    salt: str = "smp:",
-    out_rank: str = "draw_rank",
 ) -> DataFrame:
     """Exactly ``n_per`` rows per stratum (fewer iff the stratum is
     smaller), chosen by ranking the stratum's rows on the uniform hash —
@@ -116,20 +112,15 @@ def sample_per_stratum(
     the sample NESTED: rank ≤ m is precisely the m-per-stratum sample, so
     one pass serves every budget below ``n_per``."""
     w = Window.partitionBy(stratum_col).orderBy(
-        sample_key(F.col(id_col), salt).asc(), F.col(id_col).asc()
+        sample_key(F.col(id_col), "smp:").asc(), F.col(id_col).asc()
     )
     return (
-        df.withColumn(out_rank, F.row_number().over(w))
-        .filter(F.col(out_rank) <= n_per)
+        df.withColumn("draw_rank", F.row_number().over(w))
+        .filter(F.col("draw_rank") <= n_per)
     )
 
 
-def kmv_distinct_estimate(
-    df: DataFrame,
-    value_col: str,
-    k: int = 256,
-    salt: str = "kmv:",
-) -> DataFrame:
+def kmv_distinct_estimate(df: DataFrame, value_col: str, k: int = 256) -> DataFrame:
     """K-minimum-values distinct-count estimate → one row
     ``(kth_min, n_mins, est_distinct)`` (Bar-Yossef et al. 2002; the
     KMV/bottom-k sketch behind theta sketches).
@@ -155,7 +146,7 @@ def kmv_distinct_estimate(
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     hashes = df.select(
-        portable_hash64(F.col(value_col).cast("string"), salt=salt).alias("h")
+        portable_hash64(F.col(value_col).cast("string"), salt="kmv:").alias("h")
     ).distinct()
     mins = hashes.orderBy(F.col("h").asc()).limit(k)
     return mins.agg(
@@ -172,13 +163,7 @@ def kmv_distinct_estimate(
     )
 
 
-def mixture_rates(
-    stats: DataFrame,
-    budget_tokens: int,
-    source_col: str = "source",
-    tokens_col: str = "tokens",
-    weight_col: str = "weight",
-) -> DataFrame:
+def mixture_rates(stats: DataFrame, budget_tokens: int) -> DataFrame:
     """Mixture solver: turn per-source token inventories plus target
     mixture WEIGHTS into the per-source sampling RATES a run applies —
     the missing step between the inventory report (mixture_report) and
@@ -209,9 +194,9 @@ def mixture_rates(
             f"budget_tokens must be <= 2^42 (got {budget_tokens}); "
             "split larger budgets across shards first"
         )
-    tot = stats.agg(F.sum(F.col(weight_col)).cast("long").alias("_tw"))
+    tot = stats.agg(F.sum(F.col("weight")).cast("long").alias("_tw"))
     s = stats.join(F.broadcast(tot))
-    desired = F.expr(f"({budget_tokens}L * {weight_col}) div _tw")
+    desired = F.expr(f"({budget_tokens}L * weight) div _tw")
     return (
         s.withColumn("_desired", desired)
         .withColumn(
@@ -222,15 +207,15 @@ def mixture_rates(
             F.least(
                 F.lit(1_000_000).cast("long"),
                 F.coalesce(
-                    F.expr(f"(_desired * 1000000L) div nullif({tokens_col}, 0L)"),
+                    F.expr(f"(_desired * 1000000L) div nullif(tokens, 0L)"),
                     F.lit(0),
                 ),
             ).cast("long"),
         )
         .select(
-            F.col(source_col),
-            F.col(tokens_col).cast("long").alias("tokens"),
-            F.col(weight_col).cast("long").alias("weight"),
+            F.col("source"),
+            F.col("tokens").cast("long").alias("tokens"),
+            F.col("weight").cast("long").alias("weight"),
             F.col("_desired").cast("long").alias("desired_tokens"),
             F.col("rate_ppm"),
             # exact (tokens · rate) div 10^6 WITHOUT the tokens·rate
@@ -238,9 +223,9 @@ def mixture_rates(
             # web scale): with tokens = q·10^6 + s the identity
             # (q·10^6·r + s·r) div 10^6 = q·r + (s·r div 10^6) is exact
             F.expr(
-                f"({tokens_col} div 1000000L) * rate_ppm"
-                f" + (({tokens_col} % 1000000L) * rate_ppm) div 1000000L"
+                f"(tokens div 1000000L) * rate_ppm"
+                f" + ((tokens % 1000000L) * rate_ppm) div 1000000L"
             ).cast("long").alias("expected_tokens"),
-            (F.col(tokens_col) < F.col("_desired")).alias("undersupplied"),
+            (F.col("tokens") < F.col("_desired")).alias("undersupplied"),
         )
     )

@@ -98,12 +98,7 @@ def revisit_schedule(
     )
 
 
-def fair_share(
-    pending: DataFrame,
-    budget: int,
-    host_col: str = "host",
-    pending_col: str = "pending",
-) -> DataFrame:
+def fair_share(pending: DataFrame, budget: int) -> DataFrame:
     """Split a global fetch budget across hosts proportionally to pending
     work, integer-exact → ``(host, pending, quota)``.
 
@@ -126,25 +121,25 @@ def fair_share(
     ``budget·pending mod total`` — no floats anywhere)."""
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
-    tot = pending.agg(F.sum(pending_col).cast("long").alias("_total"))
+    tot = pending.agg(F.sum("pending").cast("long").alias("_total"))
     p = pending.join(F.broadcast(tot))
     # nullif guards the all-drained frontier (Σ pending = 0): under ANSI
     # mode a bare div/% by zero fails the whole epoch job instead of
     # granting zero quotas — coalesce the degenerate case to 0/0
     p = p.withColumn(
         "_floor",
-        F.expr(f"coalesce(({budget}L * {pending_col}) div nullif(_total, 0L), 0L)"),
+        F.expr(f"coalesce(({budget}L * pending) div nullif(_total, 0L), 0L)"),
     ).withColumn(
-        "_rem", F.expr(f"coalesce(({budget}L * {pending_col}) % nullif(_total, 0L), 0L)")
+        "_rem", F.expr(f"coalesce(({budget}L * pending) % nullif(_total, 0L), 0L)")
     )
     leftover = F.lit(budget) - F.sum("_floor").over(Window.partitionBy())
-    wr = Window.orderBy(F.col("_rem").desc(), F.col(host_col).asc())
+    wr = Window.orderBy(F.col("_rem").desc(), F.col("host").asc())
     return (
         p.withColumn("_extra", (F.row_number().over(wr) <= leftover).cast("long"))
         .select(
-            F.col(host_col),
-            F.col(pending_col).cast("long").alias("pending"),
-            F.least(F.col(pending_col).cast("long"), F.col("_floor") + F.col("_extra"))
+            F.col("host"),
+            F.col("pending").cast("long").alias("pending"),
+            F.least(F.col("pending").cast("long"), F.col("_floor") + F.col("_extra"))
             .cast("long")
             .alias("quota"),
         )

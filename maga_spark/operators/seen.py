@@ -32,9 +32,9 @@ def _hashes_u64(col: "pd.Series") -> np.ndarray:
     return col.to_numpy().astype(np.int64).view(np.uint64)
 
 
-def anti_join_exact(candidates: DataFrame, seen: DataFrame, key: str = "url_hash") -> DataFrame:
+def anti_join_exact(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     """candidates ∖ seen, exact."""
-    return candidates.join(seen.select(key), key, "left_anti")
+    return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
 
 
 def _out_ddl(df: DataFrame, extra: str) -> str:

@@ -1,4 +1,5 @@
-"""Similarity search over an embedding column (``array<float>``).
+"""Similarity search over the ``embedding`` column (``array<float>``) of a
+``(vec_id, embedding)`` table.
 
 * ``brute_force_topk`` — exact cosine top-k: JVM-side ``zip_with`` +
   ``aggregate`` dot product, TakeOrderedAndProject for the limit. The
@@ -16,6 +17,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the integer grid the portable paths quantize vectors to: floor(x · QUANT)
+QUANT = 1e6
+
 
 def _dot(vec_col, qlit) -> "F.Column":
     return F.aggregate(
@@ -29,19 +33,13 @@ def _norm(vec_col) -> "F.Column":
     return F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda a, x: a + x.cast("double") * x))
 
 
-def brute_force_topk(
-    emb: DataFrame,
-    query: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(emb: DataFrame, query: list[float], k: int = 10) -> DataFrame:
     """Exact cosine top-k; deterministic tie-break on id."""
     qn = float(np.sqrt(np.dot(query, query)))
     qlit = F.array(*[F.lit(float(x)) for x in query])
     scored = emb.select(
-        F.col(id_col).alias("id"),
-        (_dot(F.col(vec_col), qlit) / (_norm(F.col(vec_col)) * F.lit(qn))).alias("cosine"),
+        F.col("vec_id").alias("id"),
+        (_dot(F.col("embedding"), qlit) / (_norm(F.col("embedding")) * F.lit(qn))).alias("cosine"),
     )
     return scored.orderBy(F.desc("cosine"), F.asc("id")).limit(k)
 
@@ -52,16 +50,16 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-def quantized_planes(dim: int, n_planes: int, seed: int = 42, scale: int = 1000) -> np.ndarray:
-    """Hyperplanes with INTEGER-VALUED coefficients (round(p·scale)) — the
+def quantized_planes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
+    """Hyperplanes with INTEGER-VALUED coefficients (round(p·1000)) — the
     cross-engine-exact variant: a dot product of integer-valued doubles
     whose terms and partial sums stay below 2^53 is exact IEEE arithmetic
     in ANY summation order, so the sign (and hence the bucket) is
     bit-reproducible on any engine — no summation-order sensitivity."""
-    return np.round(hyperplanes(dim, n_planes, seed) * scale)
+    return np.round(hyperplanes(dim, n_planes, seed) * 1000)
 
 
-def quantize_vec_col(vec_col, quant: float = 1e6) -> "F.Column":
+def quantize_vec_col(vec_col, quant: float = QUANT) -> "F.Column":
     """``floor(x · quant)`` per element, kept as double — exact and
     engine-portable (float→double widening, one double multiply, floor)."""
     return F.transform(
@@ -75,10 +73,6 @@ def lsh_bucket_topk_quantized(
     k: int = 10,
     n_planes: int = 10,
     probe_radius: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quant: float = 1e6,
 ) -> DataFrame:
     """Approximate cosine top-k with integer-quantized projections: buckets
     come from signs of EXACT integer dot products (see ``quantized_planes``),
@@ -87,16 +81,16 @@ def lsh_bucket_topk_quantized(
     shuffle), exact cosine re-rank on survivors. Recall is tested
     (tests/test_operators.py) rather than assumed.
 
-    Magnitude guard: |floor(x·1e6)| ≤ ~1e7 for unit-scale embeddings,
+    Magnitude guard: |floor(x·QUANT)| ≤ ~1e7 for unit-scale embeddings,
     |plane coef| ≤ ~4·10^3, dim ≤ ~10^3 → |dot| ≤ 4·10^13 < 2^53."""
     dim = len(query)
-    planes = quantized_planes(dim, n_planes, seed)
-    qq = np.floor(np.asarray(query, dtype=np.float64) * quant)
+    planes = quantized_planes(dim, n_planes)
+    qq = np.floor(np.asarray(query, dtype=np.float64) * QUANT)
     qbucket = int(sum(1 << i for i, p in enumerate(planes) if float(p @ qq) > 0))
 
     # materialize the quantized vector once (a named column, not 10 copies
     # of the transform inside each plane's dot product)
-    quantized = emb.withColumn("_qe", quantize_vec_col(F.col(vec_col), quant))
+    quantized = emb.withColumn("_qe", quantize_vec_col(F.col("embedding")))
     bits = [
         F.when(_dot(F.col("_qe"), F.array(*[F.lit(float(x)) for x in p])) > 0, F.lit(1))
         .otherwise(F.lit(0))
@@ -111,17 +105,10 @@ def lsh_bucket_topk_quantized(
         .filter(F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qbucket))) <= probe_radius)
         .drop("_qe")
     )
-    return brute_force_topk(pruned, query, k, id_col, vec_col)
+    return brute_force_topk(pruned, query, k)
 
 
-def ivf_train(
-    emb: DataFrame,
-    n_lists: int = 16,
-    iters: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
+def ivf_train(emb: DataFrame, n_lists: int = 16, iters: int = 2) -> np.ndarray:
     """Deterministic IVF coarse quantizer: init = the ``n_lists`` vectors
     with the smallest ``xxhash64(id)`` (a seeded pseudo-random pick that is
     reproducible across runs and engines), then ``iters`` distributed Lloyd
@@ -130,19 +117,19 @@ def ivf_train(
     n_lists×dim collect per step (train-time only; queries never collect).
     Returns the (n_lists, dim) centroid matrix."""
     pivots = (
-        emb.select(id_col, vec_col)
+        emb.select("vec_id", "embedding")
         .orderBy(
-            F.xxhash64(F.concat(F.col(id_col).cast("string"), F.lit(f":{seed}"))),
-            F.col(id_col),
+            F.xxhash64(F.concat(F.col("vec_id").cast("string"), F.lit(":42"))),
+            F.col("vec_id"),
         )
         .limit(n_lists)
         .collect()
     )
-    cents = np.array([[float(x) for x in r[vec_col]] for r in pivots], dtype=np.float64)
+    cents = np.array([[float(x) for x in r["embedding"]] for r in pivots], dtype=np.float64)
     for _ in range(iters):
-        assigned = with_ivf_list(emb, cents, vec_col=vec_col)
+        assigned = with_ivf_list(emb, cents)
         sums = (
-            assigned.select("cid", F.posexplode(vec_col).alias("pos", "v"))
+            assigned.select("cid", F.posexplode("embedding").alias("pos", "v"))
             .groupBy("cid", "pos")
             .agg(F.sum(F.col("v").cast("double")).alias("s"), F.count("*").alias("n"))
             .collect()
@@ -159,14 +146,14 @@ def ivf_train(
     return cents
 
 
-def _cid_expr(cents: np.ndarray, vec_col: str) -> "F.Column":
+def _cid_expr(cents: np.ndarray) -> "F.Column":
     """argmin_i ||v − c_i||² as a pure expression: maximize
     2·v·c_i − ||c_i||², pick via array_position(max) — first-max gives a
     deterministic lowest-index tie-break, and the array form keeps codegen
     linear in n_lists (a when-chain nests quadratically)."""
     scores = F.array(
         *[
-            2.0 * _dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in c]))
+            2.0 * _dot(F.col("embedding"), F.array(*[F.lit(float(x)) for x in c]))
             - float(np.dot(c, c))
             for c in cents
         ]
@@ -174,35 +161,22 @@ def _cid_expr(cents: np.ndarray, vec_col: str) -> "F.Column":
     return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
 
 
-def with_ivf_list(emb: DataFrame, cents: np.ndarray, vec_col: str = "embedding") -> DataFrame:
+def with_ivf_list(emb: DataFrame, cents: np.ndarray) -> DataFrame:
     """Append the inverted-list id (nearest centroid) as ``cid``."""
-    return emb.withColumn("cid", _cid_expr(cents, vec_col))
+    return emb.withColumn("cid", _cid_expr(cents))
 
 
-def build_ivf_index(
-    emb: DataFrame,
-    path: str,
-    n_lists: int = 16,
-    iters: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
+def build_ivf_index(emb: DataFrame, path: str, n_lists: int = 16, iters: int = 2) -> np.ndarray:
     """Write the embedding table PARTITIONED BY its inverted list — the
     IVF serving path: a top-k query reads
     only the ``nprobe`` probed list directories. Returns the centroids
     (persist them beside the index in production)."""
-    cents = ivf_train(emb, n_lists, iters, seed, id_col, vec_col)
-    with_ivf_list(emb, cents, vec_col).write.mode("overwrite").partitionBy("cid").parquet(path)
+    cents = ivf_train(emb, n_lists, iters)
+    with_ivf_list(emb, cents).write.mode("overwrite").partitionBy("cid").parquet(path)
     return cents
 
 
-def append_to_ivf_index(
-    emb_new: DataFrame,
-    path: str,
-    cents: np.ndarray,
-    vec_col: str = "embedding",
-) -> None:
+def append_to_ivf_index(emb_new: DataFrame, path: str, cents: np.ndarray) -> None:
     """Incremental IVF maintenance (VERDICT r3 #7): assign a NEW batch of
     vectors with the STORED centroids and append to the existing ``cid``
     partition directories — the index survives corpus growth without a
@@ -213,20 +187,20 @@ def append_to_ivf_index(
     Centroids intentionally stay FIXED — recall drifts only if the data
     distribution shifts, at which point a retrain (``build_ivf_index``) is
     an explicit, operator-visible event, not a silent background rewrite."""
-    with_ivf_list(emb_new, cents, vec_col).write.mode("append").partitionBy(
+    with_ivf_list(emb_new, cents).write.mode("append").partitionBy(
         "cid"
     ).parquet(path)
 
 
-def compact_ivf_index(spark, path: str, target_files_per_list: int = 1) -> dict:
+def compact_ivf_index(spark, path: str) -> dict:
     """Small-file compaction for an appended IVF index (VERDICT r4 #7 —
     the maintenance twin of snapstore.compact_snapshot, applied to
     ``build_ivf_index``/``append_to_ivf_index`` output): every
     ``append_to_ivf_index`` batch adds one parquet file per touched
     ``cid=`` directory, so a long-lived index accretes small files that
-    degrade every probed read. Rewrite down to ~``target_files_per_list``
-    file(s) per inverted list with a hash ``repartition`` on ``cid`` (each
-    list's rows land in one task → one file), through a tmp-dir + rename
+    degrade every probed read. Rewrite down to one file per inverted list
+    with a hash ``repartition`` on ``cid`` (each list's rows land in one
+    task → one file), through a tmp-dir + rename
     swap so a crash mid-compaction leaves the old or the new index intact,
     never a half-written one. Contents are bit-identical — ``ivf_topk``
     results cannot change (tested). Returns per-list file counts
@@ -244,7 +218,7 @@ def compact_ivf_index(spark, path: str, target_files_per_list: int = 1) -> dict:
         if os.path.exists(p):
             shutil.rmtree(p)
     (
-        df.repartition(max(1, n_lists * max(1, target_files_per_list)), F.col("cid"))
+        df.repartition(max(1, n_lists), F.col("cid"))
         .write.partitionBy("cid")
         .parquet(tmp)
     )
@@ -262,8 +236,6 @@ def ivf_topk(
     query: list[float],
     k: int = 10,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate cosine top-k against a ``build_ivf_index`` table: the
     ``nprobe`` centroids nearest the query (driver-side, tiny) become a
@@ -272,7 +244,7 @@ def ivf_topk(
     d2 = ((cents - q[None, :]) ** 2).sum(axis=1)
     probes = [int(i) for i in np.argsort(d2, kind="stable")[:nprobe]]
     pruned = spark.read.parquet(path).filter(F.col("cid").isin(probes))
-    return brute_force_topk(pruned, query, k, id_col, vec_col)
+    return brute_force_topk(pruned, query, k)
 
 
 def pq_subranges(dim: int, m: int) -> list[tuple[int, int]]:
@@ -287,46 +259,31 @@ def pq_subranges(dim: int, m: int) -> list[tuple[int, int]]:
     return out
 
 
-def pq_pivot_codebook(
-    emb: DataFrame,
-    dim: int,
-    m: int = 4,
-    ksub: int = 8,
-    salt: str = ":pq",
-    quant: float = 1e6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
+def pq_pivot_codebook(emb: DataFrame, dim: int, m: int = 4, ksub: int = 8) -> np.ndarray:
     """Portable PQ codebook seed (Jégou et al., TPAMI'11 construction with
     the repo's cross-engine determinism rules): the ``ksub`` rows with the
-    smallest ``(md5(id || salt), id)`` are the per-subspace pivots, their
-    ``floor(x·quant)`` integer-valued subvectors the centroids — exactly
-    re-derivable in DuckDB SQL, which is what makes ``pq_encode`` and the
+    smallest ``(md5(vec_id || ":pq"), vec_id)`` are the per-subspace
+    pivots, their ``floor(x·QUANT)`` integer-valued subvectors the
+    centroids — exactly re-derivable in DuckDB SQL, which is what makes ``pq_encode`` and the
     ADC scorer fully oracle-checkable (every dot term and partial sum
     < 2^53 ⇒ exact IEEE arithmetic in any order). Returns an
     (m, ksub, sublen*) ragged-safe array only when dim % m == 0; train-time
     one tiny collect, queries never collect."""
     rows = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt))), F.col(id_col))
+        emb.select("vec_id", "embedding")
+        .orderBy(F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(":pq"))), F.col("vec_id"))
         .limit(ksub)
         .collect()
     )
     full = np.floor(
-        np.array([[float(x) for x in r[vec_col]] for r in rows], dtype=np.float64) * quant
+        np.array([[float(x) for x in r["embedding"]] for r in rows], dtype=np.float64) * QUANT
     )
     ranges = pq_subranges(dim, m)
     assert len({ln for _, ln in ranges}) == 1, "dim % m != 0 unsupported"
     return np.stack([full[:, a : a + ln] for a, ln in ranges])  # (m, ksub, sublen)
 
 
-def pq_refine_codebook(
-    emb: DataFrame,
-    codebook: np.ndarray,
-    iters: int = 2,
-    quant: float = 1e6,
-    vec_col: str = "embedding",
-) -> np.ndarray:
+def pq_refine_codebook(emb: DataFrame, codebook: np.ndarray, iters: int = 2) -> np.ndarray:
     """Per-subspace distributed Lloyd refinement of a pivot codebook (the
     trained-PQ path — NOT integer-valued after the first mean, so it pairs
     with the recall tests, not the DuckDB oracle). Each iteration is one
@@ -335,10 +292,10 @@ def pq_refine_codebook(
     m, ksub, sublen = codebook.shape
     cb = codebook.copy()
     for _ in range(iters):
-        coded = pq_encode(emb, cb, vec_col=vec_col, quant=quant)
+        coded = pq_encode(emb, cb)
         sums = (
             coded.select(
-                F.posexplode(quantize_vec_col(F.col(vec_col), quant)).alias("pos", "v"),
+                F.posexplode(quantize_vec_col(F.col("embedding"))).alias("pos", "v"),
                 *[F.col(f"c{s}") for s in range(m)],
             )
             .withColumn("sub", (F.col("pos") / sublen).cast("int"))
@@ -363,12 +320,7 @@ def pq_refine_codebook(
     return cb
 
 
-def pq_encode(
-    emb: DataFrame,
-    codebook: np.ndarray,
-    vec_col: str = "embedding",
-    quant: float = 1e6,
-) -> DataFrame:
+def pq_encode(emb: DataFrame, codebook: np.ndarray) -> DataFrame:
     """Product-quantization codes as pure expressions: per subspace ``s``,
     ``c{s}`` = argmin_j ||v_s − c_j||² via the same maximize-
     (2·v·c − ||c||²) array-argmax as ``_cid_expr`` (first-max = lowest
@@ -376,7 +328,7 @@ def pq_encode(
     ONCE into a named column and sliced per subspace — m·ksub small dot
     products per row, zero shuffle, zero Python."""
     m, ksub, sublen = codebook.shape
-    out = emb.withColumn("_qe", quantize_vec_col(F.col(vec_col), quant))
+    out = emb.withColumn("_qe", quantize_vec_col(F.col("embedding")))
     for s in range(m):
         sub = F.slice(F.col("_qe"), s * sublen + 1, sublen)
         scores = F.array(
@@ -395,8 +347,6 @@ def pq_adc_topk(
     codebook: np.ndarray,
     query: list[float],
     k: int = 10,
-    quant: float = 1e6,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes (the ADC serving path): the
     query builds one m×ksub lookup table driver-side (dot of the quantized
@@ -407,7 +357,7 @@ def pq_adc_topk(
     DESC, id ASC) is engine-portable; re-rank survivors exactly if the
     original vectors are at hand."""
     m, ksub, sublen = codebook.shape
-    q = np.floor(np.asarray(query, dtype=np.float64) * quant)
+    q = np.floor(np.asarray(query, dtype=np.float64) * QUANT)
     score = None
     for s in range(m):
         lut = [float(np.dot(q[s * sublen : (s + 1) * sublen], c)) for c in codebook[s]]
@@ -415,7 +365,7 @@ def pq_adc_topk(
         score = term if score is None else score + term
     return (
         coded.withColumn("adc_score", score)
-        .orderBy(F.col("adc_score").desc(), F.col(id_col))
+        .orderBy(F.col("adc_score").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -427,7 +377,6 @@ def alignment_gate(
     tau_num: int = 4,
     tau_den: int = 5,
     quant: int = 1000,
-    out_col: str = "aligned",
 ) -> DataFrame:
     """Caption↔image embedding alignment gate — the CLIP-score curation
     filter (Schuhmann et al., LAION) made bit-reproducible: keep a pair
@@ -481,6 +430,6 @@ def alignment_gate(
         .withColumn("dot_q", F.col("_al.dot_q"))
         .withColumn("na_q", F.col("_al.na_q"))
         .withColumn("nb_q", F.col("_al.nb_q"))
-        .withColumn(out_col, F.col("_al.ok"))
+        .withColumn("aligned", F.col("_al.ok"))
         .drop("_al")
     )

@@ -20,6 +20,13 @@ LANG_PROFILES: dict[str, list[str]] = {
     "es": ["el", "la", "los", "y", "es", "una", "que", "por", "con", "para"],
 }
 
+# line split pattern of the line-level operators: one line per "\n"
+LINE_SPLIT = re.escape("\n")
+# winnowing: char WINNOW_K-grams, min per window of WINNOW_W grams
+WINNOW_K, WINNOW_W = 5, 4
+# BM25 term-saturation and length-normalisation constants
+BM25_K1, BM25_B = 1.2, 0.75
+
 
 def tokens_of(text_col: Column) -> Column:
     return F.split(F.lower(F.trim(text_col)), r"\s+")
@@ -34,7 +41,7 @@ def language_scores(text_col: Column) -> dict[str, Column]:
     }
 
 
-def language_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
+def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Argmax language with deterministic tie-break by language code;
     'und' when no profile matches at all."""
     scores = language_scores(F.col(text_col))
@@ -42,7 +49,7 @@ def language_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred
     pairs = F.array(*[F.struct((-scores[lg]).alias("neg"), F.lit(lg).alias("lang")) for lg in ordered])
     best = F.array_min(pairs)
     pred = F.when(-best["neg"] > 0, best["lang"]).otherwise(F.lit("und"))
-    return df.withColumn(out_col, pred)
+    return df.withColumn("lang_pred", pred)
 
 
 def token_count(text_col: Column) -> Column:
@@ -57,13 +64,14 @@ def bpe_ish_piece_count(text_col: Column) -> Column:
     return F.regexp_count(text_col, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"))
 
 
-def winnow_fingerprint_portable(text_col: Column, k: int = 5, w: int = 4) -> Column:
+def winnow_fingerprint_portable(text_col: Column) -> Column:
     """Winnowing fingerprint as 100% built-in expressions with the portable
     md5-60-bit k-gram hash — value-for-value reproducible in DuckDB
     (list_transform/generate_series twin in __spark_entry__).
 
-    Char k-grams → hash → min per length-w window → distinct set.
-    Guards: <k chars → empty; ≤w grams → single global min.
+    Char ``WINNOW_K``-grams → hash → min per length-``WINNOW_W`` window →
+    distinct set. Guards: <WINNOW_K chars → empty; ≤WINNOW_W grams → single
+    global min.
     (Spark's ``sequence(1, 0)`` DESCENDS — both sequences are when-guarded.)
 
     The lowered text and the gram-hash array are ``let_``-bound: HOF
@@ -78,11 +86,11 @@ def winnow_fingerprint_portable(text_col: Column, k: int = 5, w: int = 4) -> Col
         ng = F.size(hs)
         mins = (
             F.when(ng == 0, F.array().cast("array<long>"))
-            .when(ng <= w, F.array(F.array_min(hs)))
+            .when(ng <= WINNOW_W, F.array(F.array_min(hs)))
             .otherwise(
                 F.transform(
-                    F.sequence(F.lit(1), ng - (w - 1)),
-                    lambda j: F.array_min(F.slice(hs, j, w)),
+                    F.sequence(F.lit(1), ng - (WINNOW_W - 1)),
+                    lambda j: F.array_min(F.slice(hs, j, WINNOW_W)),
                 )
             )
         )
@@ -91,8 +99,10 @@ def winnow_fingerprint_portable(text_col: Column, k: int = 5, w: int = 4) -> Col
     def hashes(t: Column) -> Column:
         n = F.length(t)
         grams = F.when(
-            n >= k,
-            F.transform(F.sequence(F.lit(1), n - (k - 1)), lambda i: t.substr(i, F.lit(k))),
+            n >= WINNOW_K,
+            F.transform(
+                F.sequence(F.lit(1), n - (WINNOW_K - 1)), lambda i: t.substr(i, F.lit(WINNOW_K))
+            ),
         ).otherwise(F.array().cast("array<string>"))
         return F.transform(grams, lambda g: portable_hash64(g))
 
@@ -121,20 +131,14 @@ def word_ngrams(text_col: Column, n: int) -> Column:
     return let_(tokens_of(text_col), build)
 
 
-def repetition_features(
-    df: DataFrame,
-    text_col: str = "text",
-    line_delim: str = "\n",
-    top_n: int = 2,
-    dup_n: int = 3,
-) -> DataFrame:
+def repetition_features(df: DataFrame, top_n: int = 2, dup_n: int = 3) -> DataFrame:
     """Gopher-family repetition signals (Rae et al. 2021, §A1.1) as pure
     in-row expressions — zero shuffle, zero Python, embarrassingly parallel
     at any corpus scale (the per-row cost is O(items²) in whole-stage
     codegen over short arrays, not a join):
 
-    * ``n_lines`` / ``dup_line_frac`` — fraction of lines (split on
-      ``line_delim``) that are repeats of another line in the document.
+    * ``n_lines`` / ``dup_line_frac`` — fraction of ``text`` lines (split
+      on ``"\n"``) that are repeats of another line in the document.
     * ``dup_line_char_frac`` — fraction of line characters belonging to
       occurrences beyond the first of each duplicated line.
     * ``top_ngram_char_frac`` — characters covered by the single most
@@ -150,8 +154,8 @@ def repetition_features(
     High values on any of these are the Gopher cut signals for
     machine-generated / boilerplate text.
     """
-    t = F.col(text_col)
-    lines = F.split(t, re.escape(line_delim))
+    t = F.col("text")
+    lines = F.split(t, LINE_SPLIT)
     n_lines = F.size(lines)
     n_dist = F.size(F.array_distinct(lines))
     dup_line_frac = F.when(n_lines > 0, (n_lines - n_dist) / n_lines).otherwise(F.lit(0.0))
@@ -209,13 +213,7 @@ def repetition_features(
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    text_col: str = "text",
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    k: int = 5,
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     """Top-``k`` terms per group by total term frequency, annotated with
     document frequency and the rounded tf·idf weight.
 
@@ -231,11 +229,11 @@ def tfidf_top_terms(
     from pyspark.sql import Window
 
     toks = docs.select(
-        F.col(group_col).alias("grp"),
-        F.col(id_col).alias("did"),
-        F.explode(tokens_of(F.col(text_col))).alias("term"),
+        F.col("source").alias("grp"),
+        F.col("doc_id").alias("did"),
+        F.explode(tokens_of(F.col("text"))).alias("term"),
     ).filter(F.length("term") > 0)
-    n_docs = docs.select(F.countDistinct(id_col).alias("n_docs"))
+    n_docs = docs.select(F.countDistinct("doc_id").alias("n_docs"))
     df_term = toks.groupBy("term").agg(F.countDistinct("did").alias("df"))
     grp_tf = toks.groupBy("grp", "term").agg(F.count("*").alias("sum_tf"))
     w = Window.partitionBy("grp").orderBy(F.col("sum_tf").desc(), F.col("term").asc())
@@ -245,7 +243,7 @@ def tfidf_top_terms(
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("source"),
             "rk",
             "term",
             "sum_tf",
@@ -295,15 +293,7 @@ def html_to_text(html_col: Column) -> Column:
     return F.trim(F.regexp_replace(c, r"\s+", " "))
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-    top_k: int = 20,
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, query_terms: list[str], top_k: int = 20) -> DataFrame:
     """BM25 ranking of documents for a bag-of-terms query →
     ``(doc_id, n_hit_terms, score_micro)`` for the global top-``top_k``.
 
@@ -318,7 +308,8 @@ def bm25_scores(
 
     Robertson/Spärck Jones BM25 with the +1 idf floor (the Lucene form,
     never negative): ``idf = ln(1 + (N - df + 0.5)/(df + 0.5))``, term
-    gain ``idf · tf·(k1+1)/(tf + k1·(1 - b + b·len/avglen))``. The
+    gain ``idf · tf·(k1+1)/(tf + k1·(1 - b + b·len/avglen))`` with
+    ``k1, b = BM25_K1, BM25_B``. The
     engine's retrieval query over the corpus it curates — dedup picks
     what to KEEP, retrieval proves the kept corpus is queryable.
 
@@ -331,7 +322,7 @@ def bm25_scores(
         raise ValueError("query_terms must be non-empty")
     qlit = F.array(*[F.lit(t.lower()) for t in sorted(set(query_terms))])
     toks = docs.select(
-        F.col(id_col).alias("did"), F.explode(tokens_of(F.col(text_col))).alias("term")
+        F.col("doc_id").alias("did"), F.explode(tokens_of(F.col("text"))).alias("term")
     )
     doclen = toks.groupBy("did").agg(F.count("*").alias("dl"))
     stats = doclen.agg(
@@ -346,8 +337,8 @@ def bm25_scores(
     )
     gain = idf * (
         F.col("tf")
-        * (k1 + 1)
-        / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
+        * (BM25_K1 + 1)
+        / (F.col("tf") + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl")))
     )
     gain_micro = F.round(gain * F.lit(1_000_000.0)).cast("long")
     scored = (
@@ -361,8 +352,8 @@ def bm25_scores(
         )
     )
     return (
-        scored.select(F.col("did").alias(id_col), "n_hit_terms", "score_micro")
-        .orderBy(F.col("score_micro").desc(), F.col(id_col).asc())
+        scored.select(F.col("did").alias("doc_id"), "n_hit_terms", "score_micro")
+        .orderBy(F.col("score_micro").desc(), F.col("doc_id").asc())
         .limit(top_k)
     )
 
@@ -373,9 +364,6 @@ def hashed_classifier_score(
     n_buckets: int,
     bias: int = 0,
     threshold: int = 0,
-    salt: str = "hcls:",
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Linear text-classifier inference with the hashing trick — the shape
     of the FineWeb-Edu / DCLM quality-filter pass, run as a Spark plan: a
@@ -389,50 +377,48 @@ def hashed_classifier_score(
     in integer micro-units — a hashing-trick model has at most
     ``n_buckets`` rows (2^18..2^20 in practice), i.e. model-sized, so it
     is explicitly ``broadcast()``. Every token occurrence (term frequency,
-    not presence) hashes to ``bucket = portable_hash64(salt || token) %
+    not presence) hashes to ``bucket = portable_hash64("hcls:" || token) %
     n_buckets`` and contributes its bucket's weight; a document's score is
     ``bias + Σ weight``. All int64 — bit-identical in the DuckDB oracle,
     no float dot products.
 
     Scale shape: explode tokens → broadcast hash-join against the model →
-    ONE map-side-combinable groupBy(``id_col``). No shuffle of the corpus
+    ONE map-side-combinable groupBy(``doc_id``). No shuffle of the corpus
     body (only (id, bucket) pairs move), no Python, and no doc-spine
     re-join: ``explode_outer`` keeps empty/NULL documents as a NULL token
     row, so every document reaches the aggregate and scores ``bias``.
 
-    Output: ``(id_col, n_tokens, score, keep)``."""
+    Output: ``(doc_id, n_tokens, score, keep)``."""
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be positive (got {n_buckets})")
     toks = F.when(
-        F.length(F.trim(F.col(text_col))) > 0, tokens_of(F.col(text_col))
+        F.length(F.trim(F.col("text"))) > 0, tokens_of(F.col("text"))
     ).otherwise(F.array().cast("array<string>"))
     from maga_spark.operators.dedup import portable_hash64
 
-    occ = docs.select(F.col(id_col), F.explode_outer(toks).alias("_tok")).select(
-        id_col, F.pmod(portable_hash64(F.col("_tok"), salt), F.lit(n_buckets)).alias("_bkt")
+    occ = docs.select(F.col("doc_id"), F.explode_outer(toks).alias("_tok")).select(
+        "doc_id", F.pmod(portable_hash64(F.col("_tok"), "hcls:"), F.lit(n_buckets)).alias("_bkt")
     )
     w = F.broadcast(
         weights.select(F.col("bucket").alias("_bkt"), F.col("weight").alias("_w"))
     )
     scored = (
         occ.join(w, "_bkt", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("_bkt").cast("long").alias("n_tokens"),
             F.coalesce(F.sum("_w"), F.lit(0)).cast("long").alias("_dot"),
         )
     )
     return scored.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_tokens"),
         (F.col("_dot") + F.lit(bias)).cast("long").alias("score"),
         ((F.col("_dot") + F.lit(bias)) >= threshold).alias("keep"),
     )
 
 
-def train_bigram_lm(
-    corpus: DataFrame, text_col: str = "text"
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def train_bigram_lm(corpus: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Count model for the CCNet-style LM quality filter: returns
     ``(unigrams, bigrams, vocab)`` — ``(h1, c1)``, ``(h12, c12)`` and a
     1-row ``(v)`` vocabulary size. Keys are the portable 60-bit md5 token
@@ -443,7 +429,7 @@ def train_bigram_lm(
     from maga_spark.operators.dedup import portable_hash64
 
     toks = F.when(
-        F.length(F.trim(F.col(text_col))) > 0, tokens_of(F.col(text_col))
+        F.length(F.trim(F.col("text"))) > 0, tokens_of(F.col("text"))
     ).otherwise(F.array().cast("array<string>"))
     uni = (
         corpus.select(F.explode(toks).alias("_t"))
@@ -451,7 +437,7 @@ def train_bigram_lm(
         .agg(F.count("*").cast("long").alias("c1"))
     )
     bi = (
-        corpus.select(F.explode(word_ngrams(F.col(text_col), 2)).alias("_g"))
+        corpus.select(F.explode(word_ngrams(F.col("text"), 2)).alias("_g"))
         .groupBy(portable_hash64(F.col("_g")).alias("h12"))
         .agg(F.count("*").cast("long").alias("c12"))
     )
@@ -464,8 +450,6 @@ def bigram_lm_score(
     unigrams: DataFrame,
     bigrams: DataFrame,
     vocab: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """CCNet-style language-model quality scoring: each document's
     add-one-smoothed bigram log-probability under a count model
@@ -486,23 +470,23 @@ def bigram_lm_score(
     never broadcast by hand; AQE decides) → ONE combinable groupBy(id).
     Docs with < 2 tokens survive via explode_outer with ``n_bigrams = 0``.
 
-    Output: ``(id_col, n_bigrams, logprob_micro, nlp_per_bigram)`` — the
+    Output: ``(doc_id, n_bigrams, logprob_micro, nlp_per_bigram)`` — the
     last is the integer mean negative log-prob (micro-nats/bigram, 0 for
     bigram-less docs): the thresholdable quality number."""
     from maga_spark.operators.dedup import portable_hash64
 
     toks = F.when(
-        F.length(F.trim(F.col(text_col))) > 0, tokens_of(F.col(text_col))
+        F.length(F.trim(F.col("text"))) > 0, tokens_of(F.col("text"))
     ).otherwise(F.array().cast("array<string>"))
     pairs = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
-        word_ngrams(F.col(text_col), 2),
+        word_ngrams(F.col("text"), 2),
         lambda w1, g: F.struct(
             portable_hash64(w1).alias("h1"), portable_hash64(g).alias("h12")
         ),
     )
-    occ = docs.select(F.col(id_col), F.explode_outer(pairs).alias("_p")).select(
-        id_col, F.col("_p.h1").alias("h1"), F.col("_p.h12").alias("h12")
+    occ = docs.select(F.col("doc_id"), F.explode_outer(pairs).alias("_p")).select(
+        "doc_id", F.col("_p.h1").alias("h1"), F.col("_p.h12").alias("h12")
     )
     scored = (
         occ.join(bigrams, "h12", "left")
@@ -521,14 +505,14 @@ def bigram_lm_score(
                 ).cast("long"),
             ),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("_lp").cast("long").alias("n_bigrams"),
             F.coalesce(F.sum("_lp"), F.lit(0)).cast("long").alias("logprob_micro"),
         )
     )
     return scored.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "n_bigrams",
         "logprob_micro",
         F.coalesce(

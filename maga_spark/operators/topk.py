@@ -55,14 +55,13 @@ def per_group_topk(
     k: Column,
     salt_key: str,
     rank_name: str = "group_rank",
-    salt_buckets: int = 8,
 ) -> DataFrame:
     """Exact per-group top-k with salted pre-pruning; appends ``rank_name``.
 
     ``order_cols`` must be a total order within each group (deterministic
     tie-break required for parity — SURVEY.md §7.6b).
     """
-    salted = df.withColumn("_salt", F.pmod(F.col(salt_key), F.lit(salt_buckets)))
+    salted = df.withColumn("_salt", F.pmod(F.col(salt_key), F.lit(8)))
     w1 = Window.partitionBy(*group_cols, "_salt").orderBy(*order_cols)
     pre = (
         salted.withColumn("_r1", F.row_number().over(w1))
@@ -90,7 +89,6 @@ def global_topk_uniform_ranked(
     k: int,
     uniform_key: str,
     rank_name: str = "rank",
-    bucket_bits: int = 12,
 ) -> DataFrame:
     """Exact global top-k WITH global rank and ZERO driver round-trips —
     for order keys whose FIRST column is a hash-derived signed int64
@@ -103,11 +101,11 @@ def global_topk_uniform_ranked(
     ``xor_d = xxhash64(url) ^ target`` — XOR of a uniform hash is uniform
     for any target), sampled boundaries are unnecessary:
 
-    1. bucket = top ``bucket_bits`` bits of the signed key, shifted to
-       [0, 2^bits) — monotonic in the signed order, so every tie-broken
+    1. bucket = top 12 bits of the signed key, shifted to
+       [0, 2^12) — monotonic in the signed order, so every tie-broken
        total order stays intra-bucket;
     2. per-bucket counts → cumulative offsets via a single-partition
-       window over ≤ 2^bits tiny rows, broadcast-joined back (all inside
+       window over ≤ 2^12 tiny rows, broadcast-joined back (all inside
        ONE query — no collect);
     3. rank = bucket-local row_number + bucket offset; keep rank <= k.
 
@@ -124,8 +122,7 @@ def global_topk_uniform_ranked(
             f"order_cols[0] must be F.col({uniform_key!r}).asc() "
             f"(got {order_cols[0] if order_cols else 'nothing'})"
         )
-    bits = max(1, bucket_bits)
-    pid = F.shiftright(F.col(uniform_key), 64 - bits) + F.lit(1 << (bits - 1))
+    pid = F.shiftright(F.col(uniform_key), 64 - 12) + F.lit(1 << 11)
     b = df.withColumn("_bkt", pid.cast("int"))
     counts = b.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_n"))
     w_off = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)

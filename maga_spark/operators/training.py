@@ -38,8 +38,6 @@ def sequence_pack(
     ctx_len: int,
     token_count: Column,
     stream_cols: list[str] | None = None,
-    order_col: str = "doc_id",
-    id_cols: list[str] | None = None,
 ) -> DataFrame:
     """GPT-style sequential context packing: concatenate every document's
     tokens in a deterministic order and cut the stream every ``ctx_len``
@@ -55,10 +53,10 @@ def sequence_pack(
     task. A global single-stream pack (stream_cols=[]) would be a
     one-partition window and is deliberately not offered.
 
-    Output: id_cols + stream_cols + n_tokens, tok_start, tok_end,
-    bin_first, bin_last, bins_spanned. Deterministic for any fixed
-    (stream_cols, order_col) — ``order_col`` must be UNIQUE within a
-    stream (a tie would make the cumsum's row order engine-dependent);
+    Output: doc_id + stream_cols + n_tokens, tok_start, tok_end,
+    bin_first, bin_last, bins_spanned, in ``doc_id`` order within each
+    stream. Deterministic for any fixed stream_cols — ``doc_id`` must be
+    UNIQUE within a stream (a tie would make the cumsum's row order engine-dependent);
     empty documents occupy zero tokens and are assigned to the bin at
     their offset."""
     if ctx_len <= 0:
@@ -69,8 +67,7 @@ def sequence_pack(
             "stream_cols must be non-empty: a global pack is a single-"
             "partition window (pack per source/shard instead)"
         )
-    id_cols = [order_col] if id_cols is None else list(id_cols)
-    w = Window.partitionBy(*stream_cols).orderBy(order_col)
+    w = Window.partitionBy(*stream_cols).orderBy("doc_id")
     n_tok = token_count.cast("long")
     out = (
         docs.withColumn("n_tokens", n_tok)
@@ -93,7 +90,7 @@ def sequence_pack(
         .withColumn("bins_spanned", F.col("bin_last") - F.col("bin_first") + 1)
     )
     return out.select(
-        *id_cols, *stream_cols, "n_tokens", "tok_start", "tok_end",
+        "doc_id", *stream_cols, "n_tokens", "tok_start", "tok_end",
         "bin_first", "bin_last", "bins_spanned",
     )
 
@@ -101,7 +98,7 @@ def sequence_pack(
 # ---------------------------------------------------------- decontamination
 
 
-def word_ngrams(text_col: Column, n: int) -> Column:
+def cased_word_ngrams(text_col: Column, n: int) -> Column:
     """All word ``n``-grams of a text as an array of space-joined strings
     (empty array when the text has fewer than ``n`` tokens). Pure
     expressions; the token split is the same case-preserving ``\\s+``
@@ -126,16 +123,13 @@ def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 8,
-    min_overlap: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     materialize: bool = False,
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3/PaLM n-gram protocol): flag
-    every corpus document sharing at least ``min_overlap`` distinct word
-    ``n``-grams with the evaluation benchmark. Returns per-document
-    id, n_ngrams (distinct in the doc), n_overlap (distinct shared),
-    contaminated (n_overlap >= min_overlap); clean docs appear with
+    every corpus document sharing at least one word ``n``-gram with the
+    evaluation benchmark. Returns per-document
+    doc_id, n_ngrams (distinct in the doc), n_overlap (distinct shared),
+    contaminated (n_overlap >= 1); clean docs appear with
     n_overlap = 0 so the caller can anti-filter OR audit either side.
 
     Join key is the portable 60-bit md5 n-gram hash (dedup.portable_hash64)
@@ -145,41 +139,39 @@ def decontaminate(
     corpus never shuffles. Corpus n-grams are deduped PER DOCUMENT
     (array_distinct before the explode), so a doc repeating one benchmark
     n-gram a thousand times is one join row, not a skew group."""
-    grams = F.array_distinct(word_ngrams(F.col(text_col), n))
+    grams = F.array_distinct(cased_word_ngrams(F.col("text"), n))
     doc_grams = corpus.select(
-        F.col(id_col), F.explode_outer(grams).alias("_gram")
-    ).select(id_col, portable_hash64(F.col("_gram")).alias("_g"))
+        F.col("doc_id"), F.explode_outer(grams).alias("_gram")
+    ).select("doc_id", portable_hash64(F.col("_gram")).alias("_g"))
     if materialize:
         # one evaluation of the n-gram explode + hash: doc_grams feeds both
         # the benchmark semi-join and the per-doc count (same rationale and
         # opt-in shape as repeated_ngram_spans)
         doc_grams = doc_grams.localCheckpoint(eager=True)
     bench_grams = (
-        benchmark.select(F.explode(F.array_distinct(word_ngrams(F.col(text_col), n))).alias("_gram"))
+        benchmark.select(F.explode(grams).alias("_gram"))
         .select(portable_hash64(F.col("_gram")).alias("_g"))
         .distinct()
     )
     hits = doc_grams.join(bench_grams, "_g", "left_semi")
-    per_doc = doc_grams.groupBy(id_col).agg(
+    per_doc = doc_grams.groupBy("doc_id").agg(
         F.count(F.col("_g")).alias("n_ngrams")  # count() skips the explode_outer NULL
     )
-    overlap = hits.groupBy(id_col).agg(F.count("*").alias("n_overlap"))
+    overlap = hits.groupBy("doc_id").agg(F.count("*").alias("n_overlap"))
     return (
-        per_doc.join(overlap, id_col, "left")
+        per_doc.join(overlap, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_ngrams",
             F.coalesce("n_overlap", F.lit(0)).cast("long").alias("n_overlap"),
         )
-        .withColumn("contaminated", F.col("n_overlap") >= min_overlap)
+        .withColumn("contaminated", F.col("n_overlap") >= 1)
     )
 
 
-def packing_stats(
-    packed: DataFrame, ctx_len: int, stream_cols: list[str] | None = None
-) -> DataFrame:
-    """Capacity accounting over ``sequence_pack`` output: per packing
-    stream, the number of contexts the stream fills (``n_bins`` — the last
+def packing_stats(packed: DataFrame, ctx_len: int) -> DataFrame:
+    """Capacity accounting over ``sequence_pack`` output: per ``source``
+    packing stream, the number of contexts the stream fills (``n_bins`` — the last
     touched bin index + 1), total document tokens, the padding tokens the
     final partial context wastes, and the padding ratio. The numbers a
     training run budgets GPUs by. One map-combinable groupBy; padding and
@@ -187,9 +179,8 @@ def packing_stats(
     division at the end — bit-reproducible)."""
     if ctx_len <= 0:
         raise ValueError(f"ctx_len must be positive (got {ctx_len})")
-    stream_cols = ["source"] if stream_cols is None else list(stream_cols)
     return (
-        packed.groupBy(*stream_cols)
+        packed.groupBy("source")
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("n_tokens").alias("total_tokens"),
@@ -213,8 +204,6 @@ def repeated_ngram_spans(
     corpus: DataFrame,
     n: int = 16,
     min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     materialize: bool = False,
 ) -> DataFrame:
     """Cross-document repeated-substring detection at word-``n``-gram
@@ -237,11 +226,11 @@ def repeated_ngram_spans(
     grams present in millions of docs) → hash equi-join back → per-doc
     window for the island grouping (bounded by document length). Never
     all-pairs, never a global window."""
-    grams = word_ngrams(F.col(text_col), n)
+    grams = cased_word_ngrams(F.col("text"), n)
     occ = corpus.select(
-        F.col(id_col), F.posexplode(grams).alias("_p0", "_gram")
+        F.col("doc_id"), F.posexplode(grams).alias("_p0", "_gram")
     ).select(
-        id_col,
+        "doc_id",
         (F.col("_p0") + 1).cast("long").alias("pos"),
         portable_hash64(F.col("_gram")).alias("_g"),
     )
@@ -255,17 +244,17 @@ def repeated_ngram_spans(
         # it; incremental/streaming callers keep the lazy plan.
         occ = occ.localCheckpoint(eager=True)
     freq = (
-        occ.select("_g", id_col)
+        occ.select("_g", "doc_id")
         .distinct()  # stage 1: per (gram, doc) — hot grams spread over docs
         .groupBy("_g")
         .agg(F.count("*").alias("n_docs"))  # stage 2: distinct-doc count
         .filter(F.col("n_docs") >= min_docs)
     )
     rep = occ.join(freq, "_g")
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     return (
         rep.withColumn("_island", F.col("pos") - F.row_number().over(w))
-        .groupBy(id_col, "_island")
+        .groupBy("doc_id", "_island")
         .agg(
             F.min("pos").alias("span_start"),
             (F.max("pos") + n - 1).cast("long").alias("span_end"),
@@ -276,12 +265,7 @@ def repeated_ngram_spans(
     )
 
 
-def dedup_cut(
-    corpus: DataFrame,
-    spans: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dedup_cut(corpus: DataFrame, spans: DataFrame) -> DataFrame:
     """Apply exact-substring-dedup CUTS (Lee et al. 2022 §4.2: remove the
     repeated span, keep the rest of the document) — the second half of
     the protocol whose detection half is ``repeated_ngram_spans``.
@@ -304,7 +288,7 @@ def dedup_cut(
     ride along so the curation report (and the DuckDB oracle hash) needs
     no float.
     """
-    sp = spans.groupBy(id_col).agg(
+    sp = spans.groupBy("doc_id").agg(
         F.sort_array(
             F.collect_list(
                 F.struct(
@@ -315,8 +299,8 @@ def dedup_cut(
         ).alias("_spans"),
         F.count("*").alias("n_spans"),
     )
-    joined = corpus.join(sp, id_col, "left")
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    joined = corpus.join(sp, "doc_id", "left")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     spans_arr = F.coalesce(
         F.col("_spans"), F.array().cast("array<struct<s:bigint,e:bigint>>")
     )
@@ -332,7 +316,7 @@ def dedup_cut(
         ),
     )
     return joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_join(F.transform(kept, lambda x: x["t"]), " ").alias("text_clean"),
         F.size(toks).cast("long").alias("n_tokens"),
         F.size(kept).cast("long").alias("n_kept"),
@@ -355,8 +339,6 @@ DEFAULT_ASPECT_BUCKETS: tuple[tuple[int, int], ...] = (
 
 def aspect_bucket(
     images: DataFrame,
-    w_col: str = "w",
-    h_col: str = "h",
     buckets: tuple[tuple[int, int], ...] = DEFAULT_ASPECT_BUCKETS,
 ) -> DataFrame:
     """Aspect-ratio bucketing for image-batch training (the SDXL recipe:
@@ -374,7 +356,7 @@ def aspect_bucket(
     Adds: bucket_w, bucket_h (the ratio), bucket_idx."""
     if not buckets:
         raise ValueError("buckets must be non-empty")
-    w, h = F.col(w_col).cast("long"), F.col(h_col).cast("long")
+    w, h = F.col("w").cast("long"), F.col("h").cast("long")
     # distance of (w, h) to bucket i as an exact rational |w/h - bw/bh| =
     # |w*bh - bw*h| / (h*bw*bh); h is common across buckets, so rank by
     # |w*bh - bw*h| * PROD-normalizer — implemented pairwise: bucket i
@@ -422,33 +404,26 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def pii_redact(
-    df: DataFrame, text_col: str = "text", out_col: str = "text_redacted"
-) -> DataFrame:
+def pii_redact(df: DataFrame) -> DataFrame:
     """Scrub contact-style PII (emails, IPv4s, phone-shaped digit runs)
-    from a text column: adds ``out_col`` with every match replaced by its
+    from ``text``: adds ``text_redacted`` with every match replaced by its
     typed placeholder plus one ``n_<kind>`` count column per pattern.
     Counts are taken on the ORIGINAL text per kind, each kind counted on
     the text with the earlier kinds already redacted — so an email's
     digits are never double-counted as a phone. Pure in-row expressions:
     zero shuffles, zero Python."""
-    cur: Column = F.col(text_col)
+    cur: Column = F.col("text")
     counts = []
     for kind, pat, repl in PII_PATTERNS:
         counts.append(F.regexp_count(cur, F.lit(pat)).alias(f"n_{kind}"))
         cur = F.regexp_replace(cur, pat, repl)
-    return df.select("*", *counts, cur.alias(out_col))
+    return df.select("*", *counts, cur.alias("text_redacted"))
 
 
 # ------------------------------------------------------ epoch shuffle/shards
 
 
-def epoch_shuffle(
-    df: DataFrame,
-    n_shards: int,
-    seed: str = "epoch0",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def epoch_shuffle(df: DataFrame, n_shards: int, seed: str = "epoch0") -> DataFrame:
     """Deterministic global training-data shuffle + shard assignment — the
     export step between packing (``sequence_pack``) and the training run:
     every example gets a pseudorandom but REPRODUCIBLE position, keyed
@@ -460,7 +435,7 @@ def epoch_shuffle(
     ``key = portable_hash64(seed || ':' || id)`` orders the permutation;
     ``shard = key % n_shards`` scatters neighbors-by-id across shards;
     ``pos`` is the example's 0-based offset within its shard file in key
-    order. Output: ``(id_col, shard, pos, key)``.
+    order. Output: ``(doc_id, shard, pos, key)``.
 
     Scale shape: ONE hash shuffle on ``shard``; the per-shard window is
     bounded by N/n_shards rows because the key is uniform (XOR-folded
@@ -472,16 +447,16 @@ def epoch_shuffle(
     parallelism."""
     if n_shards <= 0:
         raise ValueError(f"n_shards must be positive (got {n_shards})")
-    key = portable_hash64(F.col(id_col).cast("string"), f"{seed}:")
-    w = Window.partitionBy("shard").orderBy("key", id_col)
+    key = portable_hash64(F.col("doc_id").cast("string"), f"{seed}:")
+    w = Window.partitionBy("shard").orderBy("key", "doc_id")
     return (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             key.alias("key"),
         )
         .withColumn("shard", F.pmod(F.col("key"), F.lit(n_shards)).cast("long"))
         .withColumn("pos", (F.row_number().over(w) - 1).cast("long"))
-        .select(id_col, "shard", "pos", "key")
+        .select("doc_id", "shard", "pos", "key")
     )
 
 

@@ -135,14 +135,9 @@ def warc_record_offsets(data: Column, max_records: int = 1024) -> Column:
     return F.filter(chased, lambda x: x > 0)
 
 
-def split_warc(
-    files: DataFrame,
-    file_col: str = "file_id",
-    data_col: str = "data",
-    max_records: int = 1024,
-) -> DataFrame:
-    """One row per WARC record: (file_col, rec_no, rec_offset, rec_len,
-    record, truncated).
+def split_warc(files: DataFrame, max_records: int = 1024) -> DataFrame:
+    """One row per WARC record of a ``(file_id, data)`` table: (file_id,
+    rec_no, rec_offset, rec_len, record, truncated).
 
     ``rec_offset``/``rec_len`` are the record's 1-based position and
     extent inside its file — the exact pair a CDX line publishes so a
@@ -152,9 +147,9 @@ def split_warc(
     than ``max_records`` records): downstream must route those files to
     the dead-letter channel, the same no-silent-drop contract as the
     datagram source's malformed-frame counter (O-1/O-7)."""
-    data = F.col(data_col)
+    data = F.col("data")
     staged = files.select(
-        file_col,
+        "file_id",
         data.alias("_data"),
         warc_record_offsets(data, max_records).alias("_offs"),
     )
@@ -175,7 +170,7 @@ def split_warc(
     # contract is "route it", never "vanish it" (same as O-1's malformed
     # datagram counter)
     exploded = staged.withColumn("_truncated", truncated).select(
-        file_col,
+        "file_id",
         "_data",
         "_offs",
         "_truncated",
@@ -197,7 +192,7 @@ def split_warc(
         - off
     )
     return exploded.select(
-        file_col,
+        "file_id",
         (F.col("_i") + 1).cast("long").alias("rec_no"),
         off.alias("rec_offset"),
         rec_len.cast("long").alias("rec_len"),
@@ -219,9 +214,7 @@ def _hdr(rec: Column, name: str) -> Column:
     )
 
 
-def parse_warc_records(
-    records: DataFrame, rec_col: str = "record"
-) -> DataFrame:
+def parse_warc_records(records: DataFrame) -> DataFrame:
     """Parsed fields appended to each record row:
 
     warc_type, target_uri, warc_date (the raw ISO 8601 string — timestamp
@@ -232,7 +225,7 @@ def parse_warc_records(
     header block). Non-response records (request/metadata/warcinfo) get
     NULL http_* fields, same rows kept: record-type routing is the
     caller's dispatch decision (O-12), not a silent filter here."""
-    rec = F.col(rec_col)
+    rec = F.col("record")
     blank = F.call_function("locate", F.lit(_CRLF2), rec)
     clen = F.regexp_extract(rec, _CLEN_RX, 1)
     clen = F.when(clen != "", clen.cast("long"))
@@ -281,10 +274,7 @@ def surt_key(uri: Column) -> Column:
     return F.when(host != "", F.concat(rev, F.lit(")"), path))
 
 
-def cdx_index(
-    parsed: DataFrame,
-    file_col: str = "file_id",
-) -> DataFrame:
+def cdx_index(parsed: DataFrame) -> DataFrame:
     """CDX capture index over parsed WARC rows: response records only,
     one row per capture — (surt, ts, original_url, mime, status, digest,
     rec_offset, rec_len, file) sorted by (surt, ts).
@@ -309,7 +299,7 @@ def cdx_index(
         F.md5(F.coalesce(F.col("http_body"), F.lit(""))).alias("digest"),
         F.col("rec_offset"),
         F.col("rec_len"),
-        F.col(file_col).alias("file"),
+        F.col("file_id").alias("file"),
     ).orderBy("surt", "ts")
 
 

@@ -28,7 +28,9 @@ STATE_TABLES = ("frontier", "seen", "host_state", "pending", "ordering")
 
 def _lineage(df: DataFrame, key: str, nshards: int) -> list[dict]:
     """Per-shard row count + order-insensitive bit_xor hash — the lineage
-    record that makes two snapshots comparable without reading the data."""
+    record that makes two snapshots comparable without reading the data.
+    ``xxhash64`` is never NULL, so every row lands in a shard and the
+    shard counts sum to the table's row count."""
     rows = (
         df.groupBy(F.pmod(F.xxhash64(key), F.lit(nshards)).cast("int").alias("shard"))
         .agg(F.count("*").alias("rows"), F.bit_xor(F.xxhash64(key)).alias("vhash"))
@@ -63,10 +65,11 @@ def commit_epoch(engine, epoch: int, metrics: dict | None = None, ordering: Data
             continue
         df.write.mode("overwrite").parquet(os.path.join(tmp, name))
         key = "url_hash" if "url_hash" in df.columns else df.columns[0]
+        lineage = _lineage(df, key, engine.cfg.nshards)
         manifest["tables"][name] = {
-            "rows": df.count(),
+            "rows": sum(r["rows"] for r in lineage),
             "columns": df.columns,
-            "lineage": _lineage(df, key, engine.cfg.nshards),
+            "lineage": lineage,
         }
     with open(os.path.join(tmp, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=1)
@@ -134,7 +137,7 @@ def verify_snapshot(spark: SparkSession, root: str, epoch: int, nshards: int) ->
         df = spark.read.parquet(os.path.join(base, name))
         key = "url_hash" if "url_hash" in df.columns else df.columns[0]
         actual = _lineage(df, key, nshards)
-        ok = actual == meta["lineage"] and df.count() == meta["rows"]
+        ok = actual == meta["lineage"] and sum(r["rows"] for r in actual) == meta["rows"]
         out["tables"][name] = {"ok": ok, "expect": meta["lineage"], "actual": actual}
         out["ok"] = out["ok"] and ok
     return out

@@ -138,3 +138,15 @@ def test_iterative_builders_release_superseded_generations(spark, name):
     df.count()
     new = set(jsc.getPersistentRDDs().keySet()) - before
     assert len(new) <= 1, (name, sorted(new))
+
+
+def test_anti_join_cuckoo_query_leaks_no_block(spark):
+    """``anti_join_cuckoo`` persists its probe output only for a caller that
+    passes ``temps`` to own it; the registered query passes none, so build
+    plus ``.count()`` adds no persistent RDD."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    df = entrymod.queries()["anti_join_cuckoo"](spark, SF)
+    df.count()
+    new = set(jsc.getPersistentRDDs().keySet()) - before
+    assert not new, sorted(new)

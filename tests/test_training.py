@@ -15,7 +15,7 @@ from maga_spark.operators.training import (
     decontaminate,
     pii_redact,
     sequence_pack,
-    word_ngrams,
+    cased_word_ngrams,
 )
 
 
@@ -57,7 +57,7 @@ def test_word_ngrams_edges(spark):
     df = spark.createDataFrame(
         [("a b c d",), ("a b",), ("",), ("   ",)], "t string"
     )
-    out = [r.g for r in df.select(word_ngrams(F.col("t"), 3).alias("g")).collect()]
+    out = [r.g for r in df.select(cased_word_ngrams(F.col("t"), 3).alias("g")).collect()]
     assert out[0] == ["a b c", "b c d"]
     assert out[1] == []  # fewer tokens than n
     assert out[2] == [] and out[3] == []
