@@ -42,38 +42,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _spread(df: DataFrame, barrier_col: str | None = None) -> DataFrame:
-    """``spread_partitions`` (maga_spark.session) for the sf tables, which
-    are single-file parquet with ONE row group. Queries that feed an
-    expensive per-row expression tree (n-gram explode, winnow, shingle
-    hashing) off such a scan otherwise run the whole tree on 1-2 cores
-    with the other 30 idle (measured: the repeated_ngrams gram-explode
-    stage was 2 tasks / 31.7 s at sf1.0). Values are unaffected: every
-    consumer aggregates, joins, or re-sorts downstream."""
-    spread = spread_partitions(df)
-    if spread is not df:
-        df = spread
-        if barrier_col is not None:
-            # Tautological NONDETERMINISTIC guard on the expensive column:
-            # monotonically_increasing_id() >= 0 is always true, so values
-            # are bit-identical, but the optimizer may not push predicates
-            # below a nondeterministic projection — without it, pushdown
-            # walks the derived-column filters (language/quality gates)
-            # through the Repartition back to the 1-2-task scan, where
-            # their first cold evaluation over every row runs serially
-            # (corpus_curate in-bench: 12.4 s -> 8.3 s at sf1.0). An eager
-            # localCheckpoint barrier was also measured and LOST on the
-            # full suite (135.8 s vs 122.1 s total): full-width
-            # materialization costs more than lazy pushdown-blocking.
-            df = df.withColumn(
-                barrier_col,
-                F.when(
-                    F.monotonically_increasing_id() >= 0, F.col(barrier_col)
-                ).otherwise(F.col(barrier_col)),
-            )
-    return df
-
-
 # --------------------------------------------------------------------------
 # flagship
 # --------------------------------------------------------------------------
@@ -155,7 +123,7 @@ def q_politeness_grant(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread BEFORE deriving url_hash/xor_d: the md5 chain must run on all
     # cores, not on the 2 effective scan tasks of a 2-row-group file
     cands = (
-        _spread(orders.select("o_orderkey", F.col("o_custkey").alias("host_key")))
+        spread_partitions(orders.select("o_orderkey", F.col("o_custkey").alias("host_key")))
         .withColumn(
             "url_hash", portable_hash64(F.col("o_orderkey").cast("string"))
         )
@@ -888,7 +856,7 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     are bit-exact across engines), so the check validates the LSH pipeline
     itself; its recall vs brute force is covered by
     tests/test_operators.py::test_embedding_banded_recall_vs_bruteforce."""
-    emb = _spread(_t(spark, sf_dir, "embeddings").filter(F.col("vec_id") <= 300))
+    emb = spread_partitions(_t(spark, sf_dir, "embeddings").filter(F.col("vec_id") <= 300))
     from maga_spark.operators.dedup import embedding_near_dups_banded
 
     out = embedding_near_dups_banded(emb, threshold=0.4, n_bands=8, band_width=8)
@@ -1012,7 +980,7 @@ ORDER BY cid, keep_id, drop_id
 
 def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-profile language ID over documents."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread_partitions(_t(spark, sf_dir, "documents"))
     from maga_spark.operators.text import language_id
 
     return language_id(docs).groupBy("lang_pred").agg(F.count("*").alias("n")).orderBy("lang_pred")
@@ -1283,7 +1251,7 @@ def q_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from maga_spark.operators.pipeline import curate_corpus
     from maga_spark.operators.text import bpe_ish_piece_count
 
-    docs = _spread(_t(spark, sf_dir, "documents"), barrier_col="text")
+    docs = spread_partitions(_t(spark, sf_dir, "documents"))
     kept = curate_corpus(
         docs, lang="en", min_tokens=5, max_punct_ratio=0.2, num_hashes=8, n_bands=4
     )
@@ -1377,7 +1345,7 @@ def q_image_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     undecodable in-sandbox and must be gated out)."""
     from maga_spark.operators.pipeline import curate_images
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread_partitions(_t(spark, sf_dir, "documents"))
     fmts = F.array(F.lit("raw"), F.lit("rlez"), F.lit("q8"), F.lit("jpeg"))
     imgs = docs.select(
         F.format_string("img%08d", F.col("doc_id")).alias("image_id"),
@@ -2946,7 +2914,7 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan. Single-token docs survive with n_bigrams = 0."""
     from maga_spark.operators.text import bigram_lm_score, train_bigram_lm
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread_partitions(_t(spark, sf_dir, "documents"))
     uni, bi, vocab = train_bigram_lm(docs)
     return bigram_lm_score(docs, uni, bi, vocab).orderBy("doc_id")
 
@@ -3114,7 +3082,7 @@ def q_corpus_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     from maga_spark.operators.topk import per_group_topk
     from maga_spark.operators.training import decontaminate, epoch_shuffle
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread_partitions(_t(spark, sf_dir, "documents"))
     cls = hashed_classifier_score(
         docs, _hcls_weights(spark), _HCLS_NB, bias=50, threshold=0
     )
@@ -3124,7 +3092,7 @@ def q_corpus_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.slice(F.split(F.trim(F.col("text")), r"\s+"), 5, 16), " "
         ).alias("text")
     )
-    dec = decontaminate(kept, bench, n=8, materialize=True)
+    dec = decontaminate(kept, bench, n=8)
     clean = kept.join(
         dec.filter(~F.col("contaminated")).select("doc_id"), "doc_id", "left_semi"
     )
@@ -4603,7 +4571,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text"
         )
     )
-    return decontaminate(_spread(docs), _spread(bench), n=8).orderBy("doc_id")
+    return decontaminate(spread_partitions(docs), spread_partitions(bench), n=8).orderBy("doc_id")
 
 
 SQL_DECONTAMINATE = r"""
@@ -4730,10 +4698,9 @@ def q_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(k % 14 == 0, F.lit(" " + _BP2)).otherwise(F.lit("")),
     )
     return repeated_ngram_spans(
-        _spread(docs.select("doc_id", injected.alias("text"))),
+        spread_partitions(docs.select("doc_id", injected.alias("text"))),
         n=8,
         min_docs=2,
-        materialize=True,
     ).orderBy("doc_id", "span_start")
 
 

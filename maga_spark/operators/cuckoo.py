@@ -6,8 +6,9 @@ One filter row ``(shard, table)`` per ``shard = pmod(url_hash, nshards)``,
 built and grown by ``update_shard_cuckoo`` (``filters=None`` builds from
 scratch), shrunk by ``delete_from_shard_cuckoo`` and probed
 EXECUTOR-SIDE via the shard-cogroup ``applyInPandas`` of
-``operators.seen.salted_shard_cogroup``, false positives corrected by an
-exact residual anti-join, never false negatives — so ``anti_join_cuckoo``
+``operators.seen.salted_shard_cogroup``. Only probe-positive rows can match
+in the one anti-join against seen that follows, which corrects the false
+positives; there are never false negatives, so ``anti_join_cuckoo``
 returns exactly ``anti_join_exact``'s rows. Unlike a bloom bitset, which
 can only grow, a cuckoo table stores per-key fingerprints that
 ``delete_from_shard_cuckoo`` removes individually — the re-crawl primitive
@@ -57,7 +58,6 @@ from pyspark.sql import functions as F
 from maga_spark.operators.seen import (
     _hashes_u64,
     _out_ddl,
-    anti_join_exact,
     salted_shard_cogroup,
 )
 
@@ -296,32 +296,28 @@ def anti_join_cuckoo(
     seen: DataFrame,
     filters: DataFrame,
     nshards: int,
-    temps: list | None = None,
 ) -> DataFrame:
     """candidates ∖ seen on ``url_hash`` with an executor-side per-shard
-    cuckoo prefilter: rows the filter rejects are definitely new; only the
-    ``might_contain`` minority reaches the exact residual anti-join, so the
-    result equals ``anti_join_exact`` whenever ``filters`` holds every key
-    of ``seen``, whatever else it holds (this also makes deletion safe
-    end-to-end: a deleted key probes negative and re-enters as new; an
-    fp-collision survivor just pays the residual join).
+    cuckoo prefilter: the probe marks each candidate ``_maybe``, and one
+    left-anti join on ``(url_hash, _maybe)`` against ``seen`` tagged
+    ``_maybe = true`` drops the seen rows. A definitely-new candidate
+    carries ``_maybe = false``, so it can never match, and the result
+    equals ``anti_join_exact`` whenever ``filters`` holds every key of
+    ``seen``, whatever else it holds (this also makes deletion safe
+    end-to-end: a deleted key probes negative and stays new; an
+    fp-collision survivor just fails to find its match).
 
-    The probe output feeds both branches of the result. With ``temps``
-    given it is persisted once and appended there, and the caller
-    unpersists it; without ``temps`` nothing is cached, so no block
-    outlives the returned plan.
+    The probe runs once per execution and nothing is cached, so no block
+    outlives the returned plan. ``seen`` is shuffled for the join either
+    way: the probe decides which rows can match, not which rows move.
 
     ``nshards`` MUST be the modulus used to shard ``seen``: a wrong modulus
     buckets candidates against the wrong filter row. Any filter row whose
     shard id falls outside [0, nshards) fails the probe task
     (modulus-mismatch guard)."""
     marked = _probe_cogroup(candidates, filters, int(nshards))
-    if temps is not None:
-        marked = marked.persist()
-        temps.append(marked)
-    maybe = marked.filter(F.col("_maybe")).drop("_maybe")
-    definitely_new = marked.filter(~F.col("_maybe")).drop("_maybe")
-    return definitely_new.unionByName(anti_join_exact(maybe, seen))
+    tagged = seen.select("url_hash", F.lit(True).alias("_maybe"))
+    return marked.join(tagged, ["url_hash", "_maybe"], "left_anti").drop("_maybe")
 
 
 def _probe_cogroup(candidates: DataFrame, filters: DataFrame, ns: int) -> DataFrame:

@@ -23,6 +23,8 @@ operators generalize it to content identity.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -464,10 +466,30 @@ def containment_pairs(
     ex = fps.select(F.col("doc_id"), F.explode_outer("fp").alias("h")).filter(
         F.col("h").isNotNull()
     )
-    # |fp(u)| from the exploded rows (fp is already distinct), BEFORE the
-    # doc-freq cap — one fewer evaluation of the winnow expression than
-    # size(fp) on a separate branch; empty-fp docs drop out of `ex` but
-    # can never reach `shared` anyway
+
+    def pairs(ex: DataFrame) -> DataFrame:
+        a = ex.select(F.col("doc_id").alias("u"), "h")
+        b = ex.select(F.col("doc_id").alias("v"), "h")
+        return a.join(b, "h").filter(F.col("u") != F.col("v")).select("u", "v")
+
+    return _containment(ex, pairs, min_shared, min_containment, max_doc_freq)
+
+
+def _containment(
+    ex: DataFrame,
+    pairs: Callable[[DataFrame], DataFrame],
+    min_shared: int,
+    min_containment: float,
+    max_doc_freq: int | None,
+) -> DataFrame:
+    """The containment tail both paths share, over exploded ``(doc_id, h)``
+    fingerprint rows: drop corpus-hot fingerprints (more than
+    ``max_doc_freq`` docs) with a broadcast anti-join on the small hot list,
+    count shared fingerprints per ``pairs(ex)`` row ``(u, v)`` (one row per
+    fingerprint the two docs share, u != v), and divide by |fp(u)|.
+    |fp(u)| is counted from ``ex`` BEFORE the cap (fp is already distinct
+    per doc), which costs no extra winnow evaluation; empty-fp docs drop
+    out of ``ex`` but can never reach ``shared`` anyway."""
     sizes = ex.groupBy("doc_id").agg(F.count("*").alias("fp_n"))
     if max_doc_freq is not None:
         hot = (
@@ -477,11 +499,8 @@ def containment_pairs(
             .select("h")
         )
         ex = ex.join(F.broadcast(hot), "h", "left_anti")
-    a = ex.select(F.col("doc_id").alias("u"), "h")
-    b = ex.select(F.col("doc_id").alias("v"), "h")
     shared = (
-        a.join(b, "h")
-        .filter(F.col("u") != F.col("v"))
+        pairs(ex)
         .groupBy("u", "v")
         .agg(F.count("*").alias("shared"))
         .filter(F.col("shared") >= min_shared)
@@ -548,32 +567,16 @@ def containment_pairs_from_index(
     shuffles left are the small (u, v) aggregation and the doc-size
     aggregate). ``max_doc_freq`` drops corpus-hot fingerprints via the
     same broadcast anti-join as the ad-hoc path."""
-    ex = spark.table(table)
-    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("fp_n"))
-    if max_doc_freq is not None:
-        hot = (
-            ex.groupBy("h")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_doc_freq)
-            .select("h")
+
+    def pairs(ex: DataFrame) -> DataFrame:
+        return (
+            ex.alias("A")
+            .join(ex.alias("B").hint("merge"), F.col("A.h") == F.col("B.h"))
+            .filter(F.col("A.doc_id") != F.col("B.doc_id"))
+            .select(F.col("A.doc_id").alias("u"), F.col("B.doc_id").alias("v"))
         )
-        ex = ex.join(F.broadcast(hot), "h", "left_anti")
-    a = ex.alias("A")
-    b = ex.alias("B")
-    shared = (
-        a.join(b.hint("merge"), F.col("A.h") == F.col("B.h"))
-        .filter(F.col("A.doc_id") != F.col("B.doc_id"))
-        .select(F.col("A.doc_id").alias("u"), F.col("B.doc_id").alias("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
-    return (
-        shared.join(sizes.select(F.col("doc_id").alias("u"), "fp_n"), "u")
-        .withColumn("containment", F.col("shared") / F.col("fp_n"))
-        .filter(F.col("containment") >= min_containment)
-        .select("u", "v", "shared", F.col("fp_n").alias("fp_u"), "containment")
-    )
+
+    return _containment(spark.table(table), pairs, min_shared, min_containment, max_doc_freq)
 
 
 def semantic_dedup(

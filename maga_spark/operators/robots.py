@@ -29,7 +29,7 @@ trailing ``$`` → end anchor, always start-anchored with ``^``.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -60,19 +60,18 @@ def pattern_to_rx(pattern: str) -> str:
     return rx + "$" if anchored else rx
 
 
-def parse_robots_text(text: str, agent: str) -> list[tuple[str, str, int, bool]]:
-    """One host's robots.txt → [(pattern, rx, spec, allow)] for ``agent``.
-
-    RFC 9309 group rules: consecutive ``user-agent`` lines open a group
-    sharing the rules that follow; all groups matching the product token
-    (case-insensitive exact) MERGE; the ``*`` groups apply only when no
-    specific group matched. Unknown directives and empty-pattern rules are
-    ignored; ``#`` starts a comment.
-    """
+def _group_values(text: str, agent: str, value_of: Callable[[str, str], object]) -> list:
+    """RFC 9309 group selection over one robots.txt: consecutive
+    ``user-agent`` lines open a group sharing the directives that follow;
+    all groups matching the product token (case-insensitive exact) MERGE;
+    the ``*`` groups apply only when no specific group matched. Each
+    directive line becomes ``value_of(key, val)`` (lower-cased key), and a
+    None is dropped before it reaches a group, so an invalid value in a
+    specific group cannot hide the ``*`` groups. ``#`` starts a comment."""
     agent = agent.lower()
-    specific: list[tuple[str, bool]] = []
-    wildcard: list[tuple[str, bool]] = []
-    cur: list[list[tuple[str, bool]]] = []  # rule sinks for the open group
+    specific: list = []
+    wildcard: list = []
+    cur: list[list] = []  # value sinks for the open group
     in_agent_run = False
     for raw in text.splitlines():
         line = raw.split("#", 1)[0].strip()
@@ -89,12 +88,24 @@ def parse_robots_text(text: str, agent: str) -> list[tuple[str, str, int, bool]]
                 cur.append(specific)
             continue
         in_agent_run = False
-        if key in ("allow", "disallow"):
-            if not val:  # empty pattern = no rule (RFC 9309 §2.2.2)
-                continue
+        v = value_of(key, val)
+        if v is not None:
             for sink in cur:
-                sink.append((val, key == "allow"))
-    rules = specific if specific else wildcard
+                sink.append(v)
+    return specific if specific else wildcard
+
+
+def parse_robots_text(text: str, agent: str) -> list[tuple[str, str, int, bool]]:
+    """One host's robots.txt → [(pattern, rx, spec, allow)] for ``agent``,
+    groups selected by the RFC 9309 rules of ``_group_values``. Unknown
+    directives and empty-pattern rules are ignored.
+    """
+
+    def rule(key: str, val: str) -> tuple[str, bool] | None:
+        # an empty pattern is no rule (RFC 9309 §2.2.2)
+        return (val, key == "allow") if key in ("allow", "disallow") and val else None
+
+    rules = _group_values(text, agent, rule)
     return [(p, pattern_to_rx(p), len(p), allow) for p, allow in rules]
 
 
@@ -104,41 +115,21 @@ def parse_robots_delay(text: str, agent: str) -> float | None:
 
     Crawl-delay is the de-facto extension (not in RFC 9309 but honored by
     most major crawlers); group selection follows the same RFC rules as
-    ``parse_robots_text``: all groups naming the product token merge and
-    the ``*`` groups apply only when no specific group matched. When
-    merged groups disagree the MINIMUM (most conservative) delay wins;
-    non-numeric or negative values are ignored like any unknown directive.
+    ``parse_robots_text``. When merged groups disagree the MINIMUM (most
+    conservative) delay wins; non-numeric or negative values are ignored
+    like any unknown directive.
     """
-    agent = agent.lower()
-    specific: list[float] = []
-    wildcard: list[float] = []
-    cur: list[list[float]] = []
-    in_agent_run = False
-    for raw in text.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if not line or ":" not in line:
-            continue
-        key, _, val = line.partition(":")
-        key, val = key.strip().lower(), val.strip()
-        if key == "user-agent":
-            if not in_agent_run:
-                cur, in_agent_run = [], True
-            if val == "*":
-                cur.append(wildcard)
-            elif val.lower() == agent:
-                cur.append(specific)
-            continue
-        in_agent_run = False
-        if key == "crawl-delay":
-            try:
-                d = float(val)
-            except ValueError:
-                continue
-            if d < 0:
-                continue
-            for sink in cur:
-                sink.append(d)
-    delays = specific if specific else wildcard
+
+    def delay(key: str, val: str) -> float | None:
+        if key != "crawl-delay":
+            return None
+        try:
+            d = float(val)
+        except ValueError:
+            return None
+        return None if d < 0 else d
+
+    delays = _group_values(text, agent, delay)
     return min(delays) if delays else None
 
 

@@ -15,8 +15,8 @@ Two membership paths, one contract (both yield the exact set):
   prefilters the shuffle at scale.
 * ``operators.cuckoo.anti_join_cuckoo`` — a per-shard cuckoo-filter
   prefilter probed EXECUTOR-SIDE through ``salted_shard_cogroup`` below;
-  false positives are corrected by ``anti_join_exact`` on the
-  might-contain minority, and the filter supports per-key deletion (the
+  one anti-join in which only might-contain rows can match seen corrects
+  the false positives, and the filter supports per-key deletion (the
   re-crawl primitive).
 """
 

@@ -123,7 +123,6 @@ def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 8,
-    materialize: bool = False,
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3/PaLM n-gram protocol): flag
     every corpus document sharing at least one word ``n``-gram with the
@@ -140,14 +139,11 @@ def decontaminate(
     (array_distinct before the explode), so a doc repeating one benchmark
     n-gram a thousand times is one join row, not a skew group."""
     grams = F.array_distinct(cased_word_ngrams(F.col("text"), n))
+    # doc_grams feeds the semi-join and the per-doc count, and each branch
+    # evaluates it: a checkpoint would share it but hold a block nothing frees
     doc_grams = corpus.select(
         F.col("doc_id"), F.explode_outer(grams).alias("_gram")
     ).select("doc_id", portable_hash64(F.col("_gram")).alias("_g"))
-    if materialize:
-        # one evaluation of the n-gram explode + hash: doc_grams feeds both
-        # the benchmark semi-join and the per-doc count (same rationale and
-        # opt-in shape as repeated_ngram_spans)
-        doc_grams = doc_grams.localCheckpoint(eager=True)
     bench_grams = (
         benchmark.select(F.explode(grams).alias("_gram"))
         .select(portable_hash64(F.col("_gram")).alias("_g"))
@@ -204,7 +200,6 @@ def repeated_ngram_spans(
     corpus: DataFrame,
     n: int = 16,
     min_docs: int = 2,
-    materialize: bool = False,
 ) -> DataFrame:
     """Cross-document repeated-substring detection at word-``n``-gram
     granularity (the exact-substring-dedup signal of Lee et al. 2022,
@@ -227,6 +222,8 @@ def repeated_ngram_spans(
     window for the island grouping (bounded by document length). Never
     all-pairs, never a global window."""
     grams = cased_word_ngrams(F.col("text"), n)
+    # occ feeds the distinct-doc count and the join-back, and each branch
+    # evaluates it (no checkpoint, as in decontaminate)
     occ = corpus.select(
         F.col("doc_id"), F.posexplode(grams).alias("_p0", "_gram")
     ).select(
@@ -234,15 +231,6 @@ def repeated_ngram_spans(
         (F.col("_p0") + 1).cast("long").alias("pos"),
         portable_hash64(F.col("_gram")).alias("_g"),
     )
-    if materialize:
-        # evaluate the n-gram explode + hash ONCE: occ feeds both the
-        # distinct-doc frequency branch and the join-back stream, and Spark
-        # has no cross-branch subtree sharing without a materialization
-        # barrier. Rows are (id, pos, hash) — a few dozen bytes each, far
-        # cheaper to store than to recompute the gram concat + md5 chain
-        # over the corpus a second time. Opt-in: one-shot mining jobs take
-        # it; incremental/streaming callers keep the lazy plan.
-        occ = occ.localCheckpoint(eager=True)
     freq = (
         occ.select("_g", "doc_id")
         .distinct()  # stage 1: per (gram, doc) — hot grams spread over docs

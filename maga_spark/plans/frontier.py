@@ -25,7 +25,8 @@ Must match maga_spark.sim bit-for-bit (tests/test_parity.py). Scale notes:
 state is hash-sharded on url_hash; the hot-host window is salted
 (operators.topk); granted (≤ K rows) is always the broadcast side of the
 fetch joins; the seen anti-join can run behind a per-shard cuckoo-filter
-prefilter (operators.cuckoo.anti_join_cuckoo) with identical results.
+prefilter (operators.cuckoo.anti_join_cuckoo: one probe feeding one
+anti-join, nothing cached) with identical results.
 """
 
 from __future__ import annotations
@@ -79,7 +80,6 @@ class CrawlEngine:
         self.cfg = cfg
         self.seen_mode = seen_mode
         self.snapshot_dir = snapshot_dir
-        self.fixtures_dir = fixtures_dir
 
         # static side tables: cache once, reused every epoch. Spread to the
         # session's parallelism first (guide §2.5 input skew): a one-row-
@@ -115,8 +115,10 @@ class CrawlEngine:
         # driver-collected. The table also supports key DELETION
         # (operators/cuckoo.py) — the re-crawl primitive of expire_urls.
         self.cuckoo = empty([], CUCKOO_SCHEMA)
-        self._pending: DataFrame | None = None  # discovery batch for the next absorb
-        self._epoch_temps: list[DataFrame] = []  # persisted intra-epoch temporaries
+        # absorb input of the next epoch: the seed list, then each epoch's
+        # discoveries (streaming_crawl unions its batches in)
+        self._pending = spark.read.parquet(f"{fixtures_dir}/seeds.parquet").select("url")
+        self._epoch_temps: list[DataFrame] = []  # the epoch's persists, released after commit
         # the CURRENT generation of state checkpoints, released when the
         # next _commit_state supersedes them (see there)
         self._state_ckpts: list[DataFrame] = []
@@ -141,15 +143,13 @@ class CrawlEngine:
             .dropDuplicates(["url_hash"])
         )
         if self.seen_mode == "cuckoo":
-            # exact residual anti-join on the might-contain minority ⇒
+            # only might-contain rows can match seen in the anti-join ⇒
             # identical results to exact mode. Explicit modulus: inferring
             # it from max(shard) misbuckets candidates when the top shard
             # happens to be unpopulated. self.cuckoo covers exactly the
             # committed seen set (the invariant below keeps them in
             # lockstep), so no rebuild here.
-            anti = lambda c, s: anti_join_cuckoo(  # noqa: E731
-                c, s, self.cuckoo, cfg.nshards, temps=self._epoch_temps
-            )
+            anti = lambda c, s: anti_join_cuckoo(c, s, self.cuckoo, cfg.nshards)  # noqa: E731
         else:
             anti = anti_join_exact
         new = (
@@ -435,10 +435,6 @@ class CrawlEngine:
         exact in both the empty and the sibling-empty case."""
         cfg = self.cfg
         res = EngineResult()
-        if self._pending is None:
-            self._pending = self.spark.read.parquet(f"{self.fixtures_dir}/seeds.parquet").select(
-                "url"
-            )
         n_epochs = cfg.epochs if epochs is None else epochs
         for e in range(self._start_epoch, self._start_epoch + n_epochs):
             absorb_obs = self._absorb(self._pending, e)

@@ -45,18 +45,10 @@ from maga_spark.streaming.ingest import (
 
 def absorb_discoveries(engine, urls: DataFrame) -> None:
     """Union one batch of discovered URLs (single ``url`` column) into the
-    engine's pending absorb input. On the first batch the seed list joins
-    too (the engine would otherwise read seeds itself on a None pending —
-    this keeps the streaming loop's epoch-0 input identical to the batch
-    engine's). Absorb canonicalizes + dedups, so unions are idempotent."""
-    batch = urls.select("url")
-    if engine._pending is None:
-        seeds = engine.spark.read.parquet(f"{engine.fixtures_dir}/seeds.parquet").select(
-            "url"
-        )
-        engine._pending = seeds.unionByName(batch)
-    else:
-        engine._pending = engine._pending.unionByName(batch)
+    engine's pending absorb input, which starts as the seed list, so the
+    streaming loop's epoch-0 input is the batch engine's plus the batch.
+    Absorb canonicalizes + dedups, so unions are idempotent."""
+    engine._pending = engine._pending.unionByName(urls.select("url"))
 
 
 def streaming_crawl(

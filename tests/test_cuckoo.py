@@ -91,18 +91,17 @@ def test_cuckoo_rejects_inconsistent_nshards(spark):
 
 
 def test_cuckoo_single_probe_pass_no_driver_bytes(spark, keysets):
-    """The probe runs once — both split branches (definitely-new and the
-    might-contain residual) read the persisted cogroup output — and filter
-    bytes stay executor-side: no broadcast of the filter table."""
+    """The probe runs once per call — one left-anti join consumes its
+    output, with nothing cached — and filter bytes stay executor-side: no
+    broadcast subtree builds the filter table."""
     seen_a, _seen_b, fresh = keysets
     seen = _seen_df(spark, seen_a)
     cands = _cand_df(spark, np.concatenate([seen_a[:100], fresh[:100]]))
-    temps: list = []
     filters = update_shard_cuckoo(None, seen, nbuckets=1 << 11)
-    out = anti_join_cuckoo(cands, seen, filters, NSHARDS, temps=temps)
+    out = anti_join_cuckoo(cands, seen, filters, NSHARDS)
     lines = out._jdf.queryExecution().executedPlan().toString().splitlines()
-    assert sum("InMemoryTableScan" in ln for ln in lines) >= 2
-    assert len(temps) == 1
+    assert sum("FlatMapCoGroupsInPandas" in ln for ln in lines) == 1
+    assert not any("InMemoryRelation" in ln or "InMemoryTableScan" in ln for ln in lines)
 
     def depth(ln):
         return len(ln) - len(ln.lstrip(" :+-"))
@@ -115,7 +114,6 @@ def test_cuckoo_single_probe_pass_no_driver_bytes(spark, keysets):
                     break
                 sub.append(nxt)
             assert not any("FlatMapGroupsInPandas" in x or "table#" in x for x in sub)
-    temps[0].unpersist()
 
 
 def test_incremental_update_equals_scratch_results(spark, keysets):

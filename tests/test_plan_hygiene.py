@@ -1,10 +1,10 @@
 """Plan-hygiene gate over the driver contract: filters must reach the
-parquet scans, queries must stay Python-free, and no query may plan a
+parquet scans, queries must stay Python-free, no query may plan a
 cartesian product (the banded near-dup rewrites exist precisely to kill
-those).
+those), and no query may leave a persisted block behind once counted.
 
-Round-5 shape (VERDICT r4 #1): the Python-free and no-cartesian gates
-parameterize over the ENTIRE queries() registry, and the pushdown gate over
+The Python-free, no-cartesian and leak gates parameterize over the ENTIRE
+queries() registry (the round-5 shape, VERDICT r4 #1), and the pushdown gate over
 every registry row that names a ``pushdown`` column — a newly registered query
 is gated automatically, with exemptions listed explicitly and justified
 inline. An allowlist that must be extended by hand rotted twice (r3, r4);
@@ -14,7 +14,6 @@ fails when an entry stops being needed.
 
 from __future__ import annotations
 
-import re
 import sys
 from pathlib import Path
 
@@ -40,6 +39,25 @@ PLAN_EXEMPT = {"crawl_epoch"}
 
 # every query must be free of cartesian products
 NO_CARTESIAN_EXEMPT = {"robots_gate"}  # 1-row broadcast crossJoin by design
+
+# Queries whose build plus count leaves ONE persistent RDD: the block the
+# returned plan reads, which no owner could free before the caller is done.
+_FINAL_GENERATION = "the final loop generation the returned plan reads"
+LEAK_EXEMPT = {
+    "corpus_curate": "curate_corpus persists its deduped intermediate for "
+    "the band self-join's two sides and the final anti-join",
+    "image_curate": "curate_images persists its caption-deduped images for "
+    "the phash band self-join and the drop rejoin",
+    "simhash_near_dups": "simhash_near_dups persists the signatures both "
+    "sides of the band self-join read",
+    "semantic_dedup": "the query persists its 401 filtered embeddings, read "
+    "by the pivot collect and both self-join branches",
+    "dup_clusters": _FINAL_GENERATION,
+    "image_keep_best": _FINAL_GENERATION,
+    "pagerank": _FINAL_GENERATION,
+    "rank_blend": _FINAL_GENERATION,
+    "redirect_resolve": _FINAL_GENERATION,
+}
 
 ALL_QUERIES = sorted(set(entrymod.queries()) - PLAN_EXEMPT)
 
@@ -81,8 +99,8 @@ def test_no_cartesian_products(spark):
 
 
 def test_exemptions_are_live(spark):
-    """Every PYTHON_ALLOWED entry must still NEED its exemption (and still
-    exist) — a stale exemption is how an allowlist rots in the other
+    """Every PYTHON_ALLOWED and LEAK_EXEMPT entry must still NEED its
+    exemption (and still exist) — a stale exemption is how an allowlist rots in the other
     direction."""
     qs = entrymod.queries()
     for name in PYTHON_ALLOWED:
@@ -92,6 +110,11 @@ def test_exemptions_are_live(spark):
         )
     for name in NO_CARTESIAN_EXEMPT:
         assert name in qs, f"exempt query {name} no longer registered"
+    for name in LEAK_EXEMPT:
+        assert name in qs, f"exempt query {name} no longer registered"
+        assert _leaked(spark, name) > 0, (
+            f"{name} now leaks no block: drop it from LEAK_EXEMPT"
+        )
 
 
 def test_registry_contract():
@@ -104,49 +127,29 @@ def test_registry_contract():
         assert name in qs, f"exempt query {name} no longer registered"
 
 
-def test_spread_barrier_keeps_filters_above_spread(spark):
-    """``_spread``'s nondeterministic CASE barrier keeps corpus_curate's
-    language/quality Filter above the round-robin spread of the one-split
-    documents scan: Filter, barrier Project, Exchange RoundRobin, then a
-    scan with no data filters. This rests on Catalyst not folding a
-    nondeterministic CASE (undocumented), so the order is pinned here."""
-    lines = [ln.lstrip(" :+-") for ln in _plan(spark, "corpus_curate").splitlines()]
-    barriers = [i for i, ln in enumerate(lines) if "monotonically_increasing_id()" in ln]
-    assert barriers
-    for i in barriers:
-        assert lines[i - 1].startswith("Filter ") and "array_intersect" in lines[i - 1]
-        assert lines[i].startswith("Project "), lines[i]
-        assert re.search(r"THEN text#\d+ ELSE text#\d+ END AS text#", lines[i]), lines[i]
-        assert lines[i + 1].startswith("Exchange RoundRobinPartitioning"), lines[i + 1]
-        scan = lines[i + 2]
-        assert scan.startswith("FileScan parquet") and "documents.parquet" in scan, scan
-        assert "DataFilters: []" in scan, scan
+_leak_cache: dict[str, int] = {}
 
 
-@pytest.mark.parametrize(
-    "name", ["dup_clusters", "image_keep_best", "pagerank", "rank_blend", "redirect_resolve"]
-)
+def _leaked(spark, name):
+    """New persistent RDD ids after build plus ``.count()``. New ids are
+    counted, not the registry's size: the ContextCleaner may free older
+    blocks mid-run. The cache is cleared first, or a ``persist()`` that an
+    earlier build of the same query already materialized (semantic_dedup
+    runs a job at build time) would add no new id."""
+    if name not in _leak_cache:
+        spark.catalog.clearCache()
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
+        entrymod.queries()[name](spark, SF).count()
+        _leak_cache[name] = len(set(jsc.getPersistentRDDs().keySet()) - before)
+    return _leak_cache[name]
+
+
+@pytest.mark.parametrize("name", ALL_QUERIES)
 def test_iterative_builders_release_superseded_generations(spark, name):
-    """The iterative builders checkpoint once per round; each superseded
-    generation must be released inside the loop (plans/ckpt.release), so
-    build plus ``.count()`` leaves at most the one block the returned plan
-    reads. New ids are counted, not the registry's size: the ContextCleaner
-    may free older blocks mid-run."""
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet())
-    df = entrymod.queries()[name](spark, SF)
-    df.count()
-    new = set(jsc.getPersistentRDDs().keySet()) - before
-    assert len(new) <= 1, (name, sorted(new))
-
-
-def test_anti_join_cuckoo_query_leaks_no_block(spark):
-    """``anti_join_cuckoo`` persists its probe output only for a caller that
-    passes ``temps`` to own it; the registered query passes none, so build
-    plus ``.count()`` adds no persistent RDD."""
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet())
-    df = entrymod.queries()["anti_join_cuckoo"](spark, SF)
-    df.count()
-    new = set(jsc.getPersistentRDDs().keySet()) - before
-    assert not new, sorted(new)
+    """Registry-wide leak gate, grown from the iterative builders' one: a
+    query owns what it persists, so build plus ``.count()`` leaves no new
+    block, or the one block a ``LEAK_EXEMPT`` entry names. The iterative
+    builders checkpoint once per round and release each superseded
+    generation inside the loop (plans/ckpt.release)."""
+    assert _leaked(spark, name) <= (1 if name in LEAK_EXEMPT else 0), name

@@ -7,8 +7,6 @@ Covered:
   * containment_pairs' explode_outer rewrite — value-identical to the
     plain-explode contract on adversarial inputs (NULL text, sub-k text,
     empty corpus) where the two explode forms could in principle diverge.
-  * repeated_ngram_spans / decontaminate ``materialize`` flag — the eager
-    checkpoint variant returns the exact same rows as the lazy plan.
   * CrawlEngine state-partition bounding — after any number of epochs, no
     state table's partition count exceeds the session parallelism (the
     round-6 coalesce-at-checkpoint invariant; pre-fix the seen table grew
@@ -67,37 +65,6 @@ def test_containment_pairs_cap_still_value_identical(spark):
         containment_pairs(docs, min_shared=1, min_containment=0.1, max_doc_freq=10_000)
     )
     assert a == b and len(a) > 0
-
-
-def test_repeated_ngram_spans_materialize_equivalence(spark):
-    from maga_spark.operators.training import repeated_ngram_spans
-
-    bp = "one two three four five six seven eight nine ten eleven"
-    docs = spark.createDataFrame(
-        [(i, f"doc {i} filler words {bp} trailing {i}") for i in range(8)],
-        "doc_id long, text string",
-    )
-    lazy = _rows(repeated_ngram_spans(docs, n=8, min_docs=2))
-    eager = _rows(repeated_ngram_spans(docs, n=8, min_docs=2, materialize=True))
-    assert lazy == eager and len(lazy) > 0
-
-
-def test_decontaminate_materialize_equivalence(spark):
-    from maga_spark.operators.training import decontaminate
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta eta theta iota kappa {i}") for i in range(6)]
-        + [(99, "totally different words nothing shared here at all today ok")],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [("alpha beta gamma delta epsilon zeta eta theta",)], "text string"
-    )
-    lazy = _rows(decontaminate(docs, bench, n=8))
-    eager = _rows(decontaminate(docs, bench, n=8, materialize=True))
-    assert lazy == eager
-    flagged = {r[0] for r in lazy if r[3]}
-    assert 99 not in flagged and len(flagged) == 6
 
 
 def test_engine_state_partitions_stay_bounded(spark, tmp_path):
